@@ -253,6 +253,12 @@ def apply_chain(
                     df, cur, cur_dim, state[idx], RQ, robust_hist_max
                 )
             st = state[idx]
+            if update and not any(st["h"]):
+                # nothing fitted yet and this fit frame is empty: there is
+                # no row to scale, so the column passes through
+                df = df.withColumn(tmp, F.col(cur))
+                cur = tmp
+                continue
             if st is None:
                 raise ValueError(
                     f"{name} at chain position {idx} has no fitted stats; "
@@ -291,6 +297,12 @@ def apply_chain(
                 if int(row["n"]) > 0:
                     state[idx] = _merge_moments(state[idx], row, cur_dim)
             st = state[idx]
+            if st is None and update:
+                # nothing fitted yet and this fit frame is empty: there is
+                # no row to scale, so the column passes through
+                df = df.withColumn(tmp, F.col(cur))
+                cur = tmp
+                continue
             if st is None:
                 raise ValueError(
                     f"{name} at chain position {idx} has no fitted stats; "

@@ -108,7 +108,8 @@ def run_job(spark: SparkSession, cfg: JobConfig,
         has_kind = "kind" in stream.columns
         data = marked.filter(F.col("kind") == "data") if has_kind else marked
         deduped = streaming_dedup(
-            data, cfg.dedup_key, data.schema, ttl_ms=cfg.dedup_ttl_ms
+            data, cfg.dedup_key, data.schema, ttl_ms=cfg.dedup_ttl_ms,
+            event_time_col=cfg.watermark_col,
         )
         if has_kind:
             stream = deduped.unionByName(

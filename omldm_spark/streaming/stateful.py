@@ -51,18 +51,22 @@ def _dedup_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
 
 
 def streaming_dedup(
-    stream: DataFrame, key_col: str, output_schema, ttl_ms: int | None = None
+    stream: DataFrame, key_col: str, output_schema, ttl_ms: int | None = None,
+    event_time_col: str = "event_time",
 ) -> DataFrame:
     """Cross-batch exact dedup on ``key_col`` (e.g. md5(text)).
 
-    With ``ttl_ms`` (requires an event-time watermark upstream) each key's
-    seen-marker expires ``ttl_ms`` past the watermark and is REMOVED from the
-    state store — bounding state to keys seen within the TTL horizon instead
-    of all keys ever. That is the 100 TB shape: unbounded-retention dedup
-    state grows with total distinct keys; watermark-TTL'd state grows with
-    the dedup window only. A duplicate arriving after expiry passes again
-    (standard watermark-bounded dedup semantics — same contract as Spark's
-    own dropDuplicatesWithinWatermark)."""
+    With ``ttl_ms`` (requires an event-time watermark upstream on
+    ``event_time_col``) each key's seen-marker expires ``ttl_ms`` past the
+    key's event time when first seen (the latest among its rows in that
+    batch, and at least the watermark) and is then REMOVED from the state
+    store — bounding state to keys seen within the TTL horizon instead of
+    all keys ever. That is the 100 TB shape: unbounded-retention dedup state grows
+    with total distinct keys; watermark-TTL'd state grows with the dedup
+    window only. A duplicate arriving once the watermark has passed the
+    expiry passes again (standard watermark-bounded dedup semantics — same
+    contract as Spark's own dropDuplicatesWithinWatermark); re-sent
+    duplicates do not extend it."""
     if ttl_ms is None:
         return stream.groupBy(key_col).applyInPandasWithState(
             _dedup_fn,
@@ -71,28 +75,42 @@ def streaming_dedup(
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+    from pyspark.sql import functions as F
+
+    ms_col = "_dedup_event_ms"
 
     def dedup_ttl(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
         if state.hasTimedOut:
             state.remove()
             return
-        first = None
-        if not state.exists:
+        wm = state.getCurrentWatermarkMs()
+        # the timeout fires only for keys without data in a batch, so a key
+        # re-sent in the batch where it expires still holds its state
+        if state.exists and state.get[0] > wm:
+            expires, first = state.get[0], None
+        else:
+            first, event_ms = None, wm
             for pdf in pdfs:
                 if len(pdf):
-                    first = pdf.head(1)
-                    break
-        state.update((True,))
-        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttl_ms)
+                    event_ms = max(event_ms, int(pdf[ms_col].max()))
+                    if first is None:
+                        first = pdf.head(1).drop(columns=ms_col)
+            expires = event_ms + ttl_ms
+        state.update((expires,))
+        state.setTimeoutTimestamp(expires)
         if first is not None:
             yield first
 
-    return stream.groupBy(key_col).applyInPandasWithState(
-        dedup_ttl,
-        outputStructType=output_schema,
-        stateStructType="seen boolean",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return (
+        stream.withColumn(ms_col, F.unix_millis(F.col(event_time_col)))
+        .groupBy(key_col)
+        .applyInPandasWithState(
+            dedup_ttl,
+            outputStructType=output_schema,
+            stateStructType="expires long",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
     )
 
 

@@ -4,11 +4,18 @@ BSP (SURVEY.md §3.1 consequence, §7 step 4).
 Reference hot path: worker partial-fit -> RPC to hub -> hub merge -> Kafka
 feedback topic -> worker applies update. The Kafka hop exists only because
 Flink forbids cyclic dataflow (Job.scala:77-87,136-142). In micro-batch BSP
-one batch IS one protocol round:
+one batch IS one protocol round, for every live pipeline at once:
 
-    batch -> per-partition partial_fit (mapInPandas, Arrow)
-          -> merge partial states (the hub, one tiny reduce)
+    batch -> ONE partial_fit pass per worker layout, training every live
+             pipeline that reads the batch that way (mapInPandas over the
+             partitions / applyInPandas over the worker keys, Arrow)
+          -> per-pipeline merge of its partial states (the hub, one tiny
+             reduce) and protocol round
           -> model broadcast into the next batch via the catalog
+
+The reference's worker operator likewise updates every live pipeline on
+each record (FlinkSpoke.scala:101); see ``train_batch`` for which pipelines
+share a pass.
 
 Protocol semantics under BSP (SURVEY.md §2.9): Synchronous is native;
 Asynchronous/SSP/EASGD are emulated at sync cadence with their statistics
@@ -34,6 +41,7 @@ from pyspark.sql import functions as F
 from ..functions.preprocess import apply_chain
 from ..learners import get_learner, trainer
 from ..learners.protocols import protocol_round
+from ..learners.trainer import Task
 from ..plans.catalog import PipelineCatalog
 
 # Protocols that keep per-worker model state between syncs (SURVEY.md §2.9).
@@ -52,6 +60,10 @@ def _deser(d: dict) -> dict:
 
 @dataclass
 class BatchStats:
+    """One pipeline's share of one BSP round. ``wall_ms`` is the wall time
+    of the whole round — every pipeline trains in the same fused passes, so
+    it is the same for all pipelines of a batch, not a per-pipeline cost."""
+
     batch_id: int
     pipeline: int
     protocol: str
@@ -128,8 +140,25 @@ def train_batch(
 ) -> list[BatchStats]:
     """One BSP round for every live pipeline over one micro-batch.
 
-    The batch is cached once and fanned out to each pipeline (the reference
-    trains every live pipeline on every record, FlinkSpoke.scala:101).
+    Every live pipeline trains on every record (the reference's one worker
+    operator updates them all, FlinkSpoke.scala:101), and pipelines that
+    read the batch the same way share one Spark pass:
+
+    * chainless pipelines with the same worker layout train together — one
+      ``trainer.fit`` pass for the global-state ones (``num_partitions``
+      partitions, or one for SingleLearner/CentralizedTraining), one
+      ``trainer.fit_groups`` pass over the worker keys for the per-worker
+      protocols (SSP/GM/FGM/EASGD);
+    * closed-form learners (ORR) keep their Catalyst aggregate;
+    * a pipeline with a preprocessor chain trains on its own pass over its
+      transformed frame, so its rows land exactly as when it trains alone.
+
+    The driver splits each pass's state rows by pipeline and runs the
+    merge, protocol round and statistics per pipeline. Pipelines with no
+    chain go first: a pass that fits no row means the batch is empty, and
+    then nothing else runs and the catalog is left as it was.
+    ``BatchStats.wall_ms`` is the wall time of the whole round (all passes
+    and driver merges), the same for every pipeline of the batch.
 
     ``skip_replayed=True`` (the streaming handler sets it) makes the round
     idempotent under foreachBatch replay: a pipeline whose persisted
@@ -138,108 +167,127 @@ def train_batch(
     catalog.save() after the round is the transaction commit (crash BEFORE
     the save replays cleanly from the previous state; crash after skips).
     """
-    stats: list[BatchStats] = []
+    t0 = time.time()
     live = catalog.live()
     if skip_replayed:
         live = [s for s in live
                 if int(getattr(s, "last_batch_id", -1) or -1) < int(batch_id)]
-    if not live:
-        return stats
-    batch_df = batch_df.cache()
-    try:
-        n_rows = batch_df.count()
-        if n_rows == 0:
-            return stats
-        for spec in live:
-            t0 = time.time()
-            learner = get_learner(spec.learner)
-            hyper = dict(spec.hyper)
-            init = _deser(spec.model) if spec.model is not None else None
-            # Preprocessor chain (PipelineMap.scala:25-29): fit stats are
-            # running integer moments in the spec (exact across batches),
-            # the transform is pure Catalyst column math on the batch.
-            train_df, eff_dim, fcol = batch_df, dim, features_col
-            if spec.preprocessors:
-                train_df, eff_dim, spec.preproc_state = apply_chain(
-                    batch_df, spec.preprocessors, features_col, dim,
-                    spec.preproc_state,
-                )
-                fcol = "_pp_features"
-            # SingleLearner (HT/K-means) trains on one partition — the
-            # reference forwards all points to a single central learner
-            # (FlinkSpoke.scala:203-211).
-            parts = 1 if spec.protocol in ("SingleLearner", "CentralizedTraining") \
-                else num_partitions
-            per_worker = (
-                spec.protocol in PER_WORKER_PROTOCOLS
-                and parts > 1
-                and not getattr(learner, "uses_blob", False)
-                and not getattr(learner, "closed_form", False)
+    passes: dict[tuple, list] = {}
+    for spec in live:
+        learner = get_learner(spec.learner)
+        # SingleLearner (HT/K-means) trains on one partition — the
+        # reference forwards all points to a single central learner
+        # (FlinkSpoke.scala:203-211).
+        parts = 1 if spec.protocol in ("SingleLearner", "CentralizedTraining") \
+            else num_partitions
+        per_worker = (
+            spec.protocol in PER_WORKER_PROTOCOLS
+            and parts > 1
+            and not getattr(learner, "uses_blob", False)
+            and not getattr(learner, "closed_form", False)
+        )
+        chain = spec.id if spec.preprocessors else None
+        passes.setdefault((chain, parts, per_worker), []).append(spec)
+
+    # spec.id -> (state, models shipped, worker states, preprocessor state)
+    rounds: dict[int, tuple] = {}
+    for (chain, parts, per_worker), members in sorted(
+        passes.items(), key=lambda kv: kv[0][0] is not None
+    ):
+        # Preprocessor chain (PipelineMap.scala:25-29): fit stats are
+        # running integer moments in the spec (exact across batches), the
+        # transform is pure Catalyst column math on the batch.
+        train_df, eff_dim, fcol, pp_state = batch_df, dim, features_col, None
+        if chain is not None:
+            train_df, eff_dim, pp_state = apply_chain(
+                batch_df, members[0].preprocessors, features_col, dim,
+                members[0].preproc_state,
             )
-            if per_worker:
-                # workers keep their own models between syncs; the batch is
-                # keyed to stable worker ids so state follows the worker
-                template = learner.init_state(eff_dim, hyper)
-                g_state = init or learner.init_state(eff_dim, hyper)
-                prev_workers = {
+            fcol = "_pp_features"
+        learners = [get_learner(s.learner) for s in members]
+        inits = [_deser(s.model) if s.model is not None else None
+                 for s in members]
+        if per_worker:
+            # workers keep their own models between syncs; the batch is
+            # keyed to stable worker ids so state follows the worker
+            starts, prev = [], []
+            for spec, learner, init in zip(members, learners, inits):
+                g_state = init or learner.init_state(eff_dim, dict(spec.hyper))
+                starts.append(g_state)
+                prev.append({
                     int(k): _deser(v)
                     for k, v in (spec.worker_models or {}).items()
-                } or {w: dict(g_state) for w in range(parts)}
-                dfw = train_df.withColumn(
-                    "_wk", F.pmod(F.col(id_col), F.lit(parts)).cast("int")
-                )
-                new_states = trainer.fit_groups(
-                    dfw, spec.learner, eff_dim, hyper, key_col="_wk",
-                    features_col=fcol, label_col=label_col,
-                    order_cols=[id_col], init_states=prev_workers,
-                )
-                workers = {**prev_workers, **new_states}
-                state, workers, shipped = protocol_round(
-                    spec.protocol, learner, template, g_state, workers,
-                    spec.rounds, hyper,
-                )
-                spec.worker_models = {
-                    str(k): _ser(v) for k, v in workers.items()
-                }
-            else:
-                state = trainer.fit(
-                    train_df,
-                    spec.learner,
-                    dim=eff_dim,
-                    hyper=hyper,
-                    features_col=fcol,
-                    label_col=label_col,
-                    num_partitions=parts,
-                    partition_col=partition_col if parts > 1 else None,
-                    order_cols=order_cols,
-                    init_state=init,
-                )
-                shipped = parts
-            spec.model = _ser(state)
-            spec.rounds += 1
-            round_fitted = int(state["n"]) - spec.fitted
-            spec.fitted = int(state["n"])
-            spec.cum_loss = float(state["cum_loss"])
-            spec.models_shipped += shipped
-            spec.bytes_shipped += shipped * _state_bytes(state)
-            _account_hub_shards(spec, state, shipped)
-            spec.learning_curve.append((spec.fitted, spec.cum_loss))
-            spec.last_batch_id = int(batch_id)
-            stats.append(
-                BatchStats(
-                    batch_id=batch_id,
-                    pipeline=spec.id,
-                    protocol=spec.protocol,
-                    fitted=round_fitted,
-                    models_shipped=shipped,
-                    bytes_shipped=shipped * _state_bytes(state),
-                    loss_sum=float(state["cum_loss"]),
-                    wall_ms=(time.time() - t0) * 1000,
-                )
+                } or {w: dict(g_state) for w in range(parts)})
+            dfw = train_df.withColumn(
+                "_wk", F.pmod(F.col(id_col), F.lit(parts)).cast("int")
             )
-        catalog.save()
-    finally:
-        batch_df.unpersist()
+            fitted = trainer.fit_groups(
+                dfw,
+                [Task(s.learner, eff_dim, dict(s.hyper), p)
+                 for s, p in zip(members, prev)],
+                key_col="_wk", features_col=fcol, label_col=label_col,
+                order_cols=[id_col],
+            )
+            if not any(fitted):
+                return []  # no row fitted: the batch is empty
+            for spec, learner, g_state, p, new in zip(
+                members, learners, starts, prev, fitted
+            ):
+                hyper = dict(spec.hyper)
+                state, workers, shipped = protocol_round(
+                    spec.protocol, learner, learner.init_state(eff_dim, hyper),
+                    g_state, {**p, **new}, spec.rounds, hyper,
+                )
+                rounds[spec.id] = (state, shipped, workers, pp_state)
+        else:
+            states = trainer.fit(
+                train_df,
+                [Task(s.learner, eff_dim, dict(s.hyper), init)
+                 for s, init in zip(members, inits)],
+                features_col=fcol,
+                label_col=label_col,
+                num_partitions=parts,
+                partition_col=partition_col if parts > 1 else None,
+                order_cols=order_cols,
+            )
+            if all(int(st["n"]) == s.fitted for st, s in zip(states, members)):
+                return []  # no row fitted: the batch is empty
+            for spec, state in zip(members, states):
+                rounds[spec.id] = (state, parts, None, pp_state)
+
+    if not rounds:
+        return []
+    stats: list[BatchStats] = []
+    wall_ms = (time.time() - t0) * 1000
+    for spec in live:
+        state, shipped, workers, pp_state = rounds[spec.id]
+        if workers is not None:
+            spec.worker_models = {str(k): _ser(v) for k, v in workers.items()}
+        if spec.preprocessors:
+            spec.preproc_state = pp_state
+        spec.model = _ser(state)
+        spec.rounds += 1
+        round_fitted = int(state["n"]) - spec.fitted
+        spec.fitted = int(state["n"])
+        spec.cum_loss = float(state["cum_loss"])
+        spec.models_shipped += shipped
+        spec.bytes_shipped += shipped * _state_bytes(state)
+        _account_hub_shards(spec, state, shipped)
+        spec.learning_curve.append((spec.fitted, spec.cum_loss))
+        spec.last_batch_id = int(batch_id)
+        stats.append(
+            BatchStats(
+                batch_id=batch_id,
+                pipeline=spec.id,
+                protocol=spec.protocol,
+                fitted=round_fitted,
+                models_shipped=shipped,
+                bytes_shipped=shipped * _state_bytes(state),
+                loss_sum=float(state["cum_loss"]),
+                wall_ms=wall_ms,
+            )
+        )
+    catalog.save()
     return stats
 
 
@@ -332,6 +380,16 @@ def make_batch_handler(
     record_buffer: list = []
 
     def handle(batch_df: DataFrame, batch_id: int):
+        # Read the micro-batch once: the request collect, the training
+        # passes and the predictions write all read this copy instead of
+        # re-running the source scan and the stateful dedup per action.
+        batch_df = batch_df.persist()
+        try:
+            _handle(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    def _handle(batch_df: DataFrame, batch_id: int):
         if "kind" in batch_df.columns:
             req_cols = [c for c in ("id", "request", "requestId", "learner",
                                     "preProcessors", "trainingConfiguration")
@@ -464,10 +522,14 @@ def build_query_responses(
     accuracy for classifiers, negative MSE for regressors, evaluated
     JVM-side via trainer.evaluate_linear. Without a holdout the score is NaN
     (the loss fields still report prequential training loss)."""
-    out = []
     pending, catalog.responses = catalog.responses, []
-    for req in pending:
-        spec = catalog.pipelines.get(int(req["pipelineId"]))
+    specs = [catalog.pipelines.get(int(req["pipelineId"])) for req in pending]
+    scores = _holdout_scores(
+        [s for s in specs if s is not None], test_points,
+        features_col=features_col, label_col=label_col, dim=dim,
+    )
+    out = []
+    for req, spec in zip(pending, specs):
         if spec is None:
             continue
         params = {}
@@ -478,20 +540,6 @@ def build_query_responses(
                     params[k] = [float(x) for x in flat]
         curve = spec.learning_curve
         last_loss = float(curve[-1][1]) if curve else float("nan")
-        score = float("nan")
-        if test_points is not None and spec.model and "w" in spec.model:
-            src, fcol = test_points, features_col
-            if spec.preprocessors and spec.preproc_state:
-                src, _, _ = apply_chain(
-                    test_points, spec.preprocessors, features_col, dim,
-                    spec.preproc_state, update=False,
-                )
-                fcol = "_pp_features"
-            ev = trainer.evaluate_linear(
-                src, spec.learner, _deser(spec.model),
-                features_col=fcol, label_col=label_col,
-            )
-            score = float(ev["score"])
         out.append(
             {
                 "responseId": req.get("responseId"),
@@ -500,8 +548,49 @@ def build_query_responses(
                 "dataFitted": int(spec.fitted),
                 "loss": (last_loss / spec.fitted) if spec.fitted else float("nan"),
                 "cumulativeLoss": last_loss,
-                "score": score,
+                "score": scores.get(spec.id, float("nan")),
                 "parameters": params,
             }
         )
     return out
+
+
+def _holdout_scores(
+    specs: list,
+    test_points: DataFrame | None,
+    *,
+    features_col: str,
+    label_col: str,
+    dim: int,
+) -> dict[int, float]:
+    """Holdout score of every queried linear pipeline, {pipeline id: score}.
+    Pipelines whose features go through the same fitted chain (all the
+    chainless ones, in particular) are scored in ONE aggregate over that
+    transformed holdout."""
+    if test_points is None:
+        return {}
+    groups: dict[str, dict[int, object]] = {}
+    for spec in specs:
+        if not spec.model or "w" not in spec.model:
+            continue
+        chained = bool(spec.preprocessors and spec.preproc_state)
+        key = repr((spec.preprocessors, spec.preproc_state)) if chained else ""
+        groups.setdefault(key, {})[spec.id] = spec
+    scores: dict[int, float] = {}
+    for members in groups.values():
+        head = next(iter(members.values()))
+        src, fcol = test_points, features_col
+        if head.preprocessors and head.preproc_state:
+            src, _, _ = apply_chain(
+                test_points, head.preprocessors, features_col, dim,
+                head.preproc_state, update=False,
+            )
+            fcol = "_pp_features"
+        evs = trainer.evaluate_linear(
+            src, [Task(s.learner, state=_deser(s.model))
+                  for s in members.values()],
+            features_col=fcol, label_col=label_col,
+        )
+        for pid, ev in zip(members, evs):
+            scores[pid] = float(ev["score"])
+    return scores

@@ -66,12 +66,14 @@ ALLOWLIST = {
     ("operators/skew.py", 'F.bit_or("mask")'):
         "bloom filter words: fixed 16-BIGINT array",
     ("learners/trainer.py", "mapInPandas(run_partition, schema=STATE_SCHEMA"):
-        "BSP merge: ONE model-state row per partition (the parameter-"
-        "server pattern itself)",
+        "fused BSP pass (fit): ONE model-state row per (model, partition), "
+        "so rows = live pipelines x workers (the parameter-server pattern "
+        "itself)",
+    ("learners/trainer.py", "applyInPandas(run_group, schema=STATE_SCHEMA)"):
+        "fused per-worker pass (fit_groups): ONE model-state row per "
+        "(model, worker key), so rows = live per-worker pipelines x workers",
     ("learners/trainer.py", "points.select(features_col, label_col)"):
         "evaluate() holdout: limit+count-guarded to max_rows",
-    ("learners/trainer.py", ".collect()"):
-        "fit_groups per-group states: one model row per group",
     ("functions/preprocess.py", '.agg(F.count(F.lit(1)).cast("long")'):
         "RobustScaler histogram: grid-clamped to robust_hist_max per dim",
     ("functions/preprocess.py", ").collect()"):

@@ -194,6 +194,42 @@ def test_dedup_ttl_expires_state(spark, tmp_path):
     assert ids == [1, 1, 2, 2, 3, 50]
 
 
+def test_dedup_ttl_counts_from_event_time(spark, tmp_path):
+    """A key's TTL runs from its event time, not from the watermark when it
+    was first seen. The watermark is still 0 in batch 0; measured from it,
+    a one-day TTL ended in 1970 and ids seen in batch 0 passed again as soon
+    as the watermark moved. A key re-sent once the watermark is past its
+    event time + TTL still passes."""
+    t0 = pd.Timestamp("2026-01-01 00:00:00")
+    day = pd.Timedelta(days=1)
+    batches = [
+        _data_rows([1, 2, 3], t0),
+        _data_rows([10, 11], t0 + pd.Timedelta(minutes=5)),
+        _data_rows([1, 2], t0 + pd.Timedelta(minutes=10)),  # re-sent: dropped
+        _data_rows([20], t0 + 2 * day),     # watermark moves past t0 + 1 day
+        # past the TTL and not late (event time above the watermark): passes
+        _data_rows([3], t0 + 2 * day + pd.Timedelta(minutes=1)),
+    ]
+    src = str(tmp_path / "ttl_day_src")
+    _write_ordered(src, batches)
+    stream = file_replay_source(spark, src, UNIFIED_SCHEMA,
+                                max_files_per_trigger=1)
+    out = streaming_dedup(
+        stream.withWatermark("event_time", "10 seconds"), "id",
+        UNIFIED_SCHEMA, ttl_ms=86_400_000,
+    )
+    got: list = []
+    q = (
+        out.writeStream.foreachBatch(lambda df, _: got.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ttl_day_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    # 1 and 2 once: their re-sends are dropped; 3 twice: its TTL ran out
+    assert sorted(r["id"] for r in got) == [1, 2, 3, 3, 10, 11, 20]
+
+
 def test_checkpoint_restart_trains_each_row_exactly_once(spark, tmp_path):
     """Crash-restart semantics (the reference's CheckpointedFunction
     surface, FlinkSpoke.scala:233-334): the stream checkpoint replays the
