@@ -10,7 +10,8 @@ SURVEY.md §2.8) with a ``foreachBatch`` BSP round per micro-batch:
 
     sources (kafka | file replay)                       Job.scala:42-57,127-133
       -> unified stream (kind = data | request)          J1 connect
-      -> [optional] event-time watermark + TTL dedup     streaming/stateful.py
+      -> [optional] dedup of the data rows               streaming/stateful.py
+         (exact, or TTL'd past an event-time watermark)
       -> foreachBatch: requests first, then train/score  training_loop.py
       -> predictions parquet/kafka sink                  Job.scala:98-105
       -> responses + performance via catalog drains      Job.scala:89-96
@@ -62,8 +63,11 @@ class JobConfig:
     id_col: str = "id"
 
     # optional cross-batch dedup on the data stream: rows with
-    # kind='request' bypass (control plane is never deduped); state is
-    # TTL-bounded past the event-time watermark (the 100 TB shape)
+    # kind='request' bypass (control plane is never deduped). Without a
+    # TTL it is exact and keeps one state entry per key forever; with
+    # one, state is TTL-bounded past the event-time watermark (the 100 TB
+    # shape). The watermark is set only then: it drives the expiry, and
+    # the exact dedup would drop rows behind it.
     dedup_key: str | None = None
     dedup_ttl_ms: int | None = None
     watermark_col: str = "event_time"
@@ -104,11 +108,14 @@ def run_job(spark: SparkSession, cfg: JobConfig,
 
         from .streaming.stateful import streaming_dedup
 
-        marked = stream.withWatermark(cfg.watermark_col, cfg.watermark_delay)
+        marked = stream
+        if cfg.dedup_ttl_ms is not None:
+            marked = stream.withWatermark(cfg.watermark_col,
+                                          cfg.watermark_delay)
         has_kind = "kind" in stream.columns
         data = marked.filter(F.col("kind") == "data") if has_kind else marked
         deduped = streaming_dedup(
-            data, cfg.dedup_key, data.schema, ttl_ms=cfg.dedup_ttl_ms,
+            data, cfg.dedup_key, ttl_ms=cfg.dedup_ttl_ms,
             event_time_col=cfg.watermark_col,
         )
         if has_kind:

@@ -1,19 +1,24 @@
 """Arbitrary stateful streaming operators (keyed state store + pandas).
 
-Implemented on ``applyInPandasWithState`` (GroupState API). Spark 4.x also
-offers ``transformWithStateInPandas`` — the richer successor (value/list/map
-state, timers) that SURVEY.md §4.2 targets — but its Python driver worker
-imports ``google.protobuf``, which is not installed in this container; the
-GroupState API provides the same keyed-state semantics for these operators
-without that dependency. Swapping to transformWithStateInPandas on a
-production image is a mechanical change (same processor logic).
+The keyed operators run on ``applyInPandasWithState`` (GroupState API),
+except exact dedup, which is Spark's native streaming ``dropDuplicates``.
+Spark 4.x also offers ``transformWithStateInPandas`` — the richer successor
+(value/list/map state, timers) that SURVEY.md §4.2 targets — but its Python
+driver worker imports ``google.protobuf``, which is not installed in this
+container; the GroupState API provides the same keyed-state semantics for
+these operators without that dependency. Swapping to
+transformWithStateInPandas on a production image is a mechanical change
+(same processor logic).
 
 Operators:
 
-* ``streaming_dedup``         cross-batch exact dedup: the first record per
-                              key passes; every later duplicate (same batch
-                              or later) is dropped. State: one boolean per
-                              key — O(distinct keys), checkpointed.
+* ``streaming_dedup``         cross-batch dedup: the first record per key
+                              passes; every later duplicate (same batch or
+                              later) is dropped. Exact: native
+                              ``dropDuplicates``, state one key entry per
+                              distinct key, JVM-side, kept forever. With a
+                              TTL: GroupState, one expiry per key, removed
+                              once the watermark passes it. Checkpointed.
 * ``streaming_running_stats`` per-key running count/sum/min/max — the
                               streaming StandardScaler fit (running moments,
                               SURVEY.md §7 step 5).
@@ -22,7 +27,7 @@ Operators:
                               sequence as operators/drift.ddm_drift_summary,
                               so replay == batch bit-for-bit.
 
-Both shuffle once on the key; state lives with the partition and
+Each shuffles once on the key; state lives with the partition and
 rescale/restore come from Structured Streaming checkpointing — the
 properties the reference hand-built with CheckpointedFunction
 (FlinkSpoke.scala:233-334).
@@ -37,24 +42,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def _dedup_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    if state.exists:
-        return
-    first = None
-    for pdf in pdfs:
-        if len(pdf):
-            first = pdf.head(1)
-            break
-    state.update((True,))
-    if first is not None:
-        yield first
-
-
 def streaming_dedup(
-    stream: DataFrame, key_col: str, output_schema, ttl_ms: int | None = None,
+    stream: DataFrame, key_col: str, ttl_ms: int | None = None,
     event_time_col: str = "event_time",
 ) -> DataFrame:
-    """Cross-batch exact dedup on ``key_col`` (e.g. md5(text)).
+    """Cross-batch dedup on ``key_col`` (e.g. md5(text)); the output has
+    the schema of ``stream``.
+
+    Without ``ttl_ms`` the dedup is exact and runs JVM-side as Spark's
+    streaming ``dropDuplicates``: one state entry per distinct key, kept
+    forever. It drops rows behind an event-time watermark when ``stream``
+    carries one, so give it a stream without a watermark when late rows
+    must still pass.
 
     With ``ttl_ms`` (requires an event-time watermark upstream on
     ``event_time_col``) each key's seen-marker expires ``ttl_ms`` past the
@@ -65,16 +64,11 @@ def streaming_dedup(
     with total distinct keys; watermark-TTL'd state grows with the dedup
     window only. A duplicate arriving once the watermark has passed the
     expiry passes again (standard watermark-bounded dedup semantics — same
-    contract as Spark's own dropDuplicatesWithinWatermark); re-sent
-    duplicates do not extend it."""
+    contract as Spark's own dropDuplicatesWithinWatermark, whose horizon is
+    the watermark delay rather than a TTL of its own); re-sent duplicates
+    do not extend it."""
     if ttl_ms is None:
-        return stream.groupBy(key_col).applyInPandasWithState(
-            _dedup_fn,
-            outputStructType=output_schema,
-            stateStructType="seen boolean",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return stream.dropDuplicates([key_col])
     from pyspark.sql import functions as F
 
     ms_col = "_dedup_event_ms"
@@ -106,7 +100,7 @@ def streaming_dedup(
         .groupBy(key_col)
         .applyInPandasWithState(
             dedup_ttl,
-            outputStructType=output_schema,
+            outputStructType=stream.schema,
             stateStructType="expires long",
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
@@ -303,7 +297,8 @@ def streaming_near_dedup(stream: DataFrame, k: int = 8, bands: int = 4,
     ANY band emits a candidate pair; downstream exact verification (cosine
     / jaccard re-rank) is the same second stage the batch pipeline uses.
     State: one long per non-empty bucket — O(distinct buckets),
-    checkpointed, TTL-able by the same timeout pattern as streaming_dedup.
+    checkpointed, TTL-able by the timeout pattern of streaming_dedup's TTL
+    path.
 
     Output: (doc_id, anchor_id, band) candidate rows (distinct-pair
     reduction is a downstream stateless aggregation per micro-batch).

@@ -24,9 +24,10 @@ when no partition's local drift exceeds the threshold — the communication
 pattern, and therefore the statistics, survive even though BSP removes the
 asynchrony. Differences are documented, not hidden.
 
-Prediction semantics: forecasting points in batch N are scored with the
-model of batch N-1 (the pre-update model), matching the reference's
-read-then-train ordering.
+Prediction semantics: forecasting points in batch N are scored after the
+batch's round, with the model that round produced (the post-update model,
+the one a Query in the same batch reports), in one projection per
+preprocessor chain (``predict_batch``).
 """
 
 from __future__ import annotations
@@ -291,6 +292,34 @@ def train_batch(
     return stats
 
 
+def _chain_groups(specs: list) -> list[list]:
+    """The linear pipelines among ``specs`` (each once), grouped by the
+    transformed frame they read: all chainless pipelines form one group,
+    and pipelines whose features go through the same fitted chain (same
+    preprocessors, same fitted state) another."""
+    groups: dict[str, dict[int, object]] = {}
+    for spec in specs:
+        if not spec.model or "w" not in spec.model:
+            continue
+        key = (repr((spec.preprocessors, spec.preproc_state))
+               if spec.preprocessors else "")
+        groups.setdefault(key, {})[spec.id] = spec
+    return [list(g.values()) for g in groups.values()]
+
+
+def _chain_frame(df: DataFrame, spec, features_col: str, dim: int):
+    """(frame, features column) a pipeline's model reads: ``df`` itself, or
+    ``df`` through the pipeline's fitted chain, transform only (the
+    reference scores through the same fitted chain, FlinkSpoke.scala:121)."""
+    if not spec.preprocessors:
+        return df, features_col
+    out, _, _ = apply_chain(
+        df, spec.preprocessors, features_col, dim, spec.preproc_state,
+        update=False,
+    )
+    return out, "_pp_features"
+
+
 def predict_batch(
     batch_df: DataFrame,
     catalog: PipelineCatalog,
@@ -301,35 +330,39 @@ def predict_batch(
 ) -> DataFrame | None:
     """Score a forecasting batch with every pipeline's CURRENT model —
     entirely in Catalyst expressions for linear models (no Python).
-    Output: pipelineId, recordId, prediction (PREDICTION_SCHEMA shape)."""
+    Output: pipelineId, recordId, prediction (PREDICTION_SCHEMA shape).
+
+    Each record is scored once against every pipeline that reads the same
+    frame (the reference's one worker operator, FlinkSpoke.scala:101): one
+    projection builds a (pipelineId, prediction) struct per pipeline and
+    explodes their array, so the batch is read once per chain group, not
+    once per pipeline."""
     from ..functions.vector import linear_predict
 
     outs = []
-    for spec in catalog.live():
-        if not spec.model or "w" not in (spec.model or {}):
-            continue
-        w = list(map(float, spec.model["w"]))
-        src, fcol = batch_df, features_col
-        if spec.preprocessors:
-            # transform-only pass with the stats fitted so far (reference
-            # scores through the same fitted chain, FlinkSpoke.scala:121)
-            src, _, _ = apply_chain(
-                batch_df, spec.preprocessors, features_col,
-                dim, spec.preproc_state, update=False,
+    for members in _chain_groups(catalog.live()):
+        src, fcol = _chain_frame(batch_df, members[0], features_col, dim)
+        preds = []
+        for spec in members:
+            w = list(map(float, spec.model["w"]))
+            raw = linear_predict(fcol, w[:-1], w[-1])
+            pred = (
+                F.when(raw >= 0, 1.0).otherwise(-1.0)
+                if get_learner(spec.learner).is_classifier
+                else raw
             )
-            fcol = "_pp_features"
-        raw = linear_predict(fcol, w[:-1], w[-1])
-        learner = get_learner(spec.learner)
-        pred = (
-            F.when(raw >= 0, 1.0).otherwise(-1.0)
-            if learner.is_classifier
-            else raw
-        )
+            preds.append(F.struct(
+                F.lit(spec.id).cast("long").alias("pipelineId"),
+                pred.alias("prediction"),
+            ))
         outs.append(
             src.select(
-                F.lit(spec.id).cast("long").alias("pipelineId"),
                 F.col(id_col).cast("long").alias("recordId"),
-                pred.alias("prediction"),
+                F.explode(F.array(*preds)).alias("_p"),
+            ).select(
+                F.col("_p.pipelineId").alias("pipelineId"),
+                "recordId",
+                F.col("_p.prediction").alias("prediction"),
             )
         )
     if not outs:
@@ -569,28 +602,13 @@ def _holdout_scores(
     transformed holdout."""
     if test_points is None:
         return {}
-    groups: dict[str, dict[int, object]] = {}
-    for spec in specs:
-        if not spec.model or "w" not in spec.model:
-            continue
-        chained = bool(spec.preprocessors and spec.preproc_state)
-        key = repr((spec.preprocessors, spec.preproc_state)) if chained else ""
-        groups.setdefault(key, {})[spec.id] = spec
     scores: dict[int, float] = {}
-    for members in groups.values():
-        head = next(iter(members.values()))
-        src, fcol = test_points, features_col
-        if head.preprocessors and head.preproc_state:
-            src, _, _ = apply_chain(
-                test_points, head.preprocessors, features_col, dim,
-                head.preproc_state, update=False,
-            )
-            fcol = "_pp_features"
+    for members in _chain_groups(specs):
+        src, fcol = _chain_frame(test_points, members[0], features_col, dim)
         evs = trainer.evaluate_linear(
-            src, [Task(s.learner, state=_deser(s.model))
-                  for s in members.values()],
+            src, [Task(s.learner, state=_deser(s.model)) for s in members],
             features_col=fcol, label_col=label_col,
         )
-        for pid, ev in zip(members, evs):
-            scores[pid] = float(ev["score"])
+        for spec, ev in zip(members, evs):
+            scores[spec.id] = float(ev["score"])
     return scores

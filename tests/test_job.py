@@ -61,6 +61,51 @@ def test_run_job_end_to_end(spark, tmp_path):
     assert np.isfinite(np.array(spec.model["w"])).all()
 
 
+def test_run_job_exact_dedup(spark, tmp_path):
+    """Exact dedup (no TTL): ids re-sent within a batch and across batches
+    are dropped, request rows bypass the dedup (every request here carries
+    id 1, as does a data row), and a row two hours behind the newest event
+    time still passes: without a TTL there is no watermark to drop it."""
+    t0 = pd.Timestamp("2026-01-01 00:00:00")
+    t2h = t0 + pd.Timedelta(hours=2)
+    b0 = _request_row("Create", 1, t0, learner="PA")
+    b1 = pd.concat(  # ids 0-19 twice in the one batch
+        [_data_rows(range(0, 100), t2h), _data_rows(range(0, 20), t2h)],
+        ignore_index=True,
+    )
+    b2 = pd.concat(  # ids 50-89 re-sent from batch 1
+        [_data_rows(range(100, 200), t2h), _data_rows(range(50, 90), t2h)],
+        ignore_index=True,
+    )
+    b3 = _request_row("Query", 7, t2h)
+    b4 = _data_rows(range(200, 210), t0)  # late by two hours
+    src = str(tmp_path / "exact_src")
+    _write_ordered(src, [b0, b1, b2, b3, b4])
+
+    preds, stats = [], []
+    cfg = JobConfig(
+        parallelism=4,
+        input_path=src,
+        input_schema=UNIFIED_SCHEMA,
+        max_files_per_trigger=1,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        dedup_key="id",
+        predictions_sink=preds,
+        stats_sink=stats,
+        timeout_ms=180_000,
+    )
+    cat = run_job(spark, cfg)
+
+    # ids 0-209 once each: every tenth forecasts, the rest train
+    assert [(s.batch_id, s.fitted) for s in stats] == [(1, 90), (2, 90),
+                                                       (4, 9)]
+    assert cat.pipelines[1].fitted == 189
+    assert sorted(r["recordId"] for r in preds) == list(range(0, 210, 10))
+    assert len(cfg.responses_sink) == 1
+    assert cfg.responses_sink[0]["responseId"] == 7
+    assert cfg.responses_sink[0]["dataFitted"] == 180
+
+
 def test_build_source_requires_binding(spark):
     with pytest.raises(ValueError):
         build_source(spark, JobConfig())

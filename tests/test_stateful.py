@@ -24,7 +24,7 @@ def _write_batches(spark, tmp_path):
 
 def test_streaming_dedup_across_batches(spark, tmp_path):
     stream = _write_batches(spark, tmp_path)
-    out = streaming_dedup(stream, "k", "k string, v double, rid bigint")
+    out = streaming_dedup(stream, "k")
     sink: list = []
     q = (
         out.writeStream.foreachBatch(lambda df, _: sink.extend(df.collect()))
@@ -35,6 +35,17 @@ def test_streaming_dedup_across_batches(spark, tmp_path):
     q.awaitTermination(120)
     keys = sorted(r["k"] for r in sink)
     assert keys == ["a", "b", "c"]  # second+third 'a' suppressed cross-batch
+
+
+def test_exact_dedup_plan_is_native(spark, tmp_path):
+    """Exact dedup is Spark's JVM-side streaming Deduplicate: no Python
+    worker, no GroupState."""
+    stream = _write_batches(spark, tmp_path)
+    out = streaming_dedup(stream, "k")
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert "Deduplicate" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    assert out.schema == stream.schema
 
 
 def test_streaming_running_stats(spark, tmp_path):

@@ -166,10 +166,7 @@ def test_dedup_then_train_composition(spark, tmp_path):
     schema = spark.createDataFrame(pdf).schema
     stream = file_replay_source(spark, src, schema, max_files_per_trigger=1)
     keyed = stream.withColumn("k", SF.concat_ws("|", "id"))
-    deduped = streaming_dedup(
-        keyed, "k", "k string, id long, features array<double>, label double,"
-                    " operation string"
-    ).drop("k")
+    deduped = streaming_dedup(keyed, "k").drop("k")
 
     cat = PipelineCatalog()
     cat.apply_request({"id": 1, "request": "Create", "learner": {"name": "PA"}})

@@ -121,7 +121,6 @@ def test_unified_stream_create_train_query_response(spark, tmp_path):
     deduped = streaming_dedup(
         data.withColumn("k", F.col("id").cast("string")),
         "k",
-        StructType(UNIFIED_SCHEMA.fields + [StructField("k", StringType())]),
         ttl_ms=3_600_000,
     ).drop("k")
     # control rows bypass dedup and re-join the data stream (J1 connect)
@@ -178,7 +177,6 @@ def test_dedup_ttl_expires_state(spark, tmp_path):
     out = streaming_dedup(
         marked.withColumn("k", F.col("id").cast("string")),
         "k",
-        StructType(UNIFIED_SCHEMA.fields + [StructField("k", StringType())]),
         ttl_ms=10_000,
     )
     got: list = []
@@ -216,7 +214,7 @@ def test_dedup_ttl_counts_from_event_time(spark, tmp_path):
                                 max_files_per_trigger=1)
     out = streaming_dedup(
         stream.withWatermark("event_time", "10 seconds"), "id",
-        UNIFIED_SCHEMA, ttl_ms=86_400_000,
+        ttl_ms=86_400_000,
     )
     got: list = []
     q = (
