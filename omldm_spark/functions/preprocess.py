@@ -19,6 +19,8 @@ from itertools import combinations_with_replacement
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .vector import sql_col, sql_double
+
 
 def standard_scaler_stats(df: DataFrame, cols: list[str]) -> DataFrame:
     """Per-column mean and population std — one pass, one tiny row.
@@ -108,8 +110,14 @@ def polynomial_features(df: DataFrame, cols: list[str], degree: int = 2) -> Data
 STATS_QUANT = 1_000_000  # 1e-6 feature resolution for scaler fit stats
 
 
-def _el(col: str, i: int):
-    return F.element_at(F.col(col), i + 1)
+def _el(col: str, i: int) -> str:
+    """SQL text of element ``i`` (0-based) of the array column ``col``."""
+    return f"element_at({sql_col(col)}, {i + 1})"
+
+
+def _array(els: list[str]):
+    """One ``array(...)`` column from SQL element texts, parsed in one call."""
+    return F.expr(f"array({', '.join(els)})")
 
 
 def poly_expand_expr(col: str, dim: int, degree: int):
@@ -118,26 +126,23 @@ def poly_expand_expr(col: str, dim: int, degree: int):
     inline expression (array lambdas re-evaluate inline inputs per element)."""
     if degree < 1:
         raise ValueError("degree must be >= 1")
-    terms = []
-    for d in range(1, degree + 1):
-        for combo in combinations_with_replacement(range(dim), d):
-            e = _el(col, combo[0])
-            for idx in combo[1:]:
-                e = e * _el(col, idx)
-            terms.append(e)
-    return F.array(*terms), len(terms)
+    terms = [
+        " * ".join(_el(col, i) for i in combo)
+        for d in range(1, degree + 1)
+        for combo in combinations_with_replacement(range(dim), d)
+    ]
+    return _array(terms), len(terms)
 
 
-def _moment_aggs(col: str, dim: int, quant: int):
-    """One aggregation producing exact integer moments per element:
-    n, s_i = Σ round(x_i*Q), ss_i = Σ round(x_i*Q)^2, mn_i, mx_i."""
-    aggs = [F.count(F.lit(1)).cast("long").alias("n")]
+def _moment_aggs(col: str, dim: int, quant: int) -> list[str]:
+    """One aggregation (``selectExpr`` list) producing exact integer moments
+    per element: n, s_i = Σ round(x_i*Q), ss_i = Σ round(x_i*Q)^2, mn_i, mx_i."""
+    aggs = ["CAST(count(1) AS BIGINT) AS n"]
     for i in range(dim):
-        q = F.round(_el(col, i) * quant, 0).cast("decimal(38,0)")
-        aggs.append(F.sum(q).alias(f"s_{i}"))
-        aggs.append(F.sum(q * q).alias(f"ss_{i}"))
-        aggs.append(F.min(q).cast("long").alias(f"mn_{i}"))
-        aggs.append(F.max(q).cast("long").alias(f"mx_{i}"))
+        q = f"CAST(round({_el(col, i)} * {quant}, 0) AS DECIMAL(38,0))"
+        aggs += [f"sum({q}) AS s_{i}", f"sum({q} * {q}) AS ss_{i}",
+                 f"CAST(min({q}) AS BIGINT) AS mn_{i}",
+                 f"CAST(max({q}) AS BIGINT) AS mx_{i}"]
     return aggs
 
 
@@ -274,26 +279,24 @@ def apply_chain(
                 scale = 1 << ks[i]
                 p25, p50, p75 = p25 * scale, p50 * scale, p75 * scale
                 iqr = p75 - p25
-                x = _el(cur, i)
                 els.append(
-                    (x - F.lit(float(p50) / RQ)) / F.lit(float(iqr) / RQ)
-                    if iqr > 0 else F.lit(0.0)
+                    f"({_el(cur, i)} - {sql_double(float(p50) / RQ)}) / "
+                    f"{sql_double(float(iqr) / RQ)}" if iqr > 0 else "0.0D"
                 )
-            df = df.withColumn(tmp, F.array(*els))
+            df = df.withColumn(tmp, _array(els))
         elif name == "Normalizer":
             # stateless row-local L2: no fit pass, no state slot
-            els = []
-            norm = sum(
-                (_el(cur, i) * _el(cur, i) for i in range(cur_dim)), F.lit(0.0)
-            )
-            norm = F.sqrt(norm)
-            for i in range(cur_dim):
-                x = _el(cur, i)
-                els.append(F.when(norm > 0, x / norm).otherwise(F.lit(0.0)))
-            df = df.withColumn(tmp, F.array(*els))
+            norm = "sqrt(" + " + ".join(
+                ["0.0D"] + [f"{_el(cur, i)} * {_el(cur, i)}" for i in range(cur_dim)]
+            ) + ")"
+            els = [
+                f"CASE WHEN {norm} > 0 THEN {_el(cur, i)} / {norm} ELSE 0.0D END"
+                for i in range(cur_dim)
+            ]
+            df = df.withColumn(tmp, _array(els))
         elif name in ("StandardScaler", "MinMaxScaler", "MaxAbsScaler"):
             if update:
-                row = df.agg(*_moment_aggs(cur, cur_dim, quant)).first()
+                row = df.selectExpr(*_moment_aggs(cur, cur_dim, quant)).first()
                 if int(row["n"]) > 0:
                     state[idx] = _merge_moments(state[idx], row, cur_dim)
             st = state[idx]
@@ -314,21 +317,23 @@ def apply_chain(
                 if name == "StandardScaler":
                     mean, std = mean_std_from_moments(st, i, quant)
                     els.append(
-                        (x - F.lit(mean)) / F.lit(std) if std > 0 else F.lit(0.0)
+                        f"({x} - {sql_double(mean)}) / {sql_double(std)}"
+                        if std > 0 else "0.0D"
                     )
                 elif name == "MaxAbsScaler":
                     # max|x| falls out of the running min/max moments —
                     # no new state shape for the streaming chain
                     lo, hi = min_max_from_moments(st, i, quant)
                     ma = max(abs(lo), abs(hi))
-                    els.append(x / F.lit(ma) if ma > 0 else F.lit(0.0))
+                    els.append(f"{x} / {sql_double(ma)}" if ma > 0 else "0.0D")
                 else:
                     lo, hi = min_max_from_moments(st, i, quant)
                     rng = hi - lo
                     els.append(
-                        (x - F.lit(lo)) / F.lit(rng) if rng > 0 else F.lit(0.5)
+                        f"({x} - {sql_double(lo)}) / {sql_double(rng)}"
+                        if rng > 0 else "0.5D"
                     )
-            df = df.withColumn(tmp, F.array(*els))
+            df = df.withColumn(tmp, _array(els))
         else:
             raise ValueError(f"unknown preprocessor {name!r}")
         cur = tmp
@@ -466,18 +471,16 @@ def _robust_fit_batch(
     ks = list(old)
     target = max(2, hist_max // 2)
     raw = df.select(
-        F.posexplode(
-            F.array(*[
-                F.round(_el(cur, i) * rq, 0).cast("long")
-                for i in range(cur_dim)
-            ])
-        ).alias("dim", "v")
+        F.posexplode(_array([
+            f"CAST(round({_el(cur, i)} * {rq}, 0) AS BIGINT)"
+            for i in range(cur_dim)
+        ])).alias("dim", "v")
     )
 
     def at_levels(levels):
-        karr = F.array(*[F.lit(int(k)) for k in levels])
+        karr = f"array({', '.join(str(int(k)) for k in levels)})"
         return raw.withColumn(
-            "kk", F.element_at(karr, F.col("dim") + 1)
+            "kk", F.expr(f"element_at({karr}, dim + 1)")
         ).withColumn("vq", F.expr("shiftright(v, kk)"))
 
     probe = {

@@ -2,11 +2,21 @@
 
 The reference's Breeze vectors (src/main/scala/omldm/utils/CommonUtils.scala:
 22-23) become plain array columns; dot products and norms stay JVM-side via
-higher-order functions (zip_with/aggregate), so linear-model *scoring* never
-leaves whole-stage codegen. Training kernels (numpy) live in learners/.
+higher-order functions (zip_with/aggregate), so linear-model *scoring* runs
+no Python. Those two functions are ``CodegenFallback`` expressions: they are
+interpreted inside the generated code of the stage around them, not compiled.
+Training kernels (numpy) live in learners/.
+
+Expressions built from model or scaler state (one literal per coefficient)
+are rendered as Spark SQL text and parsed by the JVM in one call
+(``F.expr`` / ``selectExpr``), not assembled from one py4j round trip per
+literal. :func:`sql_double` renders every double and :func:`sql_col` every
+column name in that text.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -14,6 +24,25 @@ from pyspark.sql import functions as F
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
+
+
+def sql_double(x: float) -> str:
+    """A DOUBLE literal in Spark SQL that parses back to the same bits.
+
+    ``repr`` is the shortest round-tripping decimal, and the ``D`` suffix
+    makes it a double (a bare ``1.0`` is ``DECIMAL(2,1)``); NaN and the
+    infinities have no literal form and go through a string cast."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'' if x > 0 else '-'}Infinity' AS DOUBLE)"
+    return repr(x) + "D"
+
+
+def sql_col(name: str) -> str:
+    """A column name as a backquoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -25,13 +54,17 @@ def dot(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def dot_const(a: Column | str, weights: list[float]) -> Column:
-    """Σ a_i * w_i against a broadcast Python weight list (model scoring)."""
-    return F.aggregate(
-        F.zip_with(_c(a), F.array(*[F.lit(float(w)) for w in weights]), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def linear_predict_sql(col: str, weights: list[float], bias: float) -> str:
+    """SQL text of w·x + b over the ARRAY<DOUBLE> column ``col``: Σ x_i * w_i
+    summed left to right, with the Python weights and bias as plan
+    literals, for embedding in a larger expression."""
+    ws = ", ".join(sql_double(w) for w in weights)
+    return (f"(aggregate(zip_with({sql_col(col)}, array({ws}), (x, w) -> x * w), "
+            f"0.0D, (acc, v) -> acc + v) + {sql_double(bias)})")
+
+
+def linear_predict(col: str, weights: list[float], bias: float) -> Column:
+    return F.expr(linear_predict_sql(col, weights, bias))
 
 
 def norm2(a: Column | str) -> Column:
@@ -43,10 +76,6 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     num = dot(a, b)
     den = norm2(a) * norm2(b)
     return F.when(den > 0, num / den).otherwise(F.lit(0.0))
-
-
-def linear_predict(features: Column | str, weights: list[float], bias: float) -> Column:
-    return dot_const(features, weights) + F.lit(float(bias))
 
 
 def to_double_array(col: Column | str) -> Column:

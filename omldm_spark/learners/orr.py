@@ -26,6 +26,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vector import sql_col, sql_double
+
 
 def gram_aggregate(
     points: DataFrame, feature_cols: list[str], target_col: str, round_digits: int | None = None
@@ -49,26 +51,6 @@ def gram_aggregate(
         aggs.append(rnd(F.avg(cols[i] * F.col(target_col))).alias(f"v_{i}"))
     aggs.append(rnd(F.avg(F.col(target_col))).alias("v_b"))
     return points.agg(*aggs)
-
-
-def gram_sql(
-    inner_sql: str, feature_exprs: list[str], target_expr: str, round_digits: int
-) -> str:
-    """DuckDB oracle equivalent of :func:`gram_aggregate`."""
-    d = len(feature_exprs)
-    parts = ["CAST(count(*) AS BIGINT) AS n"]
-    for i in range(d):
-        xi = feature_exprs[i]
-        for j in range(i, d):
-            parts.append(
-                f"round(avg(({xi}) * ({feature_exprs[j]})), {round_digits}) AS m_{i}_{j}"
-            )
-        parts.append(f"round(avg({xi}), {round_digits}) AS m_{i}_b")
-        parts.append(
-            f"round(avg(({xi}) * ({target_expr})), {round_digits}) AS v_{i}"
-        )
-    parts.append(f"round(avg({target_expr}), {round_digits}) AS v_b")
-    return f"SELECT {', '.join(parts)} FROM ({inner_sql})"
 
 
 def solve_ridge_np(gram_row: dict, d: int, lam: float) -> np.ndarray:
@@ -106,14 +88,6 @@ FROM (
   FROM {g}
 )
 """
-
-
-def predict_expr(w_cols: list[str], x_cols: list[str], bias_col: str) -> F.Column:
-    """w·x + b as a Catalyst expression (JVM-side scoring)."""
-    pred = F.col(bias_col)
-    for w, x in zip(w_cols, x_cols):
-        pred = pred + F.col(w) * F.col(x)
-    return pred
 
 
 # ---------------------------------------------------------------------------
@@ -265,19 +239,20 @@ class ORRLearner(Learner):
         d = dim
 
         def el(i):
-            return F.element_at(F.col(features_col), i + 1)
+            return f"element_at({sql_col(features_col)}, {i + 1})"
 
         def q(c):
-            return F.round(c * quant, 0).cast("decimal(38,0)")
+            return f"CAST(round({c} * {quant}, 0) AS DECIMAL(38,0))"
 
-        aggs = [F.count(F.lit(1)).cast("long").alias("n")]
+        y = sql_col(label_col)
+        aggs = ["CAST(count(1) AS BIGINT) AS n"]
         for t, (i, j) in enumerate(_tri(d)):
-            aggs.append(F.sum(q(el(i)) * q(el(j))).alias(f"sxx_{t}"))
+            aggs.append(f"sum({q(el(i))} * {q(el(j))}) AS sxx_{t}")
         for i in range(d):
-            aggs.append(F.sum(q(el(i))).alias(f"sx_{i}"))
-            aggs.append(F.sum(q(el(i)) * q(F.col(label_col))).alias(f"sxy_{i}"))
-        aggs.append(F.sum(q(F.col(label_col))).alias("sy"))
-        row = points.agg(*aggs).first()
+            aggs.append(f"sum({q(el(i))}) AS sx_{i}")
+            aggs.append(f"sum({q(el(i))} * {q(y)}) AS sxy_{i}")
+        aggs.append(f"sum({q(y)}) AS sy")
+        row = points.selectExpr(*aggs).first()
         if int(row["n"]) == 0:
             return state
 
@@ -293,11 +268,10 @@ class ORRLearner(Learner):
         state["w"] = self._solve(state, d, hyper, spark=points.sparkSession)
 
         w = state["w"]
-        pred = F.lit(float(w[-1]))
-        for i in range(d):
-            pred = pred + F.lit(float(w[i])) * el(i)
-        err = F.col(label_col) - pred
-        sse = points.agg(F.sum(err * err).alias("sse")).first()["sse"]
+        pred = " + ".join([sql_double(w[-1])]
+                          + [f"{sql_double(w[i])} * {el(i)}" for i in range(d)])
+        err = f"({y} - ({pred}))"
+        sse = points.selectExpr(f"sum({err} * {err}) AS sse").first()["sse"]
         state["cum_loss"] = float(state["cum_loss"]) + float(sse or 0.0)
         return state
 

@@ -354,32 +354,29 @@ def evaluate_linear(
     each task's ``state``) every linear model is scored in ONE aggregate
     and one result dict per task comes back. Non-linear state shapes fall
     back to :func:`evaluate`."""
-    from pyspark.sql import functions as F
-
-    from ..functions.vector import linear_predict
+    from ..functions.vector import linear_predict_sql, sql_col
 
     single, tasks = _tasks(learner, 0, None, state)
     out: list[dict | None] = [None] * len(tasks)
     aggs = []
-    y = F.col(label_col)
+    y = sql_col(label_col)
     for j, t in enumerate(tasks):
         if "w" not in t.state:
             out[j] = evaluate(points, t.learner, t.state,
                               features_col=features_col, label_col=label_col)
             continue
-        w = np.asarray(t.state["w"], dtype=float)
-        raw = linear_predict(features_col, list(w[:-1]), float(w[-1]))
+        w = [float(v) for v in t.state["w"]]
+        raw = linear_predict_sql(features_col, w[:-1], w[-1])
         if get_learner(t.learner).is_classifier:
-            pred = F.when(raw >= 0, 1.0).otherwise(-1.0)
-            hinge = F.greatest(F.lit(0.0), F.lit(1.0) - y * raw)
-            aggs += [F.avg(hinge).alias(f"loss_{j}"),
-                     F.avg((pred == y).cast("double")).alias(f"score_{j}")]
+            pred = f"CASE WHEN {raw} >= 0 THEN 1.0D ELSE -1.0D END"
+            aggs += [f"avg(greatest(0.0D, 1.0D - {y} * {raw})) AS loss_{j}",
+                     f"avg(CAST({pred} = {y} AS DOUBLE)) AS score_{j}"]
         else:
-            err = raw - y
-            aggs += [F.avg(err * err).alias(f"loss_{j}"),
-                     (-F.avg(err * err)).alias(f"score_{j}")]
+            err = f"({raw} - {y})"
+            aggs += [f"avg({err} * {err}) AS loss_{j}",
+                     f"-avg({err} * {err}) AS score_{j}"]
     if aggs:
-        row = points.agg(*aggs, F.count(F.lit(1)).alias("n")).first()
+        row = points.selectExpr(*aggs, "count(1) AS n").first()
         for j in range(len(tasks)):
             if out[j] is not None:
                 continue

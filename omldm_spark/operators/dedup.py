@@ -1354,36 +1354,6 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, threshold_num: int = 1,
     )
 
 
-def TOKEN_JACCARD_SQL(threshold_num: int = 1, threshold_den: int = 2,
-                      table: str = "documents", text_expr: str = "text",
-                      id_col: str = "doc_id") -> str:
-    """The PLAIN token-set Jaccard join — deliberately WITHOUT the
-    prefix filter, so it is the oracle proving the filter lossless."""
-    return f"""
-WITH sets_ AS (
-  SELECT DISTINCT {id_col},
-         unnest({TOKENS_SQL(text_expr)}) AS tok
-  FROM {table}
-),
-sizes AS (SELECT {id_col}, CAST(count(*) AS BIGINT) AS sz
-          FROM sets_ GROUP BY {id_col}),
-common AS (
-  SELECT a.{id_col} AS id_a, b.{id_col} AS id_b,
-         CAST(count(*) AS BIGINT) AS common
-  FROM sets_ a JOIN sets_ b
-    ON a.tok = b.tok AND a.{id_col} < b.{id_col}
-  GROUP BY a.{id_col}, b.{id_col}
-)
-SELECT id_a, id_b,
-       common / (sa.sz + sb.sz - common) AS jaccard
-FROM common
-JOIN sizes sa ON sa.{id_col} = id_a
-JOIN sizes sb ON sb.{id_col} = id_b
-WHERE common * {threshold_den}
-      >= (sa.sz + sb.sz - common) * {threshold_num}
-"""
-
-
 def cross_source_overlap(docs: DataFrame, n: int = 8,
                          text_col: str = "text", id_col: str = "doc_id",
                          src_col: str = "source") -> DataFrame:

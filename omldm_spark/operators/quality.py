@@ -37,11 +37,6 @@ def in_set(col: str, values: list) -> tuple[str, Column]:
     return (f"in_set({col})", c.isNotNull() & ~c.isin(values))
 
 
-def satisfies(name: str, violated: Column) -> tuple[str, Column]:
-    """Custom predicate: ``violated`` true on bad rows."""
-    return (name, violated)
-
-
 def dq_report(
     df: DataFrame,
     row_checks: list[tuple[str, Column]],

@@ -337,7 +337,7 @@ def predict_batch(
     projection builds a (pipelineId, prediction) struct per pipeline and
     explodes their array, so the batch is read once per chain group, not
     once per pipeline."""
-    from ..functions.vector import linear_predict
+    from ..functions.vector import linear_predict_sql, sql_col
 
     outs = []
     for members in _chain_groups(catalog.live()):
@@ -345,24 +345,21 @@ def predict_batch(
         preds = []
         for spec in members:
             w = list(map(float, spec.model["w"]))
-            raw = linear_predict(fcol, w[:-1], w[-1])
+            raw = linear_predict_sql(fcol, w[:-1], w[-1])
             pred = (
-                F.when(raw >= 0, 1.0).otherwise(-1.0)
+                f"CASE WHEN {raw} >= 0 THEN 1.0D ELSE -1.0D END"
                 if get_learner(spec.learner).is_classifier
                 else raw
             )
-            preds.append(F.struct(
-                F.lit(spec.id).cast("long").alias("pipelineId"),
-                pred.alias("prediction"),
-            ))
+            preds.append(f"named_struct('pipelineId', {int(spec.id)}L, "
+                         f"'prediction', {pred})")
         outs.append(
-            src.select(
-                F.col(id_col).cast("long").alias("recordId"),
-                F.explode(F.array(*preds)).alias("_p"),
-            ).select(
-                F.col("_p.pipelineId").alias("pipelineId"),
-                "recordId",
-                F.col("_p.prediction").alias("prediction"),
+            src.selectExpr(
+                f"CAST({sql_col(id_col)} AS BIGINT) AS recordId",
+                f"explode(array({', '.join(preds)})) AS _p",
+            ).selectExpr(
+                "_p.pipelineId AS pipelineId", "recordId",
+                "_p.prediction AS prediction",
             )
         )
     if not outs:

@@ -6,18 +6,44 @@ Usage:
 
 Times each named query through the noop sink (bench.py methodology:
 same session shape, sf0.001 codegen warmup, repeats with median+min),
-and optionally writes ``<explaindir>/<query>.txt`` with the
+prints the DataFrame build (the ``fn(spark, sf_dir)`` call, eager actions
+included) with its py4j round trips next to the total, and optionally
+writes ``<explaindir>/<query>.txt`` with the
 ``explain("formatted")`` output so before/after plans can be committed.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+@contextlib.contextmanager
+def jvm_calls():
+    """Count the py4j commands this process sends to the JVM inside the
+    block. Deferred frees of garbage-collected proxies are left out: when
+    they happen is up to Python's collector, not to the code being built."""
+    from py4j import protocol as proto
+    from py4j.clientserver import ClientServerConnection
+
+    count = [0]
+    send = ClientServerConnection.send_command
+    free = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counting(self, command, *args, **kwargs):
+        count[0] += not command.startswith(free)
+        return send(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield count
+    finally:
+        ClientServerConnection.send_command = send
 
 
 def main() -> None:
@@ -62,16 +88,21 @@ def main() -> None:
                 df._jdf.queryExecution(), "formatted")
             with open(os.path.join(explain_dir, f"{name}.txt"), "w") as fh:
                 fh.write(txt)
-        runs = []
+        runs, builds, calls = [], [], []
         for _ in range(repeats):
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"probe:{name}")
             t0 = time.time()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
+            with jvm_calls() as n:
+                df = QUERIES[name](spark, sf_dir)
+            builds.append(time.time() - t0)
+            calls.append(n[0])
+            df.write.format("noop").mode("overwrite").save()
             runs.append(time.time() - t0)
         print(f"{name}: median={statistics.median(runs):.3f} "
-              f"min={min(runs):.3f} runs={[round(r, 3) for r in runs]}",
+              f"min={min(runs):.3f} runs={[round(r, 3) for r in runs]} "
+              f"build_median={statistics.median(builds):.3f} "
+              f"build_py4j_calls={calls}",
               flush=True)
     spark.stop()
 
