@@ -8,8 +8,12 @@ definitions, matching pyspark.ml.feature counterparts).
 
 Spark-first shape: fit = ONE aggregation producing a one-row stats frame;
 transform = broadcast that row and apply pure column arithmetic — zero
-Python, zero extra shuffles, whole-stage codegen. In streaming these stats
-become running moments in the training-loop state (SURVEY.md §7 step 5).
+Python, zero extra shuffles. In streaming these stats become running
+moments in the training-loop state (SURVEY.md §7 step 5), and the
+training-path chain (``apply_chain``) applies them as ``array(...)``
+literals inside ``transform`` lambdas: interpreted ``CodegenFallback``
+expressions, so each batch's new stats reuse the generated code instead of
+compiling fresh classes.
 """
 
 from __future__ import annotations
@@ -118,6 +122,34 @@ def _el(col: str, i: int) -> str:
 def _array(els: list[str]):
     """One ``array(...)`` column from SQL element texts, parsed in one call."""
     return F.expr(f"array({', '.join(els)})")
+
+
+def _scale_by_state(col: str, shift, scale, otherwise: str):
+    """Per-element ``(x_i - shift_i) / scale_i``, or ``otherwise`` (SQL text)
+    where ``scale_i`` is not positive, over the ARRAY<DOUBLE> column
+    ``col``.
+
+    The scaler state enters as ``array(...)`` literals inside ``transform``
+    lambdas. ``transform`` is a ``CodegenFallback``, interpreted and reached
+    through the generated code's ``references``, so a new state compiles no
+    new class (a literal outside one is written into the Java source). The
+    output has one element per index 0..len(shift)-1 whatever ``col``
+    holds: a short array leaves NULLs (or an ANSI index error) where a
+    scaled element is missing, a NULL array gives NULL elements, and
+    ``otherwise`` never reads ``x``. ``col`` is bound once as the lambda
+    variable ``x`` of a one-element ``transform``: referenced directly from
+    the per-element lambda, the optimizer would inline an upstream chain
+    step's array into it and re-evaluate that array once per element."""
+    dim = len(shift)
+    s = "array(" + ", ".join(
+        sql_double(v if v > 0 else 0.0) for v in scale) + ")"
+    m = "array(" + ", ".join(sql_double(v) for v in shift) + ")"
+    body = (f"CASE WHEN element_at({s}, i + 1) > 0.0D THEN "
+            f"(element_at(x, i + 1) - element_at({m}, i + 1)) / "
+            f"element_at({s}, i + 1) ELSE {otherwise} END")
+    return F.expr(
+        f"element_at(transform(array({sql_col(col)}), x -> "
+        f"transform(sequence(0, {dim - 1}), i -> {body})), 1)")
 
 
 def poly_expand_expr(col: str, dim: int, degree: int):
@@ -270,20 +302,17 @@ def apply_chain(
                     "transform-only application requires a prior fit pass"
                 )
             ks = st.get("k", [0] * cur_dim)
-            els = []
+            shift, scale = [], []
             for i in range(cur_dim):
                 p25, p50, p75 = _hist_quantiles(st["h"][i], (0.25, 0.5, 0.75))
                 # histogram keys live at grid level k: one bin spans 2^k
                 # quanta, so map back to the value scale before building
                 # the (exact-at-k=0) scaling expression
-                scale = 1 << ks[i]
-                p25, p50, p75 = p25 * scale, p50 * scale, p75 * scale
-                iqr = p75 - p25
-                els.append(
-                    f"({_el(cur, i)} - {sql_double(float(p50) / RQ)}) / "
-                    f"{sql_double(float(iqr) / RQ)}" if iqr > 0 else "0.0D"
-                )
-            df = df.withColumn(tmp, _array(els))
+                grid = 1 << ks[i]
+                p25, p50, p75 = p25 * grid, p50 * grid, p75 * grid
+                shift.append(float(p50) / RQ)
+                scale.append(float(p75 - p25) / RQ)
+            df = df.withColumn(tmp, _scale_by_state(cur, shift, scale, "0.0D"))
         elif name == "Normalizer":
             # stateless row-local L2: no fit pass, no state slot
             norm = "sqrt(" + " + ".join(
@@ -311,29 +340,23 @@ def apply_chain(
                     f"{name} at chain position {idx} has no fitted stats; "
                     "transform-only application requires a prior fit pass"
                 )
-            els = []
-            for i in range(cur_dim):
-                x = _el(cur, i)
-                if name == "StandardScaler":
-                    mean, std = mean_std_from_moments(st, i, quant)
-                    els.append(
-                        f"({x} - {sql_double(mean)}) / {sql_double(std)}"
-                        if std > 0 else "0.0D"
-                    )
-                elif name == "MaxAbsScaler":
+            if name == "StandardScaler":
+                shift, scale = zip(*(mean_std_from_moments(st, i, quant)
+                                     for i in range(cur_dim)))
+            else:
+                lo, hi = zip(*(min_max_from_moments(st, i, quant)
+                               for i in range(cur_dim)))
+                if name == "MaxAbsScaler":
                     # max|x| falls out of the running min/max moments —
-                    # no new state shape for the streaming chain
-                    lo, hi = min_max_from_moments(st, i, quant)
-                    ma = max(abs(lo), abs(hi))
-                    els.append(f"{x} / {sql_double(ma)}" if ma > 0 else "0.0D")
+                    # no new state shape for the streaming chain; the zero
+                    # shift keeps x / max|x| bit for bit (x - 0.0 is x)
+                    shift = [0.0] * cur_dim
+                    scale = [max(abs(a), abs(b)) for a, b in zip(lo, hi)]
                 else:
-                    lo, hi = min_max_from_moments(st, i, quant)
-                    rng = hi - lo
-                    els.append(
-                        f"({x} - {sql_double(lo)}) / {sql_double(rng)}"
-                        if rng > 0 else "0.5D"
-                    )
-            df = df.withColumn(tmp, _array(els))
+                    shift, scale = lo, [b - a for a, b in zip(lo, hi)]
+            df = df.withColumn(tmp, _scale_by_state(
+                cur, shift, scale,
+                "0.5D" if name == "MinMaxScaler" else "0.0D"))
         else:
             raise ValueError(f"unknown preprocessor {name!r}")
         cur = tmp

@@ -4,14 +4,18 @@ The reference's Breeze vectors (src/main/scala/omldm/utils/CommonUtils.scala:
 22-23) become plain array columns; dot products and norms stay JVM-side via
 higher-order functions (zip_with/aggregate), so linear-model *scoring* runs
 no Python. Those two functions are ``CodegenFallback`` expressions: they are
-interpreted inside the generated code of the stage around them, not compiled.
+interpreted, and the generated code of the projection around them reaches
+them through its ``references`` array instead of compiling them.
 Training kernels (numpy) live in learners/.
 
 Expressions built from model or scaler state (one literal per coefficient)
 are rendered as Spark SQL text and parsed by the JVM in one call
 (``F.expr`` / ``selectExpr``), not assembled from one py4j round trip per
 literal. :func:`sql_double` renders every double and :func:`sql_col` every
-column name in that text.
+column name in that text. Every state literal sits inside a
+``CodegenFallback`` expression: a literal outside one is written into the
+generated Java source, so each new model or scaler state would miss the
+codegen cache and compile fresh classes.
 """
 
 from __future__ import annotations
@@ -56,11 +60,13 @@ def dot(a: Column | str, b: Column | str) -> Column:
 
 def linear_predict_sql(col: str, weights: list[float], bias: float) -> str:
     """SQL text of w·x + b over the ARRAY<DOUBLE> column ``col``: Σ x_i * w_i
-    summed left to right, with the Python weights and bias as plan
-    literals, for embedding in a larger expression."""
+    summed left to right, then + b in ``aggregate``'s finish lambda, for
+    embedding in a larger expression. The weights and the bias sit inside
+    the two ``CodegenFallback`` functions, so a new model changes no
+    generated code."""
     ws = ", ".join(sql_double(w) for w in weights)
-    return (f"(aggregate(zip_with({sql_col(col)}, array({ws}), (x, w) -> x * w), "
-            f"0.0D, (acc, v) -> acc + v) + {sql_double(bias)})")
+    return (f"aggregate(zip_with({sql_col(col)}, array({ws}), (x, w) -> x * w), "
+            f"0.0D, (acc, v) -> acc + v, acc -> acc + {sql_double(bias)})")
 
 
 def linear_predict(col: str, weights: list[float], bias: float) -> Column:

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .plans.catalog import PipelineCatalog
 from .streaming.sources import file_replay_source, kafka_source
-from .streaming.training_loop import make_batch_handler
+from .streaming.training_loop import await_bounded, make_batch_handler
 
 
 @dataclass
@@ -99,7 +99,9 @@ def run_job(spark: SparkSession, cfg: JobConfig,
     """Assemble and run the whole job with an availableNow trigger (bounded
     replay — the reference's file-driven workload; swap the trigger for a
     processing-time one in an always-on deployment). Returns the catalog so
-    callers can inspect pipelines/responses after the run."""
+    callers can inspect pipelines/responses after the run; a replay still
+    running after ``cfg.timeout_ms`` is stopped and raises
+    ``TimeoutError`` instead."""
     catalog = catalog or PipelineCatalog(path=cfg.state_path)
     stream = build_source(spark, cfg)
 
@@ -142,8 +144,5 @@ def run_job(spark: SparkSession, cfg: JobConfig,
     writer = stream.writeStream.foreachBatch(handle).trigger(availableNow=True)
     if cfg.checkpoint_dir:
         writer = writer.option("checkpointLocation", cfg.checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination(cfg.timeout_ms / 1000.0)
-    if q.isActive:
-        q.stop()
+    await_bounded(writer.start(), cfg.timeout_ms / 1000.0)
     return catalog

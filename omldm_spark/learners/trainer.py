@@ -16,9 +16,13 @@ pass; the single-model form is the one-task case of that pass:
 
 * ``fit``        one ``repartition.select.mapInPandas``: every model starts
                  each partition from its broadcast global state; the driver
-                 merges each model's partition states.
+                 merges each model's partition states (``merge_round``).
 * ``fit_groups`` one ``groupBy(key).applyInPandas``: every model starts each
-                 key group from its own per-key state (per-worker models).
+                 key group from its own per-key state. For per-worker models
+                 those are the workers' own states; for a global model the
+                 caller hands every key the same broadcast state and merges
+                 the returned per-key partials with ``merge_round``, so the
+                 streaming round trains both kinds in one keyed pass.
 
 Closed-form learners (ORR) bypass the pass: each runs its own Catalyst
 aggregate. The per-partition state is O(model), not O(data) — collecting
@@ -239,13 +243,20 @@ def fit(
             s["n"], s["cum_loss"] = int(r["n"]), float(r["cum_loss"])
             partials[r["model"]].append(s)
         for j, i in enumerate(streamed):
-            prev = states[i]
-            merged = models[i].learner.merge(partials[j])
-            merged["n"] = int(prev["n"]) + sum(int(p["n"]) for p in partials[j])
-            merged["cum_loss"] = float(prev["cum_loss"]) + sum(
-                float(p["cum_loss"]) for p in partials[j])
-            states[i] = merged
+            states[i] = merge_round(models[i].learner, states[i], partials[j])
     return states[0] if single else states
+
+
+def merge_round(learner: Learner, prev: dict, partials: list[dict]) -> dict:
+    """The hub merge of one round: ``learner.merge`` over the partial states
+    of workers that all started from ``prev``, each carrying only this
+    round's ``n`` and ``cum_loss`` (so the merge weights are this round's
+    counts), with the bookkeeping accumulated onto ``prev``'s."""
+    merged = learner.merge(partials)
+    merged["n"] = int(prev["n"]) + sum(int(p["n"]) for p in partials)
+    merged["cum_loss"] = float(prev["cum_loss"]) + sum(
+        float(p["cum_loss"]) for p in partials)
+    return merged
 
 
 def evaluate(

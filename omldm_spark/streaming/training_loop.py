@@ -6,9 +6,9 @@ feedback topic -> worker applies update. The Kafka hop exists only because
 Flink forbids cyclic dataflow (Job.scala:77-87,136-142). In micro-batch BSP
 one batch IS one protocol round, for every live pipeline at once:
 
-    batch -> ONE partial_fit pass per worker layout, training every live
-             pipeline that reads the batch that way (mapInPandas over the
-             partitions / applyInPandas over the worker keys, Arrow)
+    batch -> ONE keyed partial_fit pass (applyInPandas over the worker
+             keys pmod(id, parts), Arrow) training every chainless
+             pipeline on more than one worker, whatever its protocol
           -> per-pipeline merge of its partial states (the hub, one tiny
              reduce) and protocol round
           -> model broadcast into the next batch via the catalog
@@ -125,6 +125,17 @@ def _account_hub_shards(spec, state: dict, shipped: int) -> None:
     spec.hub_stats = hs
 
 
+def _per_worker(spec, learner) -> bool:
+    """Does the pipeline keep per-worker models between syncs when it
+    trains on more than one worker? The per-worker protocols do, for
+    flat-state learners; blob (HT) and closed-form (ORR) learners never do."""
+    return (
+        spec.protocol in PER_WORKER_PROTOCOLS
+        and not getattr(learner, "uses_blob", False)
+        and not getattr(learner, "closed_form", False)
+    )
+
+
 def train_batch(
     batch_df: DataFrame,
     catalog: PipelineCatalog,
@@ -145,14 +156,22 @@ def train_batch(
     operator updates them all, FlinkSpoke.scala:101), and pipelines that
     read the batch the same way share one Spark pass:
 
-    * chainless pipelines with the same worker layout train together — one
-      ``trainer.fit`` pass for the global-state ones (``num_partitions``
-      partitions, or one for SingleLearner/CentralizedTraining), one
-      ``trainer.fit_groups`` pass over the worker keys for the per-worker
-      protocols (SSP/GM/FGM/EASGD);
+    * every chainless pipeline on more than one worker trains in ONE
+      ``trainer.fit_groups`` pass, keyed by ``pmod(id, num_partitions)``
+      and sorted by id within each worker. Per-worker protocols
+      (SSP/GM/FGM/EASGD) start each worker from its own model; the others
+      (Synchronous, Asynchronous, and blob learners under any protocol)
+      start every worker from the broadcast global model, and the driver
+      merges that round's partials with ``trainer.merge_round``, the merge
+      ``trainer.fit`` uses. The key is a pure function of the row, so the
+      models do not depend on how the batch arrives partitioned;
+    * SingleLearner/CentralizedTraining pipelines train in one
+      single-partition ``trainer.fit`` pass;
     * closed-form learners (ORR) keep their Catalyst aggregate;
     * a pipeline with a preprocessor chain trains on its own pass over its
-      transformed frame, so its rows land exactly as when it trains alone.
+      transformed frame (keyed for the per-worker protocols, a
+      ``trainer.fit`` pass otherwise), so its rows land exactly as when it
+      trains alone.
 
     The driver splits each pass's state rows by pipeline and runs the
     merge, protocol round and statistics per pipeline. Pipelines with no
@@ -181,18 +200,15 @@ def train_batch(
         # (FlinkSpoke.scala:203-211).
         parts = 1 if spec.protocol in ("SingleLearner", "CentralizedTraining") \
             else num_partitions
-        per_worker = (
-            spec.protocol in PER_WORKER_PROTOCOLS
-            and parts > 1
-            and not getattr(learner, "uses_blob", False)
-            and not getattr(learner, "closed_form", False)
-        )
         chain = spec.id if spec.preprocessors else None
-        passes.setdefault((chain, parts, per_worker), []).append(spec)
+        closed = getattr(learner, "closed_form", False)
+        keyed = parts > 1 and not closed and (
+            chain is None or _per_worker(spec, learner))
+        passes.setdefault((chain, parts, keyed), []).append(spec)
 
     # spec.id -> (state, models shipped, worker states, preprocessor state)
     rounds: dict[int, tuple] = {}
-    for (chain, parts, per_worker), members in sorted(
+    for (chain, parts, keyed), members in sorted(
         passes.items(), key=lambda kv: kv[0][0] is not None
     ):
         # Preprocessor chain (PipelineMap.scala:25-29): fit stats are
@@ -208,37 +224,50 @@ def train_batch(
         learners = [get_learner(s.learner) for s in members]
         inits = [_deser(s.model) if s.model is not None else None
                  for s in members]
-        if per_worker:
-            # workers keep their own models between syncs; the batch is
-            # keyed to stable worker ids so state follows the worker
-            starts, prev = [], []
+        if keyed:
+            # the batch is keyed to stable worker ids: per-worker protocols
+            # start each worker from its own model, so state follows the
+            # worker; every other pipeline starts every worker from the
+            # broadcast global model, with zeroed counts so the pass hands
+            # back this round's partials for the merge
+            globals_, starts = [], []
             for spec, learner, init in zip(members, learners, inits):
                 g_state = init or learner.init_state(eff_dim, dict(spec.hyper))
-                starts.append(g_state)
-                prev.append({
-                    int(k): _deser(v)
-                    for k, v in (spec.worker_models or {}).items()
-                } or {w: dict(g_state) for w in range(parts)})
+                globals_.append(g_state)
+                if _per_worker(spec, learner):
+                    starts.append({
+                        int(k): _deser(v)
+                        for k, v in (spec.worker_models or {}).items()
+                    } or {w: dict(g_state) for w in range(parts)})
+                else:
+                    starts.append({w: {**g_state, "n": 0, "cum_loss": 0.0}
+                                   for w in range(parts)})
             dfw = train_df.withColumn(
                 "_wk", F.pmod(F.col(id_col), F.lit(parts)).cast("int")
             )
             fitted = trainer.fit_groups(
                 dfw,
-                [Task(s.learner, eff_dim, dict(s.hyper), p)
-                 for s, p in zip(members, prev)],
+                [Task(s.learner, eff_dim, dict(s.hyper), st)
+                 for s, st in zip(members, starts)],
                 key_col="_wk", features_col=fcol, label_col=label_col,
                 order_cols=[id_col],
             )
             if not any(fitted):
                 return []  # no row fitted: the batch is empty
-            for spec, learner, g_state, p, new in zip(
-                members, learners, starts, prev, fitted
+            for spec, learner, g_state, st, new in zip(
+                members, learners, globals_, starts, fitted
             ):
-                hyper = dict(spec.hyper)
-                state, workers, shipped = protocol_round(
-                    spec.protocol, learner, learner.init_state(eff_dim, hyper),
-                    g_state, {**p, **new}, spec.rounds, hyper,
-                )
+                if _per_worker(spec, learner):
+                    hyper = dict(spec.hyper)
+                    state, workers, shipped = protocol_round(
+                        spec.protocol, learner,
+                        learner.init_state(eff_dim, hyper), g_state,
+                        {**st, **new}, spec.rounds, hyper,
+                    )
+                else:
+                    state = trainer.merge_round(
+                        learner, g_state, [new[k] for k in sorted(new)])
+                    workers, shipped = None, parts
                 rounds[spec.id] = (state, shipped, workers, pp_state)
         else:
             states = trainer.fit(
@@ -501,9 +530,9 @@ def run_streaming(
     plane), then per-batch train/predict split by ``operation``.
 
     Runs with availableNow (bounded replay -> the reference's multi-epoch
-    file workload) and blocks until completion or ``timeout_sec`` (the
-    reference's 30 s idle-timeout termination,
-    StatisticsOperator.scala:135-142).
+    file workload) and blocks until completion; a replay still running
+    after ``timeout_sec`` is stopped and raises ``TimeoutError``
+    (:func:`await_bounded`).
     """
     if requests_df is not None:
         catalog.apply_requests_df(requests_df)
@@ -527,10 +556,22 @@ def run_streaming(
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     q = writer.start()
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
+    await_bounded(q, timeout_sec)
     return q
+
+
+def await_bounded(q, timeout_sec: float) -> None:
+    """Wait for a bounded (availableNow) replay to finish. A replay still
+    running after ``timeout_sec`` is stopped and raises ``TimeoutError``
+    with its last progress: returning would pass a cut-short replay off as
+    a finished one."""
+    if not q.awaitTermination(timeout_sec):
+        progress = q.lastProgress
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.id} did not finish within {timeout_sec} s; "
+            f"last progress: {progress}"
+        )
 
 
 def build_query_responses(

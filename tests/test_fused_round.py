@@ -1,7 +1,14 @@
-"""The fused BSP round: train_batch trains every live pipeline in one pass per
-worker layout, and each pipeline ends up exactly where training it alone
-(one single-model trainer.fit / trainer.fit_groups call per pipeline)
-leaves it."""
+"""The fused BSP round: train_batch trains every chainless multi-worker
+pipeline in one keyed pass, and each pipeline ends up exactly where training
+it alone (one single-model trainer.fit / trainer.fit_groups call per
+pipeline, then the same driver-side merge) leaves it.
+
+Placement: every chainless pipeline on more than one worker — per-worker
+and global-state protocols alike — trains on the rows keyed by
+``pmod(id, parts)`` and sorted by id within each worker. The key is a pure
+function of the row, so the models do not depend on how the rows happen to
+be partitioned upstream; round-robin placement would make them a function
+of the upstream partitioning as well."""
 
 from __future__ import annotations
 
@@ -56,11 +63,14 @@ def _batches(spark, n=240, rounds=2):
     rng = np.random.default_rng(7)
     out = []
     for r in range(rounds):
+        # sparse ids: the workers of pmod(id, PARTS) get uneven row counts,
+        # so a merge weighted by anything but this round's counts shows
+        ids = r * 10 * n + np.sort(rng.choice(10 * n, size=n, replace=False))
         X = rng.normal(size=(n, DIM))
         y = np.sign(X @ np.array([1.5, -1.0, 0.5]) + 0.2 * rng.normal(size=n))
         y[y == 0] = 1.0
         out.append(spark.createDataFrame(pd.DataFrame({
-            "id": range(r * n, (r + 1) * n),
+            "id": ids,
             "features": [list(map(float, x)) for x in X],
             "label": y.astype(float),
         })))
@@ -81,22 +91,37 @@ def _per_pipeline_round(df, cat):
             fcol = "_pp_features"
         parts = 1 if spec.protocol in ("SingleLearner", "CentralizedTraining") \
             else PARTS
-        if (spec.protocol in PER_WORKER_PROTOCOLS and parts > 1
-                and not getattr(learner, "uses_blob", False)
-                and not getattr(learner, "closed_form", False)):
+        per_worker = (spec.protocol in PER_WORKER_PROTOCOLS
+                      and not getattr(learner, "uses_blob", False)
+                      and not getattr(learner, "closed_form", False))
+        keyed = parts > 1 and not getattr(learner, "closed_form", False) \
+            and (per_worker or not spec.preprocessors)
+        if keyed:
             g_state = init or learner.init_state(eff_dim, hyper)
-            prev = {int(k): _deser(v)
-                    for k, v in (spec.worker_models or {}).items()} \
-                or {w: dict(g_state) for w in range(parts)}
+            if per_worker:
+                prev = {int(k): _deser(v)
+                        for k, v in (spec.worker_models or {}).items()} \
+                    or {w: dict(g_state) for w in range(parts)}
+            else:
+                # every worker starts from the global model; counts zeroed
+                # so the partials carry this round's n for the merge
+                prev = {w: {**g_state, "n": 0, "cum_loss": 0.0}
+                        for w in range(parts)}
             dfw = train_df.withColumn(
                 "_wk", F.pmod(F.col("id"), F.lit(parts)).cast("int"))
             new = trainer.fit_groups(
                 dfw, spec.learner, eff_dim, hyper, key_col="_wk",
                 features_col=fcol, order_cols=["id"], init_states=prev)
-            state, workers, shipped = protocol_round(
-                spec.protocol, learner, learner.init_state(eff_dim, hyper),
-                g_state, {**prev, **new}, spec.rounds, hyper)
-            spec.worker_models = {str(k): _ser(v) for k, v in workers.items()}
+            if per_worker:
+                state, workers, shipped = protocol_round(
+                    spec.protocol, learner, learner.init_state(eff_dim, hyper),
+                    g_state, {**prev, **new}, spec.rounds, hyper)
+                spec.worker_models = {str(k): _ser(v)
+                                      for k, v in workers.items()}
+            else:
+                state = trainer.merge_round(
+                    learner, g_state, [new[k] for k in sorted(new)])
+                shipped = parts
         else:
             state = trainer.fit(
                 train_df, spec.learner, dim=eff_dim, hyper=hyper,
@@ -160,8 +185,8 @@ def _jobs(spark, fn) -> int:
 
 @pytest.mark.parametrize("rounds", [1, 2])
 def test_round_jobs_do_not_grow_with_pipelines(spark, rounds):
-    """Spark jobs per train_batch are a property of the worker layouts, not
-    of the number of chainless pipelines sharing them."""
+    """Spark jobs per train_batch are a property of the passes, not of the
+    number of chainless pipelines sharing them."""
     df = _batches(spark, rounds=1)[0]
     two = _catalog([("PA", "Synchronous"), ("PA", "FGM")])
     eight = _catalog(MIXED[:8])
@@ -173,3 +198,18 @@ def test_round_jobs_do_not_grow_with_pipelines(spark, rounds):
             df, cat, dim=DIM, num_partitions=PARTS, batch_id=rounds)))
     assert counts[0] > 0
     assert counts[1] <= counts[0], counts
+
+
+def test_global_state_and_per_worker_share_one_pass(spark):
+    """A chainless catalog mixing a global-state and a per-worker protocol
+    trains in one keyed pass: as many Spark jobs per round as a catalog
+    with one pipeline."""
+    df = _batches(spark, rounds=1)[0]
+    counts = [
+        _jobs(spark, lambda cat=_catalog(cfgs): train_batch(
+            df, cat, dim=DIM, num_partitions=PARTS))
+        for cfgs in ([("PA", "Synchronous")],
+                     [("PA", "Synchronous"), ("PA", "FGM")])
+    ]
+    assert counts[0] > 0
+    assert counts[1] == counts[0], counts

@@ -120,3 +120,24 @@ def test_job_kafka_mode_selects_kafka_source(spark):
     cfg = JobConfig(brokers="broker:9092", unified_topic="trainingData")
     with pytest.raises(Exception, match="kafka"):
         build_source(spark, cfg)
+
+
+def test_run_job_raises_when_replay_outlives_timeout(spark, tmp_path):
+    """A bounded replay still running at its await timeout is stopped and
+    raises with its last progress; no catalog comes back as if it had
+    finished."""
+    t0 = pd.Timestamp("2026-01-01 00:00:00")
+    src = str(tmp_path / "slow_src")
+    _write_ordered(src, [_request_row("Create", 1, t0, learner="PA"),
+                         _data_rows(list(range(0, 200)), t0)])
+    cfg = JobConfig(
+        parallelism=4,
+        input_path=src,
+        input_schema=UNIFIED_SCHEMA,
+        max_files_per_trigger=1,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        timeout_ms=1,
+    )
+    with pytest.raises(TimeoutError, match="last progress"):
+        run_job(spark, cfg)
+    assert not spark.streams.active

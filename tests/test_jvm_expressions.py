@@ -1,12 +1,14 @@
 """Expressions built from model or scaler state go to the JVM as SQL text:
 the double literal round-trips bit-exactly, linear scoring keeps its
-left-to-right summation, and building the per-batch frames costs a number
-of py4j round trips that does not grow with the feature dimension."""
+left-to-right summation, building the per-batch frames costs a number of
+py4j round trips that does not grow with the feature dimension, and a new
+model or scaler state compiles no new generated code."""
 
 from __future__ import annotations
 
 import math
 import random
+import re
 import struct
 
 import numpy as np
@@ -14,7 +16,7 @@ import pytest
 from py4j import protocol as proto
 from py4j.clientserver import ClientServerConnection
 
-from omldm_spark.functions.preprocess import apply_chain
+from omldm_spark.functions.preprocess import apply_chain, mean_std_from_moments
 from omldm_spark.functions.vector import linear_predict, sql_col, sql_double
 from omldm_spark.learners import trainer
 from omldm_spark.learners.trainer import Task
@@ -128,3 +130,81 @@ def test_frame_build_round_trips_do_not_grow_with_dim(spark, jvm_calls):
     large = _build_calls(spark, jvm_calls, 64)
     assert all(small.values()), small  # the counter sees the gateway
     assert large == small
+
+
+def _compiles(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
+
+
+def _scaler_state(spark, chain, seed):
+    rng = np.random.default_rng(seed)
+    fit = spark.createDataFrame(
+        [(i, list(map(float, rng.normal(size=3) * 3 + 1))) for i in range(50)],
+        "id long, features array<double>")
+    return apply_chain(fit, chain, "features", 3)[2]
+
+
+@pytest.mark.parametrize("name", ["StandardScaler", "MinMaxScaler",
+                                  "MaxAbsScaler", "RobustScaler"])
+def test_new_scaler_state_compiles_no_code(spark, name):
+    """The scaler state sits inside CodegenFallback lambdas, not in the
+    generated Java source: the same transform over a second state compiles
+    nothing."""
+    chain = [{"name": name}]
+    df = _points(spark, 3)
+    runs = []
+    for seed in (1, 2):
+        st = _scaler_state(spark, chain, seed)
+        out = apply_chain(df, chain, "features", 3, st, update=False)[0]
+        before = _compiles(spark)
+        rows = out.select("_pp_features").collect()
+        runs.append((_compiles(spark) - before, rows))
+    assert runs[0][1] != runs[1][1]      # the two states scale differently
+    assert runs[1][0] == 0, runs[1][0]
+
+
+def test_new_linear_model_compiles_no_code(spark):
+    df = _points(spark, 3)
+    runs = []
+    for b in (0.25, -1.5):
+        before = _compiles(spark)
+        df.select(linear_predict("features", [0.5, -1.0, 2.0], b)).collect()
+        runs.append(_compiles(spark) - before)
+    assert runs[1] == 0, runs
+
+
+def test_scaler_keeps_row_shape_on_malformed_rows(spark):
+    """One element per fitted dimension whatever the row holds: a short
+    array scales the elements it has, a NULL array gives NULL elements, and
+    a zero-std dimension is 0.0 without reading the row."""
+    chain = [{"name": "StandardScaler"}]
+    fit = spark.createDataFrame(
+        [(i, [float(i), float(i * i % 7), 4.0]) for i in range(10)],
+        "id long, features array<double>")
+    st = apply_chain(fit, chain, "features", 3)[2]
+    bad = spark.createDataFrame([(1, [1.0, 2.0]), (2, None)],
+                                "id long, features array<double>")
+    out = apply_chain(bad, chain, "features", 3, st, update=False)[0]
+    rows = dict(out.select("id", "_pp_features").collect())
+    (m0, s0), (m1, s1) = (mean_std_from_moments(st[0], i) for i in (0, 1))
+    assert rows[1] == [(1.0 - m0) / s0, (2.0 - m1) / s1, 0.0]
+    assert rows[2] == [None, None, 0.0]
+
+
+def test_scaler_does_not_inline_the_previous_step_per_element(spark):
+    """In the optimized plan, each per-element lambda of a chain reads only
+    lambda variables and literals: the previous step's array (here the
+    polynomial expansion) is evaluated once per row, not once per element."""
+    chain = [{"name": "PolynomialFeatures"}, {"name": "StandardScaler"},
+             {"name": "MinMaxScaler"}]
+    df = _points(spark, 3)
+    st = _scaler_state(spark, chain, 1)
+    out = apply_chain(df, chain, "features", 3, st, update=False)[0]
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    bodies = re.findall(r"CASE WHEN \(element_at\(\[.*?END", plan)
+    assert len(bodies) == 2, plan
+    for body in bodies:
+        refs = re.findall(r"(lambda )?(\w+)#\d+", body)
+        assert refs and all(lam for lam, _ in refs), body

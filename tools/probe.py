@@ -7,7 +7,10 @@ Usage:
 Times each named query through the noop sink (bench.py methodology:
 same session shape, sf0.001 codegen warmup, repeats with median+min),
 prints the DataFrame build (the ``fn(spark, sf_dir)`` call, eager actions
-included) with its py4j round trips next to the total, and optionally
+included) with its py4j round trips next to the total, and the classes
+Spark's code generator compiled per repeat (the ``CodegenMetrics`` count
+delta over build and run; 0 once the plan's generated code is cached), and
+optionally
 writes ``<explaindir>/<query>.txt`` with the
 ``explain("formatted")`` output so before/after plans can be committed.
 """
@@ -44,6 +47,12 @@ def jvm_calls():
         yield count
     finally:
         ClientServerConnection.send_command = send
+
+
+def codegen_compiles(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
 
 
 def main() -> None:
@@ -88,10 +97,11 @@ def main() -> None:
                 df._jdf.queryExecution(), "formatted")
             with open(os.path.join(explain_dir, f"{name}.txt"), "w") as fh:
                 fh.write(txt)
-        runs, builds, calls = [], [], []
+        runs, builds, calls, compiles = [], [], [], []
         for _ in range(repeats):
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"probe:{name}")
+            c0 = codegen_compiles(spark)
             t0 = time.time()
             with jvm_calls() as n:
                 df = QUERIES[name](spark, sf_dir)
@@ -99,10 +109,11 @@ def main() -> None:
             calls.append(n[0])
             df.write.format("noop").mode("overwrite").save()
             runs.append(time.time() - t0)
+            compiles.append(codegen_compiles(spark) - c0)
         print(f"{name}: median={statistics.median(runs):.3f} "
               f"min={min(runs):.3f} runs={[round(r, 3) for r in runs]} "
               f"build_median={statistics.median(builds):.3f} "
-              f"build_py4j_calls={calls}",
+              f"build_py4j_calls={calls} codegen_compiles={compiles}",
               flush=True)
     spark.stop()
 
