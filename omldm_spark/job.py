@@ -29,8 +29,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from .plans.catalog import PipelineCatalog
-from .streaming.sources import file_replay_source, kafka_source
-from .streaming.training_loop import await_bounded, make_batch_handler
+from .streaming.sources import await_bounded, file_replay_source, kafka_source
+from .streaming.training_loop import make_batch_handler
 
 
 @dataclass

@@ -314,19 +314,23 @@ def shapley_min_deltas(events: DataFrame) -> tuple[DataFrame, DataFrame]:
 def shapley_fold(prev: tuple | None,
                  events: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Fold a batch's min-deltas into the carried (purch, touch) state."""
-    purch, touch = shapley_min_deltas(events)
-    if prev is not None:
-        p0, t0 = prev
-        purch = p0.unionByName(purch).groupBy("user_id").agg(
-            F.min(F.struct(F.col("p_ts").alias("ts"),
-                           F.col("p_id").alias("event_id"))).alias("k")
-        ).select("user_id", F.col("k.ts").alias("p_ts"),
-                 F.col("k.event_id").alias("p_id"))
-        touch = t0.unionByName(touch).groupBy("user_id", "ch").agg(
-            F.min(F.struct(F.col("t_ts").alias("ts"),
-                           F.col("t_id").alias("event_id"))).alias("k")
-        ).select("user_id", "ch", F.col("k.ts").alias("t_ts"),
-                 F.col("k.event_id").alias("t_id"))
+    cur = shapley_min_deltas(events)
+    return cur if prev is None else shapley_merge(prev, cur)
+
+
+def shapley_merge(prev: tuple, cur: tuple) -> tuple[DataFrame, DataFrame]:
+    """Re-min the union of two (purch, touch) min-fold states."""
+    (p0, t0), (purch, touch) = prev, cur
+    purch = p0.unionByName(purch).groupBy("user_id").agg(
+        F.min(F.struct(F.col("p_ts").alias("ts"),
+                       F.col("p_id").alias("event_id"))).alias("k")
+    ).select("user_id", F.col("k.ts").alias("p_ts"),
+             F.col("k.event_id").alias("p_id"))
+    touch = t0.unionByName(touch).groupBy("user_id", "ch").agg(
+        F.min(F.struct(F.col("t_ts").alias("ts"),
+                       F.col("t_id").alias("event_id"))).alias("k")
+    ).select("user_id", "ch", F.col("k.ts").alias("t_ts"),
+             F.col("k.event_id").alias("t_id"))
     return purch, touch
 
 

@@ -1585,12 +1585,19 @@ def cross_source_overlap_merge(prev, batch_docs: DataFrame, n: int = 8,
 
     Returns (postings, shared, totals); ``prev`` is None on the first
     batch or the same tuple from the previous fold."""
-    P = (
+    return overlap_postings_merge(prev, (
         shingles(batch_docs, n=n, text_col=text_col, id_col=id_col)
         .join(batch_docs.select(id_col, src_col), id_col)
         .select(F.col(src_col).alias("src"), "shingle")
         .distinct()
-    )
+    ))
+
+
+def overlap_postings_merge(prev, P: DataFrame):
+    """The fold of :func:`cross_source_overlap_merge` from a batch's
+    distinct (src, shingle) postings ``P`` — which is also part 0 of
+    the state ``cross_source_overlap_merge(None, batch)`` returns, so a
+    batch's own state merges into ``prev`` through its postings."""
     if prev is None:
         S, shared0, totals0 = None, None, None
         N = P

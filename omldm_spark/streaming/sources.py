@@ -78,6 +78,22 @@ def file_replay_source(
     return reader.parquet(path)
 
 
+def await_bounded(q, timeout_sec: float) -> None:
+    """Wait for a bounded (availableNow) replay to finish. A replay still
+    running after ``timeout_sec`` is stopped and raises ``TimeoutError``
+    with its last progress: returning would pass a cut-short replay off as
+    a finished one.  A query that failed raises its own error here.  This
+    is the one ``awaitTermination`` call in the package
+    (tests/test_no_unbounded_collect.py pins it)."""
+    if not q.awaitTermination(timeout_sec):
+        progress = q.lastProgress
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.id} did not finish within {timeout_sec} s; "
+            f"last progress: {progress}"
+        )
+
+
 def kafka_sink_options(brokers: str, topic: str, checkpoint: str) -> dict[str, str]:
     return {
         "kafka.bootstrap.servers": brokers,

@@ -2,9 +2,10 @@
 
 The streaming twins carry their incremental state as v{batchId} parquet
 snapshots under a state dir; each micro-batch folds its delta into the
-latest PRIOR snapshot and writes v{bid}.  This helper is the one shared
-definition of "latest prior snapshot" — previously six verbatim copies
-lived in queries.py (review r10), each with an at-least-once hazard:
+latest PRIOR snapshot and writes v{bid}.  :func:`fold_stream` is the
+one fold body every twin runs (read below ``bid``, step, merge,
+publish) — previously each twin carried its own copy in queries.py,
+and before review r10 each copy had an at-least-once hazard:
 on a foreachBatch RETRY of batch ``bid`` (data write succeeded, the
 checkpoint commit did not), the naive "latest version" is v{bid}
 itself, so the retried batch would (a) double-count its own delta and
@@ -31,6 +32,7 @@ identically.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from omldm_spark.fsio import HadoopFS, join
 
@@ -50,26 +52,21 @@ def _latest_version(spark: SparkSession, state_dir: str,
 
 
 def read_latest_state(spark: SparkSession, state_dir: str,
-                      below: int | None = None) -> DataFrame | None:
-    """Newest ``v{N}`` parquet snapshot under ``state_dir`` (``None`` if
-    no snapshot exists).  Inside a fold pass ``below=batch_id`` so a
-    retried batch re-reads its PRE-batch state."""
+                      below: int | None = None):
+    """Newest ``v{N}`` snapshot under ``state_dir`` (``None`` if no
+    snapshot exists): a DataFrame, or a tuple of DataFrames when the
+    snapshot was published from a tuple (parts ``v{N}/0``, ``v{N}/1``,
+    ...).  Inside a fold pass ``below=batch_id`` so a retried batch
+    re-reads its PRE-batch state."""
     v = _latest_version(spark, state_dir, below)
     if v is None:
         return None
-    return spark.read.parquet(join(state_dir, f"v{v}"))
-
-
-def read_latest_state_parts(spark: SparkSession, state_dir: str,
-                            parts: tuple, below: int | None = None):
-    """Multi-part variant: the snapshot is a directory of named parquet
-    sub-frames (``v{N}/{part}``).  Returns a tuple of DataFrames in
-    ``parts`` order, or ``None``.  Same ``below`` retry discipline."""
-    v = _latest_version(spark, state_dir, below)
-    if v is None:
-        return None
-    return tuple(
-        spark.read.parquet(join(state_dir, f"v{v}", p)) for p in parts)
+    vdir = join(state_dir, f"v{v}")
+    parts = sorted(int(p) for p in HadoopFS.for_path(vdir, spark)
+                   .listdir(vdir) if p.isdigit())
+    if not parts:
+        return spark.read.parquet(vdir)
+    return tuple(spark.read.parquet(join(vdir, str(p))) for p in parts)
 
 
 def prune_versions(spark: SparkSession, state_dir: str,
@@ -99,9 +96,47 @@ def prune_versions(spark: SparkSession, state_dir: str,
     return removed
 
 
-def publish_state(df: DataFrame, spark: SparkSession, state_dir: str,
+def publish_state(state, spark: SparkSession, state_dir: str,
                   bid: int, keep: int = 3) -> None:
-    """Write batch ``bid``'s folded snapshot and vacuum old versions —
-    the one-liner every single-frame IVM twin's fold ends with."""
-    df.write.mode("overwrite").parquet(join(state_dir, f"v{bid}"))
+    """Write batch ``bid``'s folded snapshot (a DataFrame, or a tuple of
+    DataFrames written as parts ``v{bid}/{i}``) and vacuum old
+    versions."""
+    vdir = join(state_dir, f"v{bid}")
+    if isinstance(state, tuple):
+        for i, part in enumerate(state):
+            part.write.mode("overwrite").parquet(join(vdir, str(i)))
+    else:
+        state.write.mode("overwrite").parquet(vdir)
     prune_versions(spark, state_dir, keep)
+
+
+def fold_stream(stream: DataFrame, tmp: str, step, merge, run):
+    """Fold every micro-batch of ``stream`` into versioned state under
+    ``{tmp}/state`` and return the final state (``None`` if no batch
+    ran).  Per batch: ``step(batch)`` is the batch's own state; when a
+    snapshot below ``bid`` exists, the published state is
+    ``merge(prior, step(batch))``.  States are DataFrames or tuples of
+    DataFrames.  ``run(writer, tmp)`` starts the foreachBatch writer and
+    waits for it (the caller's bounded runner)."""
+    spark = stream.sparkSession
+    state_dir = join(tmp, "state")
+
+    def fold(batch, bid):
+        cur = step(batch)
+        prev = read_latest_state(spark, state_dir, below=bid)
+        publish_state(cur if prev is None else merge(prev, cur),
+                      spark, state_dir, bid)
+
+    run(stream.writeStream.foreachBatch(fold), tmp)
+    return read_latest_state(spark, state_dir)
+
+
+def sum_by(*keys: str):
+    """The additive merge: union the prior state with the batch's,
+    group by ``keys`` (none: one global row) and sum every other column
+    as a long."""
+    def merge(prev: DataFrame, cur: DataFrame) -> DataFrame:
+        return prev.unionByName(cur).groupBy(*keys).agg(*[
+            F.sum(c).cast("long").alias(c)
+            for c in prev.columns if c not in keys])
+    return merge

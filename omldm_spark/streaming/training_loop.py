@@ -44,6 +44,7 @@ from ..learners import get_learner, trainer
 from ..learners.protocols import protocol_round
 from ..learners.trainer import Task
 from ..plans.catalog import PipelineCatalog
+from .sources import await_bounded
 
 # Protocols that keep per-worker model state between syncs (SURVEY.md §2.9).
 PER_WORKER_PROTOCOLS = {"SSP", "GM", "FGM", "EASGD"}
@@ -532,7 +533,7 @@ def run_streaming(
     Runs with availableNow (bounded replay -> the reference's multi-epoch
     file workload) and blocks until completion; a replay still running
     after ``timeout_sec`` is stopped and raises ``TimeoutError``
-    (:func:`await_bounded`).
+    (:func:`~omldm_spark.streaming.sources.await_bounded`).
     """
     if requests_df is not None:
         catalog.apply_requests_df(requests_df)
@@ -558,20 +559,6 @@ def run_streaming(
     q = writer.start()
     await_bounded(q, timeout_sec)
     return q
-
-
-def await_bounded(q, timeout_sec: float) -> None:
-    """Wait for a bounded (availableNow) replay to finish. A replay still
-    running after ``timeout_sec`` is stopped and raises ``TimeoutError``
-    with its last progress: returning would pass a cut-short replay off as
-    a finished one."""
-    if not q.awaitTermination(timeout_sec):
-        progress = q.lastProgress
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {q.id} did not finish within {timeout_sec} s; "
-            f"last progress: {progress}"
-        )
 
 
 def build_query_responses(

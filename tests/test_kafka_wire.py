@@ -30,6 +30,7 @@ from omldm_spark.functions.parsing import (
 )
 from omldm_spark.streaming.sources import (
     KAFKA_RAW_SCHEMA,
+    await_bounded,
     file_replay_source,
     kafka_project,
     kafka_sink,
@@ -107,7 +108,7 @@ def test_data_topic_corpus_through_streaming_parse_chain(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
 
     by_id = {r["id"]: r for r in got}
     assert sorted(by_id) == [1, 2, 5, 10]          # drops dropped

@@ -116,3 +116,32 @@ def test_driver_materialization_is_a_closed_reviewed_set():
     )
     stale = set(ALLOWLIST) - used
     assert not stale, f"allowlist entries no longer present: {stale}"
+
+
+def test_await_termination_only_inside_await_bounded():
+    """A bounded stream that overruns must raise, never hand back a
+    partial sink: ``awaitTermination`` returns False on timeout and a
+    caller that ignores it reads half a result.  So the package has ONE
+    call, inside ``streaming/sources.await_bounded``, which raises on
+    False; every other wait goes through it."""
+    import ast
+
+    sites = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if (isinstance(node, ast.Attribute)
+                        and node.attr == "awaitTermination"):
+                    sites.append((rel, fn.name, node.lineno))
+    outside = [s for s in sites
+               if (s[0], s[1]) != ("streaming/sources.py", "await_bounded")]
+    assert not outside, f"awaitTermination outside await_bounded: {outside}"
+    assert len(sites) == 1, sites
+    # module-level waits would escape the walk above
+    text_hits = sum(p.read_text().count(".awaitTermination(")
+                    for p in PKG.rglob("*.py"))
+    assert text_hits == 1, text_hits

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from omldm_spark.streaming.sources import file_replay_source
+from omldm_spark.streaming.sources import await_bounded, file_replay_source
 from omldm_spark.streaming.stateful import streaming_dedup, streaming_running_stats
 
 
@@ -32,7 +32,7 @@ def test_streaming_dedup_across_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
     keys = sorted(r["k"] for r in sink)
     assert keys == ["a", "b", "c"]  # second+third 'a' suppressed cross-batch
 
@@ -65,7 +65,7 @@ def test_streaming_running_stats(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
     # final state per key: running across both batches
     last = {}
     for r in sink:
@@ -100,7 +100,7 @@ def test_windowed_counts_with_watermark(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
     got = {(r["window_start"].minute, r["event_type"]): r["cnt"] for r in sink}
     assert got[(0, "a")] == 2   # 00:00-00:10 window
     assert got[(10, "a")] == 1  # 00:10-00:20 window
@@ -124,7 +124,7 @@ def test_idle_timeout_stopper(spark, tmp_path):
         .start()
     )
     IdleTimeoutStopper(q, timeout_sec=4.0, poll_sec=0.5).start()
-    q.awaitTermination(90)
+    await_bounded(q, 90)
     assert not q.isActive
 
 
@@ -169,7 +169,7 @@ def test_streaming_near_dedup_across_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
 
     pairs = {(r["doc_id"], r["anchor_id"]) for r in got}
     assert (2, 1) in pairs            # near-dup found its anchor cross-batch
@@ -260,7 +260,7 @@ def test_streaming_near_dedup_state_survives_restart(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_bounded(q, 120)
         return got
 
     write(0, [(1, base)])
@@ -326,7 +326,7 @@ def test_streaming_ddm_replay_equals_batch_summary(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
     upd = spark.sql(
         "SELECT * FROM ddm_updates"
     ).toPandas()
@@ -396,7 +396,7 @@ def test_session_window_merges_across_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
     sess = sorted((r["start_s"], r["n_events"]) for r in got
                   if r["user_id"] == 1)
     assert sess == [(1704067200, 3), (1704068100, 1)]
@@ -438,7 +438,7 @@ def test_streaming_cdc_compaction_cadence_independent(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_bounded(q, 120)
         return state
 
     expect = {"a": ("delete", 0), "b": ("upsert", 5), "c": ("delete", 0)}
@@ -496,7 +496,7 @@ def test_dropdup_within_watermark_re_emits_beyond_horizon(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
     a_times = sorted(r["ts"] for r in got if r["k"] == "a")
     assert a_times == [ts(0), ts(7400)]       # dup at 30/60 suppressed
 
@@ -544,7 +544,7 @@ def test_idempotent_sink_under_real_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
     got = sorted(r["rid"] for r in spark.read.parquet(
         *sink.committed_dirs()).collect())
     assert got == [1, 2, 3, 4, 5]
@@ -640,7 +640,7 @@ def test_keyed_upsert_sink_under_real_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
     got = _upsert_rows(spark, sink)
     assert got == [("a", 7), ("b", 3), ("c", 5)]  # == batch GROUP BY
 
@@ -850,7 +850,7 @@ def test_state_api_v2_totals_when_protobuf_available(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "v2ck"))
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
     got = sorted((r["event_type"], r["user_id"], r["total_c"],
                   r["n_events"]) for r in rows)
     assert got == [("a", 1, 30, 2), ("b", 2, 5, 1)]
@@ -985,8 +985,7 @@ def test_statefold_on_uri_scheme_path(spark, tmp_path, monkeypatch):
 
     import omldm_spark.streaming.statefold as statefold_mod
     from omldm_spark.streaming.sources import file_replay_source
-    from omldm_spark.streaming.statefold import (read_latest_state,
-                                                 read_latest_state_parts)
+    from omldm_spark.streaming.statefold import read_latest_state
 
     assert not hasattr(statefold_mod, "os")  # fsio is the only FS door
 
@@ -1023,7 +1022,7 @@ def test_statefold_on_uri_scheme_path(spark, tmp_path, monkeypatch):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_bounded(q, 300)
 
     state = read_latest_state(spark, state_dir)
     assert state is not None
@@ -1031,11 +1030,9 @@ def test_statefold_on_uri_scheme_path(spark, tmp_path, monkeypatch):
     # the retry discipline still honors below= on a URI path
     pre = read_latest_state(spark, state_dir, below=1)
     assert sorted(map(tuple, pre.collect())) == [(3, 2)]
-    # missing dir -> None (not an os error), both variants
+    # missing dir -> None (not an os error)
     assert read_latest_state(
         spark, "file:" + str(tmp_path / "nope")) is None
-    assert read_latest_state_parts(
-        spark, "file:" + str(tmp_path / "nope"), ("a",)) is None
 
 
 def test_prune_versions_keeps_retry_window(spark, tmp_path):
@@ -1142,7 +1139,7 @@ def test_statefold_restart_recovers_from_torn_publish(spark, tmp_path):
              .writeStream.foreachBatch(fold)
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        await_bounded(q, 120)
 
     for i in range(3):
         add_file(i)

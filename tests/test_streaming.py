@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from omldm_spark.plans.catalog import PipelineCatalog
-from omldm_spark.streaming.sources import file_replay_source
+from omldm_spark.streaming.sources import await_bounded, file_replay_source
 from omldm_spark.streaming.training_loop import (
     predict_batch,
     run_streaming,
@@ -183,7 +183,7 @@ def test_dedup_then_train_composition(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
     # 400 unique rows, 360 training / 40 forecasting; duplicates suppressed
     assert cat.pipelines[1].fitted == 360
     assert len(preds) == 40
@@ -341,7 +341,7 @@ def test_stream_interval_join_matches_and_drops_late(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_bounded(q, 180)
 
     pairs = {(r["click_id"], r["purchase_id"]) for r in got}
     assert (2, 10) in pairs            # in-window match emitted
@@ -410,7 +410,7 @@ def test_stream_interval_join_left_outer_emits_null_padded_row(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_bounded(q, 180)
 
     by_click = {}
     for r in got:
@@ -454,8 +454,7 @@ def test_real_media_decode_when_pil_available(spark):
 def test_read_latest_state_retry_discipline(spark, tmp_path):
     # review r10: a foreachBatch RETRY of batch bid must re-read the
     # PRE-batch state (below=bid), never its own half-committed v{bid}
-    from omldm_spark.streaming.statefold import (read_latest_state,
-                                                 read_latest_state_parts)
+    from omldm_spark.streaming.statefold import read_latest_state
 
     state = str(tmp_path / "state")
     assert read_latest_state(spark, state) is None
@@ -465,12 +464,12 @@ def test_read_latest_state_retry_discipline(spark, tmp_path):
     # inside a retry of batch 3, the fold sees v0 (pre-batch), not v3
     assert read_latest_state(spark, state, below=3).collect()[0].v == 1
     assert read_latest_state(spark, state, below=0) is None
-    # multi-part snapshots follow the same discipline
+    # multi-part (tuple) snapshots follow the same discipline, parts
+    # in index order
     pstate = str(tmp_path / "pstate")
-    for part, val in (("a", 10), ("b", 20)):
+    for part, val in ((1, 20), (0, 10)):
         spark.createDataFrame([(val,)], "v long").write.parquet(
             f"{pstate}/v2/{part}")
-    got = read_latest_state_parts(spark, pstate, ("a", "b"))
+    got = read_latest_state(spark, pstate)
     assert [g.collect()[0].v for g in got] == [10, 20]
-    assert read_latest_state_parts(spark, pstate, ("a", "b"),
-                                   below=2) is None
+    assert read_latest_state(spark, pstate, below=2) is None

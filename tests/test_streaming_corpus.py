@@ -16,7 +16,7 @@ from pyspark.sql.types import (
 )
 
 from omldm_spark.operators.pii import pii_redact, plant_pii
-from omldm_spark.streaming.sources import file_replay_source
+from omldm_spark.streaming.sources import await_bounded, file_replay_source
 
 DOC_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -49,7 +49,7 @@ def test_pii_redact_runs_on_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
     assert len(got) == len(expected)
     for r in got[:50]:
         e = expected[r["doc_id"]]
@@ -143,7 +143,7 @@ def test_streaming_topk_state_cadence_independent(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_bounded(q, 120)
         return state
 
     assert run(1) == run(3)
@@ -188,7 +188,7 @@ def test_streaming_zset_fold_cadence_and_vanish(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_bounded(q, 120)
         return {k: v for k, v in state.items() if v[0] > 0}
 
     expect = {1: (2, 60), 2: (1, 9)}  # 7 vanished
@@ -385,7 +385,7 @@ def test_streaming_unimax_fold_cadence_independent(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_bounded(q, 120)
         plan = unimax_from_counts(read_latest_state(spark, state_dir))
         return sorted(tuple(r) for r in plan.collect())
 

@@ -26,7 +26,7 @@ from pyspark.sql.types import (
 )
 
 from omldm_spark.plans.catalog import PipelineCatalog
-from omldm_spark.streaming.sources import file_replay_source
+from omldm_spark.streaming.sources import await_bounded, file_replay_source
 from omldm_spark.streaming.stateful import streaming_dedup
 from omldm_spark.streaming.training_loop import make_batch_handler
 
@@ -138,7 +138,7 @@ def test_unified_stream_create_train_query_response(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_bounded(q, 180)
     assert not q.isActive
 
     # Create applied in-stream; 400 unique rows, duplicates suppressed
@@ -186,7 +186,7 @@ def test_dedup_ttl_expires_state(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
     ids = sorted(r["id"] for r in got)
     # 1,2,3 pass; 50 passes; 1,2 pass AGAIN because their state expired
     assert ids == [1, 1, 2, 2, 3, 50]
@@ -223,7 +223,7 @@ def test_dedup_ttl_counts_from_event_time(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_bounded(q, 120)
     # 1 and 2 once: their re-sends are dropped; 3 twice: its TTL ran out
     assert sorted(r["id"] for r in got) == [1, 2, 3, 3, 10, 11, 20]
 
@@ -273,7 +273,7 @@ def test_checkpoint_restart_trains_each_row_exactly_once(spark, tmp_path):
             .trigger(availableNow=True).start()
         )
         with pytest.raises(StreamingQueryException):
-            q.awaitTermination(120)
+            await_bounded(q, 120)
 
         # restart: fresh process state, catalog reloaded from disk
         cat2 = PipelineCatalog(path=cat_path)
@@ -284,7 +284,7 @@ def test_checkpoint_restart_trains_each_row_exactly_once(spark, tmp_path):
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True).start()
         )
-        q2.awaitTermination(120)
+        await_bounded(q2, 120)
         assert not q2.isActive
         # 400 rows, 360 training; every row exactly once despite the replay
         assert cat2.pipelines[1].fitted == 360, crash_point
