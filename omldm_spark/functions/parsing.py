@@ -5,10 +5,10 @@ Reference behavior being matched (citations into /root/reference/):
 * P1 ``DataInstanceParser`` (src/main/scala/omldm/utils/parsers/
   DataInstanceParser.scala:8-24): JSON -> POJO, silently drop malformed
   records, drop the ``"EOS"`` sentinel, drop records failing ``isValid``.
-  Spark: ``from_json`` in PERMISSIVE mode (malformed -> null struct) +
-  ``filter`` — whole-stage codegen, no Python.
+  Spark: one vectorized pyarrow NDJSON read per Arrow batch
+  (``mapInArrow``), then the validity rule as one Catalyst projection.
 * P2 ``RequestParser`` (…/requestStream/RequestParser.scala:8-18): same for
-  pipeline CRUD requests.
+  pipeline CRUD requests; ``from_json`` in PERMISSIVE mode + ``filter``.
 * P3 ``DataPointParser`` (…/dataStream/DataPointParser.scala:14-59):
   DataInstance -> learning point; a record with all three feature arrays
   null/empty is dropped (:17); label presence selects Labeled/Unlabeled;
@@ -22,174 +22,135 @@ Reference behavior being matched (citations into /root/reference/):
 * P8 toString sink projection (src/main/scala/omldm/Job.scala:91,100):
   POJO -> JSON string.
 
-All of these are pure Catalyst expressions: filters push down to the scan,
-nothing leaves the JVM.
+Apart from P1's NDJSON read, all of these are pure Catalyst expressions:
+filters push down to the scan, nothing leaves the JVM.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from ..schemas import DATA_INSTANCE_SCHEMA, REQUEST_SCHEMA
 
 
-# Parse-once pin (r12-opt — replaces the historical rand-WHEN filter
-# pin, which Spark 4.1's OptimizeRand folds away): the parse COLUMN is
-# wrapped in a single-element shuffle(), a semantic identity that marks
-# the alias nondeterministic.  PushDownPredicates then cannot substitute
-# from_json into the validity conjunction and CollapseProject cannot
-# inline it into the per-field expansion, so the plan keeps EXACTLY ONE
-# from_json with the filter reading struct fields above it.
-#
-# Why it matters (measured at sf0.1, 600k rows, this box): without the
-# pin the pushed filter plan carries SIX from_json copies (one per
-# predicate term + the projection) and runtime subexpression
-# elimination only partially dedupes them across the Filter/Project
-# operator boundary — 7.4 s vs 2.4 s pinned; the earlier boundary-note
-# claim that CSE makes the duplication free was wrong at this width.
-# Retry-safety: shuffle() on a 1-element array always returns that
-# element, so the value is bit-stable under task retries even though
-# the expression is MARKED nondeterministic (guide §2.5's rand-key
-# hazard does not apply).  Predicates on RAW columns (Kafka partition,
-# file path) still belong BEFORE parse_* where real source pushdown
-# applies.  Do NOT re-enable per-field JSON pruning
-# (_tune_json_parsing) — THAT one stays measurably load-bearing
-# (15.8 s -> 7.4 s), because its pruned copies have DIFFERENT schemas
-# which CSE cannot dedupe.
-def _pin_parse(parsed: Column) -> Column:
-    return F.element_at(F.shuffle(F.array(parsed)), 1)
+def _line_parser(arrow_schema):
+    """The one DataInstance parser, as a mapInArrow body: one output row
+    per input line, the typed fields plus ``_malformed``.
 
-
-def _tune_json_parsing(df: DataFrame) -> None:
-    """Disable Catalyst's per-field JSON schema pruning (OptimizeJsonExprs).
-
-    That rule rewrites every ``from_json(x).field`` reference into a SEPARATE
-    from_json with a pruned one-field schema. Each copy is then a *unique*
-    expression, so runtime subexpression elimination cannot deduplicate them
-    — for a parse path that expands ALL fields this multiplies the Jackson
-    work by the number of references. Measured at sf0.1 on the P1+P3 path:
-    15.8s -> 7.4s with the rule off. (The rule is a win only when a query
-    touches one or two fields of a wide JSON; our parse operators always
-    materialize the full record.) Runtime-settable, so it works in any
-    caller-provided session.
-    """
-    df.sparkSession.conf.set(
-        "spark.sql.optimizer.enableJsonExpressionOptimization", "false"
-    )
-
-
-def parse_data_instances(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """P1: raw JSON strings -> validated DataInstance rows.
-
-    Malformed JSON yields a null struct (PERMISSIVE), which the filter drops —
-    the exact silent-drop semantics of DataInstanceParser.scala:12-22. The
-    parse happens ONCE per row: single pinned projection (see _pin_parse),
-    filter and field expansion read the struct column above it.
-    """
-    di = F.col("di")
-    valid = (
-        di.isNotNull()
-        & di["operation"].isin("training", "forecasting")
-        & (
-            (F.size(F.coalesce(di["numericalFeatures"], F.array())) > 0)
-            | (F.size(F.coalesce(di["discreteFeatures"], F.array())) > 0)
-            | (F.size(F.coalesce(di["categoricalFeatures"], F.array())) > 0)
-        )
-    )
-    _tune_json_parsing(raw)
-    return (
-        raw.select(_pin_parse(
-            F.from_json(F.col(value_col), DATA_INSTANCE_SCHEMA)).alias("di"))
-        .filter(valid)
-        .select("di.*")
-    )
-
-
-def parse_data_instances_arrow(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """P1 bulk-ingest variant: vectorized NDJSON parse via pyarrow.json.
-
-    Spark 4.1's ``from_json`` evaluates through a per-row Invoke — measured
-    floor ~7s for the 600k-row round trip at sf0.1 (see _tune_json_parsing).
-    For BOUNDED bulk loads this path batches the raw strings inside
-    ``mapInArrow`` and hands each batch to pyarrow's C++ NDJSON reader —
-    one vectorized parse per Arrow batch, zero per-row Python.
-
-    Semantics match parse_data_instances exactly (silent drop of malformed /
-    EOS / invalid rows, DataInstanceParser.scala:12-22): a batch containing
-    malformed lines falls back to per-line parsing so only the bad rows
-    drop. ``from_json`` remains the streaming default — this operator is for
-    bulk backfills where Python worker startup amortizes.
-    """
-    import pyarrow as pa
-
-    arrow_schema = pa.schema(
-        [
-            ("id", pa.int64()),
-            ("numericalFeatures", pa.list_(pa.float64())),
-            ("discreteFeatures", pa.list_(pa.int32())),
-            ("categoricalFeatures", pa.list_(pa.string())),
-            ("target", pa.float64()),
-            ("operation", pa.string()),
-        ]
-    )
+    A line is good only if it starts with ``{`` (after whitespace) and
+    ``pyarrow.json`` reads it, under the explicit schema with unknown
+    fields ignored, as exactly one row.  Each batch of object lines is
+    read in one vectorized call; if that call fails or returns another
+    row count, every line is read alone (a batch holding a bad line
+    costs one read per line, some 80x the vectorized cost).  Wrong-typed
+    fields, non-object JSON, blank lines and two objects on one line all
+    come out malformed, never coerced and never failing the task.
+    Non-object lines never reach the reader: a leading ``null`` crashes
+    pyarrow 16.1's.  Output order does not matter, so malformed rows go
+    last."""
 
     def parse(batches):
         import io
-        import json
 
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.json as pj
 
-        opts = pj.ParseOptions(
-            explicit_schema=arrow_schema, unexpected_field_behavior="ignore"
-        )
+        read_opts = pj.ReadOptions(use_threads=False)
+        parse_opts = pj.ParseOptions(explicit_schema=arrow_schema,
+                                     unexpected_field_behavior="ignore")
 
-        def fallback(lines: list[str]) -> pa.Table:
-            rows = []
-            for ln in lines:
-                try:
-                    d = json.loads(ln)
-                except (ValueError, TypeError):
-                    continue  # silent drop (DataInstanceParser.scala:12-22)
-                if isinstance(d, dict):
-                    rows.append({f.name: d.get(f.name) for f in arrow_schema})
-            return pa.Table.from_pylist(rows, schema=arrow_schema)
+        def read(lines):
+            try:
+                return pj.read_json(io.BytesIO("\n".join(lines).encode()),
+                                    read_options=read_opts,
+                                    parse_options=parse_opts)
+            except pa.ArrowException:
+                return None
+
+        def flagged(tbl, malformed):
+            return tbl.append_column(
+                "_malformed", pa.array(np.full(tbl.num_rows, malformed)))
 
         for batch in batches:
-            lines = batch.column(0).to_pylist()
-            buf = "\n".join(ln for ln in lines if ln).encode()
-            try:
-                tbl = pj.read_json(io.BytesIO(buf), parse_options=opts)
-            except pa.ArrowInvalid:
-                tbl = fallback(lines)
-            for out in tbl.to_batches():
-                yield out
+            col = batch.column(0)
+            is_obj = pc.fill_null(
+                pc.starts_with(pc.utf8_ltrim_whitespace(col), "{"), False)
+            lines = col.filter(is_obj).to_pylist()
+            good = read(lines) if lines else None
+            if good is None or good.num_rows != len(lines):
+                good = pa.concat_tables(
+                    [arrow_schema.empty_table()]
+                    + [t for t in map(read, ([ln] for ln in lines))
+                       if t is not None and t.num_rows == 1])
+            bad = pa.table([pa.nulls(len(col) - good.num_rows, f.type)
+                            for f in arrow_schema], schema=arrow_schema)
+            yield from pa.concat_tables(
+                [flagged(good, False), flagged(bad, True)]).to_batches()
 
-    di = raw.select(F.col(value_col)).mapInArrow(
-        parse, schema=DATA_INSTANCE_SCHEMA
+    return parse
+
+
+def parse_data_instances_quarantine(
+    raw: DataFrame, value_col: str = "value"
+) -> DataFrame:
+    """P1 with a dead-letter lane instead of the silent drop: every raw
+    row comes back with a ``reject_reason`` — NULL for good rows,
+    'malformed_json' / 'bad_operation' / 'no_features' otherwise (first
+    matching reason wins, in that order).  Production pipelines route
+    the non-null lane to a quarantine sink for replay and alert on its
+    rate; the reference drops silently (DataInstanceParser.scala:12-22),
+    which hides upstream schema drift.  The parse is the vectorized
+    pyarrow NDJSON kernel (``_line_parser``) in one ``mapInArrow``; the
+    reasons are one Catalyst projection over its output, so the good
+    lane is exactly :func:`parse_data_instances`."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    di = raw.select(value_col).mapInArrow(
+        _line_parser(to_arrow_schema(DATA_INSTANCE_SCHEMA)),
+        schema=StructType(DATA_INSTANCE_SCHEMA.fields
+                          + [StructField("_malformed", BooleanType())]),
     )
-    return di.filter(
-        F.col("operation").isin("training", "forecasting")
-        & (
-            (F.size(F.coalesce(F.col("numericalFeatures"), F.array())) > 0)
-            | (F.size(F.coalesce(F.col("discreteFeatures"), F.array())) > 0)
-            | (F.size(F.coalesce(F.col("categoricalFeatures"), F.array())) > 0)
-        )
+    # SQL text: the JVM parses the whole CASE in one call
+    return di.selectExpr(*DATA_INSTANCE_SCHEMA.fieldNames(), """
+        CASE WHEN _malformed THEN 'malformed_json'
+             WHEN NOT coalesce(operation IN ('training', 'forecasting'),
+                               false) THEN 'bad_operation'
+             WHEN NOT (size(coalesce(numericalFeatures, array())) > 0
+                       OR size(coalesce(discreteFeatures, array())) > 0
+                       OR size(coalesce(categoricalFeatures, array())) > 0)
+             THEN 'no_features'
+        END AS reject_reason""")
+
+
+def parse_data_instances(raw: DataFrame, value_col: str = "value") -> DataFrame:
+    """P1: raw JSON strings -> validated DataInstance rows: the good lane
+    of :func:`parse_data_instances_quarantine`.  Malformed JSON, the
+    ``"EOS"`` sentinel and invalid records are dropped silently — the
+    semantics of DataInstanceParser.scala:12-22."""
+    return (
+        parse_data_instances_quarantine(raw, value_col)
+        .filter("reject_reason IS NULL")
+        .drop("reject_reason")
     )
 
 
 def parse_requests(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """P2: raw JSON -> validated Request rows (RequestParser.scala:8-18)."""
+    """P2: raw JSON -> validated Request rows (RequestParser.scala:8-18).
+    ``from_json`` in PERMISSIVE mode (malformed -> NULL fields) plus a
+    filter; the NDJSON kernel cannot read REQUEST_SCHEMA, because
+    pyarrow 16.1 has no JSON conversion to ``map<string, string>``."""
     rq = F.col("rq")
     valid = (
         rq.isNotNull()
         & rq["id"].isNotNull()
         & rq["request"].isin("Create", "Update", "Query", "Delete")
     )
-    _tune_json_parsing(raw)
     return (
-        raw.select(_pin_parse(
-            F.from_json(F.col(value_col), REQUEST_SCHEMA)).alias("rq"))
+        raw.select(F.from_json(F.col(value_col), REQUEST_SCHEMA).alias("rq"))
         .filter(valid)
         .select("rq.*")
     )
@@ -270,53 +231,3 @@ def expand_hub_broadcast(
 def to_json_sink(df: DataFrame) -> DataFrame:
     """P8/S7-S9: rows -> one JSON string column named ``value`` (Kafka shape)."""
     return df.select(F.to_json(F.struct(*df.columns)).alias("value"))
-
-
-def parse_data_instances_quarantine(
-    raw: DataFrame, value_col: str = "value"
-) -> DataFrame:
-    """P1 with a dead-letter lane instead of the silent drop: every raw
-    row comes back with a ``reject_reason`` — NULL for good rows,
-    'malformed_json' / 'bad_operation' / 'no_features' otherwise (first
-    matching reason wins, in that order).  Production pipelines route
-    the non-null lane to a quarantine sink for replay and alert on its
-    rate; the reference drops silently (DataInstanceParser.scala:12-22),
-    which hides upstream schema drift — this keeps its semantics on the
-    good lane (same filter) while making the drops observable.  Still
-    ONE parse per row, one projection.
-
-    Engine fact: PERMISSIVE from_json yields an ALL-NULL STRUCT for
-    malformed input, not a null struct — malformed detection needs the
-    explicit columnNameOfCorruptRecord field in the parse schema."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    q_schema = StructType(
-        list(DATA_INSTANCE_SCHEMA.fields)
-        + [StructField("_corrupt", StringType())]
-    )
-    di = F.col("di")
-    has_features = (
-        (F.size(F.coalesce(di["numericalFeatures"], F.array())) > 0)
-        | (F.size(F.coalesce(di["discreteFeatures"], F.array())) > 0)
-        | (F.size(F.coalesce(di["categoricalFeatures"], F.array())) > 0)
-    )
-    _tune_json_parsing(raw)
-    good_cols = [f.name for f in DATA_INSTANCE_SCHEMA.fields]
-    return (
-        raw.select(
-            F.from_json(
-                F.col(value_col), q_schema,
-                {"columnNameOfCorruptRecord": "_corrupt"},
-            ).alias("di")
-        )
-        .select(
-            *[F.col(f"di.{c}").alias(c) for c in good_cols],
-            F.when(di.isNull() | di["_corrupt"].isNotNull(),
-                   "malformed_json")
-            .when(~F.coalesce(
-                di["operation"].isin("training", "forecasting"),
-                F.lit(False)), "bad_operation")
-            .when(~has_features, "no_features")
-            .alias("reject_reason"),
-        )
-    )

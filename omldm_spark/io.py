@@ -23,18 +23,15 @@ from .schemas import TABLES
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # events.ts is TIMESTAMP(NANOS) which vanilla Spark refuses; read the
-        # physical INT64 as nanos-since-epoch (runtime-settable legacy conf)
-        # and expose a proper timestamp column alongside.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn(
-                "ts", F.timestamp_micros((F.col("ts") / F.lit(1000)).cast("long"))
-            )
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        # A TIMESTAMP(NANOS) events.ts reads as nanos-since-epoch under the
+        # session's spark.sql.legacy.parquet.nanosAsLong (set by
+        # session.get_spark); expose it as a proper timestamp.
+        df = df.withColumn(
+            "ts", F.timestamp_micros((F.col("ts") / F.lit(1000)).cast("long"))
+        )
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -183,27 +183,19 @@ def parse_training_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat learning points. Exercises DataInstanceParser semantics
     (silent drop: DataInstanceParser.scala:12-22).
 
-    r13-opt (guide §4.2/§6, VERDICT r12 item 1): the parse now rides the
-    vectorized pyarrow NDJSON kernel (parse_data_instances_arrow) — the
-    bounded-ingest path this query measures IS a bulk load, and the
-    from_json expression engine was the worst scaler in the repo
-    (10x-factor 4.70 vs the Arrow kernel's ~1.8; sf0.1 wall-clock
-    3.4 s vs 1.7 s in the r12 driver window).  Output verified
-    bit-identical to the from_json path by full collect-compare at
-    sf0.01 AND sf0.1 (same silent-drop semantics, same oracle hash).
-    from_json still parses control requests (parse_requests) and the
-    quarantine lane (parse_quarantine, streaming_parse_quarantine); the
-    live job (job.run_job) reads typed parquet or Kafka projections
-    and parses no JSON.  ``bulk_parse_training_points`` is this same
-    query under its bench name."""
-    from .functions.parsing import parse_data_instances_arrow
+    The parse is the one DataInstance parser, the vectorized pyarrow
+    NDJSON kernel (functions/parsing.py parse_data_instances): the
+    bounded-ingest path this query measures is a bulk load.
+    ``bulk_parse_training_points`` is this same query under its bench
+    name."""
+    from .functions.parsing import parse_data_instances
 
     di = data_instances(spark, sf_dir)
     raw = to_json_sink(di)
     junk = spark.createDataFrame(
         [("EOS",), ("{not json",), ('{"operation": "nope"}',), ("",)], ["value"]
     )
-    parsed = parse_data_instances_arrow(raw.unionByName(junk))
+    parsed = parse_data_instances(raw.unionByName(junk))
     points = to_usable_points(parsed)
     return points.select(
         "id",
@@ -1332,7 +1324,7 @@ def q_pa_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from .operators.multimodal import decode_and_featurize, frame_sample  # noqa: E402
 from .plans.catalog import PipelineCatalog  # noqa: E402
-from .streaming.training_loop import run_streaming  # noqa: E402
+from .streaming.training_loop import make_batch_handler  # noqa: E402
 
 
 def _docs_as_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1404,26 +1396,20 @@ def q_streaming_train_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("training")
         ),
     ).select("id", "features", "label", "operation")
-    tmp = _twin_tmp("omldm_stream_")
-    src = f"{tmp}/src"
-    pts.repartition(4).write.mode("overwrite").parquet(src)
+    stream, tmp = _replay(pts.repartition(4), "omldm_stream_", files=2)
     cat = PipelineCatalog()
-    requests = spark.createDataFrame(
+    cat.apply_requests_df(spark.createDataFrame(
         [
             (1, "Create", "PA"),
             (2, "Create", "SVM"),
             (3, "Create", "NotALearner"),  # dropped by validation
         ],
         ["id", "request", "lname"],
-    ).select("id", "request", F.struct(F.col("lname").alias("name")).alias("learner"))
-    stream = file_replay_source(spark, src, pts.schema, max_files_per_trigger=2)
-    stats: list = []
+    ).select("id", "request", F.struct(F.col("lname").alias("name")).alias("learner")))
     sink = f"{tmp}/predictions"
-    run_streaming(
-        spark, stream, requests, cat, dim=3, num_partitions=4,
-        predictions_path=sink, stats_sink=stats,
-        checkpoint_dir=f"{tmp}/ckpt",
-    )
+    handle = make_batch_handler(spark, cat, dim=3, num_partitions=4,
+                                predictions_path=sink)
+    _run_twin(stream.writeStream.foreachBatch(handle), tmp)
     # the result is READ BACK from the distributed sink — no driver-side
     # prediction collection anywhere in the production path (r1 VERDICT)
     return spark.read.parquet(sink)
@@ -8641,8 +8627,9 @@ def q_parse_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     alertable rate, and the quarantine lane can replay after a fix.
     The same five junk shapes the parse_training_points query injects
     (plus a featureless record) come back with exact per-reason counts;
-    every derived lineitem row lands in the good lane.  One parse per
-    row; the lane rollup is a 4-key groupBy."""
+    every derived lineitem row lands in the good lane.  One NDJSON
+    parse per row, the kernel parse_training_points reads too; the lane
+    rollup is a 4-key groupBy."""
     di = data_instances(spark, sf_dir)
     raw = to_json_sink(di)
     junk = spark.createDataFrame(

@@ -47,6 +47,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Deterministic timestamp semantics for oracle comparison.
         .config("spark.sql.session.timeZone", "UTC")
+        # Vanilla Spark refuses parquet TIMESTAMP(NANOS); read it as its
+        # physical INT64 (io.load_table turns that into a timestamp).
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Broadcast anything under 32 MB — dimension tables, pipeline specs,
         # trained models. At 100 TB the fact tables never qualify; the dims do.
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))

@@ -5,7 +5,8 @@ In production these are Kafka topics:
     spark.readStream.format("kafka")
         .option("subscribe", "trainingData")
         .option("startingOffsets", "earliest")            # S1/S2
-    + from_json parsing (functions/parsing.py)
+    + the JSON parsers in functions/parsing.py (the NDJSON kernel for
+      DataInstances, from_json for requests)
 
 The test/bench environment has no Kafka broker, so the same pipelines run on
 file-replay sources: a parquet/json directory consumed with ``readStream``

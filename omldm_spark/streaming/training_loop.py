@@ -44,7 +44,6 @@ from ..learners import get_learner, trainer
 from ..learners.protocols import protocol_round
 from ..learners.trainer import Task
 from ..plans.catalog import PipelineCatalog
-from .sources import await_bounded
 
 # Protocols that keep per-worker model state between syncs (SURVEY.md §2.9).
 PER_WORKER_PROTOCOLS = {"SSP", "GM", "FGM", "EASGD"}
@@ -506,59 +505,6 @@ def make_batch_handler(
             )
 
     return handle
-
-
-def run_streaming(
-    spark,
-    stream_df: DataFrame,
-    requests_df: DataFrame | None,
-    catalog: PipelineCatalog,
-    *,
-    features_col: str = "features",
-    label_col: str = "label",
-    id_col: str = "id",
-    dim: int = 3,
-    num_partitions: int = 8,
-    predictions_sink: list | None = None,
-    stats_sink: list | None = None,
-    predictions_path: str | None = None,
-    responses_sink: list | None = None,
-    holdout_df: DataFrame | None = None,
-    checkpoint_dir: str | None = None,
-    timeout_sec: float = 120.0,
-):
-    """End-to-end Structured Streaming job: requests applied first (control
-    plane), then per-batch train/predict split by ``operation``.
-
-    Runs with availableNow (bounded replay -> the reference's multi-epoch
-    file workload) and blocks until completion; a replay still running
-    after ``timeout_sec`` is stopped and raises ``TimeoutError``
-    (:func:`~omldm_spark.streaming.sources.await_bounded`).
-    """
-    if requests_df is not None:
-        catalog.apply_requests_df(requests_df)
-
-    handle = make_batch_handler(
-        spark,
-        catalog,
-        features_col=features_col,
-        label_col=label_col,
-        id_col=id_col,
-        dim=dim,
-        num_partitions=num_partitions,
-        predictions_sink=predictions_sink,
-        stats_sink=stats_sink,
-        predictions_path=predictions_path,
-        responses_sink=responses_sink,
-        holdout_df=holdout_df,
-    )
-
-    writer = stream_df.writeStream.foreachBatch(handle).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    await_bounded(q, timeout_sec)
-    return q
 
 
 def build_query_responses(

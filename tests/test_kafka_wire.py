@@ -12,9 +12,11 @@ projection + parse chain (``kafka_project`` -> ``parse_data_instances`` /
 Reference surface: Job.scala:42-57 (sources), 77-105 (sinks),
 DataInstanceParser.scala:12-22 (silent drop), RequestParser semantics.
 One DOCUMENTED divergence: the reference's Jackson mapper fails (and so
-silently drops) frames with unknown fields; ``from_json`` ignores unknown
-fields, so this engine ACCEPTS them — the schema-evolution-friendly
-choice, asserted below so it can't drift unnoticed.
+silently drops) frames with unknown fields; both parsers here ignore
+unknown fields (the NDJSON kernel behind ``parse_data_instances`` and
+``from_json`` behind ``parse_requests``), so this engine ACCEPTS them —
+the schema-evolution-friendly choice, asserted below so it can't drift
+unnoticed.
 """
 
 from __future__ import annotations

@@ -66,18 +66,9 @@ def test_parse_double_array(spark):
 
 
 def test_caller_filter_on_parsed_output_parses_once_and_correct(spark):
-    """Documents the parse-filter boundary (r12-opt, settled by
-    measurement): the parse column is pinned nondeterministic
-    (_pin_parse), so neither the validity conjunction nor a caller
-    .filter() is substituted below the parse Project — the optimized
-    plan carries EXACTLY ONE from_json and every Filter reads the
-    struct column.  (The pre-r12 rand-WHEN pin was folded by
-    OptimizeRand and the pushed plan carried SIX from_json copies that
-    runtime CSE only partially deduped: 7.4 s vs 2.4 s at sf0.1.)
-    This test pins the two facts: the parse stays single-copy (so we
-    notice if the optimizer changes again) and results stay correct,
-    including the malformed-row silent-drop interacting with the
-    caller predicate."""
+    """A caller filter on the parsed frame keeps the malformed-row silent
+    drop correct, and the plan parses each line once: exactly one
+    MapInArrow (the NDJSON kernel) and no from_json anywhere."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -97,13 +88,58 @@ def test_caller_filter_on_parsed_output_parses_once_and_correct(spark):
     assert got == [3, 4, 5]  # malformed + invalid-op rows silently dropped
 
     plan = filtered._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("from_json") == 1, (
-        "the parse is no longer single-copy — the optimizer changed; "
-        "re-run the A/B in parsing.py's _pin_parse note"
-    )
-    assert not any(
-        "from_json" in line for line in plan.splitlines() if "Filter" in line
-    ), "a predicate was substituted below the parse projection"
+    assert plan.count("MapInArrow") == 1
+    assert "from_json" not in plan
+
+
+GOOD_LINES = [
+    json.dumps({"id": i, "numericalFeatures": [float(i)], "target": 1.0,
+                "operation": "training"})
+    for i in (1, 2, 3)
+] + [
+    # unknown fields are ignored, not a reason to reject
+    json.dumps({"id": 5, "discreteFeatures": [2], "operation": "forecasting",
+                "provenance": "upstream-v2"}),
+]
+MALFORMED_LINES = [
+    '{"id":"abc","numericalFeatures":[1.0],"operation":"training"}',
+    '{"id":6,"numericalFeatures":"x","operation":"training"}',
+    '{"id":4.5,"numericalFeatures":[1.0],"operation":"training"}',
+    "123",
+    "  ",
+    "",
+    '"  "',
+    "null",
+    "EOS",
+    '{"id":7,"numericalFeatures":[1.0],"operation":"training"}{"id":8}',
+]
+
+
+def test_drop_lane_is_the_quarantine_good_lane_on_planted_lines(spark):
+    """One malformed rule for both lanes: wrong-typed fields, non-object
+    JSON, blank lines and two objects on one line are malformed_json in
+    the quarantine lane and absent from the drop lane — planted in the
+    same partition as good rows, with no task failing and no value
+    coerced.  The drop lane is the quarantine lane's good rows."""
+    from collections import Counter
+
+    from omldm_spark.functions.parsing import parse_data_instances_quarantine
+
+    bad_op = json.dumps({"id": 9, "numericalFeatures": [1.0],
+                         "operation": "x"})
+    lines = GOOD_LINES + MALFORMED_LINES + [bad_op]
+    raw = _raw(spark, lines).coalesce(1)
+    dropped = parse_data_instances(raw).collect()
+    quarantined = parse_data_instances_quarantine(raw).collect()
+
+    assert sorted(r["id"] for r in dropped) == [1, 2, 3, 5]
+    assert len(quarantined) == len(lines)
+    good = [tuple(r)[:-1] for r in quarantined if r["reject_reason"] is None]
+    assert Counter(repr(tuple(r)) for r in dropped) == Counter(map(repr, good))
+    reasons = Counter(r["reject_reason"] for r in quarantined)
+    assert reasons == {None: len(GOOD_LINES),
+                       "malformed_json": len(MALFORMED_LINES),
+                       "bad_operation": 1}
 
 
 def test_chunk_words_udtf_lateral_sql(spark):

@@ -8,13 +8,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from omldm_spark.job import JobConfig, run_job
 from omldm_spark.plans.catalog import PipelineCatalog
 from omldm_spark.streaming.sources import await_bounded, file_replay_source
-from omldm_spark.streaming.training_loop import (
-    predict_batch,
-    run_streaming,
-    train_batch,
-)
+from omldm_spark.streaming.training_loop import predict_batch, train_batch
 
 RNG = np.random.default_rng(25)
 
@@ -74,18 +71,17 @@ def test_run_streaming_end_to_end(spark, tmp_path):
             {"id": 2, "request": "Create", "learner": {"name": "NotReal"}},
         ])
     )
-    schema = spark.createDataFrame(pdf).schema
-    stream = file_replay_source(spark, src_dir, schema, max_files_per_trigger=2)
+    cat.apply_requests_df(requests)  # control plane first
     preds, stats = [], []
     sink = str(tmp_path / "pred_sink")
-    q = run_streaming(
-        spark, stream, requests, cat,
-        dim=3, num_partitions=4,
-        predictions_sink=preds, stats_sink=stats,
-        predictions_path=sink,
+    run_job(spark, JobConfig(
+        parallelism=4, dim=3, timeout_ms=120_000,
+        input_path=src_dir, input_schema=spark.createDataFrame(pdf).schema,
+        max_files_per_trigger=2,
+        predictions_sink=preds, stats_sink=stats, predictions_path=sink,
         checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    assert not q.isActive
+    ), cat)
+    assert spark.streams.active == []
     assert list(cat.pipelines) == [1]  # invalid Create dropped
     assert cat.pipelines[1].fitted == 540  # every training row, all batches
     assert len(preds) == 60

@@ -82,6 +82,7 @@ def test_failing_step_raises_its_error(spark):
     "streaming_retention_cohorts", # fold_stream
     "streaming_distinct_keys",     # parquet sink
     "streaming_bitmap_distinct",   # _run_update_stream
+    "streaming_train_predict",     # foreachBatch training handler
 ])
 def test_finished_twin_keeps_only_what_its_frame_reads(spark, monkeypatch,
                                                       name):

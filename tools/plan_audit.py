@@ -427,13 +427,18 @@ CHECKS = {
         ("query side broadcast", lambda p: "Broadcast" in p),
     ],
     "parse_training_points": [
-        # r13-opt: the parse rides the vectorized pyarrow NDJSON kernel
-        # (mapInArrow) — no from_json expression exists in this plan at
-        # all.  The single-from_json pin lives on in the boundary test
-        # over parse_data_instances.
+        # The parse rides the vectorized pyarrow NDJSON kernel (mapInArrow)
+        # — no from_json expression exists in this plan at all.  The
+        # boundary test over parse_data_instances pins one MapInArrow and
+        # no from_json under a caller filter.
         ("vectorized Arrow parse, no per-row JSON expression",
          lambda p: "MapInArrow" in p and "from_json" not in p),
         ("no row-at-a-time Python", lambda p: "BatchEvalPython" not in p),
+    ],
+    "parse_quarantine": [
+        # the dead-letter lane is a view over the same NDJSON kernel
+        ("vectorized Arrow parse, no per-row JSON expression",
+         lambda p: "MapInArrow" in p and "from_json" not in p),
     ],
     "doc_chunks": [
         # chunking is embarrassingly parallel: projection + explode, no
