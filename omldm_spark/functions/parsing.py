@@ -42,9 +42,12 @@ def _line_parser(arrow_schema):
     A line is good only if it starts with ``{`` (after whitespace) and
     ``pyarrow.json`` reads it, under the explicit schema with unknown
     fields ignored, as exactly one row.  Each batch of object lines is
-    read in one vectorized call; if that call fails or returns another
-    row count, every line is read alone (a batch holding a bad line
-    costs one read per line, some 80x the vectorized cost).  Wrong-typed
+    read in one vectorized call; a run of lines that fails or returns
+    another row count is split in halves until every good run reads in
+    one call.  The reader parses each line on its own (no value spans a
+    newline), so a run reads as one row a line exactly when each of its
+    lines does alone: a failing run whose first half reads is known bad
+    in its second half, which is split without another read.  Wrong-typed
     fields, non-object JSON, blank lines and two objects on one line all
     come out malformed, never coerced and never failing the task.
     Non-object lines never reach the reader: a leading ``null`` crashes
@@ -71,6 +74,20 @@ def _line_parser(arrow_schema):
             except pa.ArrowException:
                 return None
 
+        def good_runs(lines, known_bad=False):
+            """Tables of the lines of ``lines`` that read alone as one row
+            each, in line order."""
+            if not known_bad:
+                tbl = read(lines)
+                if tbl is not None and tbl.num_rows == len(lines):
+                    return [tbl]
+            if len(lines) == 1:
+                return []
+            mid = len(lines) // 2
+            head = good_runs(lines[:mid])
+            return head + good_runs(
+                lines[mid:], sum(t.num_rows for t in head) == mid)
+
         def flagged(tbl, malformed):
             return tbl.append_column(
                 "_malformed", pa.array(np.full(tbl.num_rows, malformed)))
@@ -80,12 +97,9 @@ def _line_parser(arrow_schema):
             is_obj = pc.fill_null(
                 pc.starts_with(pc.utf8_ltrim_whitespace(col), "{"), False)
             lines = col.filter(is_obj).to_pylist()
-            good = read(lines) if lines else None
-            if good is None or good.num_rows != len(lines):
-                good = pa.concat_tables(
-                    [arrow_schema.empty_table()]
-                    + [t for t in map(read, ([ln] for ln in lines))
-                       if t is not None and t.num_rows == 1])
+            good = pa.concat_tables(
+                [arrow_schema.empty_table()]
+                + (good_runs(lines) if lines else []))
             bad = pa.table([pa.nulls(len(col) - good.num_rows, f.type)
                             for f in arrow_schema], schema=arrow_schema)
             yield from pa.concat_tables(

@@ -266,7 +266,9 @@ def apply_chain(
     ``update=True`` each scaler first folds this DataFrame's moments into its
     running state (one tiny JVM-side aggregation per scaler — the per-batch
     fit step); with ``update=False`` (prediction path) the stored stats are
-    applied as-is, matching the reference's transform-only scoring.
+    applied as-is, matching the reference's transform-only scoring. The
+    chain's step columns are named after ``out_col``, so several chains can
+    add their outputs to one frame.
     """
     state = list(state) if state else [None] * len(preprocessors)
     if len(state) < len(preprocessors):
@@ -274,7 +276,7 @@ def apply_chain(
     cur, cur_dim = features_col, dim
     for idx, p in enumerate(preprocessors):
         name = p.get("name")
-        tmp = f"_pp{idx}"
+        tmp = f"{out_col}_{idx}"
         if name == "PolynomialFeatures":
             degree = int(_hyper(p).get("degree", 2))
             expr, cur_dim = poly_expand_expr(cur, cur_dim, degree)

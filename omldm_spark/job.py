@@ -16,8 +16,12 @@ SURVEY.md §2.8) with a ``foreachBatch`` BSP round per micro-batch:
       -> predictions parquet/kafka sink                  Job.scala:98-105
       -> responses + performance via catalog drains      Job.scala:89-96
 
-``JobConfig`` mirrors ``DefaultJobParameters.scala:5-11`` name-for-name so a
-reference user's job invocation translates directly; Kafka mode reuses the
+``JobConfig`` keeps the reference job parameters this job reads
+(``DefaultJobParameters.scala:5-11``: ``parallelism``, ``timeout``); the
+others have no reader here — chunking, the holdout size and checkpointing
+are fixed by the code, and each pipeline's hub parallelism comes from its
+own Create request (``trainingConfiguration.HubParallelism``,
+``plans/catalog.py``). Kafka mode reuses the
 contract-tested option builders in ``streaming/sources.py`` (no broker in
 the test env — file replay runs the identical downstream plan).
 """
@@ -35,15 +39,12 @@ from .streaming.training_loop import make_batch_handler
 
 @dataclass
 class JobConfig:
-    """Reference job parameters (DefaultJobParameters.scala:5-11) plus the
-    source/sink bindings that replace the hard-wired topic names."""
+    """The reference job parameters this job reads
+    (DefaultJobParameters.scala:5-11) plus the source/sink bindings that
+    replace the hard-wired topic names."""
 
     parallelism: int = 16            # --parallelism (spokes)
-    max_msg_params: int = 2_000      # --maxMsgParams (chunking threshold)
-    test_set_size: int = 256         # --testSetSize (per-worker holdout)
-    timeout_ms: int = 30_000         # --timeout (idle termination)
-    check_interval_ms: int = 5_000   # Checkpointing.scala:21-22
-    hub_parallelism: int = 1         # --hubParallelism
+    timeout_ms: int = 30_000         # --timeout (replay await bound)
 
     # source bindings: either kafka brokers + topics, or a file-replay path
     brokers: str | None = None

@@ -12,7 +12,8 @@ is handed, in one Spark pass:
 
 ``fit`` and ``fit_groups`` take either one learner name (the single-model
 form) or a list of :class:`Task`, one per model, and train them all in one
-pass; the single-model form is the one-task case of that pass:
+pass, each model on its own features column of the one frame; the
+single-model form is the one-task case of that pass:
 
 * ``fit``        one ``repartition.select.mapInPandas``: every model starts
                  each partition from its broadcast global state; the driver
@@ -22,7 +23,8 @@ pass; the single-model form is the one-task case of that pass:
                  those are the workers' own states; for a global model the
                  caller hands every key the same broadcast state and merges
                  the returned per-key partials with ``merge_round``, so the
-                 streaming round trains both kinds in one keyed pass.
+                 streaming round trains both kinds in one keyed pass, in as
+                 few Python tasks as the pass's row count fills.
 
 Closed-form learners (ORR) bypass the pass: each runs its own Catalyst
 aggregate. The per-partition state is O(model), not O(data) — collecting
@@ -60,12 +62,15 @@ class Task:
     """One model of a fused pass. ``state`` is where it starts: the global
     state for :func:`fit`, the per-key states for :func:`fit_groups` (keys
     without one start fresh), the model scored for :func:`evaluate_linear`.
-    ``None`` starts fresh."""
+    ``None`` starts fresh. ``features_col`` is the column the model reads
+    (``None``: the pass's ``features_col``), so models whose features go
+    through different preprocessor chains share one pass over one frame."""
 
     learner: str
     dim: int = 0
     hyper: dict = field(default_factory=dict)
     state: dict | None = None
+    features_col: str | None = None
 
 
 def _flatten_state(learner: Learner, state: dict) -> list[float]:
@@ -151,8 +156,15 @@ def _state_rows(models: list[_Model], grp: int, states: list[dict]) -> pd.DataFr
     )
 
 
-def _xy(pdf: pd.DataFrame, features_col: str, label_col: str):
-    X = np.asarray(pdf[features_col].tolist(), dtype=float)
+def _columns(tasks: list[Task], features_col: str) -> list[str]:
+    """The features column each task reads."""
+    return [t.features_col or features_col for t in tasks]
+
+
+def _xy(pdf: pd.DataFrame, cols: list[str], label_col: str):
+    """One feature matrix per distinct column of ``cols``, and the labels."""
+    X = {c: np.asarray(pdf[c].tolist(), dtype=float)
+         for c in dict.fromkeys(cols)}
     return X, pdf[label_col].to_numpy(dtype=float)
 
 
@@ -185,6 +197,7 @@ def fit(
     """
     single, tasks = _tasks(learner, dim, hyper, init_state)
     models = [_Model(t) for t in tasks]
+    cols = _columns(tasks, features_col)
     states: list[dict] = []
     streamed: list[int] = []
     for i, (t, m) in enumerate(zip(tasks, models)):
@@ -196,7 +209,7 @@ def fit(
             # exact fit).
             states.append(m.learner.fit_dataframe(
                 points, t.dim, t.hyper,
-                features_col=features_col, label_col=label_col,
+                features_col=cols[i], label_col=label_col,
                 init_state=t.state,
             ))
         else:
@@ -211,8 +224,9 @@ def fit(
         points = points.repartition(num_partitions)
     if order_cols:
         points = points.sortWithinPartitions(*order_cols)
-    sel = points.select(features_col, label_col)
     pass_models = [models[i] for i in streamed]
+    pass_cols = [cols[i] for i in streamed]
+    sel = points.select(*dict.fromkeys(pass_cols), label_col)
 
     for _ in range(epochs):
         bc = [m.pack(states[i]) for m, i in zip(pass_models, streamed)]
@@ -225,9 +239,10 @@ def fit(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                X, yv = _xy(pdf, features_col, label_col)
-                for j, m in enumerate(pass_models):
-                    locals_[j] = m.learner.partial_fit(X, yv, locals_[j], m.hyper)
+                X, yv = _xy(pdf, pass_cols, label_col)
+                for j, (m, c) in enumerate(zip(pass_models, pass_cols)):
+                    locals_[j] = m.learner.partial_fit(X[c], yv, locals_[j],
+                                                       m.hyper)
                 seen += len(pdf)
             if seen:
                 yield _state_rows(pass_models, TaskContext.get().partitionId(),
@@ -288,7 +303,8 @@ def evaluate(
     pdf = points.select(features_col, label_col).toPandas()
     if len(pdf) == 0:
         return {"loss": math.nan, "score": math.nan, "n_test": 0}
-    X, yv = _xy(pdf, features_col, label_col)
+    X, yv = _xy(pdf, [features_col], label_col)
+    X = X[features_col]
     return {
         "loss": learner.loss(X, yv, state),
         "score": learner.score(X, yv, state),
@@ -307,19 +323,30 @@ def fit_groups(
     label_col: str = "label",
     order_cols: list[str] | None = None,
     init_states: dict[int, dict] | None = None,
+    rows: int | None = None,
 ) -> dict[int, dict] | list[dict[int, dict]]:
     """Per-group sequential training: each key keeps ITS OWN model. Returns
     {key: state}, or with a list of :class:`Task` one such dict per task,
-    all trained in the same pass.
+    all trained in the same pass, each on its own ``features_col``.
 
     This is the per-worker state the distributed-protocol emulations need
     (GM/FGM/EASGD keep worker models that diverge between syncs —
     SURVEY.md §2.9). applyInPandas gives one pandas frame per group; rows
     are sorted in-frame by ``order_cols``, so the pass is deterministic
     regardless of shuffle arrival order.
+
+    Task count: each Python task costs a fixed start-up, so when ``rows``
+    (the row count of ``points``, when the caller knows it) fits one Arrow
+    batch (``spark.sql.execution.arrow.maxRecordsPerBatch``) the frame is
+    coalesced into one task; one partition is clustered by any key, so the
+    grouping needs no exchange. Otherwise the grouping takes the session's
+    shuffle partitions (which AQE may coalesce), one task per key at most.
+    Each group is trained alone either way, so the states do not depend on
+    the task count.
     """
     single, tasks = _tasks(learner, dim, hyper, init_states)
     models = [_Model(t) for t in tasks]
+    cols = _columns(tasks, features_col)
     bc = [{int(k): m.pack(st) for k, st in (t.state or {}).items()}
           for t, m in zip(tasks, models)]
     order_cols = order_cols or []
@@ -328,20 +355,20 @@ def fit_groups(
         key = int(pdf[key_col].iloc[0])
         if order_cols:
             pdf = pdf.sort_values(order_cols)
-        X, yv = _xy(pdf, features_col, label_col)
+        X, yv = _xy(pdf, cols, label_col)
         locals_ = [
-            m.learner.partial_fit(X, yv, m.start(b.get(key)), m.hyper)
-            for m, b in zip(models, bc)
+            m.learner.partial_fit(X[c], yv, m.start(b.get(key)), m.hyper)
+            for m, b, c in zip(models, bc, cols)
         ]
         return _state_rows(models, key, locals_)
 
-    rows = (
-        points.select(key_col, features_col, label_col, *order_cols)
-        .groupBy(key_col)
-        .applyInPandas(run_group, schema=STATE_SCHEMA).collect()
-    )
+    sel = points.select(key_col, *dict.fromkeys(cols), label_col, *order_cols)
+    if rows is not None and rows <= int(points.sparkSession.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch", "10000")):
+        sel = sel.coalesce(1)
     out: list[dict[int, dict]] = [{} for _ in tasks]
-    for r in rows:
+    for r in (sel.groupBy(key_col)
+              .applyInPandas(run_group, schema=STATE_SCHEMA).collect()):
         j, key = r["model"], int(r["grp"])
         s = models[j].unpack(r["flat"], r["blob"])
         prev = (tasks[j].state or {}).get(key, {})

@@ -7,15 +7,20 @@ Flink forbids cyclic dataflow (Job.scala:77-87,136-142). In micro-batch BSP
 one batch IS one protocol round, for every live pipeline at once:
 
     batch -> ONE keyed partial_fit pass (applyInPandas over the worker
-             keys pmod(id, parts), Arrow) training every chainless
-             pipeline on more than one worker, whatever its protocol
+             keys pmod(id, parts), Arrow) training every pipeline on more
+             than one worker, whatever its protocol and preprocessor
+             chain, each on its own features column of the one frame
           -> per-pipeline merge of its partial states (the hub, one tiny
              reduce) and protocol round
           -> model broadcast into the next batch via the catalog
 
 The reference's worker operator likewise updates every live pipeline on
 each record (FlinkSpoke.scala:101); see ``train_batch`` for which pipelines
-share a pass.
+share a pass. Each PySpark Python task has a fixed start-up cost, so the
+keyed pass runs in one task when the batch's training rows fit one Arrow
+batch (``spark.sql.execution.arrow.maxRecordsPerBatch``), from the row
+counts the handler's request collect observes; a larger batch keeps the
+session's grouping. The models do not depend on the task count.
 
 Protocol semantics under BSP (SURVEY.md §2.9): Synchronous is native;
 Asynchronous/SSP/EASGD are emulated at sync cadence with their statistics
@@ -34,9 +39,10 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.preprocess import apply_chain
@@ -125,6 +131,18 @@ def _account_hub_shards(spec, state: dict, shipped: int) -> None:
     spec.hub_stats = hs
 
 
+class _Member(NamedTuple):
+    """A live pipeline in one round: the workers it trains on, the
+    features column (and its width) it reads, and its chain's new state."""
+
+    spec: object
+    learner: object
+    parts: int
+    features_col: str
+    dim: int
+    pp_state: list | None
+
+
 def _per_worker(spec, learner) -> bool:
     """Does the pipeline keep per-worker models between syncs when it
     trains on more than one worker? The per-worker protocols do, for
@@ -145,40 +163,42 @@ def train_batch(
     id_col: str = "id",
     dim: int = 3,
     num_partitions: int = 8,
-    partition_col: str | None = None,
-    order_cols: list[str] | None = None,
     batch_id: int = 0,
     skip_replayed: bool = False,
+    rows: int | None = None,
 ) -> list[BatchStats]:
     """One BSP round for every live pipeline over one micro-batch.
 
     Every live pipeline trains on every record (the reference's one worker
-    operator updates them all, FlinkSpoke.scala:101), and pipelines that
-    read the batch the same way share one Spark pass:
+    operator updates them all, FlinkSpoke.scala:101), and all of them read
+    one frame: each pipeline with a preprocessor chain adds its own
+    transformed features column to the batch (``apply_chain``, which runs
+    each scaler's fit aggregate), and each model trains on its own column.
+    The round runs at most three kinds of work:
 
-    * every chainless pipeline on more than one worker trains in ONE
-      ``trainer.fit_groups`` pass, keyed by ``pmod(id, num_partitions)``
-      and sorted by id within each worker. Per-worker protocols
+    * ONE ``trainer.fit_groups`` pass trains every pipeline on more than one
+      worker, chained or not, keyed by ``pmod(id, num_partitions)`` and
+      sorted by id within each worker. Per-worker protocols
       (SSP/GM/FGM/EASGD) start each worker from its own model; the others
       (Synchronous, Asynchronous, and blob learners under any protocol)
       start every worker from the broadcast global model, and the driver
       merges that round's partials with ``trainer.merge_round``, the merge
       ``trainer.fit`` uses. The key is a pure function of the row, so the
-      models do not depend on how the batch arrives partitioned;
-    * SingleLearner/CentralizedTraining pipelines train in one
-      single-partition ``trainer.fit`` pass;
-    * closed-form learners (ORR) keep their Catalyst aggregate;
-    * a pipeline with a preprocessor chain trains on its own pass over its
-      transformed frame (keyed for the per-worker protocols, a
-      ``trainer.fit`` pass otherwise), so its rows land exactly as when it
-      trains alone.
+      models do not depend on how the batch arrives partitioned. With
+      ``rows`` (the batch's row count, when the caller observed it) no
+      larger than ``spark.sql.execution.arrow.maxRecordsPerBatch`` the
+      pass runs in one Python task, which leaves the models as they are;
+    * ONE single-partition ``trainer.fit`` pass trains the
+      SingleLearner/CentralizedTraining pipelines (and every pipeline when
+      ``num_partitions`` is 1);
+    * closed-form learners (ORR) keep their Catalyst aggregate.
 
     The driver splits each pass's state rows by pipeline and runs the
-    merge, protocol round and statistics per pipeline. Pipelines with no
-    chain go first: a pass that fits no row means the batch is empty, and
-    then nothing else runs and the catalog is left as it was.
-    ``BatchStats.wall_ms`` is the wall time of the whole round (all passes
-    and driver merges), the same for every pipeline of the batch.
+    merge, protocol round and statistics per pipeline. ``rows=0`` runs
+    nothing; otherwise a pass that fits no row means the batch is empty,
+    and the catalog is left as it was. ``BatchStats.wall_ms`` is the wall
+    time of the whole round (all passes and driver merges), the same for
+    every pipeline of the batch.
 
     ``skip_replayed=True`` (the streaming handler sets it) makes the round
     idempotent under foreachBatch replay: a pipeline whose persisted
@@ -192,101 +212,93 @@ def train_batch(
     if skip_replayed:
         live = [s for s in live
                 if int(getattr(s, "last_batch_id", -1) or -1) < int(batch_id)]
-    passes: dict[tuple, list] = {}
+    if not live or rows == 0:
+        return []
+    frame = batch_df
+    keyed, single = [], []
     for spec in live:
         learner = get_learner(spec.learner)
+        # Preprocessor chain (PipelineMap.scala:25-29): fit stats are
+        # running integer moments in the spec (exact across batches), the
+        # transform is pure Catalyst column math on the batch.
+        fcol, eff_dim, pp_state = features_col, dim, None
+        if spec.preprocessors:
+            fcol = f"_pp{spec.id}"
+            frame, eff_dim, pp_state = apply_chain(
+                frame, spec.preprocessors, features_col, dim,
+                spec.preproc_state, out_col=fcol,
+            )
         # SingleLearner (HT/K-means) trains on one partition — the
         # reference forwards all points to a single central learner
         # (FlinkSpoke.scala:203-211).
         parts = 1 if spec.protocol in ("SingleLearner", "CentralizedTraining") \
             else num_partitions
-        chain = spec.id if spec.preprocessors else None
-        closed = getattr(learner, "closed_form", False)
-        keyed = parts > 1 and not closed and (
-            chain is None or _per_worker(spec, learner))
-        passes.setdefault((chain, parts, keyed), []).append(spec)
+        member = _Member(spec, learner, parts, fcol, eff_dim, pp_state)
+        if parts > 1 and not getattr(learner, "closed_form", False):
+            keyed.append(member)
+        else:
+            single.append(member)
 
     # spec.id -> (state, models shipped, worker states, preprocessor state)
     rounds: dict[int, tuple] = {}
-    for (chain, parts, keyed), members in sorted(
-        passes.items(), key=lambda kv: kv[0][0] is not None
-    ):
-        # Preprocessor chain (PipelineMap.scala:25-29): fit stats are
-        # running integer moments in the spec (exact across batches), the
-        # transform is pure Catalyst column math on the batch.
-        train_df, eff_dim, fcol, pp_state = batch_df, dim, features_col, None
-        if chain is not None:
-            train_df, eff_dim, pp_state = apply_chain(
-                batch_df, members[0].preprocessors, features_col, dim,
-                members[0].preproc_state,
-            )
-            fcol = "_pp_features"
-        learners = [get_learner(s.learner) for s in members]
-        inits = [_deser(s.model) if s.model is not None else None
-                 for s in members]
-        if keyed:
-            # the batch is keyed to stable worker ids: per-worker protocols
-            # start each worker from its own model, so state follows the
-            # worker; every other pipeline starts every worker from the
-            # broadcast global model, with zeroed counts so the pass hands
-            # back this round's partials for the merge
-            globals_, starts = [], []
-            for spec, learner, init in zip(members, learners, inits):
-                g_state = init or learner.init_state(eff_dim, dict(spec.hyper))
-                globals_.append(g_state)
-                if _per_worker(spec, learner):
-                    starts.append({
-                        int(k): _deser(v)
-                        for k, v in (spec.worker_models or {}).items()
-                    } or {w: dict(g_state) for w in range(parts)})
-                else:
-                    starts.append({w: {**g_state, "n": 0, "cum_loss": 0.0}
-                                   for w in range(parts)})
-            dfw = train_df.withColumn(
-                "_wk", F.pmod(F.col(id_col), F.lit(parts)).cast("int")
-            )
-            fitted = trainer.fit_groups(
-                dfw,
-                [Task(s.learner, eff_dim, dict(s.hyper), st)
-                 for s, st in zip(members, starts)],
-                key_col="_wk", features_col=fcol, label_col=label_col,
-                order_cols=[id_col],
-            )
-            if not any(fitted):
-                return []  # no row fitted: the batch is empty
-            for spec, learner, g_state, st, new in zip(
-                members, learners, globals_, starts, fitted
-            ):
-                if _per_worker(spec, learner):
-                    hyper = dict(spec.hyper)
-                    state, workers, shipped = protocol_round(
-                        spec.protocol, learner,
-                        learner.init_state(eff_dim, hyper), g_state,
-                        {**st, **new}, spec.rounds, hyper,
-                    )
-                else:
-                    state = trainer.merge_round(
-                        learner, g_state, [new[k] for k in sorted(new)])
-                    workers, shipped = None, parts
-                rounds[spec.id] = (state, shipped, workers, pp_state)
-        else:
-            states = trainer.fit(
-                train_df,
-                [Task(s.learner, eff_dim, dict(s.hyper), init)
-                 for s, init in zip(members, inits)],
-                features_col=fcol,
-                label_col=label_col,
-                num_partitions=parts,
-                partition_col=partition_col if parts > 1 else None,
-                order_cols=order_cols,
-            )
-            if all(int(st["n"]) == s.fitted for st, s in zip(states, members)):
-                return []  # no row fitted: the batch is empty
-            for spec, state in zip(members, states):
-                rounds[spec.id] = (state, parts, None, pp_state)
+    if keyed:
+        # the batch is keyed to stable worker ids: per-worker protocols
+        # start each worker from its own model, so state follows the
+        # worker; every other pipeline starts every worker from the
+        # broadcast global model, with zeroed counts so the pass hands back
+        # this round's partials for the merge
+        globals_, starts = [], []
+        for m in keyed:
+            g_state = (_deser(m.spec.model) if m.spec.model is not None
+                       else m.learner.init_state(m.dim, dict(m.spec.hyper)))
+            globals_.append(g_state)
+            if _per_worker(m.spec, m.learner):
+                starts.append({
+                    int(k): _deser(v)
+                    for k, v in (m.spec.worker_models or {}).items()
+                } or {w: dict(g_state) for w in range(num_partitions)})
+            else:
+                starts.append({w: {**g_state, "n": 0, "cum_loss": 0.0}
+                               for w in range(num_partitions)})
+        fitted = trainer.fit_groups(
+            frame.withColumn(
+                "_wk", F.pmod(F.col(id_col), F.lit(num_partitions)).cast("int")
+            ),
+            [Task(m.spec.learner, m.dim, dict(m.spec.hyper), st,
+                  m.features_col) for m, st in zip(keyed, starts)],
+            key_col="_wk", label_col=label_col, order_cols=[id_col],
+            rows=rows,
+        )
+        if not any(fitted):
+            return []  # no row fitted: the batch is empty
+        for m, g_state, st, new in zip(keyed, globals_, starts, fitted):
+            if _per_worker(m.spec, m.learner):
+                hyper = dict(m.spec.hyper)
+                state, workers, shipped = protocol_round(
+                    m.spec.protocol, m.learner,
+                    m.learner.init_state(m.dim, hyper), g_state,
+                    {**st, **new}, m.spec.rounds, hyper,
+                )
+            else:
+                state = trainer.merge_round(
+                    m.learner, g_state, [new[k] for k in sorted(new)])
+                workers, shipped = None, m.parts
+            rounds[m.spec.id] = (state, shipped, workers, m.pp_state)
+    if single:
+        states = trainer.fit(
+            frame,
+            [Task(m.spec.learner, m.dim, dict(m.spec.hyper),
+                  _deser(m.spec.model) if m.spec.model is not None else None,
+                  m.features_col) for m in single],
+            label_col=label_col,
+            num_partitions=1,
+        )
+        if not rounds and all(int(st["n"]) == m.spec.fitted
+                              for st, m in zip(states, single)):
+            return []  # no row fitted: the batch is empty
+        for m, state in zip(single, states):
+            rounds[m.spec.id] = (state, m.parts, None, m.pp_state)
 
-    if not rounds:
-        return []
     stats: list[BatchStats] = []
     wall_ms = (time.time() - t0) * 1000
     for spec in live:
@@ -449,14 +461,23 @@ def make_batch_handler(
             batch_df.unpersist()
 
     def _handle(batch_df: DataFrame, batch_id: int):
+        # the batch's training and forecasting row counts, observed by the
+        # request collect (no job of their own); None where unknown
+        rows: dict = {"training": None, "forecasting": None}
         if "kind" in batch_df.columns:
             req_cols = [c for c in ("id", "request", "requestId", "learner",
                                     "preProcessors", "trainingConfiguration")
                         if c in batch_df.columns]
+            data = F.col("kind") == "data"
+            seen = Observation()
             catalog.apply_requests_df(
-                batch_df.filter(F.col("kind") == "request").select(*req_cols)
+                batch_df.observe(seen, *[
+                    F.count_if(data & (F.col("operation") == op)).alias(op)
+                    for op in rows
+                ]).filter(F.col("kind") == "request").select(*req_cols)
             )
-            batch_df = batch_df.filter(F.col("kind") == "data")
+            rows = seen.get
+            batch_df = batch_df.filter(data)
         if not catalog.live():
             # No pipeline yet: buffer BOTH training and forecasting rows
             # (bounded; the reference buffers data instances per worker,
@@ -469,6 +490,9 @@ def make_batch_handler(
                 record_buffer.extend(batch_df.limit(room).collect())
             return
         if record_buffer:
+            rows = {op: None if n is None else n + sum(
+                        r["operation"] == op for r in record_buffer)
+                    for op, n in rows.items()}
             buffered = spark.createDataFrame(record_buffer, batch_df.schema)
             batch_df = buffered.unionByName(batch_df)
             record_buffer.clear()
@@ -484,10 +508,11 @@ def make_batch_handler(
             num_partitions=num_partitions,
             batch_id=batch_id,
             skip_replayed=True,
+            rows=rows["training"],
         )
         if stats_sink is not None:
             stats_sink.extend(st)
-        preds = predict_batch(
+        preds = None if rows["forecasting"] == 0 else predict_batch(
             forecasting, catalog, features_col=features_col, id_col=id_col,
             dim=dim,
         )

@@ -1,11 +1,12 @@
-"""The fused BSP round: train_batch trains every chainless multi-worker
-pipeline in one keyed pass, and each pipeline ends up exactly where training
-it alone (one single-model trainer.fit / trainer.fit_groups call per
-pipeline, then the same driver-side merge) leaves it.
+"""The fused BSP round: train_batch trains every multi-worker pipeline,
+chained or not, in one keyed pass, and each pipeline ends up exactly where
+training it alone (one single-model trainer.fit / trainer.fit_groups call
+per pipeline, then the same driver-side merge) leaves it.
 
-Placement: every chainless pipeline on more than one worker — per-worker
-and global-state protocols alike — trains on the rows keyed by
-``pmod(id, parts)`` and sorted by id within each worker. The key is a pure
+Placement: every pipeline on more than one worker — per-worker and
+global-state protocols alike, with or without a preprocessor chain — trains
+on the rows keyed by ``pmod(id, parts)`` and sorted by id within each
+worker. The key is a pure
 function of the row, so the models do not depend on how the rows happen to
 be partitioned upstream; round-robin placement would make them a function
 of the upstream partitioning as well."""
@@ -42,6 +43,7 @@ MIXED = [
     ("HT", "SingleLearner"),
     ("ORR", "Synchronous", {"HubParallelism": "2"}),
     ("PA", "Synchronous", {}, [{"name": "StandardScaler"}]),
+    ("SVM", "FGM", {}, [{"name": "MinMaxScaler"}]),
 ]
 
 
@@ -94,8 +96,7 @@ def _per_pipeline_round(df, cat):
         per_worker = (spec.protocol in PER_WORKER_PROTOCOLS
                       and not getattr(learner, "uses_blob", False)
                       and not getattr(learner, "closed_form", False))
-        keyed = parts > 1 and not getattr(learner, "closed_form", False) \
-            and (per_worker or not spec.preprocessors)
+        keyed = parts > 1 and not getattr(learner, "closed_form", False)
         if keyed:
             g_state = init or learner.init_state(eff_dim, hyper)
             if per_worker:
@@ -160,7 +161,7 @@ def test_fused_round_equals_per_pipeline_training(spark):
 
 @pytest.mark.parametrize("configs", [
     MIXED,
-    # chains only: the first pass to run is a chain's, before anything fitted
+    # chains only: every pass reads a chain's column, before anything fitted
     [("PA", "Synchronous", {}, [{"name": scaler}])
      for scaler in ("StandardScaler", "RobustScaler")],
 ])

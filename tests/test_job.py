@@ -3,12 +3,15 @@ config in, sources wired, one streaming query, predictions/responses out."""
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from omldm_spark.job import JobConfig, build_source, run_job
 from omldm_spark.plans.catalog import PipelineCatalog
+from omldm_spark.streaming.training_loop import make_batch_handler
 
 from test_unified_streaming import (
     UNIFIED_SCHEMA,
@@ -141,3 +144,132 @@ def test_run_job_raises_when_replay_outlives_timeout(spark, tmp_path):
     with pytest.raises(TimeoutError, match="last progress"):
         run_job(spark, cfg)
     assert not spark.streams.active
+
+
+def _create_pa(cat, chain=()):
+    assert cat.apply_request({
+        "id": 1, "request": "Create", "learner": {"name": "PA"},
+        "preProcessors": [{"name": n} for n in chain],
+        "trainingConfiguration": {"protocol": "Synchronous"},
+    }) == "Create"
+
+
+def test_training_only_batch_runs_no_predictions_job(spark, tmp_path):
+    """A micro-batch with no forecasting row runs no predictions job and
+    writes nothing under predictions_path: the request collect counts the
+    batch's forecasting rows, and a count of 0 skips the scoring and its
+    write. The next batch, with forecasts, runs that one write job more."""
+    cat = PipelineCatalog(parallelism=4)
+    _create_pa(cat)
+    preds = tmp_path / "preds"
+    handle = make_batch_handler(spark, cat, dim=3, num_partitions=4,
+                                predictions_path=str(preds))
+    t0 = pd.Timestamp("2026-01-01 00:00:00")
+    sc = spark.sparkContext
+    jobs = []
+    for b, ids in enumerate(([i for i in range(100) if i % 10],
+                             range(100, 200))):
+        df = spark.createDataFrame(_data_rows(ids, t0), UNIFIED_SCHEMA)
+        group = f"handler-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "handler job count")
+        try:
+            handle(df, b)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        if b == 0:
+            assert not preds.exists()
+    assert cat.pipelines[1].fitted == 90 + 90
+    assert spark.read.parquet(str(preds)).count() == 10
+    assert jobs[0] + 1 == jobs[1], jobs
+
+
+# Spark jobs of one steady 100-row batch of the replay below before the
+# keyed pass took chained pipelines: request collect, scaler moments,
+# training pass, predictions write.
+JOBS_PER_BATCH_BEFORE = 4
+
+
+def test_keyed_pass_runs_one_python_task_under_exact_dedup(
+        spark, tmp_path, monkeypatch):
+    """The live job's shape on a stateful stream: a chained multi-worker
+    pipeline (PA + StandardScaler, Synchronous, 4 workers) behind the exact
+    dedup. Stateful streaming runs each micro-batch with AQE off, so no
+    pass is coalesced at run time. The 100-row batch trains in one keyed
+    pass whose Python stage runs 1 task (its rows fill one Arrow batch),
+    and the batch runs no more Spark jobs than before."""
+    from omldm_spark import job
+    from omldm_spark.learners import trainer
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def jobs() -> set[int]:
+        # the stream runs each batch's jobs in its run's job group
+        return set(st.getJobIdsForGroup(
+            sc.getLocalProperty("spark.jobGroup.id")))
+
+    keyed_tasks, batch_jobs = [], {}
+    fit_groups = trainer.fit_groups
+
+    def counted_fit_groups(*args, **kwargs):
+        before = jobs()
+        out = fit_groups(*args, **kwargs)
+        python_stage = max(st.getJobInfo(max(jobs() - before)).stageIds)
+        keyed_tasks.append(st.getStageInfo(python_stage).numTasks)
+        return out
+
+    factory = job.make_batch_handler
+
+    def counted_factory(*args, **kwargs):
+        handle = factory(*args, **kwargs)
+
+        def counted(df, batch_id):
+            before = jobs()
+            handle(df, batch_id)
+            batch_jobs[batch_id] = len(jobs() - before)
+        return counted
+
+    monkeypatch.setattr(trainer, "fit_groups", counted_fit_groups)
+    monkeypatch.setattr(job, "make_batch_handler", counted_factory)
+
+    t0 = pd.Timestamp("2026-01-01 00:00:00")
+    src = str(tmp_path / "src")
+    _write_ordered(src, [  # batch 1: 100 new ids plus 20 re-sent ones
+        _data_rows(range(0, 100), t0),
+        pd.concat([_data_rows(range(100, 200), t0),
+                   _data_rows(range(0, 20), t0)], ignore_index=True),
+    ])
+    cat = PipelineCatalog(parallelism=4)
+    _create_pa(cat, chain=("StandardScaler",))
+    cfg = JobConfig(
+        parallelism=4, input_path=src, input_schema=UNIFIED_SCHEMA,
+        max_files_per_trigger=1, checkpoint_dir=str(tmp_path / "ckpt"),
+        predictions_path=str(tmp_path / "preds"), dedup_key="id",
+        timeout_ms=180_000,
+    )
+    run_job(spark, cfg, cat)
+
+    assert cat.pipelines[1].fitted == 180
+    assert keyed_tasks == [1, 1]
+    assert batch_jobs[1] <= JOBS_PER_BATCH_BEFORE, batch_jobs
+
+
+def test_buffered_forecasts_are_counted_into_the_batch(spark):
+    """Rows buffered before the first Create join the next batch's
+    counts: a Create batch with no forecasting row of its own still
+    scores the buffered forecasts."""
+    cat = PipelineCatalog(parallelism=4)
+    preds, stats = [], []
+    handle = make_batch_handler(spark, cat, dim=3, num_partitions=4,
+                                predictions_sink=preds, stats_sink=stats)
+    t0 = pd.Timestamp("2026-01-01 00:00:00")
+    handle(spark.createDataFrame(_data_rows(range(0, 50), t0),
+                                 UNIFIED_SCHEMA), 0)   # buffered
+    create = spark.createDataFrame(
+        _request_row("Create", 1, t0, learner="PA"), UNIFIED_SCHEMA)
+    train_only = spark.createDataFrame(
+        _data_rows([i for i in range(50, 100) if i % 10], t0), UNIFIED_SCHEMA)
+    handle(create.unionByName(train_only), 1)
+    assert [s.fitted for s in stats] == [45 + 45]
+    assert sorted(r["recordId"] for r in preds) == [0, 10, 20, 30, 40]

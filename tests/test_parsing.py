@@ -142,6 +142,45 @@ def test_drop_lane_is_the_quarantine_good_lane_on_planted_lines(spark):
                        "bad_operation": 1}
 
 
+def _kernel_rows(lines, per_line: bool):
+    """(good rows in output order, malformed count) of the NDJSON kernel
+    over ``lines`` as one Arrow batch, or as one batch per line (the
+    line-by-line read)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from omldm_spark.functions.parsing import _line_parser
+    from omldm_spark.schemas import DATA_INSTANCE_SCHEMA
+
+    parse = _line_parser(to_arrow_schema(DATA_INSTANCE_SCHEMA))
+    runs = [[ln] for ln in lines] if per_line else [lines]
+    batches = [pa.record_batch([pa.array(r, pa.string())], names=["value"])
+               for r in runs]
+    out = pa.Table.from_batches(list(parse(iter(batches)))).to_pylist()
+    return ([r for r in out if not r.pop("_malformed")],
+            sum(r["id"] is None for r in out))
+
+
+def test_bad_line_bisection_matches_line_by_line_read():
+    """A batch holding bad lines reads its good runs in one call each
+    (bisection) and gives the rows and _malformed flags the line-by-line
+    read gives: junk planted at the first, middle and last line, and two
+    objects on one line."""
+    lines = [json.dumps({"id": i, "numericalFeatures": [i / 4, -1.0],
+                         "target": 1.0, "operation": "training"})
+             for i in range(37)]
+    junk = '{"id": "junk", "numericalFeatures": [1.0]'
+    for pos, bad in ((0, junk), (18, junk), (36, junk),
+                     (11, lines[11] + lines[12])):
+        planted = lines[:pos] + [bad] + lines[pos + 1:]
+        good, malformed = _kernel_rows(planted, per_line=False)
+        assert (good, malformed) == _kernel_rows(planted, per_line=True)
+        assert malformed == 1
+        assert [r["id"] for r in good] == [i for i in range(37) if i != pos]
+    everything = [junk, *lines[:5], lines[5] + lines[6], *lines[7:], junk]
+    assert _kernel_rows(everything, False) == _kernel_rows(everything, True)
+
+
 def test_chunk_words_udtf_lateral_sql(spark):
     """Python UDTF surface (§2.10): registered table function usable
     from pure SQL via LATERAL, correct ordering, trailing partial

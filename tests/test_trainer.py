@@ -85,3 +85,58 @@ def test_evaluate_linear_matches_numpy_evaluate(spark, points):
     ev_np = trainer.evaluate(points, "RegressorPA", st_r)
     ev_sql = trainer.evaluate_linear(points, "RegressorPA", st_r)
     assert abs(ev_sql["loss"] - ev_np["loss"]) < 1e-9
+
+
+def _python_stage_tasks(spark, fn):
+    """(fn(), task count of the last stage fn runs: the Python stage of a
+    keyed pass, whose exchange AQE may run as a job of its own)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"tasks-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "fit_groups task count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    job = max(st.getJobIdsForGroup(group))
+    return out, st.getStageInfo(max(st.getJobInfo(job).stageIds)).numTasks
+
+
+def test_fit_groups_states_do_not_depend_on_task_count(spark, points):
+    """One keyed pass trains two models on two features columns of one
+    frame. With a row count that fits one Arrow batch it runs in one task,
+    without one in the session's shuffle partitions (AQE off, as under a
+    stateful stream, so they are not coalesced); both runs return
+    bit-identical states."""
+    from pyspark.sql import functions as F
+
+    frame = points.withColumn("scaled",
+                              F.expr("transform(features, x -> 2 * x)"))
+    tasks = [trainer.Task("PA", 3, {"C": 0.1}),
+             trainer.Task("SVM", 3, {}, None, "scaled")]
+
+    def run(**kw):
+        return trainer.fit_groups(frame, tasks, key_col="worker",
+                                  order_cols=["id"], **kw)
+
+    one, n_one = _python_stage_tasks(spark, lambda: run(rows=500))
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        grouped, n_grouped = _python_stage_tasks(spark, run)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert n_one == 1 and n_grouped > 1
+    assert len(grouped) == len(one) == 2
+    for got, want in zip(grouped, one):
+        assert sorted(got) == sorted(want) == [0, 1, 2, 3]
+        for key in want:
+            assert sorted(got[key]) == sorted(want[key])
+            for f, v in want[key].items():
+                assert np.array_equal(got[key][f], v), (key, f)
+    alone = trainer.fit_groups(frame, "SVM", 3, {}, key_col="worker",
+                               features_col="scaled", order_cols=["id"])
+    for key, state in alone.items():
+        assert np.array_equal(state["w"], one[1][key]["w"])
