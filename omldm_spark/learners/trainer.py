@@ -6,28 +6,29 @@ back. One worker operator updates every live pipeline on each record
 (FlinkSpoke.scala:101). Here one *round* does the same for every model it
 is handed, in one Spark pass:
 
-    partitions --mapInPandas partial_fit of every model--> one tiny state
-    row per (model, partition) --driver merge per model--> broadcast models
-    --next round
+    rows keyed by worker --applyInPandas partial_fit of every model--> one
+    tiny state row per (model, worker) --driver merge per model-->
+    broadcast models --next round
 
 ``fit`` and ``fit_groups`` take either one learner name (the single-model
 form) or a list of :class:`Task`, one per model, and train them all in one
 pass, each model on its own features column of the one frame; the
-single-model form is the one-task case of that pass:
+single-model form is the one-task case of that pass. ``fit_groups``' group
+kernel is the only Python training kernel:
 
-* ``fit``        one ``repartition.select.mapInPandas``: every model starts
-                 each partition from its broadcast global state; the driver
-                 merges each model's partition states (``merge_round``).
-* ``fit_groups`` one ``groupBy(key).applyInPandas``: every model starts each
-                 key group from its own per-key state. For per-worker models
-                 those are the workers' own states; for a global model the
-                 caller hands every key the same broadcast state and merges
-                 the returned per-key partials with ``merge_round``, so the
-                 streaming round trains both kinds in one keyed pass, in as
-                 few Python tasks as the pass's row count fills.
+* ``fit_groups`` one ``groupBy(key).applyInPandas``: every model starts
+                 each key group from its own per-key state. For per-worker
+                 models those are the workers' own states; for a global model
+                 the caller hands every key the same broadcast state and
+                 merges the returned per-key partials with ``merge_round``,
+                 so the streaming round trains both kinds in one keyed pass,
+                 in as few Python tasks as the pass's row count fills.
+* ``fit``        one such pass per epoch over the rows keyed by the hash
+                 partition of a worker column, every key starting from the
+                 global state, then ``merge_round`` in key order.
 
 Closed-form learners (ORR) bypass the pass: each runs its own Catalyst
-aggregate. The per-partition state is O(model), not O(data) — collecting
+aggregate. The per-worker state is O(model), not O(data) — collecting
 models × P of them to the driver is the same communication pattern as
 MLlib's treeAggregate and is exactly what the reference's hub does (it,
 too, centralizes the merged model: FlinkHub.scala:54-162).
@@ -40,17 +41,17 @@ DefaultJobParameters.scala:7).
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .base import Learner, get_learner
 
-# Serialized state row: one per (model, partition) from ``fit`` and one per
-# (model, key group) from ``fit_groups``; ``grp`` is the partition or key.
+# Serialized state row: one per (model, key group) of a ``fit_groups``
+# pass; ``grp`` is the key.
 STATE_SCHEMA = (
     "model int, grp long, n long, cum_loss double, flat array<double>, "
     "blob string"
@@ -188,77 +189,62 @@ def fit(
     tasks).
 
     ``points`` must carry ``features_col`` (ARRAY<DOUBLE>) and ``label_col``
-    (DOUBLE). With ``partition_col`` + ``order_cols`` the run is fully
-    deterministic: rows shuffle by a stable key and are sorted within each
-    partition before the sequential pass — the Spark analogue of the
-    reference's fixed-seed replay (FlinkSpoke.scala:52). Every model sees
-    the same rows in the same order, so a task's state does not depend on
-    which other tasks share its pass.
+    (DOUBLE). Each epoch is one :func:`fit_groups` pass over
+    ``num_partitions`` workers (default one): a row goes to the worker
+    Spark's hash partitioning of ``partition_col`` would put it in,
+    ``pmod(hash(partition_col), num_partitions)``, so more than one worker
+    needs ``partition_col``. Every worker starts from the global state and
+    trains its rows sorted by ``order_cols``; the driver merges the
+    workers' partials in worker order (``merge_round``). With
+    ``order_cols`` the run is fully deterministic — the Spark analogue of
+    the reference's fixed-seed replay (FlinkSpoke.scala:52). Every model
+    sees the same rows in the same order, so a task's state does not
+    depend on which other tasks share its pass.
     """
     single, tasks = _tasks(learner, dim, hyper, init_state)
-    models = [_Model(t) for t in tasks]
     cols = _columns(tasks, features_col)
+    learners = [get_learner(t.learner) for t in tasks]
+    workers = num_partitions or 1
     states: list[dict] = []
     streamed: list[int] = []
-    for i, (t, m) in enumerate(zip(tasks, models)):
-        if getattr(m.learner, "closed_form", False):
+    for i, (t, ln) in enumerate(zip(tasks, learners)):
+        if getattr(ln, "closed_form", False):
             # ORR: exact sufficient-statistics aggregation — one Catalyst agg
             # per epoch pass, inherently distributed and order-independent,
             # so partitioning/ordering parameters are irrelevant (epochs > 1
             # would double-count sufficient statistics; one pass IS the
             # exact fit).
-            states.append(m.learner.fit_dataframe(
+            states.append(ln.fit_dataframe(
                 points, t.dim, t.hyper,
                 features_col=cols[i], label_col=label_col,
                 init_state=t.state,
             ))
         else:
-            states.append(t.state or m.learner.init_state(t.dim, t.hyper))
+            states.append(t.state or ln.init_state(t.dim, t.hyper))
             streamed.append(i)
     if not streamed:
         return states[0] if single else states
+    if workers > 1 and partition_col is None:
+        raise ValueError(
+            f"fit over {workers} workers needs partition_col: the worker "
+            "of a row must be a function of the row")
 
-    if partition_col is not None and num_partitions is not None:
-        points = points.repartition(num_partitions, partition_col)
-    elif num_partitions is not None:
-        points = points.repartition(num_partitions)
-    if order_cols:
-        points = points.sortWithinPartitions(*order_cols)
-    pass_models = [models[i] for i in streamed]
-    pass_cols = [cols[i] for i in streamed]
-    sel = points.select(*dict.fromkeys(pass_cols), label_col)
-
+    key = (F.pmod(F.hash(partition_col), F.lit(workers)) if workers > 1
+           else F.lit(0))
+    keyed = points.withColumn("_fit_wk", key.cast("int"))
     for _ in range(epochs):
-        bc = [m.pack(states[i]) for m, i in zip(pass_models, streamed)]
-
-        def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from pyspark import TaskContext
-
-            locals_ = [m.start(p) for m, p in zip(pass_models, bc)]
-            seen = 0
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X, yv = _xy(pdf, pass_cols, label_col)
-                for j, (m, c) in enumerate(zip(pass_models, pass_cols)):
-                    locals_[j] = m.learner.partial_fit(X[c], yv, locals_[j],
-                                                       m.hyper)
-                seen += len(pdf)
-            if seen:
-                yield _state_rows(pass_models, TaskContext.get().partitionId(),
-                                  locals_)
-
-        rows = sel.mapInPandas(run_partition, schema=STATE_SCHEMA).collect()
-        if not rows:
+        fitted = fit_groups(
+            keyed,
+            [Task(tasks[i].learner, tasks[i].dim, tasks[i].hyper,
+                  {w: {**states[i], "n": 0, "cum_loss": 0.0}
+                   for w in range(workers)}, cols[i]) for i in streamed],
+            key_col="_fit_wk", label_col=label_col, order_cols=order_cols,
+        )
+        if not any(fitted):
             break
-        partials: list[list[dict]] = [[] for _ in streamed]
-        for r in rows:
-            m = pass_models[r["model"]]
-            s = m.unpack(r["flat"], r["blob"])
-            s["n"], s["cum_loss"] = int(r["n"]), float(r["cum_loss"])
-            partials[r["model"]].append(s)
-        for j, i in enumerate(streamed):
-            states[i] = merge_round(models[i].learner, states[i], partials[j])
+        for i, new in zip(streamed, fitted):
+            states[i] = merge_round(learners[i], states[i],
+                                    [new[k] for k in sorted(new)])
     return states[0] if single else states
 
 

@@ -7,11 +7,9 @@ Beyond-reference surface (BASELINE.json north star). Design for 100 TB:
   (format, width, duration) prune BEFORE any decode touches bytes;
 * decode / resize / frame-sample run as ``mapInPandas`` over Arrow batches —
   one Python worker call per ~10k rows, bytes never round-trip the driver;
-* decode libraries (PIL/av/librosa) are NOT in this container, so the
-  decode kernel is stubbed: with ``fake=True`` it produces a deterministic
-  synthetic decode (testable plumbing), otherwise it raises
-  NotImplementedError — clearly marked, swap in the real library on a
-  production image.
+* the decode kernel is a deterministic synthetic decode (testable
+  plumbing): swap in a real decoder (PIL/av/librosa) on a production
+  image; the Spark-side contract (schema, batching, partitioning) stays.
 """
 
 from __future__ import annotations
@@ -63,49 +61,21 @@ def synth_media(spark, n: int = 64) -> DataFrame:
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def _fake_decode(media_id: str, data: bytes, width: int, height: int) -> np.ndarray:
+def _fake_decode(data: bytes) -> np.ndarray:
     """Deterministic stand-in for a real decoder: a feature vector derived
-    from a stable hash of the bytes. REPLACE with PIL/torchvision decode on
-    a production image — the Spark-side contract (schema, batching,
-    partitioning) does not change."""
+    from a stable hash of the bytes."""
     h = hashlib.sha256(data).digest()
     raw = np.frombuffer((h * ((FEATURE_DIM * 8) // len(h) + 1))[: FEATURE_DIM * 8],
                         dtype=np.uint64)
     return (raw % 1000).astype(np.float64) / 1000.0
 
 
-def _real_decode(data: bytes) -> np.ndarray:
-    """Real image decode path, imported LAZILY inside the executor so the
-    operator upgrades transparently on a cluster image that ships PIL —
-    this container does not, and the ImportError surfaces as the same
-    clearly-marked NotImplementedError as before.  Feature = the
-    FEATURE_DIM-bin grayscale intensity histogram of the decoded image
-    (normalized to sum 1) — deterministic, resolution-independent, and
-    cheap enough that decode dominates, which is the honest cost model."""
-    import io
-
-    try:
-        from PIL import Image
-    except ImportError as exc:  # pragma: no cover - env without PIL
-        raise NotImplementedError(
-            "real media decode requires PIL/av; run with fake=True "
-            "or install decoders on the cluster image"
-        ) from exc
-    img = Image.open(io.BytesIO(data)).convert("L")
-    px = np.asarray(img, dtype=np.float64).ravel()
-    hist, _ = np.histogram(px, bins=FEATURE_DIM, range=(0.0, 256.0))
-    total = float(hist.sum()) or 1.0
-    return hist.astype(np.float64) / total
-
-
-def decode_and_featurize(media: DataFrame, fake: bool = True) -> DataFrame:
+def decode_and_featurize(media: DataFrame) -> DataFrame:
     """Decode media bytes -> fixed-dim feature vectors via mapInPandas.
 
     Arrow-batched: the binary column transfers as one buffer per batch; the
     output drops the bytes (project early — decoded features are ~1000x
-    smaller than media, so everything downstream shuffles cheap).
-    ``fake=False`` runs the real PIL decode (lazy import, executor-side);
-    where PIL is absent it raises the marked NotImplementedError."""
+    smaller than media, so everything downstream shuffles cheap)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -114,10 +84,7 @@ def decode_and_featurize(media: DataFrame, fake: bool = True) -> DataFrame:
             feats, sums = [], []
             for b in pdf["bytes"]:
                 data = bytes(b)
-                if fake:
-                    feats.append(_fake_decode("", data, 0, 0).tolist())
-                else:
-                    feats.append(_real_decode(data).tolist())
+                feats.append(_fake_decode(data).tolist())
                 sums.append(hashlib.md5(data).hexdigest())
             yield pd.DataFrame(
                 {

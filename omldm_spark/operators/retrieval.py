@@ -1062,10 +1062,12 @@ def facility_location_select(emb: DataFrame, k: int = FACLOC_K,
     n_cand bounded values.  Envelope: |qv| <= quant·|x|, dot <=
     dim·(quant·|x|)², summed over n docs — < 2^63 through ~1e9 docs
     at the testdata scale."""
+    # TRY_CAST: a NaN or infinite element quantizes to NULL, so its row
+    # degrades to NULL dots like any other malformed row
     qdoc = emb.select(
         F.col(id_col).cast("long").alias("vid"),
         F.expr(
-            f"transform({vec_col}, x -> CAST(round(CAST(x AS DOUBLE)"
+            f"transform({vec_col}, x -> TRY_CAST(round(CAST(x AS DOUBLE)"
             f" * {quant}, 0) AS BIGINT))").alias("qv"),
     )
     candv = qdoc.filter(F.col("vid") < n_cand).agg(
@@ -1189,12 +1191,19 @@ def facility_location_select(emb: DataFrame, k: int = FACLOC_K,
 def FACLOC_SQL(k: int = FACLOC_K, n_cand: int = FACLOC_CAND,
                quant: int = FACLOC_QUANT, table: str = "embeddings",
                id_col: str = "vec_id", vec_col: str = "embedding") -> str:
+    # q keeps only the rows the engine's kernel dots: non-NULL, the
+    # candidates' width, every element non-NULL and finite (the engine
+    # degrades the others to NULL dots, which the round sums skip)
     ctes = [f"""q AS (
   SELECT CAST({id_col} AS BIGINT) AS vid,
          generate_subscripts({vec_col}, 1) AS pos,
          CAST(round(CAST(unnest({vec_col}) AS DOUBLE) * {quant}.0, 0)
               AS BIGINT) AS qv
   FROM {table}
+  WHERE len({vec_col})
+        = (SELECT max(len({vec_col})) FROM {table} WHERE {id_col} < {n_cand})
+    AND len(list_filter({vec_col}, x -> isfinite(CAST(x AS DOUBLE))))
+        = len({vec_col})
 )""", f"""dots AS (
   SELECT p.vid, c.vid AS cid, CAST(sum(p.qv * c.qv) AS BIGINT) AS d
   FROM q p JOIN q c ON c.pos = p.pos AND c.vid < {n_cand}

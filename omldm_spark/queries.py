@@ -1360,7 +1360,7 @@ def q_multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode plumbing through mapInPandas (Arrow binary batches); the
     checksum proves the bytes survived the columnar round trip intact."""
     media = _docs_as_media(spark, sf_dir)
-    return decode_and_featurize(media, fake=True).select(
+    return decode_and_featurize(media).select(
         "media_id", "kind", "checksum"
     )
 

@@ -6,17 +6,18 @@ feedback topic -> worker applies update. The Kafka hop exists only because
 Flink forbids cyclic dataflow (Job.scala:77-87,136-142). In micro-batch BSP
 one batch IS one protocol round, for every live pipeline at once:
 
-    batch -> ONE keyed partial_fit pass (applyInPandas over the worker
-             keys pmod(id, parts), Arrow) training every pipeline on more
-             than one worker, whatever its protocol and preprocessor
-             chain, each on its own features column of the one frame
+    batch -> ONE keyed partial_fit pass per worker count (applyInPandas
+             over the worker keys pmod(id, parts), Arrow) training every
+             pipeline on that many workers, whatever its protocol and
+             preprocessor chain, each on its own features column of the
+             one frame
           -> per-pipeline merge of its partial states (the hub, one tiny
              reduce) and protocol round
           -> model broadcast into the next batch via the catalog
 
 The reference's worker operator likewise updates every live pipeline on
 each record (FlinkSpoke.scala:101); see ``train_batch`` for which pipelines
-share a pass. Each PySpark Python task has a fixed start-up cost, so the
+share a pass. Each PySpark Python task has a fixed start-up cost, so a
 keyed pass runs in one task when the batch's training rows fit one Arrow
 batch (``spark.sql.execution.arrow.maxRecordsPerBatch``), from the row
 counts the handler's request collect observes; a larger batch keeps the
@@ -143,14 +144,14 @@ class _Member(NamedTuple):
     pp_state: list | None
 
 
-def _per_worker(spec, learner) -> bool:
-    """Does the pipeline keep per-worker models between syncs when it
-    trains on more than one worker? The per-worker protocols do, for
-    flat-state learners; blob (HT) and closed-form (ORR) learners never do."""
+def _per_worker(m: _Member) -> bool:
+    """Does a keyed pipeline keep per-worker models between syncs? The
+    per-worker protocols do when they train on more than one worker, for
+    flat-state learners; blob (HT) learners never do."""
     return (
-        spec.protocol in PER_WORKER_PROTOCOLS
-        and not getattr(learner, "uses_blob", False)
-        and not getattr(learner, "closed_form", False)
+        m.parts > 1
+        and m.spec.protocol in PER_WORKER_PROTOCOLS
+        and not getattr(m.learner, "uses_blob", False)
     )
 
 
@@ -174,24 +175,29 @@ def train_batch(
     one frame: each pipeline with a preprocessor chain adds its own
     transformed features column to the batch (``apply_chain``, which runs
     each scaler's fit aggregate), and each model trains on its own column.
-    The round runs at most three kinds of work:
+    The round runs at most two kinds of work:
 
-    * ONE ``trainer.fit_groups`` pass trains every pipeline on more than one
-      worker, chained or not, keyed by ``pmod(id, num_partitions)`` and
-      sorted by id within each worker. Per-worker protocols
-      (SSP/GM/FGM/EASGD) start each worker from its own model; the others
-      (Synchronous, Asynchronous, and blob learners under any protocol)
-      start every worker from the broadcast global model, and the driver
+    * ONE ``trainer.fit_groups`` pass per worker count trains every
+      pipeline on that many workers, chained or not, keyed by
+      ``pmod(id, workers)`` and sorted by id within each worker. A
+      pipeline trains on ``num_partitions`` workers, or on one for
+      SingleLearner/CentralizedTraining (the reference forwards all their
+      points to one central learner). Per-worker protocols
+      (SSP/GM/FGM/EASGD) on more than one worker start each worker from
+      its own model; every other pipeline (Synchronous, Asynchronous, blob
+      learners under any protocol, and every single-worker pipeline)
+      starts every worker from the broadcast global model, and the driver
       merges that round's partials with ``trainer.merge_round``, the merge
       ``trainer.fit`` uses. The key is a pure function of the row, so the
-      models do not depend on how the batch arrives partitioned. With
-      ``rows`` (the batch's row count, when the caller observed it) no
-      larger than ``spark.sql.execution.arrow.maxRecordsPerBatch`` the
-      pass runs in one Python task, which leaves the models as they are;
-    * ONE single-partition ``trainer.fit`` pass trains the
-      SingleLearner/CentralizedTraining pipelines (and every pipeline when
-      ``num_partitions`` is 1);
-    * closed-form learners (ORR) keep their Catalyst aggregate.
+      models do not depend on how the batch arrives partitioned; a
+      single-worker pipeline trains the batch in id order, which is its
+      arrival order when the batch arrives sorted by id. With ``rows``
+      (the batch's row count, when the caller observed it) no larger than
+      ``spark.sql.execution.arrow.maxRecordsPerBatch`` each pass runs in
+      one Python task with no exchange, which leaves the models as they
+      are;
+    * closed-form learners (ORR) keep their Catalyst aggregate
+      (``trainer.fit``).
 
     The driver splits each pass's state rows by pipeline and runs the
     merge, protocol round and statistics per pipeline. ``rows=0`` runs
@@ -215,7 +221,9 @@ def train_batch(
     if not live or rows == 0:
         return []
     frame = batch_df
-    keyed, single = [], []
+    # worker count -> the pipelines trained on that many workers
+    groups: dict[int, list[_Member]] = {}
+    closed = []
     for spec in live:
         learner = get_learner(spec.learner)
         # Preprocessor chain (PipelineMap.scala:25-29): fit stats are
@@ -228,51 +236,51 @@ def train_batch(
                 frame, spec.preprocessors, features_col, dim,
                 spec.preproc_state, out_col=fcol,
             )
-        # SingleLearner (HT/K-means) trains on one partition — the
-        # reference forwards all points to a single central learner
+        # SingleLearner (HT/K-means) trains on one worker — the reference
+        # forwards all points to a single central learner
         # (FlinkSpoke.scala:203-211).
         parts = 1 if spec.protocol in ("SingleLearner", "CentralizedTraining") \
             else num_partitions
         member = _Member(spec, learner, parts, fcol, eff_dim, pp_state)
-        if parts > 1 and not getattr(learner, "closed_form", False):
-            keyed.append(member)
+        if getattr(learner, "closed_form", False):
+            closed.append(member)
         else:
-            single.append(member)
+            groups.setdefault(parts, []).append(member)
 
     # spec.id -> (state, models shipped, worker states, preprocessor state)
     rounds: dict[int, tuple] = {}
-    if keyed:
+    for parts, members in groups.items():
         # the batch is keyed to stable worker ids: per-worker protocols
         # start each worker from its own model, so state follows the
         # worker; every other pipeline starts every worker from the
         # broadcast global model, with zeroed counts so the pass hands back
         # this round's partials for the merge
         globals_, starts = [], []
-        for m in keyed:
+        for m in members:
             g_state = (_deser(m.spec.model) if m.spec.model is not None
                        else m.learner.init_state(m.dim, dict(m.spec.hyper)))
             globals_.append(g_state)
-            if _per_worker(m.spec, m.learner):
+            if _per_worker(m):
                 starts.append({
                     int(k): _deser(v)
                     for k, v in (m.spec.worker_models or {}).items()
-                } or {w: dict(g_state) for w in range(num_partitions)})
+                } or {w: dict(g_state) for w in range(parts)})
             else:
                 starts.append({w: {**g_state, "n": 0, "cum_loss": 0.0}
-                               for w in range(num_partitions)})
+                               for w in range(parts)})
+        # one worker is one key, whatever the row's id (a NULL one too)
+        key = F.pmod(F.col(id_col), F.lit(parts)) if parts > 1 else F.lit(0)
         fitted = trainer.fit_groups(
-            frame.withColumn(
-                "_wk", F.pmod(F.col(id_col), F.lit(num_partitions)).cast("int")
-            ),
+            frame.withColumn("_wk", key.cast("int")),
             [Task(m.spec.learner, m.dim, dict(m.spec.hyper), st,
-                  m.features_col) for m, st in zip(keyed, starts)],
+                  m.features_col) for m, st in zip(members, starts)],
             key_col="_wk", label_col=label_col, order_cols=[id_col],
             rows=rows,
         )
         if not any(fitted):
             return []  # no row fitted: the batch is empty
-        for m, g_state, st, new in zip(keyed, globals_, starts, fitted):
-            if _per_worker(m.spec, m.learner):
+        for m, g_state, st, new in zip(members, globals_, starts, fitted):
+            if _per_worker(m):
                 hyper = dict(m.spec.hyper)
                 state, workers, shipped = protocol_round(
                     m.spec.protocol, m.learner,
@@ -284,19 +292,18 @@ def train_batch(
                     m.learner, g_state, [new[k] for k in sorted(new)])
                 workers, shipped = None, m.parts
             rounds[m.spec.id] = (state, shipped, workers, m.pp_state)
-    if single:
+    if closed:
         states = trainer.fit(
             frame,
             [Task(m.spec.learner, m.dim, dict(m.spec.hyper),
                   _deser(m.spec.model) if m.spec.model is not None else None,
-                  m.features_col) for m in single],
+                  m.features_col) for m in closed],
             label_col=label_col,
-            num_partitions=1,
         )
         if not rounds and all(int(st["n"]) == m.spec.fitted
-                              for st, m in zip(states, single)):
+                              for st, m in zip(states, closed)):
             return []  # no row fitted: the batch is empty
-        for m, state in zip(single, states):
+        for m, state in zip(closed, states):
             rounds[m.spec.id] = (state, m.parts, None, m.pp_state)
 
     stats: list[BatchStats] = []

@@ -65,13 +65,10 @@ ALLOWLIST = {
         "the executor matmul closure + the position -> id map",
     ("operators/skew.py", 'F.bit_or("mask")'):
         "bloom filter words: fixed 16-BIGINT array",
-    ("learners/trainer.py", "mapInPandas(run_partition, schema=STATE_SCHEMA"):
-        "fused BSP pass (fit): ONE model-state row per (model, partition), "
-        "so rows = live pipelines x workers (the parameter-server pattern "
-        "itself)",
     ("learners/trainer.py", "applyInPandas(run_group, schema=STATE_SCHEMA)"):
-        "fused per-worker pass (fit_groups): ONE model-state row per "
-        "(model, worker key), so rows = live per-worker pipelines x workers",
+        "fused keyed pass (fit_groups, which fit runs per epoch): ONE "
+        "model-state row per (model, worker key), so rows = live pipelines "
+        "x workers (the parameter-server pattern itself)",
     ("learners/trainer.py", "points.select(features_col, label_col)"):
         "evaluate() holdout: limit+count-guarded to max_rows",
     ("functions/preprocess.py", '.agg(F.count(F.lit(1)).cast("long")'):

@@ -470,6 +470,38 @@ def test_facility_location_malformed_rows_degrade_to_null(spark):
         [(r["vec_id"], r["gain"], r["objective"]) for r in ref]
 
 
+def test_facility_location_oracle_drops_malformed_rows_like_engine(spark):
+    """Malformed rows degrade the same way in the engine and in
+    FACLOC_SQL: a NULL, ragged, NULL-element, NaN or infinite embedding
+    adds nothing to any gain on either side, so DuckDB and the engine
+    agree on the planted rows and on the clean rows alone."""
+    import duckdb
+
+    from omldm_spark.operators.retrieval import (
+        FACLOC_SQL, facility_location_select)
+
+    good = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [0.9, 0.1, 0.0]),
+        (2, [0.0, 1.0, 0.0]),
+        (3, [0.0, 0.0, 1.0]),
+        (4, [0.5, 0.5, 0.0]),
+    ]
+    bad = [(100, None), (101, [1.0]), (102, [0.5, None, 0.5]),
+           (103, [float("nan"), 0.0, 1.0]), (104, [float("inf"), 0.0, 1.0])]
+    for rows in (good, good + bad):
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        got = sorted(tuple(r) for r in facility_location_select(
+            emb, k=2, n_cand=4, quant=1000).collect())
+        con = duckdb.connect()
+        con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+        con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+        want = sorted(con.execute(
+            FACLOC_SQL(k=2, n_cand=4, quant=1000)).fetchall())
+        assert got == want == [(1, 0, 2400000, 2400000),
+                               (2, 2, 1000000, 3400000)], rows
+
+
 def test_rocchio_expansion_excludes_query_and_ranks_centroid(spark):
     """Planted corpus: docs about 'hash join' also mention 'bucket';
     the expansion for query (hash, join) must rank 'bucket' first,

@@ -140,3 +140,78 @@ def test_fit_groups_states_do_not_depend_on_task_count(spark, points):
                                features_col="scaled", order_cols=["id"])
     for key, state in alone.items():
         assert np.array_equal(state["w"], one[1][key]["w"])
+
+
+def test_multi_partition_fit_equals_numpy_replay(spark, points):
+    """fit over 4 workers, bit for bit: each worker is a hash partition of
+    ``worker`` (Spark's ``pmod(hash(worker), 4)``), trains its rows in id
+    order from the initial state, and the partials merge in worker order."""
+    from pyspark.sql import functions as F
+
+    hyper = {"C": 0.1}
+    state = trainer.fit(points, "PA", dim=3, hyper=hyper, num_partitions=4,
+                        partition_col="worker", order_cols=["id"])
+    pdf = points.withColumn(
+        "grp", F.pmod(F.hash("worker"), F.lit(4))).toPandas()
+    ln = get_learner("PA")
+    partials = []
+    for _, g in sorted(pdf.groupby("grp"), key=lambda kv: kv[0]):
+        g = g.sort_values("id")
+        start = ln.begin_pass({**ln.init_state(3, hyper), "n": 0,
+                               "cum_loss": 0.0})
+        partials.append(ln.partial_fit(np.asarray(g["features"].tolist()),
+                                       g["label"].to_numpy(), start, hyper))
+    assert len(partials) > 1
+    ref = ln.merge(partials)
+    assert np.array_equal(state["w"], ref["w"])
+    assert state["n"] == 500
+    assert state["cum_loss"] == sum(p["cum_loss"] for p in partials)
+    with pytest.raises(ValueError, match="partition_col"):
+        trainer.fit(points, "PA", dim=3, hyper=hyper, num_partitions=2)
+
+
+def test_single_worker_round_runs_one_task_without_shuffle(spark):
+    """A train_batch round whose pipelines all train on one worker (an HT
+    SingleLearner and a CentralizedTraining PA) over a small batch with its
+    row count known: one Python task, no shuffle stage. The PA model is the
+    one-worker fit over the batch in id order, whatever its arrival order."""
+    import uuid
+
+    from omldm_spark.plans.catalog import PipelineCatalog
+    from omldm_spark.streaming.training_loop import _deser, train_batch
+
+    rng = np.random.default_rng(3)
+    n = 200
+    X = rng.normal(size=(n, 3))
+    y = np.sign(X @ np.array([1.0, -1.0, 0.5]))
+    y[y == 0] = 1.0
+    batch = spark.createDataFrame(pd.DataFrame({
+        "id": rng.permutation(n),
+        "features": [list(map(float, r)) for r in X],
+        "label": y.astype(float),
+    }))
+    cat = PipelineCatalog(parallelism=4)
+    for pid, (lrn, proto, hyper) in enumerate([
+            ("HT", "SingleLearner", {"grace_period": "50"}),
+            ("PA", "CentralizedTraining", {"C": "0.1"})]):
+        assert cat.apply_request({
+            "id": pid, "request": "Create",
+            "learner": {"name": lrn, "hyperParameters": hyper},
+            "trainingConfiguration": {"protocol": proto},
+        }) == "Create"
+    sc = spark.sparkContext
+    group = f"round-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "single-worker round")
+    try:
+        stats = train_batch(batch, cat, dim=3, num_partitions=4, rows=n)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+    assert len(jobs) == 1 and len(jobs[0].stageIds) == 1   # no exchange
+    assert st.getStageInfo(jobs[0].stageIds[0]).numTasks == 1
+    assert [s.fitted for s in stats] == [n, n]
+    pa = cat.pipelines[1]
+    want = trainer.fit(batch, "PA", dim=3, hyper={"C": "0.1"},
+                       order_cols=["id"])
+    assert np.array_equal(_deser(pa.model)["w"], want["w"])

@@ -7,10 +7,11 @@ Usage:
 Times each named query through the noop sink (bench.py methodology:
 same session shape, sf0.001 codegen warmup, repeats with median+min),
 prints the DataFrame build (the ``fn(spark, sf_dir)`` call, eager actions
-included) with its py4j round trips next to the total, and the classes
+included) with its py4j round trips next to the total, the classes
 Spark's code generator compiled per repeat (the ``CodegenMetrics`` count
-delta over build and run; 0 once the plan's generated code is cached), and
-optionally
+delta over build and run; 0 once the plan's generated code is cached), the
+Spark jobs and tasks each repeat ran (build and run, through one job group
+per repeat), and optionally
 writes ``<explaindir>/<query>.txt`` with the
 ``explain("formatted")`` output so before/after plans can be committed.
 """
@@ -55,6 +56,19 @@ def codegen_compiles(spark) -> int:
             .METRIC_COMPILATION_TIME().getCount())
 
 
+def group_work(sc, group: str) -> tuple[int, int]:
+    """(jobs, tasks) Spark ran in job group ``group``: tasks summed over the
+    distinct stages of those jobs that ran a task (a stage two jobs share
+    counts once; a skipped stage, whose output an earlier stage left,
+    not at all)."""
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = [st.getStageInfo(s) for s in
+              {s for j in jobs for s in st.getJobInfo(j).stageIds}]
+    return len(jobs), sum(s.numTasks for s in stages
+                          if s is not None and s.numCompletedTasks)
+
+
 def main() -> None:
     sf_dir = "/root/testdata/sf0.1"
     repeats = 3
@@ -97,10 +111,11 @@ def main() -> None:
                 df._jdf.queryExecution(), "formatted")
             with open(os.path.join(explain_dir, f"{name}.txt"), "w") as fh:
                 fh.write(txt)
-        runs, builds, calls, compiles = [], [], [], []
-        for _ in range(repeats):
+        runs, builds, calls, compiles, jobs, tasks = [], [], [], [], [], []
+        sc = spark.sparkContext
+        for i in range(repeats):
             spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"probe:{name}")
+            sc.setJobGroup(f"probe:{name}:{i}", f"probe:{name}")
             c0 = codegen_compiles(spark)
             t0 = time.time()
             with jvm_calls() as n:
@@ -110,10 +125,15 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             runs.append(time.time() - t0)
             compiles.append(codegen_compiles(spark) - c0)
+            n_jobs, n_tasks = group_work(sc, f"probe:{name}:{i}")
+            jobs.append(n_jobs)
+            tasks.append(n_tasks)
         print(f"{name}: median={statistics.median(runs):.3f} "
               f"min={min(runs):.3f} runs={[round(r, 3) for r in runs]} "
               f"build_median={statistics.median(builds):.3f} "
-              f"build_py4j_calls={calls} codegen_compiles={compiles}",
+              f"builds={[round(b, 3) for b in builds]} "
+              f"build_py4j_calls={calls} codegen_compiles={compiles} "
+              f"jobs={jobs} tasks={tasks}",
               flush=True)
     spark.stop()
 
