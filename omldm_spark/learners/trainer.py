@@ -6,7 +6,7 @@ back. One worker operator updates every live pipeline on each record
 (FlinkSpoke.scala:101). Here one *round* does the same for every model it
 is handed, in one Spark pass:
 
-    rows keyed by worker --applyInPandas partial_fit of every model--> one
+    rows keyed by worker --partial_fit of every model, per key--> one
     tiny state row per (model, worker) --driver merge per model-->
     broadcast models --next round
 
@@ -16,13 +16,17 @@ pass, each model on its own features column of the one frame; the
 single-model form is the one-task case of that pass. ``fit_groups``' group
 kernel is the only Python training kernel:
 
-* ``fit_groups`` one ``groupBy(key).applyInPandas``: every model starts
-                 each key group from its own per-key state. For per-worker
-                 models those are the workers' own states; for a global model
-                 the caller hands every key the same broadcast state and
-                 merges the returned per-key partials with ``merge_round``,
-                 so the streaming round trains both kinds in one keyed pass,
-                 in as few Python tasks as the pass's row count fills.
+* ``fit_groups`` one keyed pass: every model starts each key group from
+                 its own per-key state. For per-worker models those are the
+                 workers' own states; for a global model the caller hands
+                 every key the same broadcast state and merges the returned
+                 per-key partials with ``merge_round``, so the streaming
+                 round trains both kinds in one keyed pass. A pass whose
+                 known row count fits one Arrow batch runs the kernel on the
+                 driver over one collect, with no Python worker task (each
+                 costs a fixed start-up far above a micro-batch's
+                 training); any other runs it as ``groupBy(key)
+                 .applyInPandas``.
 * ``fit``        one such pass per epoch over the rows keyed by the hash
                  partition of a worker column, every key starting from the
                  global state, then ``merge_round`` in key order.
@@ -317,18 +321,21 @@ def fit_groups(
 
     This is the per-worker state the distributed-protocol emulations need
     (GM/FGM/EASGD keep worker models that diverge between syncs —
-    SURVEY.md §2.9). applyInPandas gives one pandas frame per group; rows
-    are sorted in-frame by ``order_cols``, so the pass is deterministic
-    regardless of shuffle arrival order.
+    SURVEY.md §2.9). The kernel gets one pandas frame per key and sorts
+    it by ``order_cols`` (NULLs last), so the pass is deterministic
+    regardless of arrival order as long as ``order_cols`` tell every two
+    rows of a key apart; rows that tie on them may train in arrival order.
 
     Task count: each Python task costs a fixed start-up, so when ``rows``
     (the row count of ``points``, when the caller knows it) fits one Arrow
-    batch (``spark.sql.execution.arrow.maxRecordsPerBatch``) the frame is
-    coalesced into one task; one partition is clustered by any key, so the
-    grouping needs no exchange. Otherwise the grouping takes the session's
-    shuffle partitions (which AQE may coalesce), one task per key at most.
-    Each group is trained alone either way, so the states do not depend on
-    the task count.
+    batch (``spark.sql.execution.arrow.maxRecordsPerBatch``) the selected
+    columns are collected to the driver once, through Arrow in one task
+    with no exchange, and the same group kernel runs there on each key in
+    ascending order: no Python worker task. Otherwise (``rows=None`` too)
+    the pass is a ``groupBy(key).applyInPandas`` in the session's shuffle
+    partitions (which AQE may coalesce), one task per key at most. Each group is
+    trained alone either way, so the states are bit-identical. A NULL key
+    fails the pass in both branches.
     """
     single, tasks = _tasks(learner, dim, hyper, init_states)
     models = [_Model(t) for t in tasks]
@@ -351,10 +358,16 @@ def fit_groups(
     sel = points.select(key_col, *dict.fromkeys(cols), label_col, *order_cols)
     if rows is not None and rows <= int(points.sparkSession.conf.get(
             "spark.sql.execution.arrow.maxRecordsPerBatch", "10000")):
-        sel = sel.coalesce(1)
+        # bounded by rows <= maxRecordsPerBatch: one Arrow batch on the driver
+        pdf = sel.coalesce(1).toArrow().to_pandas()
+        state_rows = [
+            r for _, g in pdf.groupby(key_col, sort=True, dropna=False)
+            for r in run_group(g).to_dict("records")]
+    else:
+        state_rows = (sel.groupBy(key_col)
+                      .applyInPandas(run_group, schema=STATE_SCHEMA).collect())
     out: list[dict[int, dict]] = [{} for _ in tasks]
-    for r in (sel.groupBy(key_col)
-              .applyInPandas(run_group, schema=STATE_SCHEMA).collect()):
+    for r in state_rows:
         j, key = r["model"], int(r["grp"])
         s = models[j].unpack(r["flat"], r["blob"])
         prev = (tasks[j].state or {}).get(key, {})

@@ -6,22 +6,23 @@ feedback topic -> worker applies update. The Kafka hop exists only because
 Flink forbids cyclic dataflow (Job.scala:77-87,136-142). In micro-batch BSP
 one batch IS one protocol round, for every live pipeline at once:
 
-    batch -> ONE keyed partial_fit pass per worker count (applyInPandas
-             over the worker keys pmod(id, parts), Arrow) training every
-             pipeline on that many workers, whatever its protocol and
-             preprocessor chain, each on its own features column of the
-             one frame
+    batch -> ONE keyed partial_fit pass per worker count (over the worker
+             keys pmod(id, parts), Arrow) training every pipeline on that
+             many workers, whatever its protocol and preprocessor chain,
+             each on its own features column of the one frame
           -> per-pipeline merge of its partial states (the hub, one tiny
              reduce) and protocol round
           -> model broadcast into the next batch via the catalog
 
 The reference's worker operator likewise updates every live pipeline on
 each record (FlinkSpoke.scala:101); see ``train_batch`` for which pipelines
-share a pass. Each PySpark Python task has a fixed start-up cost, so a
-keyed pass runs in one task when the batch's training rows fit one Arrow
+share a pass. Each PySpark Python task has a fixed start-up cost far above
+a micro-batch's training, so when the batch's training rows fit one Arrow
 batch (``spark.sql.execution.arrow.maxRecordsPerBatch``), from the row
-counts the handler's request collect observes; a larger batch keeps the
-session's grouping. The models do not depend on the task count.
+counts the handler's request collect observes, a keyed pass collects them
+once and trains on the driver, with no Python worker task; a larger batch
+keeps the grouped ``applyInPandas`` in the session's shuffle partitions.
+The models do not depend on the branch.
 
 Protocol semantics under BSP (SURVEY.md §2.9): Synchronous is native;
 Asynchronous/SSP/EASGD are emulated at sync cadence with their statistics
@@ -179,10 +180,13 @@ def train_batch(
 
     * ONE ``trainer.fit_groups`` pass per worker count trains every
       pipeline on that many workers, chained or not, keyed by
-      ``pmod(id, workers)`` and sorted by id within each worker. A
-      pipeline trains on ``num_partitions`` workers, or on one for
-      SingleLearner/CentralizedTraining (the reference forwards all their
-      points to one central learner). Per-worker protocols
+      ``pmod(id, workers)`` and sorted by id within each worker, rows
+      with equal ids by a hash of their features and label. A row with a
+      NULL id is keyed by that hash and trains after the id-ordered rows
+      of its worker, so a topic without ids still spreads over every
+      worker. A pipeline trains on ``num_partitions`` workers, or on one
+      for SingleLearner/CentralizedTraining (the reference forwards all
+      their points to one central learner). Per-worker protocols
       (SSP/GM/FGM/EASGD) on more than one worker start each worker from
       its own model; every other pipeline (Synchronous, Asynchronous, blob
       learners under any protocol, and every single-worker pipeline)
@@ -193,9 +197,9 @@ def train_batch(
       single-worker pipeline trains the batch in id order, which is its
       arrival order when the batch arrives sorted by id. With ``rows``
       (the batch's row count, when the caller observed it) no larger than
-      ``spark.sql.execution.arrow.maxRecordsPerBatch`` each pass runs in
-      one Python task with no exchange, which leaves the models as they
-      are;
+      ``spark.sql.execution.arrow.maxRecordsPerBatch`` each pass collects
+      the batch once and trains on the driver, with no Python worker task
+      and no exchange, which leaves the models as they are;
     * closed-form learners (ORR) keep their Catalyst aggregate
       (``trainer.fit``).
 
@@ -268,13 +272,15 @@ def train_batch(
             else:
                 starts.append({w: {**g_state, "n": 0, "cum_loss": 0.0}
                                for w in range(parts)})
-        # one worker is one key, whatever the row's id (a NULL one too)
-        key = F.pmod(F.col(id_col), F.lit(parts)) if parts > 1 else F.lit(0)
+        # one worker is one key; rows are ordered by id, then by a hash of
+        # what they train on, which also keys and orders a row with no id
+        tie = F.xxhash64(features_col, label_col)
+        key = F.pmod(F.coalesce(F.col(id_col), tie), F.lit(parts))
         fitted = trainer.fit_groups(
-            frame.withColumn("_wk", key.cast("int")),
+            frame.withColumns({"_wk": key.cast("int"), "_tie": tie}),
             [Task(m.spec.learner, m.dim, dict(m.spec.hyper), st,
                   m.features_col) for m, st in zip(members, starts)],
-            key_col="_wk", label_col=label_col, order_cols=[id_col],
+            key_col="_wk", label_col=label_col, order_cols=[id_col, "_tie"],
             rows=rows,
         )
         if not any(fitted):

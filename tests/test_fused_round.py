@@ -214,3 +214,62 @@ def test_global_state_and_per_worker_share_one_pass(spark):
     ]
     assert counts[0] > 0
     assert counts[1] == counts[0], counts
+
+
+def test_null_id_rows_train_in_an_order_of_their_content(spark):
+    """A training row with a NULL id is keyed by a hash of its features and
+    label and trains after the id-ordered rows of its worker, in hash
+    order. One rule in both branches of the keyed pass (on the driver with
+    ``rows`` known and small, grouped without), whatever order the rows
+    arrive in; one worker (CentralizedTraining) makes the two NULL-id rows
+    share a worker, four (Synchronous) spread them by their hash."""
+    data = [(0, [1.0, 0.0, 0.0], 1.0), (None, [1.0, 1.0, 0.0], -1.0),
+            (None, [0.0, 1.0, 1.0], 1.0), (5, [0.0, 0.0, 1.0], 1.0)]
+    schema = "id long, features array<double>, label double"
+    hyper = {"C": 10.0}
+    protocols = ("CentralizedTraining", "Synchronous")
+    models = []
+    for rows, arrival in ((4, data), (None, data), (4, data[::-1]),
+                          (None, data[::-1])):
+        cat = PipelineCatalog(parallelism=PARTS)
+        for pid, proto in enumerate(protocols):
+            assert cat.apply_request({
+                "id": pid, "request": "Create",
+                "learner": {"name": "PA", "hyperParameters": hyper},
+                "trainingConfiguration": {"protocol": proto},
+            }) == "Create"
+        batch = spark.createDataFrame(arrival, schema).repartition(3)
+        stats = train_batch(batch, cat, dim=DIM, num_partitions=PARTS,
+                            rows=rows)
+        assert [s.fitted for s in stats] == [4, 4]
+        models.append([cat.pipelines[pid].model
+                       for pid in range(len(protocols))])
+    assert all(m == models[0] for m in models)
+    got = [_deser(m)["w"] for m in models[0]]
+
+    ln = get_learner("PA")
+    start = ln.begin_pass({**ln.init_state(DIM, hyper), "n": 0,
+                           "cum_loss": 0.0})
+    hashed = spark.createDataFrame(data, schema).select(
+        "id", "features", "label",
+        F.xxhash64("features", "label").alias("h")).collect()
+    # the NULL-id rows, in hash order, after the id-ordered ones
+    ordered = sorted(hashed, key=lambda r: (r.id is None, r.id or 0, r.h))
+
+    def replay(rows_, parts):
+        workers: dict[int, list] = {}
+        for r in rows_:
+            workers.setdefault((r.h if r.id is None else r.id) % parts,
+                               []).append(r)
+        return ln.merge([
+            ln.partial_fit(np.array([r.features for r in ws]),
+                           np.array([r.label for r in ws]), dict(start),
+                           hyper)
+            for _, ws in sorted(workers.items())])["w"]
+
+    assert np.array_equal(got[0], replay(ordered, 1))
+    assert np.array_equal(got[1], replay(ordered, PARTS))
+    # the order matters: the two NULL-id rows the other way round give
+    # another one-worker model
+    assert not np.array_equal(
+        got[0], replay(ordered[:2] + ordered[:1:-1], 1))

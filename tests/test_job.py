@@ -13,6 +13,7 @@ from omldm_spark.job import JobConfig, build_source, run_job
 from omldm_spark.plans.catalog import PipelineCatalog
 from omldm_spark.streaming.training_loop import make_batch_handler
 
+from sparktrace import flush, runs_python_or_shuffle, sql_plans, stage_tasks
 from test_unified_streaming import (
     UNIFIED_SCHEMA,
     _data_rows,
@@ -190,14 +191,15 @@ def test_training_only_batch_runs_no_predictions_job(spark, tmp_path):
 JOBS_PER_BATCH_BEFORE = 4
 
 
-def test_keyed_pass_runs_one_python_task_under_exact_dedup(
+def test_keyed_pass_runs_no_python_task_under_exact_dedup(
         spark, tmp_path, monkeypatch):
     """The live job's shape on a stateful stream: a chained multi-worker
     pipeline (PA + StandardScaler, Synchronous, 4 workers) behind the exact
     dedup. Stateful streaming runs each micro-batch with AQE off, so no
-    pass is coalesced at run time. The 100-row batch trains in one keyed
-    pass whose Python stage runs 1 task (its rows fill one Arrow batch),
-    and the batch runs no more Spark jobs than before."""
+    pass is coalesced at run time. The 100-row batch fills one Arrow
+    batch, so its keyed pass trains on the driver: one one-task collect,
+    no Python stage, no shuffle. The batch runs no more Spark jobs than
+    before."""
     from omldm_spark import job
     from omldm_spark.learners import trainer
 
@@ -206,17 +208,18 @@ def test_keyed_pass_runs_one_python_task_under_exact_dedup(
 
     def jobs() -> set[int]:
         # the stream runs each batch's jobs in its run's job group
+        flush(spark)
         return set(st.getJobIdsForGroup(
             sc.getLocalProperty("spark.jobGroup.id")))
 
-    keyed_tasks, batch_jobs = [], {}
+    keyed, batch_jobs = [], {}
     fit_groups = trainer.fit_groups
 
-    def counted_fit_groups(*args, **kwargs):
+    def traced_fit_groups(*args, **kwargs):
         before = jobs()
         out = fit_groups(*args, **kwargs)
-        python_stage = max(st.getJobInfo(max(jobs() - before)).stageIds)
-        keyed_tasks.append(st.getStageInfo(python_stage).numTasks)
+        ran = jobs() - before
+        keyed.append((stage_tasks(spark, ran), sql_plans(spark, ran)))
         return out
 
     factory = job.make_batch_handler
@@ -230,7 +233,7 @@ def test_keyed_pass_runs_one_python_task_under_exact_dedup(
             batch_jobs[batch_id] = len(jobs() - before)
         return counted
 
-    monkeypatch.setattr(trainer, "fit_groups", counted_fit_groups)
+    monkeypatch.setattr(trainer, "fit_groups", traced_fit_groups)
     monkeypatch.setattr(job, "make_batch_handler", counted_factory)
 
     t0 = pd.Timestamp("2026-01-01 00:00:00")
@@ -251,7 +254,9 @@ def test_keyed_pass_runs_one_python_task_under_exact_dedup(
     run_job(spark, cfg, cat)
 
     assert cat.pipelines[1].fitted == 180
-    assert keyed_tasks == [1, 1]
+    assert [tasks for tasks, _ in keyed] == [[[1]], [[1]]]
+    for _, plans in keyed:
+        assert len(plans) == 1 and not runs_python_or_shuffle(plans)
     assert batch_jobs[1] <= JOBS_PER_BATCH_BEFORE, batch_jobs
 
 

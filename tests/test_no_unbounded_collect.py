@@ -1,9 +1,9 @@
 """Repo-wide checked invariant: driver materialization is a closed set.
 
-Every `.collect()` / `.toPandas()` / `.toLocalIterator()` in the library
-(outside queries.py, whose contract queries are audited individually by
-tools/plan_audit.py) must appear in the ALLOWLIST below with its
-boundedness argument.  A new collect — or a removed one — fails this
+Every `.collect()` / `.toPandas()` / `.toArrow()` / `.toLocalIterator()` in
+the library (outside queries.py, whose contract queries are audited
+individually by tools/plan_audit.py) must appear in the ALLOWLIST below
+with its boundedness argument.  A new collect — or a removed one — fails this
 test until the list is updated, so "no unbounded driver materialization"
 is a reviewed decision rather than a drift-prone claim.  (VERDICT r4
 graded exactly this property; round 5 removed the two unbounded spots —
@@ -69,6 +69,10 @@ ALLOWLIST = {
         "fused keyed pass (fit_groups, which fit runs per epoch): ONE "
         "model-state row per (model, worker key), so rows = live pipelines "
         "x workers (the parameter-server pattern itself)",
+    ("learners/trainer.py", "sel.coalesce(1).toArrow()"):
+        "fit_groups driver branch: taken only when the caller's observed "
+        "row count is at most spark.sql.execution.arrow.maxRecordsPerBatch "
+        "(the rows the one-task branch held in one Python worker)",
     ("learners/trainer.py", "points.select(features_col, label_col)"):
         "evaluate() holdout: limit+count-guarded to max_rows",
     ("functions/preprocess.py", '.agg(F.count(F.lit(1)).cast("long")'):
@@ -78,7 +82,8 @@ ALLOWLIST = {
         "one row per dim",
 }
 
-PATTERN = re.compile(r"\.collect\(\)|\btoPandas\(\)|\btoLocalIterator\(\)")
+PATTERN = re.compile(
+    r"\.collect\(\)|\btoPandas\(\)|\btoArrow\(\)|\btoLocalIterator\(\)")
 
 
 def _found_sites():

@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 
 from omldm_spark.learners import get_learner, trainer
+from sparktrace import PYTHON_NODE, runs_python_or_shuffle, traced
 
 RNG = np.random.default_rng(25)
 
@@ -87,29 +88,13 @@ def test_evaluate_linear_matches_numpy_evaluate(spark, points):
     assert abs(ev_sql["loss"] - ev_np["loss"]) < 1e-9
 
 
-def _python_stage_tasks(spark, fn):
-    """(fn(), task count of the last stage fn runs: the Python stage of a
-    keyed pass, whose exchange AQE may run as a job of its own)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"tasks-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "fit_groups task count")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    st = sc.statusTracker()
-    job = max(st.getJobIdsForGroup(group))
-    return out, st.getStageInfo(max(st.getJobInfo(job).stageIds)).numTasks
-
-
 def test_fit_groups_states_do_not_depend_on_task_count(spark, points):
     """One keyed pass trains two models on two features columns of one
-    frame. With a row count that fits one Arrow batch it runs in one task,
-    without one in the session's shuffle partitions (AQE off, as under a
-    stateful stream, so they are not coalesced); both runs return
-    bit-identical states."""
+    frame. With a row count that fits one Arrow batch it runs on the
+    driver: one one-task collect, no Python stage, no shuffle. Without one
+    it runs the grouped applyInPandas in the session's shuffle partitions
+    (AQE off, as under a stateful stream, so they are not coalesced). Both
+    branches return bit-identical states."""
     from pyspark.sql import functions as F
 
     frame = points.withColumn("scaled",
@@ -121,14 +106,17 @@ def test_fit_groups_states_do_not_depend_on_task_count(spark, points):
         return trainer.fit_groups(frame, tasks, key_col="worker",
                                   order_cols=["id"], **kw)
 
-    one, n_one = _python_stage_tasks(spark, lambda: run(rows=500))
+    one, one_tasks, one_plans = traced(spark, lambda: run(rows=500))
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        grouped, n_grouped = _python_stage_tasks(spark, run)
+        grouped, grouped_tasks, grouped_plans = traced(spark, run)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert n_one == 1 and n_grouped > 1
+    assert one_tasks == [[1]] and len(one_plans) == 1
+    assert not runs_python_or_shuffle(one_plans)
+    assert any(PYTHON_NODE.search(p) for p in grouped_plans)
+    assert max(n for job in grouped_tasks for n in job) > 1
     assert len(grouped) == len(one) == 2
     for got, want in zip(grouped, one):
         assert sorted(got) == sorted(want) == [0, 1, 2, 3]
@@ -173,10 +161,9 @@ def test_multi_partition_fit_equals_numpy_replay(spark, points):
 def test_single_worker_round_runs_one_task_without_shuffle(spark):
     """A train_batch round whose pipelines all train on one worker (an HT
     SingleLearner and a CentralizedTraining PA) over a small batch with its
-    row count known: one Python task, no shuffle stage. The PA model is the
-    one-worker fit over the batch in id order, whatever its arrival order."""
-    import uuid
-
+    row count known: one one-task collect, no Python stage, no shuffle.
+    The PA model is the one-worker fit over the batch in id order, whatever
+    its arrival order."""
     from omldm_spark.plans.catalog import PipelineCatalog
     from omldm_spark.streaming.training_loop import _deser, train_batch
 
@@ -199,17 +186,11 @@ def test_single_worker_round_runs_one_task_without_shuffle(spark):
             "learner": {"name": lrn, "hyperParameters": hyper},
             "trainingConfiguration": {"protocol": proto},
         }) == "Create"
-    sc = spark.sparkContext
-    group = f"round-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "single-worker round")
-    try:
-        stats = train_batch(batch, cat, dim=3, num_partitions=4, rows=n)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    st = sc.statusTracker()
-    jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
-    assert len(jobs) == 1 and len(jobs[0].stageIds) == 1   # no exchange
-    assert st.getStageInfo(jobs[0].stageIds[0]).numTasks == 1
+    stats, tasks, plans = traced(
+        spark, lambda: train_batch(batch, cat, dim=3, num_partitions=4,
+                                   rows=n))
+    assert tasks == [[1]] and len(plans) == 1
+    assert not runs_python_or_shuffle(plans)
     assert [s.fitted for s in stats] == [n, n]
     pa = cat.pipelines[1]
     want = trainer.fit(batch, "PA", dim=3, hyper={"C": "0.1"},
