@@ -103,3 +103,7 @@ class HadoopFS:
 
     def delete(self, path: str, recursive: bool = True) -> bool:
         return bool(self._fs.delete(self._Path(path), recursive))
+
+    def set_mtime(self, path: str, mtime_ms: int) -> None:
+        """Set a file's modification time (access time unchanged)."""
+        self._fs.setTimes(self._Path(path), int(mtime_ms), -1)

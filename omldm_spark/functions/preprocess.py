@@ -366,19 +366,6 @@ def apply_chain(
     return df, cur_dim, state
 
 
-def chain_out_dim(preprocessors: list[dict], dim: int) -> int:
-    """Feature dimensionality after the chain (scalers preserve dim,
-    PolynomialFeatures expands to all monomials of degree 1..N)."""
-    from math import comb
-
-    d = dim
-    for p in preprocessors:
-        if p.get("name") == "PolynomialFeatures":
-            degree = int(_hyper(p).get("degree", 2))
-            d = sum(comb(d + k - 1, k) for k in range(1, degree + 1))
-    return d
-
-
 def maxabs_scaler_stats(df: DataFrame, cols: list[str]) -> DataFrame:
     """Per-column max(|x|) — one pass, one tiny row (pyspark.ml
     MaxAbsScaler counterpart; beyond the reference whitelist, SURVEY.md

@@ -74,9 +74,8 @@ class JobConfig:
     watermark_col: str = "event_time"
     watermark_delay: str = "10 seconds"
 
-    # driver-side drains (tests/inspection only — production rows flow to
-    # predictions_path; see make_batch_handler docstring)
-    predictions_sink: list | None = None
+    # driver-side drains for the per-batch statistics and the Query
+    # responses; predictions leave through predictions_path only
     stats_sink: list | None = None
     responses_sink: list = field(default_factory=list)
     holdout_df: DataFrame | None = None
@@ -136,7 +135,6 @@ def run_job(spark: SparkSession, cfg: JobConfig,
         id_col=cfg.id_col,
         dim=cfg.dim,
         num_partitions=cfg.parallelism,
-        predictions_sink=cfg.predictions_sink,
         stats_sink=cfg.stats_sink,
         predictions_path=cfg.predictions_path,
         responses_sink=cfg.responses_sink,

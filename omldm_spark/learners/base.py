@@ -14,9 +14,10 @@ A learner is a stateless strategy object over numpy state dicts:
                                     FlinkSpoke.scala:160-163)
 
 State dicts always carry ``n`` (points fitted) so merges weight correctly.
-The trainer (``trainer.py``) runs partial_fit per partition inside
-``mapInPandas`` (Arrow batches) and merges the tiny per-partition states —
-one BSP round == one reference protocol round (SURVEY.md §7).
+The trainer (``trainer.py``) runs partial_fit once per worker key group
+(``fit_groups``: ``groupBy(key).applyInPandas``, or on the driver over one
+collect when the round fits one Arrow batch) and merges the tiny per-worker
+states — one BSP round == one reference protocol round (SURVEY.md §7).
 """
 
 from __future__ import annotations
@@ -37,9 +38,10 @@ class Learner(ABC):
     def partial_fit(self, X: np.ndarray, y: np.ndarray, state: dict, hyper: dict) -> dict: ...
 
     def begin_pass(self, state: dict) -> dict:
-        """Hook called once per partition pass, after the broadcast state is
-        materialized and bookkeeping (n, cum_loss) is zeroed. Learners whose
-        merge needs per-pass deltas (K-means) snapshot the prior here."""
+        """Hook called once per pass over a worker's rows, after its start
+        state is materialized and bookkeeping (n, cum_loss) is zeroed.
+        Learners whose merge needs per-pass deltas (K-means) snapshot the
+        prior here."""
         return state
 
     def merge(self, states: list[dict]) -> dict:

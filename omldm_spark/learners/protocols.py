@@ -2,11 +2,13 @@
 
 The reference's protocols (MLNodeGenerator.scala:25-64) differ in WHEN
 workers and the parameter server exchange models. Under BSP every batch is a
-natural sync point, so each protocol becomes a policy over per-round merges:
+natural sync point, so each protocol becomes a policy over per-round merges.
+Synchronous / Asynchronous / CentralizedTraining / SingleLearner merge every
+round (async's wall-clock overlap has no BSP equivalent; statistics stay
+comparable — documented divergence); the training loop runs that merge
+itself (``trainer.merge_round``). ``protocol_round`` is the policy for the
+protocols whose workers keep their own models between merges:
 
-* Synchronous / Asynchronous  merge every round (async's wall-clock overlap
-                              has no BSP equivalent; statistics stay
-                              comparable — documented divergence)
 * SSP                         merge every ``staleness`` rounds; workers run
                               on their own models in between (bounded
                               staleness, Ho et al. NIPS 2013)
@@ -33,12 +35,12 @@ from .base import Learner
 from .trainer import _flatten_state, _unflatten_state
 
 
-def _vec(learner: Learner, state: dict) -> np.ndarray:
-    return np.asarray(_flatten_state(learner, state), dtype=float)
+def _vec(state: dict) -> np.ndarray:
+    return np.asarray(_flatten_state(state), dtype=float)
 
 
-def _from_vec(learner: Learner, template: dict, v: np.ndarray, n: int, cum: float) -> dict:
-    st = _unflatten_state(learner, template, v.tolist())
+def _from_vec(template: dict, v: np.ndarray, n: int, cum: float) -> dict:
+    st = _unflatten_state(template, v.tolist())
     st["n"], st["cum_loss"] = n, cum
     return st
 
@@ -52,7 +54,8 @@ def protocol_round(
     round_idx: int,
     hyper: dict,
 ) -> tuple[dict, dict[int, dict], int]:
-    """One post-batch exchange. Returns (global, workers, models_shipped)."""
+    """One post-batch exchange for SSP / GM / FGM / EASGD. Returns (global,
+    workers, models_shipped); any other protocol raises ValueError."""
     workers = dict(worker_states)
     p = len(workers)
     total_n = sum(int(s["n"]) for s in workers.values())
@@ -74,11 +77,6 @@ def protocol_round(
             out[k] = w
         return out
 
-    if protocol in ("Synchronous", "Asynchronous", "CentralizedTraining",
-                    "SingleLearner"):
-        g = merged()
-        return g, distribute(g), p
-
     if protocol == "SSP":
         staleness = int(hyper.get("staleness", 2))
         if (round_idx + 1) % staleness == 0:
@@ -90,12 +88,12 @@ def protocol_round(
 
     if protocol in ("GM", "FGM"):
         thr = float(hyper.get("drift_threshold", 0.1))
-        gv = _vec(learner, global_state)
+        gv = _vec(global_state)
         # relative drift, but never divide by a near-zero norm (zero-init
         # global would otherwise make every drift look infinite)
         denom = max(float(np.linalg.norm(gv)), 1.0)
         drifts = [
-            float(np.linalg.norm(_vec(learner, s) - gv)) / denom
+            float(np.linalg.norm(_vec(s) - gv)) / denom
             for s in workers.values()
         ]
         violated = (
@@ -111,19 +109,19 @@ def protocol_round(
 
     if protocol == "EASGD":
         alpha = float(hyper.get("alpha", 0.5))
-        center = _vec(learner, global_state)
+        center = _vec(global_state)
         new_workers = {}
         acc = np.zeros_like(center)
         for k, s in workers.items():
-            wv = _vec(learner, s)
+            wv = _vec(s)
             diff = wv - center
             new_workers[k] = _from_vec(
-                learner, template, wv - alpha * diff, int(s["n"]),
+                template, wv - alpha * diff, int(s["n"]),
                 float(s["cum_loss"]),
             )
             acc += diff
         center = center + (alpha / max(p, 1)) * acc
-        g = _from_vec(learner, template, center, total_n, total_cum)
+        g = _from_vec(template, center, total_n, total_cum)
         return g, new_workers, p
 
     raise ValueError(f"unknown protocol {protocol!r}")

@@ -78,7 +78,7 @@ class Task:
     features_col: str | None = None
 
 
-def _flatten_state(learner: Learner, state: dict) -> list[float]:
+def _flatten_state(state: dict) -> list[float]:
     """Pack model arrays into one flat vector (order: sorted keys, excluding
     bookkeeping); the driver unpacks with the same layout."""
     out: list[float] = []
@@ -93,7 +93,7 @@ def _flatten_state(learner: Learner, state: dict) -> list[float]:
     return out
 
 
-def _unflatten_state(learner: Learner, template: dict, flat: list[float]) -> dict:
+def _unflatten_state(template: dict, flat: list[float]) -> dict:
     state = {}
     i = 0
     for k in sorted(template):
@@ -131,12 +131,12 @@ class _Model:
     def pack(self, state: dict) -> tuple[list[float] | None, str | None]:
         if self.blob:
             return None, self.learner.to_blob(state)
-        return _flatten_state(self.learner, state), None
+        return _flatten_state(state), None
 
     def unpack(self, flat, blob) -> dict:
         if self.blob:
             return self.learner.from_blob(blob)
-        return _unflatten_state(self.learner, self.template, list(flat))
+        return _unflatten_state(self.template, list(flat))
 
     def start(self, packed) -> dict:
         """The state a pass starts from: unpacked, bookkeeping zeroed."""
@@ -147,16 +147,15 @@ class _Model:
 
 
 def _state_rows(models: list[_Model], grp: int, states: list[dict]) -> pd.DataFrame:
+    packed = [m.pack(s) for m, s in zip(models, states)]
     return pd.DataFrame(
         {
             "model": list(range(len(models))),
             "grp": [grp] * len(models),
             "n": [int(s["n"]) for s in states],
             "cum_loss": [float(s["cum_loss"]) for s in states],
-            "flat": [[] if m.blob else _flatten_state(m.learner, s)
-                     for m, s in zip(models, states)],
-            "blob": [m.learner.to_blob(s) if m.blob else None
-                     for m, s in zip(models, states)],
+            "flat": [flat or [] for flat, _ in packed],
+            "blob": [blob for _, blob in packed],
         }
     )
 

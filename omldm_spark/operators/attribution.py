@@ -311,13 +311,6 @@ def shapley_min_deltas(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     return purch, touch
 
 
-def shapley_fold(prev: tuple | None,
-                 events: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Fold a batch's min-deltas into the carried (purch, touch) state."""
-    cur = shapley_min_deltas(events)
-    return cur if prev is None else shapley_merge(prev, cur)
-
-
 def shapley_merge(prev: tuple, cur: tuple) -> tuple[DataFrame, DataFrame]:
     """Re-min the union of two (purch, touch) min-fold states."""
     (p0, t0), (purch, touch) = prev, cur

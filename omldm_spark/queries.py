@@ -1390,13 +1390,25 @@ def q_streaming_train_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full streaming slice: file-replay stream -> CRUD control plane ->
     per-micro-batch BSP training of two pipelines -> predictions scored
     with the evolving model (SURVEY.md §3 entry points A+B+C)."""
+    import time
+
     pts = _labeled_points(spark, sf_dir).withColumn(
         "operation",
         F.when(F.col("split") == "test", F.lit("forecasting")).otherwise(
             F.lit("training")
         ),
     ).select("id", "features", "label", "operation")
-    stream, tmp = _replay(pts.repartition(4), "omldm_stream_", files=2)
+    # the replayed files are a function of the rows: hashed on id, sorted
+    # within each file; the file stream takes the oldest files first and
+    # the write tasks end in any order, so the files are dated in name
+    # order and every run trains on the same two micro-batches
+    stream, tmp = _replay(pts.repartition(4, "id").sortWithinPartitions("id"),
+                          "omldm_stream_", files=2)
+    fs = HadoopFS.for_path(tmp)
+    parts = [n for n in fs.listdir(f"{tmp}/src") if n.endswith(".parquet")]
+    now_ms = int(time.time() * 1000)
+    for i, name in enumerate(parts):
+        fs.set_mtime(f"{tmp}/src/{name}", now_ms - 1000 * (len(parts) - i))
     cat = PipelineCatalog()
     cat.apply_requests_df(spark.createDataFrame(
         [

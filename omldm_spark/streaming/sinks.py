@@ -355,47 +355,3 @@ class KeyedUpsertSink:
         if fs.exists(join(self.path, "_staged")):
             fs.delete(join(self.path, "_staged"), recursive=True)
         return removed
-
-
-class DeltaUpsertSink:
-    """foreachBatch keyed upsert through a real lakehouse MERGE INTO —
-    the production backend for clusters that ship delta-spark (absent in
-    this container: the import is LAZY and surfaces as a clearly-marked
-    NotImplementedError, the same gating discipline as the media
-    decoders).  Semantics are identical to KeyedUpsertSink (last write
-    per key wins, idempotent under foreachBatch replay because MERGE on
-    the same updates converges); KeyedUpsertSink remains the
-    dependency-free engine-owned implementation with the same contract,
-    so the two are drop-in interchangeable behind the publish path."""
-
-    def __init__(self, path: str, key_cols: list[str]):
-        self.path = path
-        self.key_cols = list(key_cols)
-
-    def __call__(self, df, batch_id: int) -> None:
-        try:
-            from delta.tables import DeltaTable
-        except ImportError as exc:  # pragma: no cover - env without delta
-            raise NotImplementedError(
-                "DeltaUpsertSink requires delta-spark; use KeyedUpsertSink "
-                "(same contract, parquet + commit log) where it is absent"
-            ) from exc
-        spark = df.sparkSession
-        if not DeltaTable.isDeltaTable(spark, self.path):
-            df.write.format("delta").mode("overwrite").save(self.path)
-            return
-        tgt = DeltaTable.forPath(spark, self.path)
-        cond = " AND ".join(
-            f"t.{k} <=> s.{k}" for k in self.key_cols
-        )
-        (
-            tgt.alias("t")
-            .merge(df.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def current_state(self, spark, columns: list[str] | None = None):
-        out = spark.read.format("delta").load(self.path)
-        return out.select(*columns) if columns else out

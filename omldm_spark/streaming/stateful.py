@@ -2,13 +2,10 @@
 
 The keyed operators run on ``applyInPandasWithState`` (GroupState API),
 except exact dedup, which is Spark's native streaming ``dropDuplicates``.
-Spark 4.x also offers ``transformWithStateInPandas`` — the richer successor
-(value/list/map state, timers) that SURVEY.md §4.2 targets — but its Python
-driver worker imports ``google.protobuf``, which is not installed in this
-container; the GroupState API provides the same keyed-state semantics for
-these operators without that dependency. Swapping to
-transformWithStateInPandas on a production image is a mechanical change
-(same processor logic).
+Spark 4.x also offers ``transformWithStateInPandas`` (value/list/map
+state, timers), but its Python driver worker imports ``google.protobuf``;
+the GroupState API gives these operators the same keyed-state semantics
+without that dependency.
 
 Operators:
 
@@ -19,9 +16,10 @@ Operators:
                               distinct key, JVM-side, kept forever. With a
                               TTL: GroupState, one expiry per key, removed
                               once the watermark passes it. Checkpointed.
-* ``streaming_running_stats`` per-key running count/sum/min/max — the
-                              streaming StandardScaler fit (running moments,
-                              SURVEY.md §7 step 5).
+* ``streaming_near_dedup``    cross-batch MinHash-LSH near-duplicate
+                              candidates: staged row-local band signatures
+                              (``minhash_bands_project``), then one long of
+                              state per (band, bval) bucket, its anchor doc.
 * ``streaming_ddm``           incremental DDM drift detection; state =
                               seven scalars per key with the SAME float
                               sequence as operators/drift.ddm_drift_summary,
@@ -108,102 +106,25 @@ def streaming_dedup(
     )
 
 
-def _stats_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    if state.exists:
-        cnt, total, mn, mx = state.get
-    else:
-        cnt, total, mn, mx = 0, 0.0, float("inf"), float("-inf")
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        v = pdf["v"]
-        cnt += int(len(v))
-        total += float(v.sum())
-        mn = min(mn, float(v.min()))
-        mx = max(mx, float(v.max()))
-    state.update((cnt, total, mn, mx))
-    yield pd.DataFrame(
-        {"key": [key[0]], "cnt": [cnt], "total": [total], "mn": [mn], "mx": [mx]}
-    )
-
-
-def streaming_running_stats(stream: DataFrame, key_col: str) -> DataFrame:
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _stats_fn,
-        outputStructType="key bigint, cnt bigint, total double, mn double, mx double",
-        stateStructType="cnt bigint, total double, mn double, mx double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def minhash_bands_col(text_col: str = "text", k: int = 8, bands: int = 4,
-                      n: int = 3):
-    """ARRAY<STRUCT<band:int, bval:string>> of LSH band signatures computed
-    ROW-LOCALLY — ``array_min`` over the shingle array replaces the batch
-    path's explode + groupBy (operators/dedup.minhash_signatures), so the
-    signature is a pure projection a stream can evaluate with no shuffle
-    and no stateful aggregation. Same hash family as the batch operator
-    (h_i = min md5(i || '|' || shingle)); a doc with no shingles gets
-    sentinel-only bands that collide only with other empty docs."""
-    from pyspark.sql import functions as F
-
-    from ..operators.dedup import shingle_array, tokens_col
-
-    r = k // bands
-    toks = tokens_col(text_col)
-    sh = shingle_array_from(toks, n)
-    # NB: the hash-family prefix must be bound OUTSIDE the lambda — a
-    # two-parameter lambda (``lambda s, i=i: ...``) is interpreted by
-    # F.transform as (element, index) and the default arg is shadowed by
-    # the array-index Column, silently hashing ``str(Column)`` reprs.
-    def _sig(i: int):
-        prefix = F.lit(f"{i}|")
-        return F.coalesce(
-            F.array_min(F.transform(sh, lambda s: F.md5(F.concat(prefix, s)))),
-            F.lit("~empty"),
-        )
-
-    sig = [_sig(i) for i in range(k)]
-    return F.array(*[
-        F.struct(
-            F.lit(b).cast("int").alias("band"),
-            F.md5(F.concat_ws("|", *sig[b * r:(b + 1) * r])).alias("bval"),
-        )
-        for b in range(bands)
-    ])
-
-
-def shingle_array_from(toks_expr, n: int):
-    """shingle_array over an inline token expression: materializing into a
-    projection first is the batch-path optimization (array-lambda
-    re-evaluation); for the streaming per-row path the doc is small and the
-    expression is evaluated once per band-hash anyway — callers that care
-    pre-project the token array."""
-    from ..operators.dedup import shingle_array
-    from pyspark.sql import functions as F
-
-    return shingle_array(toks_expr if not isinstance(toks_expr, str)
-                         else F.col(toks_expr), n)
-
-
 def minhash_bands_project(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", k: int = 8,
                           bands: int = 4, n: int = 3) -> DataFrame:
-    """(doc_id, band, bval) via STAGED projections — the performant twin
-    of ``minhash_bands_col`` for the streaming hot path.
+    """(doc_id, band, bval) LSH band signatures, row-local (no shuffle,
+    no stateful aggregation), via STAGED projections.
 
-    The single-expression form re-evaluates the tokenizer + shingle
-    construction inside EVERY hash lambda (CollapseProject inlines the
-    shared subexpression into all k ``transform``s; measured 13 ms/doc —
-    67 s for 5k docs at sf0.1).  Here tokens, shingles, and the
-    per-shingle k-hash array each materialize in their OWN projection —
-    a nondeterministic pin column blocks CollapseProject, the same
-    guard the batch path uses (operators/dedup.shingles) — so the
-    regex split runs ONCE per row and the md5s once per
+    Signature h_i = min md5(i || '|' || shingle), the hash family of the
+    batch operator (operators/dedup.minhash_signatures); a doc with no
+    shingles gets sentinel-only bands that collide only with other empty
+    docs.  A single-expression form would re-evaluate the tokenizer +
+    shingle construction inside EVERY hash lambda (CollapseProject
+    inlines the shared subexpression into all k ``transform``s; measured
+    13 ms/doc — 67 s for 5k docs at sf0.1).  Here tokens, shingles, and
+    the per-shingle k-hash array each materialize in their OWN
+    projection — a nondeterministic pin column blocks CollapseProject,
+    the same guard the batch path uses (operators/dedup.shingles) — so
+    the regex split runs ONCE per row and the md5s once per
     (shingle, hash): the necessary work and nothing else.  Projections
-    are stream-safe; the pin never reaches the output schema.  Same
-    hash family as minhash_bands_col, so oracles are unchanged."""
+    are stream-safe; the pin never reaches the output schema."""
     from pyspark.sql import functions as F
 
     from ..operators.dedup import shingle_array, tokens_col
@@ -231,7 +152,8 @@ def minhash_bands_project(df: DataFrame, text_col: str = "text",
     def _pick(i: int):
         # NB: a (lambda a, i=i: ...) default arg would be shadowed by
         # F.transform's (element, index) two-parameter convention — the
-        # same trap minhash_bands_col documents; bind i via a factory.
+        # array-index Column replaces i and str(Column) reprs get hashed;
+        # bind i via a factory.
         return lambda a: F.element_at(a, i + 1)
 
     sigs = hashed.select(
@@ -264,12 +186,10 @@ def _near_dedup_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
     this bucket). Every later doc in the bucket emits a candidate pair
     (doc_id, anchor_id). Batch-internal determinism: the anchor of a fresh
     bucket is the MIN doc id in the batch."""
-    rows = pd.concat([p for p in pdfs if len(p)], ignore_index=True) \
-        if pdfs is not None else pd.DataFrame()
-    chunks = [rows] if len(rows) else []
-    allr = pd.concat(chunks, ignore_index=True) if chunks else None
-    if allr is None or not len(allr):
+    frames = [p for p in pdfs if len(p)]
+    if not frames:
         return
+    allr = pd.concat(frames, ignore_index=True)
     if state.exists:
         anchor = int(state.get[0])
     else:
@@ -383,80 +303,4 @@ def streaming_ddm(stream: DataFrame, key_col: str = "user_id") -> DataFrame:
         ),
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_user_totals_v2(stream):
-    """Per-(event_type, user) cents totals on the Spark 4.x STATE API v2
-    (``transformWithStateInPandas`` + ``StatefulProcessor`` MapState) —
-    the successor of the GroupState operators above, with typed
-    composite state, timers, and per-state TTL available.
-
-    ENV GATE: the v2 state-server protocol needs ``protobuf`` on the
-    Python side, which this container does not ship — the pre-flight
-    check below turns the otherwise-cryptic JVM worker crash into the
-    marked NotImplementedError (same gating discipline as Kafka / Delta
-    / PIL); tests/test_stateful.py carries a skip-marked run for
-    clusters that have it.
-
-    One processor instance per event_type key; the MapState holds
-    user_id -> (total_c, n_events), so state size is bounded by distinct
-    users per type and lives in the state store (RocksDB on a cluster),
-    not the JVM heap.  Emissions are update-mode (changed users only),
-    which composes with the KeyedUpsertSink publish path exactly like
-    the classic update-mode aggregations — the final compacted state
-    equals the batch GROUP BY at any cadence (contract query
-    streaming_topk_users_v2).  Input rows need columns
-    (event_type, user_id, val_c)."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package for "
-            "its state-server protocol; use the applyInPandasWithState "
-            "operators above where it is absent"
-        ) from exc
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle):
-            self._totals = handle.getMapState(
-                "totals", "user_id long", "total_c long, n_events long"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            et = key[0]
-            delta: dict = {}
-            for pdf in rows:
-                for uid, vc in zip(pdf["user_id"], pdf["val_c"]):
-                    d = delta.get(int(uid), [0, 0])
-                    d[0] += int(vc)
-                    d[1] += 1
-                    delta[int(uid)] = d
-            out = []
-            for uid, (dv, dn) in delta.items():
-                if self._totals.exists() and self._totals.containsKey(
-                        (uid,)):
-                    old = self._totals.getValue((uid,))
-                    nv = (int(old[0]) + dv, int(old[1]) + dn)
-                else:
-                    nv = (dv, dn)
-                self._totals.updateValue((uid,), nv)
-                out.append((et, uid, nv[0], nv[1]))
-            yield pd.DataFrame(
-                out, columns=["event_type", "user_id", "total_c",
-                              "n_events"])
-
-        def close(self):
-            pass
-
-    return stream.groupBy("event_type").transformWithStateInPandas(
-        statefulProcessor=_Totals(),
-        outputStructType=(
-            "event_type string, user_id long, total_c long, n_events long"
-        ),
-        outputMode="Update",
-        timeMode="None",
     )

@@ -439,7 +439,6 @@ def make_batch_handler(
     id_col: str = "id",
     dim: int = 3,
     num_partitions: int = 8,
-    predictions_sink: list | None = None,
     stats_sink: list | None = None,
     predictions_path: str | None = None,
     responses_sink: list | None = None,
@@ -456,11 +455,10 @@ def make_batch_handler(
     when given (FlinkSpoke query-on-testSet).
 
     Prediction output: ``predictions_path`` appends each batch's scored
-    forecasting rows to a parquet sink WITHOUT driver collection — the
-    production path (the reference streams predictions to a Kafka topic,
-    Job.scala:98-105; swap in streaming/sources.kafka_sink when a broker
-    exists). ``predictions_sink`` (driver-side list) is the tests-only
-    inspection path and must not carry production volume."""
+    forecasting rows to a parquet sink WITHOUT driver collection (the
+    reference streams predictions to a Kafka topic, Job.scala:98-105; swap
+    in streaming/sources.kafka_sink when a broker exists); tests read that
+    parquet back."""
     record_buffer: list = []
 
     def handle(batch_df: DataFrame, batch_id: int):
@@ -529,11 +527,8 @@ def make_batch_handler(
             forecasting, catalog, features_col=features_col, id_col=id_col,
             dim=dim,
         )
-        if preds is not None:
-            if predictions_path is not None:
-                preds.write.mode("append").parquet(predictions_path)
-            if predictions_sink is not None:
-                predictions_sink.extend(preds.collect())
+        if preds is not None and predictions_path is not None:
+            preds.write.mode("append").parquet(predictions_path)
         if responses_sink is not None and catalog.responses:
             responses_sink.extend(
                 build_query_responses(

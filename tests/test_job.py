@@ -35,7 +35,7 @@ def test_run_job_end_to_end(spark, tmp_path):
     src = str(tmp_path / "job_src")
     _write_ordered(src, [b0, b1, b2, b3])
 
-    preds, stats = [], []
+    stats = []
     cfg = JobConfig(
         parallelism=4,
         input_path=src,
@@ -46,7 +46,6 @@ def test_run_job_end_to_end(spark, tmp_path):
         state_path=str(tmp_path / "cat.jsonl"),
         dedup_key="id",
         dedup_ttl_ms=3_600_000,
-        predictions_sink=preds,
         stats_sink=stats,
         timeout_ms=180_000,
     )
@@ -55,8 +54,7 @@ def test_run_job_end_to_end(spark, tmp_path):
     assert list(cat.pipelines) == [1]
     spec = cat.pipelines[1]
     assert spec.fitted == 360            # 400 unique rows * 90% training
-    assert len(preds) == 40              # deduped forecasting rows
-    # production sink got the same rows the test drain saw
+    # the sink got one row per deduped forecasting row
     sunk = spark.read.parquet(cfg.predictions_path)
     assert sunk.count() == 40
     # Query drained into a response
@@ -86,15 +84,15 @@ def test_run_job_exact_dedup(spark, tmp_path):
     src = str(tmp_path / "exact_src")
     _write_ordered(src, [b0, b1, b2, b3, b4])
 
-    preds, stats = [], []
+    stats = []
     cfg = JobConfig(
         parallelism=4,
         input_path=src,
         input_schema=UNIFIED_SCHEMA,
         max_files_per_trigger=1,
+        predictions_path=str(tmp_path / "preds"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         dedup_key="id",
-        predictions_sink=preds,
         stats_sink=stats,
         timeout_ms=180_000,
     )
@@ -104,6 +102,7 @@ def test_run_job_exact_dedup(spark, tmp_path):
     assert [(s.batch_id, s.fitted) for s in stats] == [(1, 90), (2, 90),
                                                        (4, 9)]
     assert cat.pipelines[1].fitted == 189
+    preds = spark.read.parquet(cfg.predictions_path).collect()
     assert sorted(r["recordId"] for r in preds) == list(range(0, 210, 10))
     assert len(cfg.responses_sink) == 1
     assert cfg.responses_sink[0]["responseId"] == 7
@@ -260,14 +259,15 @@ def test_keyed_pass_runs_no_python_task_under_exact_dedup(
     assert batch_jobs[1] <= JOBS_PER_BATCH_BEFORE, batch_jobs
 
 
-def test_buffered_forecasts_are_counted_into_the_batch(spark):
+def test_buffered_forecasts_are_counted_into_the_batch(spark, tmp_path):
     """Rows buffered before the first Create join the next batch's
     counts: a Create batch with no forecasting row of its own still
     scores the buffered forecasts."""
     cat = PipelineCatalog(parallelism=4)
-    preds, stats = [], []
+    stats = []
+    sink = str(tmp_path / "preds")
     handle = make_batch_handler(spark, cat, dim=3, num_partitions=4,
-                                predictions_sink=preds, stats_sink=stats)
+                                stats_sink=stats, predictions_path=sink)
     t0 = pd.Timestamp("2026-01-01 00:00:00")
     handle(spark.createDataFrame(_data_rows(range(0, 50), t0),
                                  UNIFIED_SCHEMA), 0)   # buffered
@@ -277,4 +277,5 @@ def test_buffered_forecasts_are_counted_into_the_batch(spark):
         _data_rows([i for i in range(50, 100) if i % 10], t0), UNIFIED_SCHEMA)
     handle(create.unionByName(train_only), 1)
     assert [s.fitted for s in stats] == [45 + 45]
+    preds = spark.read.parquet(sink).collect()
     assert sorted(r["recordId"] for r in preds) == [0, 10, 20, 30, 40]

@@ -23,9 +23,6 @@ ALLOWLIST = {
         "control-plane CRUD requests: human-issued, not data-scale",
     ("streaming/training_loop.py", "batch_df.limit(room).collect()"):
         "pre-Create buffer, limit(room) caps at the bounded buffer size",
-    ("streaming/training_loop.py", "predictions_sink.extend"):
-        "test-visible predictions sink stand-in; production path is the "
-        "Kafka sink",
     ("operators/lm.py", ".limit(1).collect()"):
         "BPE best-pair: one row per merge round",
     ("operators/lm.py", 'orderBy("merge_round").collect()'):

@@ -4410,7 +4410,8 @@ def test_streaming_shapley_fold_is_order_free(spark):
     import datetime as dt
 
     from omldm_spark.operators.attribution import (
-        shapley_attribution, shapley_fold, shapley_from_state)
+        shapley_attribution, shapley_from_state, shapley_merge,
+        shapley_min_deltas)
 
     t0 = dt.datetime(2024, 1, 1)
     rows = [
@@ -4427,8 +4428,7 @@ def test_streaming_shapley_fold_is_order_free(spark):
     # adversarial split: purchases first, their touches later
     b1 = spark.createDataFrame([rows[2], rows[4], rows[5]], schema)
     b2 = spark.createDataFrame([rows[0], rows[1], rows[3], rows[6]], schema)
-    st = shapley_fold(None, b1)
-    st = shapley_fold(st, b2)
+    st = shapley_merge(shapley_min_deltas(b1), shapley_min_deltas(b2))
     inc = {r["channel"]: r["phi_numer"]
            for r in shapley_from_state(*st).collect()}
     assert inc == batch

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from omldm_spark.functions.preprocess import (
     apply_chain,
-    chain_out_dim,
     mean_std_from_moments,
     poly_expand_expr,
 )
@@ -110,7 +109,6 @@ def test_poly_then_scaler_chain_dims(spark):
         {"name": "PolynomialFeatures", "hyperParameters": {"degree": 2}},
         {"name": "MinMaxScaler"},
     ]
-    assert chain_out_dim(chain, 2) == 5
     out, eff_dim, state = apply_chain(df, chain, "features", 2)
     assert eff_dim == 5
     row = out.select(F.size("_pp_features").alias("s")).first()

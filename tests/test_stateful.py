@@ -1,4 +1,5 @@
-"""transformWithStateInPandas operators: cross-batch dedup + running stats."""
+"""Stateful streaming operators: cross-batch dedup, near-dedup, drift and
+the keyed upsert sinks."""
 
 from __future__ import annotations
 
@@ -6,7 +7,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from omldm_spark.streaming.sources import await_bounded, file_replay_source
-from omldm_spark.streaming.stateful import streaming_dedup, streaming_running_stats
+from omldm_spark.streaming.stateful import streaming_dedup
 
 
 def _write_batches(spark, tmp_path):
@@ -46,33 +47,6 @@ def test_exact_dedup_plan_is_native(spark, tmp_path):
     assert "Deduplicate" in plan
     assert "FlatMapGroupsInPandasWithState" not in plan
     assert out.schema == stream.schema
-
-
-def test_streaming_running_stats(spark, tmp_path):
-    b1 = pd.DataFrame({"key": [1, 1, 2], "v": [1.0, 3.0, 10.0]})
-    b2 = pd.DataFrame({"key": [1, 2], "v": [5.0, 20.0]})
-    src = str(tmp_path / "src2")
-    spark.createDataFrame(b1).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(b2).coalesce(1).write.mode("append").parquet(src)
-    stream = file_replay_source(spark, src, "key bigint, v double",
-                                max_files_per_trigger=1)
-    out = streaming_running_stats(stream, "key")
-    sink: list = []
-    q = (
-        out.writeStream.foreachBatch(lambda df, _: sink.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_bounded(q, 120)
-    # final state per key: running across both batches
-    last = {}
-    for r in sink:
-        last[r["key"]] = r
-    assert last[1]["cnt"] == 3 and last[1]["total"] == 9.0
-    assert last[1]["mn"] == 1.0 and last[1]["mx"] == 5.0
-    assert last[2]["cnt"] == 2 and last[2]["total"] == 30.0
 
 
 def test_windowed_counts_with_watermark(spark, tmp_path):
@@ -177,14 +151,12 @@ def test_streaming_near_dedup_across_batches(spark, tmp_path):
 
 
 def test_streaming_band_signatures_match_batch(spark):
-    """The row-local streaming signature (minhash_bands_col) must use the
-    SAME hash family as the batch explode+groupBy path — regression for the
-    two-parameter transform-lambda bug where the hash-family index was
+    """The row-local streaming signature (minhash_bands_project) must use
+    the SAME hash family as the batch explode+groupBy path — regression for
+    the two-parameter transform-lambda bug where the hash-family index was
     shadowed by the array-index Column and str(Column) reprs were hashed."""
-    from pyspark.sql import functions as F
-
     from omldm_spark.operators.dedup import minhash_signatures
-    from omldm_spark.streaming.stateful import minhash_bands_col
+    from omldm_spark.streaming.stateful import minhash_bands_project
 
     k, bands, n = 8, 4, 3
     r = k // bands
@@ -194,14 +166,8 @@ def test_streaming_band_signatures_match_batch(spark):
          (3, "too short")],
         "doc_id long, text string",
     )
-    stream_bands = (
-        docs.select(
-            "doc_id",
-            F.explode(minhash_bands_col("text", k=k, bands=bands, n=n)).alias("bb"),
-        )
-        .select("doc_id", "bb.band", "bb.bval")
-        .collect()
-    )
+    stream_bands = minhash_bands_project(
+        docs, k=k, bands=bands, n=n).collect()
     batch = {
         row["doc_id"]: row
         for row in minhash_signatures(docs, k=k, n=n).collect()
@@ -793,85 +759,6 @@ def test_keyed_upsert_sink_torn_commit_record_invisible(spark, tmp_path):
     assert sorted(map(tuple,
                       sink.current_state(spark, ["k", "v"]).collect())) == [
         ("a", 1), ("b", 2)]
-
-
-def test_delta_upsert_sink_when_available(spark, tmp_path):
-    """Runs the real Delta MERGE backend where delta-spark is installed
-    (skipped here); the contract mirrors KeyedUpsertSink."""
-    import pytest
-
-    pytest.importorskip("delta")
-    from omldm_spark.streaming.sinks import DeltaUpsertSink
-
-    sink = DeltaUpsertSink(str(tmp_path / "dlt"), ["k"])
-    sink(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v long"), 0)
-    sink(spark.createDataFrame([("a", 9)], "k string, v long"), 1)
-    got = sorted(map(tuple, sink.current_state(spark, ["k", "v"]).collect()))
-    assert got == [("a", 9), ("b", 2)]
-
-
-def test_delta_upsert_sink_gated_without_delta(spark, tmp_path):
-    """Without delta-spark the sink raises the marked error instead of
-    failing somewhere inside py4j."""
-    import pytest
-
-    try:
-        import delta  # noqa: F401
-        pytest.skip("delta present; gating path not reachable")
-    except ImportError:
-        pass
-    from omldm_spark.streaming.sinks import DeltaUpsertSink
-
-    sink = DeltaUpsertSink(str(tmp_path / "dlt2"), ["k"])
-    with pytest.raises(NotImplementedError, match="delta-spark"):
-        sink(spark.createDataFrame([("a", 1)], "k string, v long"), 0)
-
-
-def test_state_api_v2_totals_when_protobuf_available(spark, tmp_path):
-    """Runs the transformWithStateInPandas MapState operator where the
-    v2 state-server protocol's protobuf dependency exists (skipped
-    here); totals must equal the batch GROUP BY."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from omldm_spark.streaming.stateful import streaming_user_totals_v2
-
-    pdf = pd.DataFrame({"event_type": ["a", "a", "b"],
-                        "user_id": [1, 1, 2], "val_c": [10, 20, 5]})
-    spark.createDataFrame(pdf).write.parquet(str(tmp_path / "v2src"))
-    stream = file_replay_source(
-        spark, str(tmp_path / "v2src"),
-        "event_type string, user_id long, val_c long")
-    out = streaming_user_totals_v2(stream)
-    rows: list = []
-    q = (
-        out.writeStream.outputMode("update")
-        .foreachBatch(lambda df, _b: rows.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "v2ck"))
-        .trigger(availableNow=True).start()
-    )
-    await_bounded(q, 120)
-    got = sorted((r["event_type"], r["user_id"], r["total_c"],
-                  r["n_events"]) for r in rows)
-    assert got == [("a", 1, 30, 2), ("b", 2, 5, 1)]
-
-
-def test_state_api_v2_gated_without_protobuf(spark):
-    """Without protobuf the operator raises the marked error up front
-    instead of crashing the JVM-spawned state-server worker."""
-    import pytest
-
-    try:
-        import google.protobuf  # noqa: F401
-        pytest.skip("protobuf present; gating path not reachable")
-    except ImportError:
-        pass
-    from omldm_spark.streaming.stateful import streaming_user_totals_v2
-
-    stream = file_replay_source(
-        spark, "/root/testdata/sf0.001", "event_type string")
-    with pytest.raises(NotImplementedError, match="protobuf"):
-        streaming_user_totals_v2(stream)
 
 
 class _FlakyFS:

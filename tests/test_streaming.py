@@ -72,21 +72,20 @@ def test_run_streaming_end_to_end(spark, tmp_path):
         ])
     )
     cat.apply_requests_df(requests)  # control plane first
-    preds, stats = [], []
+    stats = []
     sink = str(tmp_path / "pred_sink")
     run_job(spark, JobConfig(
         parallelism=4, dim=3, timeout_ms=120_000,
         input_path=src_dir, input_schema=spark.createDataFrame(pdf).schema,
         max_files_per_trigger=2,
-        predictions_sink=preds, stats_sink=stats, predictions_path=sink,
+        stats_sink=stats, predictions_path=sink,
         checkpoint_dir=str(tmp_path / "ckpt"),
     ), cat)
     assert spark.streams.active == []
     assert list(cat.pipelines) == [1]  # invalid Create dropped
     assert cat.pipelines[1].fitted == 540  # every training row, all batches
-    assert len(preds) == 60
-    # production path: predictions land in the distributed parquet sink
-    # (no driver collection), one row per forecasting record
+    # predictions land in the distributed parquet sink (no driver
+    # collection), one row per forecasting record
     sunk = spark.read.parquet(sink)
     assert sunk.count() == 60
     assert set(sunk.columns) == {"pipelineId", "recordId", "prediction"}
@@ -120,17 +119,18 @@ def test_multimodal_plumbing(spark):
     assert (frames["frame_idx"] % 2 == 0).all()
 
 
-def test_pre_create_buffering(spark):
+def test_pre_create_buffering(spark, tmp_path):
     """A2/M1: data arriving before any Create is buffered (bounded) and
     trained once the pipeline exists (SpokeLogic.scala:32-35,
     FlinkSpoke.scala:80)."""
     from omldm_spark.streaming.training_loop import make_batch_handler
 
     cat = PipelineCatalog()
-    preds, stats = [], []
+    stats = []
+    sink = str(tmp_path / "preds")
     handle = make_batch_handler(
         spark, cat, dim=3, num_partitions=4,
-        predictions_sink=preds, stats_sink=stats,
+        stats_sink=stats, predictions_path=sink,
     )
     pdf = _points_pdf(300)
     df = spark.createDataFrame(pdf)
@@ -142,7 +142,7 @@ def test_pre_create_buffering(spark):
     assert len(stats) == 1 and stats[0].fitted == 540
     # r2 ADVICE: forecasting rows that arrived pre-Create are buffered too
     # and scored once a model exists (30 buffered + 30 new)
-    assert len(preds) == 60
+    assert spark.read.parquet(sink).count() == 60
 
 
 def test_dedup_then_train_composition(spark, tmp_path):
@@ -163,12 +163,13 @@ def test_dedup_then_train_composition(spark, tmp_path):
 
     cat = PipelineCatalog()
     cat.apply_request({"id": 1, "request": "Create", "learner": {"name": "PA"}})
-    preds, stats = [], []
+    stats = []
+    sink = str(tmp_path / "dpreds")
     from omldm_spark.streaming.training_loop import make_batch_handler
 
     handle = make_batch_handler(
         spark, cat, dim=3, num_partitions=4,
-        predictions_sink=preds, stats_sink=stats,
+        stats_sink=stats, predictions_path=sink,
     )
     q = (
         deduped.writeStream.foreachBatch(handle)
@@ -179,7 +180,7 @@ def test_dedup_then_train_composition(spark, tmp_path):
     await_bounded(q, 120)
     # 400 unique rows, 360 training / 40 forecasting; duplicates suppressed
     assert cat.pipelines[1].fitted == 360
-    assert len(preds) == 40
+    assert spark.read.parquet(sink).count() == 40
 
 
 def test_query_responses_drained_with_model_parameters(spark):

@@ -127,10 +127,11 @@ def test_unified_stream_create_train_query_response(spark, tmp_path):
     unified = deduped.unionByName(marked.filter(F.col("kind") == "request"))
 
     cat = PipelineCatalog(path=str(tmp_path / "cat.jsonl"))
-    preds, stats, responses = [], [], []
+    stats, responses = [], []
+    sink = str(tmp_path / "preds")
     handle = make_batch_handler(
-        spark, cat, dim=3, num_partitions=4,
-        predictions_sink=preds, stats_sink=stats, responses_sink=responses,
+        spark, cat, dim=3, num_partitions=4, predictions_path=sink,
+        stats_sink=stats, responses_sink=responses,
     )
     q = (
         unified.writeStream.foreachBatch(handle)
@@ -145,7 +146,7 @@ def test_unified_stream_create_train_query_response(spark, tmp_path):
     assert list(cat.pipelines) == [1]
     spec = cat.pipelines[1]
     assert spec.fitted == 360          # 400 unique * 90% training
-    assert len(preds) == 40            # forecasting rows, deduped
+    assert spark.read.parquet(sink).count() == 40  # forecasting, deduped
     assert len(stats) >= 2             # multiple BSP rounds
     # Query drained into a full response during the run
     assert len(responses) == 1
