@@ -13,17 +13,20 @@ moments in the training-loop state (SURVEY.md §7 step 5), and the
 training-path chain (``apply_chain``) applies them as ``array(...)``
 literals inside ``transform`` lambdas: interpreted ``CodegenFallback``
 expressions, so each batch's new stats reuse the generated code instead of
-compiling fresh classes.
+compiling fresh classes. Over a collected micro-batch the same chain runs in
+numpy on the driver, with the same result bits.
 """
 
 from __future__ import annotations
 
 from itertools import combinations_with_replacement
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .vector import sql_col, sql_double
+from .vector import list_column, matrix, spark_round, sql_col, sql_double
 
 
 def standard_scaler_stats(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -110,8 +113,19 @@ def polynomial_features(df: DataFrame, cols: list[str], degree: int = 2) -> Data
 # partitioning, and a DuckDB oracle reproduces it bit-for-bit. The mean/std
 # derivation below mirrors, operation for operation, the SQL text in
 # scaler_stats_sql(); keep the two in sync.
+#
+# Each step also has a numpy form for the collected micro-batch the training
+# loop handles on the driver (``apply_chain`` over a pyarrow Table), equal to
+# the Catalyst form bit for bit. Spark's round(v, 0) of a double rounds half
+# away from zero on the exact double: it rounds v's shortest decimal string,
+# and every decimal string that parses back to v lies on the same side of
+# k.5 as v, so ``vector.spark_round`` reproduces the quantizer of the moments
+# and of the RobustScaler histogram, summed as Python ints. The transforms
+# repeat the SQL's IEEE operations in its order, and a comparison treats
+# NaN as Spark does, larger than every double.
 
 STATS_QUANT = 1_000_000  # 1e-6 feature resolution for scaler fit stats
+ROBUST_QUANT = 100  # RobustScaler histogram grid (cents)
 
 
 def _el(col: str, i: int) -> str:
@@ -166,6 +180,53 @@ def poly_expand_expr(col: str, dim: int, degree: int):
     return _array(terms), len(terms)
 
 
+def poly_expand_np(X: np.ndarray, degree: int) -> np.ndarray:
+    """:func:`poly_expand_expr`'s terms over the rows of ``X``, each
+    monomial multiplied left to right as the SQL text does."""
+    if degree < 1:
+        raise ValueError("degree must be >= 1")
+    terms = []
+    for combo in (c for d in range(1, degree + 1)
+                  for c in combinations_with_replacement(range(X.shape[1]), d)):
+        t = X[:, combo[0]]
+        for i in combo[1:]:
+            t = t * X[:, i]
+        terms.append(t)
+    return np.stack(terms, axis=1)
+
+
+def _normalize_expr(col: str, dim: int):
+    """Row-local L2 over the ARRAY<DOUBLE> column ``col``: x_i / ||x||, or
+    0.0 where the norm is not positive (Spark orders NaN above every
+    double, so a NaN norm counts as positive)."""
+    norm = "sqrt(" + " + ".join(
+        ["0.0D"] + [f"{_el(col, i)} * {_el(col, i)}" for i in range(dim)]
+    ) + ")"
+    return _array([
+        f"CASE WHEN {norm} > 0 THEN {_el(col, i)} / {norm} ELSE 0.0D END"
+        for i in range(dim)
+    ])
+
+
+def _normalize_np(X: np.ndarray) -> np.ndarray:
+    """:func:`_normalize_expr` over the rows of ``X``, bit for bit."""
+    acc = np.zeros(len(X))
+    for i in range(X.shape[1]):
+        acc = acc + X[:, i] * X[:, i]
+    norm = np.sqrt(acc)[:, None]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where((norm > 0) | np.isnan(norm), X / norm, 0.0)
+
+
+def _scale_np(X: np.ndarray, shift, scale, otherwise: float) -> np.ndarray:
+    """:func:`_scale_by_state` over the rows of ``X``, bit for bit."""
+    s = np.array([v if v > 0 else 0.0 for v in scale], dtype=float)
+    pos = s > 0
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(pos, (X - np.asarray(shift, dtype=float))
+                        / np.where(pos, s, 1.0), otherwise)
+
+
 def _moment_aggs(col: str, dim: int, quant: int) -> list[str]:
     """One aggregation (``selectExpr`` list) producing exact integer moments
     per element: n, s_i = Σ round(x_i*Q), ss_i = Σ round(x_i*Q)^2, mn_i, mx_i."""
@@ -176,6 +237,31 @@ def _moment_aggs(col: str, dim: int, quant: int) -> list[str]:
                  f"CAST(min({q}) AS BIGINT) AS mn_{i}",
                  f"CAST(max({q}) AS BIGINT) AS mx_{i}"]
     return aggs
+
+
+def _moment_row_np(X: np.ndarray, quant: int) -> dict:
+    """:func:`_moment_aggs`' one row, over the rows of ``X`` on the driver.
+    Spark's DECIMAL cast turns a NaN or infinite ``round(x*Q, 0)`` into
+    NULL, which ``count(1)`` counts and the sums, min and max skip. A
+    finite value outside BIGINT fails the min/max cast, and a sum of
+    squares of 10^38 or more the DECIMAL(38,0) sum, in Spark (ANSI), and
+    raises here."""
+    Q = spark_round(X * quant)
+    fin = Q[np.isfinite(Q)]
+    if not ((fin >= -2.0 ** 63) & (fin < 2.0 ** 63)).all():
+        raise ArithmeticError(
+            "scaler moments: a quantized feature value does not fit BIGINT")
+    row: dict = {"n": len(X)}
+    for i in range(X.shape[1]):
+        q = [int(v) for v in Q[np.isfinite(Q[:, i]), i]]
+        row[f"s_{i}"] = sum(q) if q else None
+        row[f"ss_{i}"] = sum(v * v for v in q) if q else None
+        if q and row[f"ss_{i}"] >= 10 ** 38:
+            raise ArithmeticError(
+                "scaler moments: a sum of squares does not fit DECIMAL(38,0)")
+        row[f"mn_{i}"] = min(q, default=None)
+        row[f"mx_{i}"] = max(q, default=None)
+    return row
 
 
 def _merge_moments(state: dict | None, row, dim: int) -> dict:
@@ -246,8 +332,38 @@ def _hyper(p: dict) -> dict:
     return {k: v for k, v in (p.get("hyperParameters") or {}).items()}
 
 
+def _scaler_transform(name: str, st: dict, dim: int, quant: int):
+    """(shift, scale, otherwise) of a fitted scaler: its transform is
+    ``(x_i - shift_i) / scale_i``, or ``otherwise`` where ``scale_i`` is not
+    positive."""
+    if name == "RobustScaler":
+        ks = st.get("k", [0] * dim)
+        shift, scale = [], []
+        for i in range(dim):
+            p25, p50, p75 = _hist_quantiles(st["h"][i], (0.25, 0.5, 0.75))
+            # histogram keys live at grid level k: one bin spans 2^k
+            # quanta, so map back to the value scale before building the
+            # (exact-at-k=0) scaling expression
+            grid = 1 << ks[i]
+            p25, p50, p75 = p25 * grid, p50 * grid, p75 * grid
+            shift.append(float(p50) / ROBUST_QUANT)
+            scale.append(float(p75 - p25) / ROBUST_QUANT)
+        return shift, scale, 0.0
+    if name == "StandardScaler":
+        shift, scale = zip(*(mean_std_from_moments(st, i, quant)
+                             for i in range(dim)))
+        return list(shift), list(scale), 0.0
+    lo, hi = zip(*(min_max_from_moments(st, i, quant) for i in range(dim)))
+    if name == "MaxAbsScaler":
+        # max|x| falls out of the running min/max moments — no new state
+        # shape for the streaming chain; the zero shift keeps x / max|x|
+        # bit for bit (x - 0.0 is x)
+        return [0.0] * dim, [max(abs(a), abs(b)) for a, b in zip(lo, hi)], 0.0
+    return list(lo), [b - a for a, b in zip(lo, hi)], 0.5
+
+
 def apply_chain(
-    df: DataFrame,
+    df: DataFrame | pa.Table,
     preprocessors: list[dict],
     features_col: str,
     dim: int,
@@ -269,99 +385,77 @@ def apply_chain(
     applied as-is, matching the reference's transform-only scoring. The
     chain's step columns are named after ``out_col``, so several chains can
     add their outputs to one frame.
+
+    ``df`` may instead be a pyarrow Table whose every ``features_col`` row
+    holds ``dim`` non-null doubles (the training loop's collected
+    micro-batch). The same steps then run in numpy on the driver, with no
+    Spark job, and only ``out_col`` is appended: the fitted state and the
+    output bits are the Catalyst form's (see the exactness note above).
     """
+    driver = isinstance(df, pa.Table)
     state = list(state) if state else [None] * len(preprocessors)
     if len(state) < len(preprocessors):
         state = state + [None] * (len(preprocessors) - len(state))
     cur, cur_dim = features_col, dim
+    X = matrix(df.column(features_col), dim) if driver else None
     for idx, p in enumerate(preprocessors):
         name = p.get("name")
-        tmp = f"{out_col}_{idx}"
         if name == "PolynomialFeatures":
             degree = int(_hyper(p).get("degree", 2))
-            expr, cur_dim = poly_expand_expr(cur, cur_dim, degree)
-            df = df.withColumn(tmp, expr)
-        elif name == "RobustScaler":
-            # state = per-dim value-count histogram over round(x*RQ)
-            # integers: exact, batching-order-proof (counter addition is
-            # commutative), bounded by the DISTINCT quantized values seen
-            # (RQ=100 -> cents grid), not by row count
-            RQ = 100
-            if update:
-                state[idx] = _robust_fit_batch(
-                    df, cur, cur_dim, state[idx], RQ, robust_hist_max
-                )
-            st = state[idx]
-            if update and not any(st["h"]):
-                # nothing fitted yet and this fit frame is empty: there is
-                # no row to scale, so the column passes through
-                df = df.withColumn(tmp, F.col(cur))
-                cur = tmp
-                continue
-            if st is None:
-                raise ValueError(
-                    f"{name} at chain position {idx} has no fitted stats; "
-                    "transform-only application requires a prior fit pass"
-                )
-            ks = st.get("k", [0] * cur_dim)
-            shift, scale = [], []
-            for i in range(cur_dim):
-                p25, p50, p75 = _hist_quantiles(st["h"][i], (0.25, 0.5, 0.75))
-                # histogram keys live at grid level k: one bin spans 2^k
-                # quanta, so map back to the value scale before building
-                # the (exact-at-k=0) scaling expression
-                grid = 1 << ks[i]
-                p25, p50, p75 = p25 * grid, p50 * grid, p75 * grid
-                shift.append(float(p50) / RQ)
-                scale.append(float(p75 - p25) / RQ)
-            df = df.withColumn(tmp, _scale_by_state(cur, shift, scale, "0.0D"))
+            if driver:
+                X = poly_expand_np(X, degree)
+                cur_dim = X.shape[1]
+            else:
+                expr, cur_dim = poly_expand_expr(cur, cur_dim, degree)
         elif name == "Normalizer":
             # stateless row-local L2: no fit pass, no state slot
-            norm = "sqrt(" + " + ".join(
-                ["0.0D"] + [f"{_el(cur, i)} * {_el(cur, i)}" for i in range(cur_dim)]
-            ) + ")"
-            els = [
-                f"CASE WHEN {norm} > 0 THEN {_el(cur, i)} / {norm} ELSE 0.0D END"
-                for i in range(cur_dim)
-            ]
-            df = df.withColumn(tmp, _array(els))
-        elif name in ("StandardScaler", "MinMaxScaler", "MaxAbsScaler"):
-            if update:
-                row = df.selectExpr(*_moment_aggs(cur, cur_dim, quant)).first()
+            if driver:
+                X = _normalize_np(X)
+            else:
+                expr = _normalize_expr(cur, cur_dim)
+        elif name in ("StandardScaler", "MinMaxScaler", "MaxAbsScaler",
+                      "RobustScaler"):
+            if update and name == "RobustScaler":
+                # state = per-dim value-count histogram over round(x*RQ)
+                # integers: exact, batching-order-proof (counter addition
+                # is commutative), bounded by the DISTINCT quantized values
+                # seen (RQ=100 -> cents grid), not by row count
+                state[idx] = _robust_fit_batch(
+                    *(_robust_source_np(X) if driver
+                      else _robust_source_df(df, cur, cur_dim)),
+                    cur_dim, state[idx], robust_hist_max,
+                )
+            elif update:
+                row = (_moment_row_np(X, quant) if driver else
+                       df.selectExpr(*_moment_aggs(cur, cur_dim, quant)).first())
                 if int(row["n"]) > 0:
                     state[idx] = _merge_moments(state[idx], row, cur_dim)
             st = state[idx]
-            if st is None and update:
-                # nothing fitted yet and this fit frame is empty: there is
-                # no row to scale, so the column passes through
-                df = df.withColumn(tmp, F.col(cur))
-                cur = tmp
-                continue
-            if st is None:
+            if st is None and not update:
                 raise ValueError(
                     f"{name} at chain position {idx} has no fitted stats; "
                     "transform-only application requires a prior fit pass"
                 )
-            if name == "StandardScaler":
-                shift, scale = zip(*(mean_std_from_moments(st, i, quant)
-                                     for i in range(cur_dim)))
+            if st is None or (name == "RobustScaler" and not any(st["h"])):
+                # nothing fitted yet and this fit frame is empty: there is
+                # no row to scale, so the column passes through
+                expr = F.col(cur)
             else:
-                lo, hi = zip(*(min_max_from_moments(st, i, quant)
-                               for i in range(cur_dim)))
-                if name == "MaxAbsScaler":
-                    # max|x| falls out of the running min/max moments —
-                    # no new state shape for the streaming chain; the zero
-                    # shift keeps x / max|x| bit for bit (x - 0.0 is x)
-                    shift = [0.0] * cur_dim
-                    scale = [max(abs(a), abs(b)) for a, b in zip(lo, hi)]
+                shift, scale, other = _scaler_transform(name, st, cur_dim,
+                                                        quant)
+                if driver:
+                    X = _scale_np(X, shift, scale, other)
                 else:
-                    shift, scale = lo, [b - a for a, b in zip(lo, hi)]
-            df = df.withColumn(tmp, _scale_by_state(
-                cur, shift, scale,
-                "0.5D" if name == "MinMaxScaler" else "0.0D"))
+                    expr = _scale_by_state(cur, shift, scale,
+                                           sql_double(other))
         else:
             raise ValueError(f"unknown preprocessor {name!r}")
-        cur = tmp
+        if not driver:
+            tmp = f"{out_col}_{idx}"
+            df = df.withColumn(tmp, expr)
+            cur = tmp
+    if driver:
+        return df.append_column(out_col, list_column(X)), cur_dim, state
     df = df.withColumn(out_col, F.col(cur))
     return df, cur_dim, state
 
@@ -457,10 +551,68 @@ def robust_scale(df: DataFrame, cols: list[str], stats: DataFrame) -> DataFrame:
                       for pn in ("p25", "p50", "p75")])
 
 
-def _robust_fit_batch(
-    df: DataFrame, cur: str, cur_dim: int, st: dict | None,
-    rq: int, hist_max: int,
-) -> dict:
+def _robust_source_df(df: DataFrame, cur: str, cur_dim: int):
+    """(probe, hist) of :func:`_robust_fit_batch` over the ARRAY<DOUBLE>
+    column ``cur`` of ``df``: each a Spark job, collected."""
+    raw = df.select(
+        F.posexplode(_array([
+            f"CAST(round({_el(cur, i)} * {ROBUST_QUANT}, 0) AS BIGINT)"
+            for i in range(cur_dim)
+        ])).alias("dim", "v")
+    )
+
+    def at_levels(levels):
+        karr = f"array({', '.join(str(int(k)) for k in levels)})"
+        return raw.withColumn(
+            "kk", F.expr(f"element_at({karr}, dim + 1)")
+        ).withColumn("vq", F.expr("shiftright(v, kk)"))
+
+    def probe(ks):
+        return {
+            int(r["dim"]): (int(r["mn"]), int(r["mx"]), int(r["nb"]))
+            for r in at_levels(ks).groupBy("dim").agg(
+                F.min("v").alias("mn"), F.max("v").alias("mx"),
+                F.countDistinct("vq").alias("nb"),
+            ).collect()
+        }
+
+    def hist(ks):
+        # the bounded histogram collect (<= ~hist_max rows per dim by the
+        # range bound in _robust_fit_batch)
+        return [
+            (r["dim"], r["vq"], r["c"]) for r in at_levels(ks)
+            .groupBy("dim", "vq")
+            .agg(F.count(F.lit(1)).cast("long").alias("c")).collect()
+        ]
+
+    return probe, hist
+
+
+def _robust_source_np(X: np.ndarray):
+    """:func:`_robust_source_df` over the rows of ``X`` on the driver. The
+    BIGINT cast of a NaN, infinite or out-of-range value raises in Spark
+    (ANSI ``CAST_OVERFLOW``), and raises here."""
+    V = spark_round(X * ROBUST_QUANT)
+    if not ((V >= -2.0 ** 63) & (V < 2.0 ** 63)).all():
+        raise ArithmeticError(
+            "RobustScaler: a quantized feature value does not fit BIGINT")
+    V = V.astype(np.int64)
+
+    def probe(ks):
+        return {i: (int(V[:, i].min()), int(V[:, i].max()),
+                    len(np.unique(V[:, i] >> ks[i])))
+                for i in range(V.shape[1]) if len(V)}
+
+    def hist(ks):
+        return [(i, v, c) for i in range(V.shape[1])
+                for v, c in zip(*np.unique(V[:, i] >> ks[i],
+                                           return_counts=True))]
+
+    return probe, hist
+
+
+def _robust_fit_batch(probe, hist, cur_dim: int, st: dict | None,
+                      hist_max: int) -> dict:
     """Fold one batch into the RobustScaler's per-dim value-count
     histogram state with a BOUNDED driver footprint (grid clamping).
 
@@ -476,36 +628,20 @@ def _robust_fit_batch(
     the bound) the quantiles are exact and two-halves == full-batch state
     equality holds; at k>0 the disc quantile is exact on the coarse grid,
     i.e. within ``2^k/RQ`` of the true value.  Counter addition stays
-    commutative, so batching order cannot change the state either way."""
+    commutative, so batching order cannot change the state either way.
+    ``probe(levels)`` returns {dim: (min, max, distinct bins at
+    levels)} and ``hist(levels)`` the (dim, bin, count) triples of the
+    batch (:func:`_robust_source_df` or :func:`_robust_source_np`)."""
     st = st or {"h": [dict() for _ in range(cur_dim)]}
     hs = [dict(h) for h in st["h"]]
     old = list(st.get("k", [0] * cur_dim))
     ks = list(old)
     target = max(2, hist_max // 2)
-    raw = df.select(
-        F.posexplode(_array([
-            f"CAST(round({_el(cur, i)} * {rq}, 0) AS BIGINT)"
-            for i in range(cur_dim)
-        ])).alias("dim", "v")
-    )
-
-    def at_levels(levels):
-        karr = f"array({', '.join(str(int(k)) for k in levels)})"
-        return raw.withColumn(
-            "kk", F.expr(f"element_at({karr}, dim + 1)")
-        ).withColumn("vq", F.expr("shiftright(v, kk)"))
-
-    probe = {
-        int(r["dim"]): (int(r["mn"]), int(r["mx"]), int(r["nb"]))
-        for r in at_levels(ks).groupBy("dim").agg(
-            F.min("v").alias("mn"), F.max("v").alias("mx"),
-            F.countDistinct("vq").alias("nb"),
-        ).collect()
-    }
+    probed = probe(ks)
     for i in range(cur_dim):
-        if i not in probe:
+        if i not in probed:
             continue  # empty batch for this dim
-        mn, mx, nb = probe[i]
+        mn, mx, nb = probed[i]
         if nb + len(hs[i]) <= target:
             continue  # already fits at the current level
         while ((mx - mn) >> ks[i]) + 1 > target:
@@ -525,14 +661,9 @@ def _robust_fit_batch(
             if len(hs[i]) <= target or not hs[i]:
                 break
             ks[i] += 1
-    # the bounded histogram collect (<= ~hist_max rows per dim by the
-    # range bound above)
-    for r in (
-        at_levels(ks).groupBy("dim", "vq")
-        .agg(F.count(F.lit(1)).cast("long").alias("c")).collect()
-    ):
-        key = str(int(r["vq"]))
-        hs[int(r["dim"])][key] = hs[int(r["dim"])].get(key, 0) + int(r["c"])
+    for dim_, vq, c in hist(ks):
+        key = str(int(vq))
+        hs[int(dim_)][key] = hs[int(dim_)].get(key, 0) + int(c)
     return {"h": hs, "k": ks}
 
 

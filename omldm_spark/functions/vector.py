@@ -2,11 +2,18 @@
 
 The reference's Breeze vectors (src/main/scala/omldm/utils/CommonUtils.scala:
 22-23) become plain array columns; dot products and norms stay JVM-side via
-higher-order functions (zip_with/aggregate), so linear-model *scoring* runs
-no Python. Those two functions are ``CodegenFallback`` expressions: they are
-interpreted, and the generated code of the projection around them reaches
-them through its ``references`` array instead of compiling them.
-Training kernels (numpy) live in learners/.
+higher-order functions (zip_with/aggregate), so linear-model scoring over a
+DataFrame runs no Python. Those two functions are ``CodegenFallback``
+expressions: they are interpreted, and the generated code of the projection
+around them reaches them through its ``references`` array instead of
+compiling them. Training kernels (numpy) live in learners/.
+
+A micro-batch small enough to be collected is scored on the driver instead
+(``streaming/training_loop``): :func:`linear_predict_np` is
+:func:`linear_predict_sql`'s form over a numpy matrix, and
+:func:`spark_round` is Spark's ``round(v, 0)``, both bit for bit.
+:func:`matrix` and :func:`list_column` convert an Arrow ``list<double>``
+column to that matrix and back.
 
 Expressions built from model or scaler state (one literal per coefficient)
 are rendered as Spark SQL text and parsed by the JVM in one call
@@ -22,6 +29,8 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -67,6 +76,44 @@ def linear_predict_sql(col: str, weights: list[float], bias: float) -> str:
     ws = ", ".join(sql_double(w) for w in weights)
     return (f"aggregate(zip_with({sql_col(col)}, array({ws}), (x, w) -> x * w), "
             f"0.0D, (acc, v) -> acc + v, acc -> acc + {sql_double(bias)})")
+
+
+def linear_predict_np(X: np.ndarray, weights: list[float],
+                      bias: float) -> np.ndarray:
+    """:func:`linear_predict_sql` over the rows of ``X``, bit for bit: the
+    products ``x_i * w_i`` added left to right from 0.0, then the bias."""
+    acc = np.zeros(len(X))
+    for i, w in enumerate(weights):
+        acc = acc + X[:, i] * w
+    return acc + bias
+
+
+def spark_round(v: np.ndarray) -> np.ndarray:
+    """Spark's ``round(v, 0)`` of doubles: half away from zero on the exact
+    double. Spark rounds the shortest decimal string of ``v``, and every
+    decimal string that parses back to ``v`` lies on the same side of k.5
+    as ``v`` itself, so the string and the exact value round alike.
+    ``|v| - floor(|v|)`` is exact. A zero result is +0.0, as Spark's
+    decimal rounding has no negative zero (the ``+ 0.0``); NaN and the
+    infinities pass through."""
+    a = np.abs(v)
+    f = np.floor(a)
+    with np.errstate(invalid="ignore"):  # inf - inf
+        return np.copysign(f + (a - f >= 0.5), v) + 0.0
+
+
+def matrix(col: pa.ChunkedArray, dim: int) -> np.ndarray:
+    """An Arrow ``list<double>`` column whose every row holds ``dim``
+    non-null values, as an ``(rows, dim)`` float matrix."""
+    flat = col.combine_chunks().flatten()
+    return flat.to_numpy(zero_copy_only=False).reshape(-1, dim)
+
+
+def list_column(X: np.ndarray) -> pa.Array:
+    """The rows of ``X`` as an Arrow ``list<double>`` column."""
+    n, d = X.shape
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * d)
+    return pa.ListArray.from_arrays(offsets, pa.array(X.ravel(), pa.float64()))
 
 
 def linear_predict(col: str, weights: list[float], bias: float) -> Column:

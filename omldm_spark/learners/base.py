@@ -15,8 +15,8 @@ A learner is a stateless strategy object over numpy state dicts:
 
 State dicts always carry ``n`` (points fitted) so merges weight correctly.
 The trainer (``trainer.py``) runs partial_fit once per worker key group
-(``fit_groups``: ``groupBy(key).applyInPandas``, or on the driver over one
-collect when the round fits one Arrow batch) and merges the tiny per-worker
+(``fit_groups``: ``groupBy(key).applyInPandas``, or on the driver over the
+streaming round's collected micro-batch) and merges the tiny per-worker
 states — one BSP round == one reference protocol round (SURVEY.md §7).
 """
 

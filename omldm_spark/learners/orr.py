@@ -26,7 +26,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import sql_col, sql_double
+from ..functions.vector import spark_round, sql_col, sql_double
 
 
 def gram_aggregate(
@@ -141,8 +141,10 @@ class ORRLearner(Learner):
 
     def partial_fit(self, X: np.ndarray, y: np.ndarray, state: dict, hyper: dict) -> dict:
         quant = int(float(hyper.get("quant", GRAM_QUANT)))
-        qX = np.rint(np.asarray(X, dtype=float) * quant).astype(object)
-        qy = np.rint(np.asarray(y, dtype=float) * quant).astype(object)
+        # Spark's round(v, 0) (half away from zero), as Python ints: the
+        # same integers fit_dataframe's DECIMAL sums add
+        qX, qy = (np.frompyfunc(int, 1, 1)(
+            spark_round(np.asarray(a, dtype=float) * quant)) for a in (X, y))
         d = qX.shape[1]
         sxx = [int(v) for v in np.asarray(state["sxx"]).ravel()]
         for t, (i, j) in enumerate(_tri(d)):
@@ -230,10 +232,18 @@ class ORRLearner(Learner):
         features_col: str = "features",
         label_col: str = "label",
         init_state: dict | None = None,
+        part_col: str | None = None,
     ) -> dict:
         """One exact-integer Gram aggregation over the batch + driver solve +
         one SSE aggregation (cum_loss, computed with the POST-solve weights —
-        the closed-form analogue of prequential loss)."""
+        the closed-form analogue of prequential loss).
+
+        The SSE is a double sum, so its last bits depend on the order Spark
+        adds in: each partition left to right, then the partitions' sums in
+        partition order. ``part_col`` names a column holding the partition
+        each row came from in a frame the rows were collected from; the SSE
+        is then summed per such partition and the sums added in that order,
+        as the aggregate over the original frame adds them."""
         quant = int(float(hyper.get("quant", GRAM_QUANT)))
         state = init_state or self.init_state(dim, hyper)
         d = dim
@@ -271,7 +281,15 @@ class ORRLearner(Learner):
         pred = " + ".join([sql_double(w[-1])]
                           + [f"{sql_double(w[i])} * {el(i)}" for i in range(d)])
         err = f"({y} - ({pred}))"
-        sse = points.selectExpr(f"sum({err} * {err}) AS sse").first()["sse"]
+        if part_col is None:
+            sse = points.selectExpr(f"sum({err} * {err}) AS sse").first()["sse"]
+        else:
+            sse = None
+            parts = points.groupBy(part_col).agg(
+                F.expr(f"sum({err} * {err})").alias("s")).collect()
+            for r in sorted(parts, key=lambda r: r[part_col]):
+                if r["s"] is not None:
+                    sse = r["s"] if sse is None else sse + r["s"]
         state["cum_loss"] = float(state["cum_loss"]) + float(sse or 0.0)
         return state
 

@@ -4,7 +4,8 @@ Reference hot path (SURVEY.md §3.1): workers partial-fit, push params to a
 hub via an RPC fabric + Kafka feedback topic; the hub merges and broadcasts
 back. One worker operator updates every live pipeline on each record
 (FlinkSpoke.scala:101). Here one *round* does the same for every model it
-is handed, in one Spark pass:
+is handed, in one keyed pass (a Spark pass, or the driver's over a
+collected micro-batch):
 
     rows keyed by worker --partial_fit of every model, per key--> one
     tiny state row per (model, worker) --driver merge per model-->
@@ -21,12 +22,11 @@ kernel is the only Python training kernel:
                  workers' own states; for a global model the caller hands
                  every key the same broadcast state and merges the returned
                  per-key partials with ``merge_round``, so the streaming
-                 round trains both kinds in one keyed pass. A pass whose
-                 known row count fits one Arrow batch runs the kernel on the
-                 driver over one collect, with no Python worker task (each
-                 costs a fixed start-up far above a micro-batch's
-                 training); any other runs it as ``groupBy(key)
-                 .applyInPandas``.
+                 round trains both kinds in one keyed pass. Over a
+                 DataFrame the pass is a ``groupBy(key).applyInPandas``;
+                 over a pyarrow Table (the streaming round's collected
+                 micro-batch) the same kernel runs on the driver, with no
+                 Spark job.
 * ``fit``        one such pass per epoch over the rows keyed by the hash
                  partition of a worker column, every key starting from the
                  global state, then ``merge_round`` in key order.
@@ -49,6 +49,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -302,7 +303,7 @@ def evaluate(
 
 
 def fit_groups(
-    points: DataFrame,
+    points: DataFrame | pa.Table,
     learner: str | list[Task],
     dim: int = 0,
     hyper: dict | None = None,
@@ -312,7 +313,6 @@ def fit_groups(
     label_col: str = "label",
     order_cols: list[str] | None = None,
     init_states: dict[int, dict] | None = None,
-    rows: int | None = None,
 ) -> dict[int, dict] | list[dict[int, dict]]:
     """Per-group sequential training: each key keeps ITS OWN model. Returns
     {key: state}, or with a list of :class:`Task` one such dict per task,
@@ -325,16 +325,15 @@ def fit_groups(
     regardless of arrival order as long as ``order_cols`` tell every two
     rows of a key apart; rows that tie on them may train in arrival order.
 
-    Task count: each Python task costs a fixed start-up, so when ``rows``
-    (the row count of ``points``, when the caller knows it) fits one Arrow
-    batch (``spark.sql.execution.arrow.maxRecordsPerBatch``) the selected
-    columns are collected to the driver once, through Arrow in one task
-    with no exchange, and the same group kernel runs there on each key in
-    ascending order: no Python worker task. Otherwise (``rows=None`` too)
-    the pass is a ``groupBy(key).applyInPandas`` in the session's shuffle
-    partitions (which AQE may coalesce), one task per key at most. Each group is
-    trained alone either way, so the states are bit-identical. A NULL key
-    fails the pass in both branches.
+    Placement: over a DataFrame the pass is a ``groupBy(key)
+    .applyInPandas`` in the session's shuffle partitions (which AQE may
+    coalesce), one task per key at most. ``points`` may instead be a
+    pyarrow Table already on the driver (the training loop's collected
+    micro-batch: each Python task costs a fixed start-up far above a
+    micro-batch's training); the same group kernel then runs there on each
+    key in ascending order, with no Spark job. Each group is trained alone
+    either way, so the states are bit-identical. A NULL key fails the pass
+    in both placements.
     """
     single, tasks = _tasks(learner, dim, hyper, init_states)
     models = [_Model(t) for t in tasks]
@@ -354,17 +353,15 @@ def fit_groups(
         ]
         return _state_rows(models, key, locals_)
 
-    sel = points.select(key_col, *dict.fromkeys(cols), label_col, *order_cols)
-    if rows is not None and rows <= int(points.sparkSession.conf.get(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", "10000")):
-        # bounded by rows <= maxRecordsPerBatch: one Arrow batch on the driver
-        pdf = sel.coalesce(1).toArrow().to_pandas()
+    sel = [key_col, *dict.fromkeys(cols), label_col, *order_cols]
+    if isinstance(points, DataFrame):
+        state_rows = (points.select(*sel).groupBy(key_col)
+                      .applyInPandas(run_group, schema=STATE_SCHEMA).collect())
+    else:
+        pdf = points.select(sel).to_pandas()
         state_rows = [
             r for _, g in pdf.groupby(key_col, sort=True, dropna=False)
             for r in run_group(g).to_dict("records")]
-    else:
-        state_rows = (sel.groupBy(key_col)
-                      .applyInPandas(run_group, schema=STATE_SCHEMA).collect())
     out: list[dict[int, dict]] = [{} for _ in tasks]
     for r in state_rows:
         j, key = r["model"], int(r["grp"])

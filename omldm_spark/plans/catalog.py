@@ -128,13 +128,18 @@ class PipelineCatalog:
 
     def apply_requests_df(self, requests_df) -> list[str]:
         """Batch entry point for foreachBatch: collect (tiny control topic)
-        and apply in ARRIVAL order — requestId is the arrival key (the
-        reference consumes the one-partition request topic in offset order,
-        so e.g. Delete-then-reCreate of the same id within a batch must
-        replay as Delete, Create). Rows without a requestId keep their
-        collection order after all keyed rows (stable sort)."""
-        rows = [r.asDict(recursive=True) for r in requests_df.collect()]
-        rows.sort(
+        and :meth:`apply_requests`."""
+        return self.apply_requests(
+            [r.asDict(recursive=True) for r in requests_df.collect()])
+
+    def apply_requests(self, rows: list[dict]) -> list[str]:
+        """Apply request rows in ARRIVAL order — requestId is the arrival
+        key (the reference consumes the one-partition request topic in
+        offset order, so e.g. Delete-then-reCreate of the same id within a
+        batch must replay as Delete, Create). Rows without a requestId keep
+        their collection order after all keyed rows (stable sort)."""
+        rows = sorted(
+            rows,
             key=lambda r: (
                 r.get("requestId") is None,
                 r.get("requestId") if r.get("requestId") is not None else 0,
@@ -145,12 +150,19 @@ class PipelineCatalog:
     # -- persistence --------------------------------------------------------
 
     def save(self) -> None:
+        """Write the catalog to ``path`` atomically: the full text goes to
+        ``path + ".tmp"``, is flushed to disk, and replaces ``path`` in one
+        rename, so a crash mid-save leaves the previous catalog whole."""
         if not self.path:
             return
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        with open(self.path, "w") as f:
+        tmp = self.path + ".tmp"
+        with open(tmp, "w") as f:
             for spec in self.pipelines.values():
                 f.write(spec.to_json() + "\n")
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self.path)
 
     def _load(self) -> None:
         with open(self.path) as f:

@@ -16,13 +16,16 @@ one batch IS one protocol round, for every live pipeline at once:
 
 The reference's worker operator likewise updates every live pipeline on
 each record (FlinkSpoke.scala:101); see ``train_batch`` for which pipelines
-share a pass. Each PySpark Python task has a fixed start-up cost far above
-a micro-batch's training, so when the batch's training rows fit one Arrow
-batch (``spark.sql.execution.arrow.maxRecordsPerBatch``), from the row
-counts the handler's request collect observes, a keyed pass collects them
-once and trains on the driver, with no Python worker task; a larger batch
-keeps the grouped ``applyInPandas`` in the session's shuffle partitions.
-The models do not depend on the branch.
+share a pass. Each Spark job and each PySpark Python task has a fixed cost
+far above a small micro-batch's work, so the handler collects the batch
+once, bounded at one Arrow batch
+(``spark.sql.execution.arrow.maxRecordsPerBatch`` rows). A batch that fits,
+with well-formed features, runs its whole round on the driver over that
+collect: requests, the chains' fits and transforms, the keyed training
+kernel and forecast scoring, then one one-task predictions write. Any
+other batch runs the round as Spark jobs over the batch, the grouped
+``applyInPandas`` in the session's shuffle partitions among them. The
+catalog, the predictions and the responses do not depend on the placement.
 
 Protocol semantics under BSP (SURVEY.md §2.9): Synchronous is native;
 Asynchronous/SSP/EASGD are emulated at sync cadence with their statistics
@@ -33,8 +36,12 @@ asynchrony. Differences are documented, not hidden.
 
 Prediction semantics: forecasting points in batch N are scored after the
 batch's round, with the model that round produced (the post-update model,
-the one a Query in the same batch reports), in one projection per
-preprocessor chain (``predict_batch``).
+the one a Query in the same batch reports), in one pass per preprocessor
+chain (``predict_batch``): a Catalyst projection over a Spark round's
+batch, numpy over a driver round's collect. The reference scores a point on
+arrival with its worker's current local model (FlinkNetwork.scala:244-257);
+the post-round model is kept, so a row's prediction does not depend on
+where in the batch it arrived.
 """
 
 from __future__ import annotations
@@ -44,7 +51,9 @@ from dataclasses import dataclass
 from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import DataFrame, Observation
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.preprocess import apply_chain
@@ -157,7 +166,7 @@ def _per_worker(m: _Member) -> bool:
 
 
 def train_batch(
-    batch_df: DataFrame,
+    batch: DataFrame | pa.Table,
     catalog: PipelineCatalog,
     *,
     features_col: str = "features",
@@ -167,16 +176,15 @@ def train_batch(
     num_partitions: int = 8,
     batch_id: int = 0,
     skip_replayed: bool = False,
-    rows: int | None = None,
 ) -> list[BatchStats]:
     """One BSP round for every live pipeline over one micro-batch.
 
     Every live pipeline trains on every record (the reference's one worker
     operator updates them all, FlinkSpoke.scala:101), and all of them read
     one frame: each pipeline with a preprocessor chain adds its own
-    transformed features column to the batch (``apply_chain``, which runs
-    each scaler's fit aggregate), and each model trains on its own column.
-    The round runs at most two kinds of work:
+    transformed features column to the batch (``apply_chain``, which folds
+    each scaler's moments), and each model trains on its own column. The
+    round runs at most two kinds of work:
 
     * ONE ``trainer.fit_groups`` pass per worker count trains every
       pipeline on that many workers, chained or not, keyed by
@@ -195,20 +203,22 @@ def train_batch(
       ``trainer.fit`` uses. The key is a pure function of the row, so the
       models do not depend on how the batch arrives partitioned; a
       single-worker pipeline trains the batch in id order, which is its
-      arrival order when the batch arrives sorted by id. With ``rows``
-      (the batch's row count, when the caller observed it) no larger than
-      ``spark.sql.execution.arrow.maxRecordsPerBatch`` each pass collects
-      the batch once and trains on the driver, with no Python worker task
-      and no exchange, which leaves the models as they are;
+      arrival order when the batch arrives sorted by id;
     * closed-form learners (ORR) keep their Catalyst aggregate
       (``trainer.fit``).
 
+    ``batch`` is a DataFrame, or a pyarrow Table already on the driver
+    (the handler's collected micro-batch, with its ``_tie`` column and
+    every ``features`` row holding ``dim`` non-null doubles). Over a Table
+    the chains run in numpy and the keyed passes on the driver, and ORR
+    aggregates a frame built from the Table's rows; the models and
+    statistics are the DataFrame form's, bit for bit.
+
     The driver splits each pass's state rows by pipeline and runs the
-    merge, protocol round and statistics per pipeline. ``rows=0`` runs
-    nothing; otherwise a pass that fits no row means the batch is empty,
-    and the catalog is left as it was. ``BatchStats.wall_ms`` is the wall
-    time of the whole round (all passes and driver merges), the same for
-    every pipeline of the batch.
+    merge, protocol round and statistics per pipeline. A pass that fits no
+    row means the batch is empty, and the catalog is left as it was.
+    ``BatchStats.wall_ms`` is the wall time of the whole round (all passes
+    and driver merges), the same for every pipeline of the batch.
 
     ``skip_replayed=True`` (the streaming handler sets it) makes the round
     idempotent under foreachBatch replay: a pipeline whose persisted
@@ -218,13 +228,14 @@ def train_batch(
     the save replays cleanly from the previous state; crash after skips).
     """
     t0 = time.time()
+    driver = isinstance(batch, pa.Table)
     live = catalog.live()
     if skip_replayed:
         live = [s for s in live
                 if int(getattr(s, "last_batch_id", -1) or -1) < int(batch_id)]
-    if not live or rows == 0:
+    if not live or (driver and not batch.num_rows):
         return []
-    frame = batch_df
+    frame = batch
     # worker count -> the pipelines trained on that many workers
     groups: dict[int, list[_Member]] = {}
     closed = []
@@ -232,7 +243,7 @@ def train_batch(
         learner = get_learner(spec.learner)
         # Preprocessor chain (PipelineMap.scala:25-29): fit stats are
         # running integer moments in the spec (exact across batches), the
-        # transform is pure Catalyst column math on the batch.
+        # transform is column math on the batch.
         fcol, eff_dim, pp_state = features_col, dim, None
         if spec.preprocessors:
             fcol = f"_pp{spec.id}"
@@ -274,14 +285,19 @@ def train_batch(
                                for w in range(parts)})
         # one worker is one key; rows are ordered by id, then by a hash of
         # what they train on, which also keys and orders a row with no id
-        tie = F.xxhash64(features_col, label_col)
-        key = F.pmod(F.coalesce(F.col(id_col), tie), F.lit(parts))
+        if driver:
+            key = pc.coalesce(frame.column(id_col).cast(pa.int64()),
+                              frame.column("_tie")).to_numpy() % parts
+            keyed = frame.append_column("_wk", pa.array(key.astype(np.int32)))
+        else:
+            tie = F.xxhash64(features_col, label_col)
+            key = F.pmod(F.coalesce(F.col(id_col), tie), F.lit(parts))
+            keyed = frame.withColumns({"_wk": key.cast("int"), "_tie": tie})
         fitted = trainer.fit_groups(
-            frame.withColumns({"_wk": key.cast("int"), "_tie": tie}),
+            keyed,
             [Task(m.spec.learner, m.dim, dict(m.spec.hyper), st,
                   m.features_col) for m, st in zip(members, starts)],
             key_col="_wk", label_col=label_col, order_cols=[id_col, "_tie"],
-            rows=rows,
         )
         if not any(fitted):
             return []  # no row fitted: the batch is empty
@@ -299,13 +315,20 @@ def train_batch(
                 workers, shipped = None, m.parts
             rounds[m.spec.id] = (state, shipped, workers, m.pp_state)
     if closed:
-        states = trainer.fit(
-            frame,
-            [Task(m.spec.learner, m.dim, dict(m.spec.hyper),
-                  _deser(m.spec.model) if m.spec.model is not None else None,
-                  m.features_col) for m in closed],
-            label_col=label_col,
-        )
+        if driver:
+            # the Table's rows as one ordered partition, with the batch
+            # partition each came from, so ORR adds its SSE in Spark's order
+            frame = SparkSession.active().createDataFrame(frame.select([
+                label_col, "_part",
+                *dict.fromkeys(m.features_col for m in closed),
+            ])).coalesce(1)
+        states = [
+            m.learner.fit_dataframe(
+                frame, m.dim, dict(m.spec.hyper), features_col=m.features_col,
+                label_col=label_col, part_col="_part" if driver else None,
+                init_state=(_deser(m.spec.model) if m.spec.model is not None
+                            else None))
+            for m in closed]
         if not rounds and all(int(st["n"]) == m.spec.fitted
                               for st, m in zip(states, closed)):
             return []  # no row fitted: the batch is empty
@@ -375,27 +398,56 @@ def _chain_frame(df: DataFrame, spec, features_col: str, dim: int):
 
 
 def predict_batch(
-    batch_df: DataFrame,
+    batch: DataFrame | pa.Table,
     catalog: PipelineCatalog,
     *,
     features_col: str = "features",
     id_col: str = "id",
     dim: int = 3,
-) -> DataFrame | None:
-    """Score a forecasting batch with every pipeline's CURRENT model —
-    entirely in Catalyst expressions for linear models (no Python).
-    Output: pipelineId, recordId, prediction (PREDICTION_SCHEMA shape).
+) -> DataFrame | pa.Table | None:
+    """Score a forecasting batch with every pipeline's CURRENT model.
+    Output: pipelineId, recordId, prediction (PREDICTION_SCHEMA shape);
+    None when no linear model is live.
 
     Each record is scored once against every pipeline that reads the same
     frame (the reference's one worker operator, FlinkSpoke.scala:101): one
     projection builds a (pipelineId, prediction) struct per pipeline and
     explodes their array, so the batch is read once per chain group, not
-    once per pipeline."""
-    from ..functions.vector import linear_predict_sql, sql_col
+    once per pipeline. Over a DataFrame the scoring is Catalyst expressions
+    (no Python). Over a pyarrow Table (the handler's collected micro-batch,
+    every ``features`` row holding ``dim`` non-null doubles) it runs in
+    numpy on the driver and returns a Table with the DataFrame's rows,
+    bits and nullability, or None for an empty batch."""
+    from ..functions.vector import (linear_predict_np, linear_predict_sql,
+                                    matrix, sql_col)
 
-    outs = []
+    driver = isinstance(batch, pa.Table)
+    if driver and not batch.num_rows:
+        return None
+    outs, regress = [], False
     for members in _chain_groups(catalog.live()):
-        src, fcol = _chain_frame(batch_df, members[0], features_col, dim)
+        src, fcol = _chain_frame(batch, members[0], features_col, dim)
+        if driver:
+            X = matrix(src.column(fcol), len(members[0].model["w"]) - 1)
+            cols = []
+            for spec in members:
+                w = list(map(float, spec.model["w"]))
+                raw = linear_predict_np(X, w[:-1], w[-1])
+                if get_learner(spec.learner).is_classifier:
+                    # Spark orders NaN above every double: NaN >= 0 holds
+                    raw = np.where((raw >= 0) | np.isnan(raw), 1.0, -1.0)
+                else:
+                    regress = True
+                cols.append(raw)
+            # each record's predictions in pipeline order, as explode
+            # lays them out
+            outs.append((
+                np.tile([int(spec.id) for spec in members], len(X)),
+                pc.take(src.column(id_col).cast(pa.int64()),
+                        np.repeat(np.arange(len(X)), len(members))),
+                np.stack(cols, axis=1).ravel(),
+            ))
+            continue
         preds = []
         for spec in members:
             w = list(map(float, spec.model["w"]))
@@ -418,6 +470,20 @@ def predict_batch(
         )
     if not outs:
         return None
+    if driver:
+        pid, rid, pred = zip(*outs)
+        return pa.table(
+            [pa.array(np.concatenate(pid), pa.int64()),
+             pa.chunked_array([c for r in rid for c in r.chunks], pa.int64()),
+             pa.array(np.concatenate(pred), pa.float64())],
+            schema=pa.schema([
+                pa.field("pipelineId", pa.int64(), nullable=False),
+                pa.field("recordId", pa.int64()),
+                # a classifier's CASE is never NULL; a regressor's sum is
+                # nullable in Spark's schema
+                pa.field("prediction", pa.float64(), nullable=regress),
+            ]),
+        )
     res = outs[0]
     for o in outs[1:]:
         res = res.unionByName(o)
@@ -454,17 +520,45 @@ def make_batch_handler(
     ``responses_sink`` at the end of each batch, scored on ``holdout_df``
     when given (FlinkSpoke query-on-testSet).
 
+    Placement: the handler collects the micro-batch once, bounded at one
+    Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows; a
+    Python task costs a fixed start-up far above a micro-batch's work).
+    When the whole batch fits, and every data row's ``features`` holds
+    ``dim`` non-null doubles, the round runs on the driver over that
+    collect: requests, chain fits and transforms, training and forecast
+    scoring, with no Spark job but the collect, the predictions write and
+    the Query scoring on ``holdout_df``. The reference's worker likewise
+    does all of a record's work on arrival (FlinkSpoke.scala:101,244-257).
+    Any other batch runs the same round as Spark jobs over the batch: the
+    large ones, and those with a NULL, short or long features array, whose
+    outcome the Spark round defines (a chain's ANSI ``element_at`` raises
+    on a short array; ``zip_with`` scores it as NULL). The catalog, the
+    predictions and the responses do not depend on the placement. A batch
+    right after one that held more than the cap skips the collect and runs
+    the Spark round: on a stream of large batches the collect is a job
+    more, one task that runs the stateful dedup serially. The last batch's
+    size is the collect's row count, or the count the Spark round's
+    request collect observes on a unified stream (without a ``kind``
+    column, a batch after a skipped collect collects again). That request
+    collect also counts the training and forecasting rows: a Spark round
+    whose training rows fit the cap collects them and trains on the
+    driver, and one with no forecasting row writes no predictions.
+
     Prediction output: ``predictions_path`` appends each batch's scored
-    forecasting rows to a parquet sink WITHOUT driver collection (the
-    reference streams predictions to a Kafka topic, Job.scala:98-105; swap
-    in streaming/sources.kafka_sink when a broker exists); tests read that
-    parquet back."""
-    record_buffer: list = []
+    forecasting rows to a parquet sink WITHOUT collecting the Spark round's
+    rows (the reference streams predictions to a Kafka topic,
+    Job.scala:98-105; swap in streaming/sources.kafka_sink when a broker
+    exists); a driver round writes its scored rows as one file. Tests read
+    that parquet back."""
+    record_buffer: list[pa.Table] = []
+    over_cap = False  # did the last batch hold more than the cap?
 
     def handle(batch_df: DataFrame, batch_id: int):
-        # Read the micro-batch once: the request collect, the training
-        # passes and the predictions write all read this copy instead of
-        # re-running the source scan and the stateful dedup per action.
+        # Read the micro-batch once: the collect, and a Spark round's
+        # request collect, training passes and predictions write, all read
+        # this copy instead of re-running the source scan and the stateful
+        # dedup per action. The collect may stop at its bound; the Spark
+        # round then reads every row, so the dedup sees each one.
         batch_df = batch_df.persist()
         try:
             _handle(batch_df, batch_id)
@@ -472,23 +566,39 @@ def make_batch_handler(
             batch_df.unpersist()
 
     def _handle(batch_df: DataFrame, batch_id: int):
-        # the batch's training and forecasting row counts, observed by the
-        # request collect (no job of their own); None where unknown
-        rows: dict = {"training": None, "forecasting": None}
+        nonlocal over_cap
+        cap = max(0, int(spark.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch", "10000")))
+        # after a batch over the cap, expect another: a collect that cannot
+        # fit is a job more, which runs the stateful dedup in one task
+        table = None if over_cap else collect_batch(
+            batch_df, cap, features_col, label_col)
+        over_cap = table is not None and table.num_rows > cap
+        # the data rows, as a DataFrame and, when the batch fits, a Table
+        frame, data = batch_df, None if table is None or over_cap else table
+        # a Spark round's training and forecasting row counts where known:
+        # the request collect observes them (with the batch's row count,
+        # no job of its own), or the collect holds the batch
+        counts: dict = {}
         if "kind" in batch_df.columns:
             req_cols = [c for c in ("id", "request", "requestId", "learner",
                                     "preProcessors", "trainingConfiguration")
                         if c in batch_df.columns]
-            data = F.col("kind") == "data"
-            seen = Observation()
-            catalog.apply_requests_df(
-                batch_df.observe(seen, *[
-                    F.count_if(data & (F.col("operation") == op)).alias(op)
-                    for op in rows
-                ]).filter(F.col("kind") == "request").select(*req_cols)
-            )
-            rows = seen.get
-            batch_df = batch_df.filter(data)
+            if data is None:
+                seen = Observation()
+                catalog.apply_requests_df(batch_df.observe(
+                    seen, F.count(F.lit(1)).alias("rows"), *[
+                        F.count_if((F.col("kind") == "data")
+                                   & (F.col("operation") == op)).alias(op)
+                        for op in ("training", "forecasting")],
+                ).filter(F.col("kind") == "request").select(*req_cols))
+                counts = dict(seen.get)
+                over_cap = counts.pop("rows") > cap
+            else:
+                catalog.apply_requests(_arrow_rows(data.filter(
+                    pc.equal(data["kind"], "request")).select(req_cols)))
+                data = data.filter(pc.equal(data["kind"], "data"))
+            frame = batch_df.filter(F.col("kind") == "data")
         if not catalog.live():
             # No pipeline yet: buffer BOTH training and forecasting rows
             # (bounded; the reference buffers data instances per worker,
@@ -496,19 +606,47 @@ def make_batch_handler(
             # NOT covered by the streaming checkpoint — rows buffered here
             # are lost on a crash before the first Create, exactly like the
             # reference's un-checkpointed pre-Create cache.
-            room = RECORD_BUFFER_MAX - len(record_buffer)
+            room = RECORD_BUFFER_MAX - sum(t.num_rows for t in record_buffer)
             if room > 0:
-                record_buffer.extend(batch_df.limit(room).collect())
+                record_buffer.append(
+                    collect_batch(frame, room - 1, features_col, label_col)
+                    if data is None else data.slice(0, room))
             return
+        # the buffered rows lead the round as one partition of their own in
+        # either placement (ORR adds its SSE per partition)
+        buffered = None
         if record_buffer:
-            rows = {op: None if n is None else n + sum(
-                        r["operation"] == op for r in record_buffer)
-                    for op, n in rows.items()}
-            buffered = spark.createDataFrame(record_buffer, batch_df.schema)
-            batch_df = buffered.unionByName(batch_df)
+            buffered = pa.concat_tables(record_buffer)
             record_buffer.clear()
-        training = batch_df.filter(F.col("operation") == "training")
-        forecasting = batch_df.filter(F.col("operation") == "forecasting")
+            buffered = buffered.set_column(
+                buffered.schema.get_field_index("_part"),
+                buffered.schema.field("_part"),
+                pa.array(np.full(buffered.num_rows, -1, np.int32)))
+            if data is not None:
+                data = pa.concat_tables([buffered, data])
+            counts = {op: n + _count(buffered, op) for op, n in counts.items()}
+        if data is not None and not (
+                data.num_rows <= cap and _fits(data.column(features_col), dim)):
+            counts, data = {"forecasting": _count(data, "forecasting")}, None
+        if data is not None:
+            op = data.column("operation")
+            training = data.filter(pc.equal(op, "training"))
+            forecasting = data.filter(pc.equal(op, "forecasting"))
+        else:
+            if buffered is not None:
+                # from rows, not the Table: PySpark slices a Table by
+                # maxRecordsPerBatch, and fails when that is 0 (no limit)
+                frame = spark.createDataFrame(_arrow_rows(
+                    buffered.drop_columns(["_part", "_tie"])), frame.schema
+                ).coalesce(1).unionByName(frame)
+            training = frame.filter(F.col("operation") == "training")
+            forecasting = frame.filter(F.col("operation") == "forecasting")
+            if counts.get("training", cap + 1) <= cap:
+                # the training rows of a batch over the cap may fit: they
+                # train on the driver, as a driver round's do
+                rows = collect_batch(training, cap, features_col, label_col)
+                if _fits(rows.column(features_col), dim):
+                    training = rows
         st = train_batch(
             training,
             catalog,
@@ -519,15 +657,16 @@ def make_batch_handler(
             num_partitions=num_partitions,
             batch_id=batch_id,
             skip_replayed=True,
-            rows=rows["training"],
         )
         if stats_sink is not None:
             stats_sink.extend(st)
-        preds = None if rows["forecasting"] == 0 else predict_batch(
+        preds = None if counts.get("forecasting") == 0 else predict_batch(
             forecasting, catalog, features_col=features_col, id_col=id_col,
             dim=dim,
         )
         if preds is not None and predictions_path is not None:
+            if isinstance(preds, pa.Table):
+                preds = spark.createDataFrame(preds).coalesce(1)
             preds.write.mode("append").parquet(predictions_path)
         if responses_sink is not None and catalog.responses:
             responses_sink.extend(
@@ -538,6 +677,50 @@ def make_batch_handler(
             )
 
     return handle
+
+
+def collect_batch(batch_df: DataFrame, cap: int, features_col: str,
+                  label_col: str) -> pa.Table:
+    """The micro-batch's first ``cap + 1`` rows in partition order, in one
+    task, as Arrow, with two more columns: ``_part``, the batch partition
+    a row came from, and ``_tie``, the hash of its features and label that
+    orders rows with equal ids in the keyed pass. More than ``cap`` rows
+    means the batch does not fit the driver round."""
+    return batch_df.select(
+        "*", F.spark_partition_id().alias("_part"),
+        F.xxhash64(features_col, label_col).alias("_tie"),
+    ).coalesce(1).limit(cap + 1).toArrow()
+
+
+def _count(table: pa.Table, operation: str) -> int:
+    """The number of ``table``'s rows with that ``operation``."""
+    return table.filter(pc.equal(table["operation"], operation)).num_rows
+
+
+def _fits(features, dim: int) -> bool:
+    """Does every row hold ``dim`` non-null doubles?"""
+    lengths = pc.list_value_length(features).to_numpy(zero_copy_only=False)
+    return (pa.types.is_float64(features.type.value_type)
+            and bool((lengths == dim).all())
+            and pc.list_flatten(features).null_count == 0)
+
+
+def _arrow_rows(table: pa.Table) -> list[dict]:
+    """The rows of ``table`` as ``Row.asDict(recursive=True)`` gives them
+    from a collect: Arrow's (key, value) pairs of a map become a dict."""
+    def py(v, t):
+        if v is None:
+            return None
+        if pa.types.is_map(t):
+            return {k: py(x, t.item_type) for k, x in v}
+        if pa.types.is_struct(t):
+            return {f.name: py(v[f.name], f.type) for f in t}
+        if pa.types.is_list(t) or pa.types.is_large_list(t):
+            return [py(x, t.value_type) for x in v]
+        return v
+
+    row = pa.struct(list(table.schema))
+    return [py(r, row) for r in table.to_pylist()]
 
 
 def build_query_responses(

@@ -98,3 +98,27 @@ def test_requests_applied_in_arrival_order(spark):
     actions = cat.apply_requests_df(reqs)
     assert actions == ["Delete", "Create"]
     assert cat.pipelines[1].learner == "SVM"
+
+
+def test_save_mid_write_failure_keeps_previous_catalog(tmp_path, monkeypatch):
+    """A save that fails part way (here a pipeline's ``to_json`` raises
+    after the first pipeline was written) leaves the previous catalog
+    whole: it still loads, with every pipeline in it."""
+    import pytest
+
+    path = str(tmp_path / "cat.jsonl")
+    cat = PipelineCatalog(path=path)
+    for pid in (1, 2, 3):
+        assert cat.apply_request(_create("PA", pid=pid)) == "Create"
+    cat.save()
+    cat.pipelines[1].fitted = 7
+
+    def fail():
+        raise RuntimeError("serialization failed")
+
+    monkeypatch.setattr(cat.pipelines[2], "to_json", fail)
+    with pytest.raises(RuntimeError, match="serialization failed"):
+        cat.save()
+    again = PipelineCatalog(path=path)
+    assert sorted(again.pipelines) == [1, 2, 3]
+    assert again.pipelines[1].fitted == 0

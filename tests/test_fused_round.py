@@ -30,6 +30,7 @@ from omldm_spark.streaming.training_loop import (
     _deser,
     _ser,
     _state_bytes,
+    collect_batch,
     train_batch,
 )
 
@@ -219,8 +220,9 @@ def test_global_state_and_per_worker_share_one_pass(spark):
 def test_null_id_rows_train_in_an_order_of_their_content(spark):
     """A training row with a NULL id is keyed by a hash of its features and
     label and trains after the id-ordered rows of its worker, in hash
-    order. One rule in both branches of the keyed pass (on the driver with
-    ``rows`` known and small, grouped without), whatever order the rows
+    order. One rule in both placements of the keyed pass (on the driver
+    over the collected batch, grouped over the DataFrame), whatever order
+    the rows
     arrive in; one worker (CentralizedTraining) makes the two NULL-id rows
     share a worker, four (Synchronous) spread them by their hash."""
     data = [(0, [1.0, 0.0, 0.0], 1.0), (None, [1.0, 1.0, 0.0], -1.0),
@@ -229,8 +231,8 @@ def test_null_id_rows_train_in_an_order_of_their_content(spark):
     hyper = {"C": 10.0}
     protocols = ("CentralizedTraining", "Synchronous")
     models = []
-    for rows, arrival in ((4, data), (None, data), (4, data[::-1]),
-                          (None, data[::-1])):
+    for driver, arrival in ((True, data), (False, data), (True, data[::-1]),
+                            (False, data[::-1])):
         cat = PipelineCatalog(parallelism=PARTS)
         for pid, proto in enumerate(protocols):
             assert cat.apply_request({
@@ -239,8 +241,9 @@ def test_null_id_rows_train_in_an_order_of_their_content(spark):
                 "trainingConfiguration": {"protocol": proto},
             }) == "Create"
         batch = spark.createDataFrame(arrival, schema).repartition(3)
-        stats = train_batch(batch, cat, dim=DIM, num_partitions=PARTS,
-                            rows=rows)
+        if driver:
+            batch = collect_batch(batch, 4, "features", "label")
+        stats = train_batch(batch, cat, dim=DIM, num_partitions=PARTS)
         assert [s.fitted for s in stats] == [4, 4]
         models.append([cat.pipelines[pid].model
                        for pid in range(len(protocols))])

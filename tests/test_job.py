@@ -13,7 +13,14 @@ from omldm_spark.job import JobConfig, build_source, run_job
 from omldm_spark.plans.catalog import PipelineCatalog
 from omldm_spark.streaming.training_loop import make_batch_handler
 
-from sparktrace import flush, runs_python_or_shuffle, sql_plans, stage_tasks
+from sparktrace import (
+    PYTHON_NODE,
+    flush,
+    runs_python_or_shuffle,
+    sql_plans,
+    stage_tasks,
+    traced,
+)
 from test_unified_streaming import (
     UNIFIED_SCHEMA,
     _data_rows,
@@ -154,11 +161,7 @@ def _create_pa(cat, chain=()):
     }) == "Create"
 
 
-def test_training_only_batch_runs_no_predictions_job(spark, tmp_path):
-    """A micro-batch with no forecasting row runs no predictions job and
-    writes nothing under predictions_path: the request collect counts the
-    batch's forecasting rows, and a count of 0 skips the scoring and its
-    write. The next batch, with forecasts, runs that one write job more."""
+def _training_only_jobs(spark, tmp_path, cap: str) -> None:
     cat = PipelineCatalog(parallelism=4)
     _create_pa(cat)
     preds = tmp_path / "preds"
@@ -167,21 +170,44 @@ def test_training_only_batch_runs_no_predictions_job(spark, tmp_path):
     t0 = pd.Timestamp("2026-01-01 00:00:00")
     sc = spark.sparkContext
     jobs = []
-    for b, ids in enumerate(([i for i in range(100) if i % 10],
-                             range(100, 200))):
-        df = spark.createDataFrame(_data_rows(ids, t0), UNIFIED_SCHEMA)
-        group = f"handler-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "handler job count")
-        try:
-            handle(df, b)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-        if b == 0:
-            assert not preds.exists()
-    assert cat.pipelines[1].fitted == 90 + 90
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", cap)
+    try:
+        for b, ids in enumerate(([i for i in range(100) if i % 10],
+                                 [i for i in range(100, 200) if i % 10],
+                                 range(200, 300))):
+            df = spark.createDataFrame(_data_rows(ids, t0), UNIFIED_SCHEMA)
+            group = f"handler-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, "handler job count")
+            try:
+                handle(df, b)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            if b < 2:
+                assert not preds.exists()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert cat.pipelines[1].fitted == 90 + 90 + 90
     assert spark.read.parquet(str(preds)).count() == 10
-    assert jobs[0] + 1 == jobs[1], jobs
+    assert jobs[1] + 1 == jobs[2], jobs
+
+
+def test_training_only_batch_runs_no_predictions_job(spark, tmp_path):
+    """A micro-batch with no forecasting row runs no predictions job and
+    writes nothing under predictions_path: a driver round scores the
+    collected batch's forecasting rows, of which there are none. The last
+    batch, with forecasts, runs that one write job more."""
+    _training_only_jobs(spark, tmp_path, "10000")
+
+
+def test_over_cap_training_only_batch_runs_no_predictions_job(
+        spark, tmp_path):
+    """The same under a cap below the batches, so every round is a Spark
+    round: its request collect counts the forecasting rows, and a count of
+    0 skips the scoring and its write. Batch 0 brings the handler to its
+    steady state (a batch after one over the cap skips the collect)."""
+    _training_only_jobs(spark, tmp_path, "50")
 
 
 # Spark jobs of one steady 100-row batch of the replay below before the
@@ -196,11 +222,13 @@ def test_keyed_pass_runs_no_python_task_under_exact_dedup(
     pipeline (PA + StandardScaler, Synchronous, 4 workers) behind the exact
     dedup. Stateful streaming runs each micro-batch with AQE off, so no
     pass is coalesced at run time. The 100-row batch fills one Arrow
-    batch, so its keyed pass trains on the driver: one one-task collect,
-    no Python stage, no shuffle. The batch runs no more Spark jobs than
-    before."""
+    batch, so the handler collects it once, in one one-task job, and its
+    keyed pass trains on the driver with no Spark job of its own. No job
+    of the batch runs a Python stage, and the batch runs no more Spark
+    jobs than before."""
     from omldm_spark import job
     from omldm_spark.learners import trainer
+    from omldm_spark.streaming import training_loop
 
     sc = spark.sparkContext
     st = sc.statusTracker()
@@ -211,16 +239,16 @@ def test_keyed_pass_runs_no_python_task_under_exact_dedup(
         return set(st.getJobIdsForGroup(
             sc.getLocalProperty("spark.jobGroup.id")))
 
-    keyed, batch_jobs = [], {}
-    fit_groups = trainer.fit_groups
+    def recorded(fn, into):
+        def run(*args, **kwargs):
+            before = jobs()
+            out = fn(*args, **kwargs)
+            ran = jobs() - before
+            into.append((stage_tasks(spark, ran), sql_plans(spark, ran)))
+            return out
+        return run
 
-    def traced_fit_groups(*args, **kwargs):
-        before = jobs()
-        out = fit_groups(*args, **kwargs)
-        ran = jobs() - before
-        keyed.append((stage_tasks(spark, ran), sql_plans(spark, ran)))
-        return out
-
+    keyed, collects, batch_jobs = [], [], {}
     factory = job.make_batch_handler
 
     def counted_factory(*args, **kwargs):
@@ -229,10 +257,14 @@ def test_keyed_pass_runs_no_python_task_under_exact_dedup(
         def counted(df, batch_id):
             before = jobs()
             handle(df, batch_id)
-            batch_jobs[batch_id] = len(jobs() - before)
+            ran = jobs() - before
+            batch_jobs[batch_id] = (len(ran), sql_plans(spark, ran))
         return counted
 
-    monkeypatch.setattr(trainer, "fit_groups", traced_fit_groups)
+    monkeypatch.setattr(trainer, "fit_groups",
+                        recorded(trainer.fit_groups, keyed))
+    monkeypatch.setattr(training_loop, "collect_batch",
+                        recorded(training_loop.collect_batch, collects))
     monkeypatch.setattr(job, "make_batch_handler", counted_factory)
 
     t0 = pd.Timestamp("2026-01-01 00:00:00")
@@ -253,10 +285,38 @@ def test_keyed_pass_runs_no_python_task_under_exact_dedup(
     run_job(spark, cfg, cat)
 
     assert cat.pipelines[1].fitted == 180
-    assert [tasks for tasks, _ in keyed] == [[[1]], [[1]]]
-    for _, plans in keyed:
+    assert keyed == [([], []), ([], [])]
+    assert len(collects) == 2
+    for tasks, plans in collects:
+        # one job; its stages (the dedup's source stage, then the collect)
+        # run one task each
+        assert len(tasks) == 1 and set(tasks[0]) == {1}, tasks
         assert len(plans) == 1 and not runs_python_or_shuffle(plans)
-    assert batch_jobs[1] <= JOBS_PER_BATCH_BEFORE, batch_jobs
+    for _, plans in batch_jobs.values():
+        assert not any(PYTHON_NODE.search(p) for p in plans)
+    assert batch_jobs[1][0] <= JOBS_PER_BATCH_BEFORE, batch_jobs
+
+
+def test_small_batch_runs_one_collect_and_one_write(spark, tmp_path):
+    """A 100-row batch for a StandardScaler pipeline, with no Query, runs
+    two Spark jobs: the handler's collect and the predictions write. The
+    requests, the scaler's moments, the training and the forecast scoring
+    run on the driver: no plan holds a Python node or an aggregate. The
+    scored rows land in one file."""
+    cat = PipelineCatalog(parallelism=4)
+    _create_pa(cat, chain=("StandardScaler",))
+    preds = tmp_path / "preds"
+    handle = make_batch_handler(spark, cat, dim=3, num_partitions=4,
+                                predictions_path=str(preds))
+    t0 = pd.Timestamp("2026-01-01 00:00:00")
+    df = spark.createDataFrame(_data_rows(range(100), t0), UNIFIED_SCHEMA)
+    _, tasks, plans = traced(spark, lambda: handle(df, 0))
+    assert len(tasks) == 2 and len(plans) == 2, plans
+    assert not any(PYTHON_NODE.search(p) or "Aggregate" in p for p in plans)
+    assert cat.pipelines[1].fitted == 90
+    assert cat.pipelines[1].preproc_state[0]["n"] == 90
+    assert len(list(preds.glob("part-*.parquet"))) == 1
+    assert spark.read.parquet(str(preds)).count() == 10
 
 
 def test_buffered_forecasts_are_counted_into_the_batch(spark, tmp_path):

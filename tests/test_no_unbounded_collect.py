@@ -21,8 +21,11 @@ PKG = Path(__file__).resolve().parent.parent / "omldm_spark"
 ALLOWLIST = {
     ("plans/catalog.py", "requests_df.collect()"):
         "control-plane CRUD requests: human-issued, not data-scale",
-    ("streaming/training_loop.py", "batch_df.limit(room).collect()"):
-        "pre-Create buffer, limit(room) caps at the bounded buffer size",
+    ("streaming/training_loop.py", "limit(cap + 1).toArrow()"):
+        "the handler's micro-batch collect (collect_batch): limit(cap + 1) "
+        "caps it at one row over the driver round's bound, "
+        "spark.sql.execution.arrow.maxRecordsPerBatch (the pre-Create "
+        "buffer calls it with cap = its room - 1)",
     ("operators/lm.py", ".limit(1).collect()"):
         "BPE best-pair: one row per merge round",
     ("operators/lm.py", 'orderBy("merge_round").collect()'):
@@ -66,10 +69,9 @@ ALLOWLIST = {
         "fused keyed pass (fit_groups, which fit runs per epoch): ONE "
         "model-state row per (model, worker key), so rows = live pipelines "
         "x workers (the parameter-server pattern itself)",
-    ("learners/trainer.py", "sel.coalesce(1).toArrow()"):
-        "fit_groups driver branch: taken only when the caller's observed "
-        "row count is at most spark.sql.execution.arrow.maxRecordsPerBatch "
-        "(the rows the one-task branch held in one Python worker)",
+    ("learners/orr.py", 'F.expr(f"sum({err} * {err})").alias("s")).collect()'):
+        "ORR's SSE per source partition of a collected micro-batch: one "
+        "row per partition of the batch",
     ("learners/trainer.py", "points.select(features_col, label_col)"):
         "evaluate() holdout: limit+count-guarded to max_rows",
     ("functions/preprocess.py", '.agg(F.count(F.lit(1)).cast("long")'):

@@ -90,27 +90,32 @@ def test_evaluate_linear_matches_numpy_evaluate(spark, points):
 
 def test_fit_groups_states_do_not_depend_on_task_count(spark, points):
     """One keyed pass trains two models on two features columns of one
-    frame. With a row count that fits one Arrow batch it runs on the
-    driver: one one-task collect, no Python stage, no shuffle. Without one
-    it runs the grouped applyInPandas in the session's shuffle partitions
-    (AQE off, as under a stateful stream, so they are not coalesced). Both
-    branches return bit-identical states."""
+    frame. Over the training loop's collect of the frame it runs on the
+    driver: the collect is one one-task job, with no Python stage and no
+    shuffle, and the pass adds none. Over the DataFrame it runs the grouped
+    applyInPandas in the session's shuffle partitions (AQE off, as under a
+    stateful stream, so they are not coalesced). Both placements return
+    bit-identical states."""
     from pyspark.sql import functions as F
+
+    from omldm_spark.streaming.training_loop import collect_batch
 
     frame = points.withColumn("scaled",
                               F.expr("transform(features, x -> 2 * x)"))
     tasks = [trainer.Task("PA", 3, {"C": 0.1}),
              trainer.Task("SVM", 3, {}, None, "scaled")]
 
-    def run(**kw):
-        return trainer.fit_groups(frame, tasks, key_col="worker",
-                                  order_cols=["id"], **kw)
+    def run(src):
+        return trainer.fit_groups(src, tasks, key_col="worker",
+                                  order_cols=["id"])
 
-    one, one_tasks, one_plans = traced(spark, lambda: run(rows=500))
+    one, one_tasks, one_plans = traced(spark, lambda: run(
+        collect_batch(frame, 500, "features", "label")))
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        grouped, grouped_tasks, grouped_plans = traced(spark, run)
+        grouped, grouped_tasks, grouped_plans = traced(spark,
+                                                       lambda: run(frame))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert one_tasks == [[1]] and len(one_plans) == 1
@@ -160,12 +165,17 @@ def test_multi_partition_fit_equals_numpy_replay(spark, points):
 
 def test_single_worker_round_runs_one_task_without_shuffle(spark):
     """A train_batch round whose pipelines all train on one worker (an HT
-    SingleLearner and a CentralizedTraining PA) over a small batch with its
-    row count known: one one-task collect, no Python stage, no shuffle.
+    SingleLearner and a CentralizedTraining PA) over the training loop's
+    collect of a small batch: the collect is one one-task job, with no
+    Python stage and no shuffle, and the round adds none.
     The PA model is the one-worker fit over the batch in id order, whatever
     its arrival order."""
     from omldm_spark.plans.catalog import PipelineCatalog
-    from omldm_spark.streaming.training_loop import _deser, train_batch
+    from omldm_spark.streaming.training_loop import (
+        _deser,
+        collect_batch,
+        train_batch,
+    )
 
     rng = np.random.default_rng(3)
     n = 200
@@ -187,8 +197,9 @@ def test_single_worker_round_runs_one_task_without_shuffle(spark):
             "trainingConfiguration": {"protocol": proto},
         }) == "Create"
     stats, tasks, plans = traced(
-        spark, lambda: train_batch(batch, cat, dim=3, num_partitions=4,
-                                   rows=n))
+        spark, lambda: train_batch(
+            collect_batch(batch, n, "features", "label"), cat, dim=3,
+            num_partitions=4))
     assert tasks == [[1]] and len(plans) == 1
     assert not runs_python_or_shuffle(plans)
     assert [s.fitted for s in stats] == [n, n]
