@@ -19,6 +19,8 @@ numpy on the driver, with the same result bits.
 
 from __future__ import annotations
 
+import math
+import operator
 from itertools import combinations_with_replacement
 
 import numpy as np
@@ -266,31 +268,29 @@ def _moment_row_np(X: np.ndarray, quant: int) -> dict:
 
 def _merge_moments(state: dict | None, row, dim: int) -> dict:
     """Fold one batch's moment row into the running state (Python ints —
-    arbitrary precision, so the driver-side accumulation never overflows)."""
-    new = {
-        "n": int(row["n"]),
-        "s": [int(row[f"s_{i}"]) for i in range(dim)],
-        "ss": [int(row[f"ss_{i}"]) for i in range(dim)],
-        "mn": [int(row[f"mn_{i}"]) for i in range(dim)],
-        "mx": [int(row[f"mx_{i}"]) for i in range(dim)],
-    }
+    arbitrary precision, so the driver-side accumulation never overflows).
+    A dimension with no finite value in the batch (NULL sums, min and max)
+    adds nothing to its sums and keeps its min/max; before its first
+    finite value its min/max are None, and it scales as a constant
+    column."""
     if not state or not int(state.get("n", 0)):
-        return new
-    return {
-        "n": int(state["n"]) + new["n"],
-        "s": [int(a) + b for a, b in zip(state["s"], new["s"])],
-        "ss": [int(a) + b for a, b in zip(state["ss"], new["ss"])],
-        "mn": [min(int(a), b) for a, b in zip(state["mn"], new["mn"])],
-        "mx": [max(int(a), b) for a, b in zip(state["mx"], new["mx"])],
-    }
+        state = {"n": 0, "s": [0] * dim, "ss": [0] * dim,
+                 "mn": [None] * dim, "mx": [None] * dim}
+
+    def fold(key, op):
+        new = (row[f"{key}_{i}"] for i in range(dim))
+        return [a if b is None else int(b) if a is None else op(int(a), int(b))
+                for a, b in zip(state[key], new)]
+
+    return {"n": int(state["n"]) + int(row["n"]),
+            "s": fold("s", operator.add), "ss": fold("ss", operator.add),
+            "mn": fold("mn", min), "mx": fold("mx", max)}
 
 
 def mean_std_from_moments(state: dict, i: int, quant: int = STATS_QUANT):
     """Population mean/std from integer moments. The float operation
     sequence MIRRORS scaler_stats_sql() exactly: each int is converted to
     double first, then divided — identical IEEE ops on identical operands."""
-    import math
-
     n = int(state["n"])
     mean = float(int(state["s"][i])) / (float(n) * float(quant))
     var = float(int(state["ss"][i])) / (float(n) * float(quant) * float(quant)) - mean * mean
@@ -299,6 +299,8 @@ def mean_std_from_moments(state: dict, i: int, quant: int = STATS_QUANT):
 
 
 def min_max_from_moments(state: dict, i: int, quant: int = STATS_QUANT):
+    if state["mn"][i] is None:
+        return 0.0, 0.0  # no finite value yet: a constant column
     lo = float(int(state["mn"][i])) / float(quant)
     hi = float(int(state["mx"][i])) / float(quant)
     return lo, hi
@@ -340,7 +342,9 @@ def _scaler_transform(name: str, st: dict, dim: int, quant: int):
         ks = st.get("k", [0] * dim)
         shift, scale = [], []
         for i in range(dim):
-            p25, p50, p75 = _hist_quantiles(st["h"][i], (0.25, 0.5, 0.75))
+            # a dim with no finite value yet scales as a constant column
+            p25, p50, p75 = _hist_quantiles(st["h"][i] or {0: 1},
+                                            (0.25, 0.5, 0.75))
             # histogram keys live at grid level k: one bin spans 2^k
             # quanta, so map back to the value scale before building the
             # (exact-at-k=0) scaling expression
@@ -553,13 +557,19 @@ def robust_scale(df: DataFrame, cols: list[str], stats: DataFrame) -> DataFrame:
 
 def _robust_source_df(df: DataFrame, cur: str, cur_dim: int):
     """(probe, hist) of :func:`_robust_fit_batch` over the ARRAY<DOUBLE>
-    column ``cur`` of ``df``: each a Spark job, collected."""
+    column ``cur`` of ``df``: each a Spark job, collected. NULL, NaN and
+    infinite values are skipped, as the moment scalers skip them (Spark
+    orders NaN above every double, so ``abs(x) < inf`` holds only for a
+    finite ``x``); a finite value whose quantized form does not fit
+    BIGINT raises (ANSI ``CAST_OVERFLOW``)."""
+    inf = sql_double(math.inf)
     raw = df.select(
         F.posexplode(_array([
-            f"CAST(round({_el(cur, i)} * {ROBUST_QUANT}, 0) AS BIGINT)"
+            f"CASE WHEN abs({_el(cur, i)}) < {inf} THEN "
+            f"CAST(round({_el(cur, i)} * {ROBUST_QUANT}, 0) AS BIGINT) END"
             for i in range(cur_dim)
         ])).alias("dim", "v")
-    )
+    ).filter(F.col("v").isNotNull())
 
     def at_levels(levels):
         karr = f"array({', '.join(str(int(k)) for k in levels)})"
@@ -589,24 +599,23 @@ def _robust_source_df(df: DataFrame, cur: str, cur_dim: int):
 
 
 def _robust_source_np(X: np.ndarray):
-    """:func:`_robust_source_df` over the rows of ``X`` on the driver. The
-    BIGINT cast of a NaN, infinite or out-of-range value raises in Spark
-    (ANSI ``CAST_OVERFLOW``), and raises here."""
+    """:func:`_robust_source_df` over the rows of ``X`` on the driver: NaN
+    and infinite values are skipped, and a finite value whose quantized
+    form does not fit BIGINT raises."""
     V = spark_round(X * ROBUST_QUANT)
-    if not ((V >= -2.0 ** 63) & (V < 2.0 ** 63)).all():
+    fin = np.isfinite(X)
+    if not ((V[fin] >= -2.0 ** 63) & (V[fin] < 2.0 ** 63)).all():
         raise ArithmeticError(
             "RobustScaler: a quantized feature value does not fit BIGINT")
-    V = V.astype(np.int64)
+    cols = [V[fin[:, i], i].astype(np.int64) for i in range(V.shape[1])]
 
     def probe(ks):
-        return {i: (int(V[:, i].min()), int(V[:, i].max()),
-                    len(np.unique(V[:, i] >> ks[i])))
-                for i in range(V.shape[1]) if len(V)}
+        return {i: (int(c.min()), int(c.max()), len(np.unique(c >> ks[i])))
+                for i, c in enumerate(cols) if len(c)}
 
     def hist(ks):
-        return [(i, v, c) for i in range(V.shape[1])
-                for v, c in zip(*np.unique(V[:, i] >> ks[i],
-                                           return_counts=True))]
+        return [(i, v, n) for i, c in enumerate(cols)
+                for v, n in zip(*np.unique(c >> ks[i], return_counts=True))]
 
     return probe, hist
 
@@ -671,8 +680,6 @@ def _hist_quantiles(hist: dict, ps: tuple) -> list[int]:
     """Disc quantiles from a {quantized_value: count} histogram: smallest
     v with cumulative count >= ceil(p*n) — the same rule as
     robust_scaler_stats, evaluated on the driver over the tiny histogram."""
-    import math
-
     items = sorted((int(v), int(c)) for v, c in hist.items())
     n = sum(c for _, c in items)
     out = []

@@ -13,7 +13,8 @@ A micro-batch small enough to be collected is scored on the driver instead
 :func:`linear_predict_sql`'s form over a numpy matrix, and
 :func:`spark_round` is Spark's ``round(v, 0)``, both bit for bit.
 :func:`matrix` and :func:`list_column` convert an Arrow ``list<double>``
-column to that matrix and back.
+column to that matrix and back; :func:`matrix` is the one checked
+conversion, for the training kernel, the chains and the scoring alike.
 
 Expressions built from model or scaler state (one literal per coefficient)
 are rendered as Spark SQL text and parsed by the JVM in one call
@@ -31,6 +32,7 @@ import math
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -102,11 +104,24 @@ def spark_round(v: np.ndarray) -> np.ndarray:
         return np.copysign(f + (a - f >= 0.5), v) + 0.0
 
 
-def matrix(col: pa.ChunkedArray, dim: int) -> np.ndarray:
-    """An Arrow ``list<double>`` column whose every row holds ``dim``
-    non-null values, as an ``(rows, dim)`` float matrix."""
-    flat = col.combine_chunks().flatten()
-    return flat.to_numpy(zero_copy_only=False).reshape(-1, dim)
+def fits(col: pa.Array | pa.ChunkedArray, dim: int) -> bool:
+    """Does every row of the Arrow list column ``col`` hold ``dim``
+    non-null doubles?"""
+    lengths = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    return (pa.types.is_float64(col.type.value_type)
+            and bool((lengths == dim).all())
+            and pc.list_flatten(col).null_count == 0)
+
+
+def matrix(col: pa.Array | pa.ChunkedArray, dim: int) -> np.ndarray:
+    """An Arrow ``list<double>`` column as an ``(rows, dim)`` float matrix.
+    Raises ``ValueError`` unless every row holds ``dim`` non-null doubles
+    (:func:`fits`): flattened, a NULL or short row would shift every later
+    row against its label."""
+    if not fits(col, dim):
+        raise ValueError(
+            f"a features row does not hold {dim} non-null doubles")
+    return np.asarray(pc.list_flatten(col)).reshape(-1, dim)
 
 
 def list_column(X: np.ndarray) -> pa.Array:

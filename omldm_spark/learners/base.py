@@ -14,9 +14,11 @@ A learner is a stateless strategy object over numpy state dicts:
                                     FlinkSpoke.scala:160-163)
 
 State dicts always carry ``n`` (points fitted) so merges weight correctly.
-The trainer (``trainer.py``) runs partial_fit once per worker key group
-(``fit_groups``: ``groupBy(key).applyInPandas``, or on the driver over the
-streaming round's collected micro-batch) and merges the tiny per-worker
+The trainer (``trainer.py``) runs partial_fit over each worker key group's
+rows one Arrow batch at a time, carrying the state from call to call
+(``fit_groups``: ``groupBy(key).applyInArrow``, or on the driver over the
+streaming round's collected micro-batch), so two calls over consecutive
+slices must equal one call over both. It merges the tiny per-worker
 states — one BSP round == one reference protocol round (SURVEY.md §7).
 """
 

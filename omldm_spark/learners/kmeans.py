@@ -9,7 +9,10 @@ partition updates a local copy from the broadcast centroids; the merge
 combines prior + count-weighted per-partition deltas, so the broadcast prior
 mass is counted exactly once no matter how many partitions ran (r2 ADVICE
 fix — summing full per-partition counts inflated the prior ~P× per round and
-froze centroids). Deterministic seeding: first k distinct points by id.
+froze centroids). Deterministic seeding: the first k points a model
+trains on, in its pass order (``order_cols``; the training loop's id
+order). A pass the trainer feeds as several Arrow batches seeds as one
+call would: each call resumes at the first unseeded slot.
 """
 
 from __future__ import annotations
@@ -126,12 +129,15 @@ class KMeans(Learner):
                 counts = np.ones(k)
                 init = True
             else:
-                take = min(k, X.shape[0])
-                cents[:take] = X[:take]
-                counts[:take] = 1.0
-                d_counts[:take] += 1.0
+                # seeding resumes at the first unseeded slot, so a pass
+                # cut into several calls seeds as one call does
+                at = int(np.count_nonzero(counts))
+                take = min(k - at, X.shape[0])
+                cents[at:at + take] = X[:take]
+                counts[at:at + take] = 1.0
+                d_counts[at:at + take] += 1.0
                 start = take
-                init = take >= k
+                init = at + take >= k
         for i in range(start, X.shape[0]):
             x = X[i]
             d2 = np.sum((cents - x) ** 2, axis=1)

@@ -12,9 +12,10 @@ algorithms, not the reference's (external, unvendored) code:
 * SVM — Shalev-Shwartz, Singer, Srebro, "Pegasos: Primal Estimated
   sub-GrAdient SOlver for SVM", ICML 2007.
 
-All kernels are sequential numpy loops over one Arrow batch — the per-record
-online update the reference runs inside its worker node, executed
-per-partition; cross-partition consistency comes from the BSP merge.
+All kernels are sequential numpy loops over one Arrow batch (the trainer
+calls them once per batch of a worker's rows, carrying the state) — the
+per-record online update the reference runs inside its worker node;
+cross-worker consistency comes from the BSP merge.
 """
 
 from __future__ import annotations

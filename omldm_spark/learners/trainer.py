@@ -22,11 +22,12 @@ kernel is the only Python training kernel:
                  workers' own states; for a global model the caller hands
                  every key the same broadcast state and merges the returned
                  per-key partials with ``merge_round``, so the streaming
-                 round trains both kinds in one keyed pass. Over a
-                 DataFrame the pass is a ``groupBy(key).applyInPandas``;
+                 round trains both kinds in one keyed pass. The kernel
+                 streams each key's sorted rows as Arrow record batches,
+                 one ``partial_fit`` per batch: over a DataFrame Spark
+                 sorts them and a ``groupBy(key).applyInArrow`` runs it;
                  over a pyarrow Table (the streaming round's collected
-                 micro-batch) the same kernel runs on the driver, with no
-                 Spark job.
+                 micro-batch) it runs on the driver, with no Spark job.
 * ``fit``        one such pass per epoch over the rows keyed by the hash
                  partition of a worker column, every key starting from the
                  global state, then ``merge_round`` in key order.
@@ -46,21 +47,23 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field
+from typing import Iterator, Tuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
+from ..functions.vector import matrix
 from .base import Learner, get_learner
 
 # Serialized state row: one per (model, key group) of a ``fit_groups``
 # pass; ``grp`` is the key.
-STATE_SCHEMA = (
-    "model int, grp long, n long, cum_loss double, flat array<double>, "
-    "blob string"
-)
+STATE_SCHEMA = pa.schema([
+    ("model", pa.int32()), ("grp", pa.int64()), ("n", pa.int64()),
+    ("cum_loss", pa.float64()), ("flat", pa.list_(pa.float64())), ("blob", pa.string())])
 
 
 @dataclass
@@ -129,9 +132,9 @@ class _Model:
         self.template = self.learner.init_state(task.dim, task.hyper)
         self.blob = bool(getattr(self.learner, "uses_blob", False))
 
-    def pack(self, state: dict) -> tuple[list[float] | None, str | None]:
+    def pack(self, state: dict) -> tuple[list[float], str | None]:
         if self.blob:
-            return None, self.learner.to_blob(state)
+            return [], self.learner.to_blob(state)
         return _flatten_state(state), None
 
     def unpack(self, flat, blob) -> dict:
@@ -145,32 +148,6 @@ class _Model:
                  if packed is None else self.unpack(*packed))
         local["n"], local["cum_loss"] = 0, 0.0
         return self.learner.begin_pass(local)
-
-
-def _state_rows(models: list[_Model], grp: int, states: list[dict]) -> pd.DataFrame:
-    packed = [m.pack(s) for m, s in zip(models, states)]
-    return pd.DataFrame(
-        {
-            "model": list(range(len(models))),
-            "grp": [grp] * len(models),
-            "n": [int(s["n"]) for s in states],
-            "cum_loss": [float(s["cum_loss"]) for s in states],
-            "flat": [flat or [] for flat, _ in packed],
-            "blob": [blob for _, blob in packed],
-        }
-    )
-
-
-def _columns(tasks: list[Task], features_col: str) -> list[str]:
-    """The features column each task reads."""
-    return [t.features_col or features_col for t in tasks]
-
-
-def _xy(pdf: pd.DataFrame, cols: list[str], label_col: str):
-    """One feature matrix per distinct column of ``cols``, and the labels."""
-    X = {c: np.asarray(pdf[c].tolist(), dtype=float)
-         for c in dict.fromkeys(cols)}
-    return X, pdf[label_col].to_numpy(dtype=float)
 
 
 def fit(
@@ -206,7 +183,7 @@ def fit(
     depend on which other tasks share its pass.
     """
     single, tasks = _tasks(learner, dim, hyper, init_state)
-    cols = _columns(tasks, features_col)
+    cols = [t.features_col or features_col for t in tasks]
     learners = [get_learner(t.learner) for t in tasks]
     workers = num_partitions or 1
     states: list[dict] = []
@@ -276,12 +253,13 @@ def evaluate(
     """Holdout loss/score on a (small) test split — the reference's
     Query-on-testSet path (FlinkSpoke.scala:160-163).
 
-    The ``toPandas`` here is deliberate and BOUNDED: the reference's
+    The ``toArrow`` here is deliberate and BOUNDED: the reference's
     holdout is a 256-point rolling test set (FlinkSpoke.scala:41), so
     the collect is model-query-sized, not data-sized.  ``max_rows``
     guards the contract — a caller that feeds a full table gets a loud
     error instead of a silent driver OOM; score big frames with the
-    distributed prediction path instead."""
+    distributed prediction path instead. Every features row must hold
+    the same number of non-null doubles (``vector.matrix``)."""
     learner = get_learner(learner_name)
     # limit+count probes the bound without materializing the full frame
     if points.limit(max_rows + 1).count() > max_rows:
@@ -290,15 +268,16 @@ def evaluate(
             f"{max_rows} rows supplied. Score large frames distributed "
             "instead."
         )
-    pdf = points.select(features_col, label_col).toPandas()
-    if len(pdf) == 0:
+    tab = points.select(features_col, label_col).toArrow()
+    if tab.num_rows == 0:
         return {"loss": math.nan, "score": math.nan, "n_test": 0}
-    X, yv = _xy(pdf, [features_col], label_col)
-    X = X[features_col]
+    feats = tab.column(features_col)
+    X = matrix(feats, pc.max(pc.list_value_length(feats)).as_py() or 0)
+    yv = tab.column(label_col).to_numpy(zero_copy_only=False)
     return {
         "loss": learner.loss(X, yv, state),
         "score": learner.score(X, yv, state),
-        "n_test": len(pdf),
+        "n_test": tab.num_rows,
     }
 
 
@@ -320,50 +299,74 @@ def fit_groups(
 
     This is the per-worker state the distributed-protocol emulations need
     (GM/FGM/EASGD keep worker models that diverge between syncs —
-    SURVEY.md §2.9). The kernel gets one pandas frame per key and sorts
-    it by ``order_cols`` (NULLs last), so the pass is deterministic
-    regardless of arrival order as long as ``order_cols`` tell every two
-    rows of a key apart; rows that tie on them may train in arrival order.
+    SURVEY.md §2.9). Every features row must hold its task's ``dim``
+    non-null doubles (``vector.matrix`` raises otherwise).
 
-    Placement: over a DataFrame the pass is a ``groupBy(key)
-    .applyInPandas`` in the session's shuffle partitions (which AQE may
-    coalesce), one task per key at most. ``points`` may instead be a
-    pyarrow Table already on the driver (the training loop's collected
-    micro-batch: each Python task costs a fixed start-up far above a
-    micro-batch's training); the same group kernel then runs there on each
-    key in ascending order, with no Spark job. Each group is trained alone
-    either way, so the states are bit-identical. A NULL key fails the pass
-    in both placements.
+    One kernel serves both placements: it takes a key and an iterator of
+    that key's Arrow record batches, starts each model's state once, runs
+    ``partial_fit`` over each batch in turn (two calls over consecutive
+    slices are the one call over both, bit for bit) and yields one state
+    row per model. A key's rows reach it sorted by ``order_cols``, NULLs
+    last, so the pass is deterministic regardless of arrival order as long
+    as ``order_cols`` tell every two rows of a key apart; rows that tie on
+    them may train in arrival order.
+
+    Placement: over a DataFrame the pass is a ``repartition(key)
+    .sortWithinPartitions(key, *order_cols)`` feeding a ``groupBy(key)
+    .applyInArrow``, in the session's shuffle partitions (which AQE may
+    coalesce), one task per key at most; Spark sorts the rows, and the
+    kernel holds one Arrow batch (``maxRecordsPerBatch`` rows) at a time,
+    never a whole key. ``points`` may instead be a pyarrow Table already
+    on the driver (the training loop's collected micro-batch: each Python
+    task costs a fixed start-up far above a micro-batch's training); it is
+    sorted by ``(key, *order_cols)`` there (a stable sort, NULLs last) and
+    each key's slice goes through the same kernel in ascending key order,
+    with no Spark job. The states are bit-identical either way. A NULL key
+    fails the pass in both placements.
     """
     single, tasks = _tasks(learner, dim, hyper, init_states)
     models = [_Model(t) for t in tasks]
-    cols = _columns(tasks, features_col)
+    cols = [t.features_col or features_col for t in tasks]
+    dims = {c: m.dim for c, m in zip(cols, models)}
     bc = [{int(k): m.pack(st) for k, st in (t.state or {}).items()}
           for t, m in zip(tasks, models)]
     order_cols = order_cols or []
 
-    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = int(pdf[key_col].iloc[0])
-        if order_cols:
-            pdf = pdf.sort_values(order_cols)
-        X, yv = _xy(pdf, cols, label_col)
-        locals_ = [
-            m.learner.partial_fit(X[c], yv, m.start(b.get(key)), m.hyper)
-            for m, b, c in zip(models, bc, cols)
-        ]
-        return _state_rows(models, key, locals_)
+    def run_group(key: Tuple[pa.Scalar, ...],
+                  batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        grp = int(key[0].as_py())
+        states = [m.start(b.get(grp)) for m, b in zip(models, bc)]
+        for batch in batches:
+            X = {c: matrix(batch.column(c), d) for c, d in dims.items()}
+            yv = batch.column(label_col).to_numpy(zero_copy_only=False)
+            states = [m.learner.partial_fit(X[c], yv, st, m.hyper)
+                      for m, c, st in zip(models, cols, states)]
+        packed = [m.pack(st) for m, st in zip(models, states)]
+        yield pa.RecordBatch.from_pylist([
+            {"model": j, "grp": grp, "n": int(st["n"]),
+             "cum_loss": float(st["cum_loss"]), "flat": flat, "blob": blob}
+            for j, (st, (flat, blob)) in enumerate(zip(states, packed))],
+            schema=STATE_SCHEMA)
 
     sel = [key_col, *dict.fromkeys(cols), label_col, *order_cols]
     if isinstance(points, DataFrame):
-        state_rows = (points.select(*sel).groupBy(key_col)
-                      .applyInPandas(run_group, schema=STATE_SCHEMA).collect())
+        state_rows = (
+            points.select(*sel).repartition(key_col)
+            .sortWithinPartitions(key_col,
+                                  *[F.asc_nulls_last(c) for c in order_cols])
+            .groupBy(key_col)
+            .applyInArrow(run_group, from_arrow_schema(STATE_SCHEMA)).toArrow())
     else:
-        pdf = points.select(sel).to_pandas()
-        state_rows = [
-            r for _, g in pdf.groupby(key_col, sort=True, dropna=False)
-            for r in run_group(g).to_dict("records")]
+        rows = points.select(sel).sort_by(
+            [(c, "ascending") for c in [key_col, *order_cols]],
+            null_placement="at_end")
+        keys, counts = pc.value_counts(rows.column(key_col)).flatten()
+        state_rows = pa.Table.from_batches([
+            b for k, n, end in zip(keys, counts.to_numpy(), np.cumsum(counts))
+            for b in run_group((k,), rows.slice(end - n, n).to_batches())],
+            schema=STATE_SCHEMA)
     out: list[dict[int, dict]] = [{} for _ in tasks]
-    for r in state_rows:
+    for r in state_rows.to_pylist():
         j, key = r["model"], int(r["grp"])
         s = models[j].unpack(r["flat"], r["blob"])
         prev = (tasks[j].state or {}).get(key, {})

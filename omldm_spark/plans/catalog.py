@@ -21,6 +21,8 @@ import os
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow as pa
+
 from ..schemas import SINGLE_LEARNER_ONLY, VALID_LEARNERS, VALID_PREPROCESSORS
 
 VALID_REQUESTS = {"Create", "Update", "Query", "Delete"}
@@ -129,8 +131,7 @@ class PipelineCatalog:
     def apply_requests_df(self, requests_df) -> list[str]:
         """Batch entry point for foreachBatch: collect (tiny control topic)
         and :meth:`apply_requests`."""
-        return self.apply_requests(
-            [r.asDict(recursive=True) for r in requests_df.collect()])
+        return self.apply_requests(arrow_rows(requests_df.toArrow()))
 
     def apply_requests(self, rows: list[dict]) -> list[str]:
         """Apply request rows in ARRIVAL order — requestId is the arrival
@@ -173,3 +174,21 @@ class PipelineCatalog:
 
     def live(self) -> list[PipelineSpec]:
         return sorted(self.pipelines.values(), key=lambda s: s.id)
+
+
+def arrow_rows(table: pa.Table) -> list[dict]:
+    """The rows of ``table`` as Python dicts, each struct and each map a
+    dict too (Arrow gives a map's (key, value) pairs): the form
+    :meth:`PipelineCatalog.apply_requests` reads, and ``createDataFrame``
+    takes back."""
+    def py(v, t):
+        if v is None or not pa.types.is_nested(t):
+            return v
+        if pa.types.is_map(t):
+            return {k: py(x, t.item_type) for k, x in v}
+        if pa.types.is_struct(t):
+            return {f.name: py(v[f.name], f.type) for f in t}
+        return [py(x, t.value_type) for x in v]
+
+    row = pa.struct(list(table.schema))
+    return [py(r, row) for r in table.to_pylist()]

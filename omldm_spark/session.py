@@ -42,7 +42,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.default.parallelism", str(cpus))
-        # Arrow transfer for all pandas UDF / applyInPandas learner kernels.
+        # Arrow transfer for the pandas UDF kernels; the keyed training
+        # pass (applyInArrow) streams each key's rows in batches of
+        # maxRecordsPerBatch, the driver round's cap too.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Deterministic timestamp semantics for oracle comparison.

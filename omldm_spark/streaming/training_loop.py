@@ -23,8 +23,8 @@ once, bounded at one Arrow batch
 with well-formed features, runs its whole round on the driver over that
 collect: requests, the chains' fits and transforms, the keyed training
 kernel and forecast scoring, then one one-task predictions write. Any
-other batch runs the round as Spark jobs over the batch, the grouped
-``applyInPandas`` in the session's shuffle partitions among them. The
+other batch runs the round as Spark jobs over the batch, the keyed
+``applyInArrow`` pass in the session's shuffle partitions among them. The
 catalog, the predictions and the responses do not depend on the placement.
 
 Protocol semantics under BSP (SURVEY.md §2.9): Synchronous is native;
@@ -57,10 +57,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.preprocess import apply_chain
+from ..functions.vector import fits
 from ..learners import get_learner, trainer
 from ..learners.protocols import protocol_round
 from ..learners.trainer import Task
-from ..plans.catalog import PipelineCatalog
+from ..plans.catalog import PipelineCatalog, arrow_rows
 
 # Protocols that keep per-worker model state between syncs (SURVEY.md §2.9).
 PER_WORKER_PROTOCOLS = {"SSP", "GM", "FGM", "EASGD"}
@@ -595,7 +596,7 @@ def make_batch_handler(
                 counts = dict(seen.get)
                 over_cap = counts.pop("rows") > cap
             else:
-                catalog.apply_requests(_arrow_rows(data.filter(
+                catalog.apply_requests(arrow_rows(data.filter(
                     pc.equal(data["kind"], "request")).select(req_cols)))
                 data = data.filter(pc.equal(data["kind"], "data"))
             frame = batch_df.filter(F.col("kind") == "data")
@@ -626,7 +627,7 @@ def make_batch_handler(
                 data = pa.concat_tables([buffered, data])
             counts = {op: n + _count(buffered, op) for op, n in counts.items()}
         if data is not None and not (
-                data.num_rows <= cap and _fits(data.column(features_col), dim)):
+                data.num_rows <= cap and fits(data.column(features_col), dim)):
             counts, data = {"forecasting": _count(data, "forecasting")}, None
         if data is not None:
             op = data.column("operation")
@@ -636,7 +637,7 @@ def make_batch_handler(
             if buffered is not None:
                 # from rows, not the Table: PySpark slices a Table by
                 # maxRecordsPerBatch, and fails when that is 0 (no limit)
-                frame = spark.createDataFrame(_arrow_rows(
+                frame = spark.createDataFrame(arrow_rows(
                     buffered.drop_columns(["_part", "_tie"])), frame.schema
                 ).coalesce(1).unionByName(frame)
             training = frame.filter(F.col("operation") == "training")
@@ -645,7 +646,7 @@ def make_batch_handler(
                 # the training rows of a batch over the cap may fit: they
                 # train on the driver, as a driver round's do
                 rows = collect_batch(training, cap, features_col, label_col)
-                if _fits(rows.column(features_col), dim):
+                if fits(rows.column(features_col), dim):
                     training = rows
         st = train_batch(
             training,
@@ -695,32 +696,6 @@ def collect_batch(batch_df: DataFrame, cap: int, features_col: str,
 def _count(table: pa.Table, operation: str) -> int:
     """The number of ``table``'s rows with that ``operation``."""
     return table.filter(pc.equal(table["operation"], operation)).num_rows
-
-
-def _fits(features, dim: int) -> bool:
-    """Does every row hold ``dim`` non-null doubles?"""
-    lengths = pc.list_value_length(features).to_numpy(zero_copy_only=False)
-    return (pa.types.is_float64(features.type.value_type)
-            and bool((lengths == dim).all())
-            and pc.list_flatten(features).null_count == 0)
-
-
-def _arrow_rows(table: pa.Table) -> list[dict]:
-    """The rows of ``table`` as ``Row.asDict(recursive=True)`` gives them
-    from a collect: Arrow's (key, value) pairs of a map become a dict."""
-    def py(v, t):
-        if v is None:
-            return None
-        if pa.types.is_map(t):
-            return {k: py(x, t.item_type) for k, x in v}
-        if pa.types.is_struct(t):
-            return {f.name: py(v[f.name], f.type) for f in t}
-        if pa.types.is_list(t) or pa.types.is_large_list(t):
-            return [py(x, t.value_type) for x in v]
-        return v
-
-    row = pa.struct(list(table.schema))
-    return [py(r, row) for r in table.to_pylist()]
 
 
 def build_query_responses(

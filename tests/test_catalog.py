@@ -100,6 +100,43 @@ def test_requests_applied_in_arrival_order(spark):
     assert cat.pipelines[1].learner == "SVM"
 
 
+def test_request_frame_decodes_as_its_rows(spark):
+    """``apply_requests_df`` collects the request frame as Arrow: structs,
+    maps and arrays of structs reach the catalog as the dicts and lists a
+    request row holds — here the hyperparameters, the chain and the
+    training configuration of a Create, and the bare ``learner`` struct
+    ``streaming_train_predict`` builds."""
+    rows = [
+        (1, "Create", {"name": "PA", "hyperParameters": {"C": "0.5"}},
+         [{"name": "StandardScaler", "hyperParameters": {}}],
+         {"protocol": "FGM", "HubParallelism": "2"}),
+        (2, "Create", {"name": "SVM", "hyperParameters": None}, None, None),
+        (3, "Create", {"name": "NotALearner", "hyperParameters": None},
+         None, None),
+    ]
+    schema = ("id long, request string, learner struct<name: string, "
+              "hyperParameters: map<string, string>>, preProcessors "
+              "array<struct<name: string, hyperParameters: "
+              "map<string, string>>>, trainingConfiguration "
+              "map<string, string>")
+    cat = PipelineCatalog()
+    assert cat.apply_requests_df(spark.createDataFrame(rows, schema)) == [
+        "Create", "Create"]
+    pa_spec, svm = cat.pipelines[1], cat.pipelines[2]
+    assert (pa_spec.hyper, pa_spec.protocol, pa_spec.hub_parallelism) == (
+        {"C": "0.5"}, "FGM", 2)
+    assert pa_spec.preprocessors == [
+        {"name": "StandardScaler", "hyperParameters": {}}]
+    assert (svm.hyper, svm.preprocessors, svm.protocol) == (
+        {}, [], "Asynchronous")
+    bare = spark.createDataFrame([(4, "Create", "HT")],
+                                 "id long, request string, lname string")
+    assert cat.apply_requests_df(bare.selectExpr(
+        "id", "request", "named_struct('name', lname) AS learner")) == [
+        "Create"]
+    assert cat.pipelines[4].protocol == "SingleLearner"
+
+
 def test_save_mid_write_failure_keeps_previous_catalog(tmp_path, monkeypatch):
     """A save that fails part way (here a pipeline's ``to_json`` raises
     after the first pipeline was written) leaves the previous catalog

@@ -70,11 +70,10 @@ PIPELINES = [  # (learner, protocol, chain, hyper)
      [("PolynomialFeatures", {"degree": "2"})], {}),
     ("SVM", "Synchronous", [], {}),
 ]
-ROBUST = 3  # the RobustScaler pipeline's id
 
 
-def _create(pid, rid):
-    lrn, proto, chain, hyper = PIPELINES[pid]
+def _create(pid, rid, spec=None):
+    lrn, proto, chain, hyper = spec or PIPELINES[pid]
     return ("request", pid, None, None, None, "Create", rid,
             {"name": lrn, "hyperParameters": hyper},
             [{"name": n, "hyperParameters": h} for n, h in chain],
@@ -116,9 +115,8 @@ def _batches(spark):
     b1 = ([_request("Query", 0, 30), _request("Query", 2, 31),
            _request("Query", 4, 32)]
           + _data(rng, [next(fresh) for _ in range(50)] + [None, ids[5]]))
-    # the RobustScaler pipeline is deleted before a NaN feature arrives:
-    # Spark's BIGINT cast of a NaN histogram value raises
-    b2 = ([_request("Delete", ROBUST, 33), _request("Query", 1, 34)]
+    # a NaN feature: every scaler fit skips it, the RobustScaler's too
+    b2 = ([_request("Query", 1, 34)]
           + _data(rng, [next(fresh) for _ in range(45)] + [None], nan=True))
     b3 = ([_request("Query", pid, 40 + pid) for pid in range(len(PIPELINES))]
           + _data(rng, [next(fresh) for _ in range(30)]))
@@ -192,11 +190,45 @@ def test_driver_round_equals_spark_round(spark, tmp_path, monkeypatch):
     for key in ("catalog", "stats", "predictions", "schemas", "responses"):
         assert driver[key] == spark_[key] == mixed[key], key
     # the round did its work: every pipeline trained, ORR on half labels,
-    # the NaN batch scored, and 3 + 1 + 7 - 1 Queries were answered
-    assert sorted(driver["catalog"]) == [0, 1, 2, 4, 5, 6]
-    assert len(driver["responses"]) == 10
+    # the NaN batch scored, and 3 + 1 + 7 Queries were answered
+    assert sorted(driver["catalog"]) == [0, 1, 2, 3, 4, 5, 6]
+    assert len(driver["responses"]) == 11
     assert any("nan" in p for p in driver["predictions"])
     assert len(driver["schemas"]) == 1
+
+
+def test_an_all_nan_feature_dimension_keeps_every_scaler_live(
+        spark, tmp_path, monkeypatch):
+    """A batch whose second feature is NaN in every row: the scalers' fits
+    skip it, so that dimension adds nothing to the moments and, with no
+    finite value yet, scales as a constant column. Both rounds leave the
+    same catalog and predictions, and the next batch trains every
+    pipeline."""
+    specs = [("PA", "Synchronous", [("StandardScaler", {})], {}),
+             ("SVM", "FGM", [("MinMaxScaler", {})], {}),
+             ("RegressorPA", "Synchronous", [("MaxAbsScaler", {})], {}),
+             ("PA", "CentralizedTraining", [("RobustScaler", {})], {})]
+    rng = np.random.default_rng(4)
+    nan = [r[:2] + ([r[2][0], math.nan],) + r[3:]
+           for r in _data(rng, range(30))]
+    b0 = [_create(pid, pid, spec) for pid, spec in enumerate(specs)] + nan
+    b1 = _data(rng, range(30, 60))
+    batches = [spark.createDataFrame(b, SCHEMA) for b in (b0, b1)]
+    driver = _run(spark, monkeypatch, batches, None, tmp_path / "driver",
+                  "10000")
+    spark_ = _run(spark, monkeypatch, batches, None, tmp_path / "spark", "0")
+    assert driver["placed"] == [True, True]
+    assert spark_["placed"] == [False, False]
+    for key in ("catalog", "stats", "predictions"):
+        assert driver[key] == spark_[key], key
+    trained = sum(r[4] == "training" for r in b0[len(specs):])
+    for pid in range(len(specs)):
+        spec = json.loads(driver["catalog"][pid])
+        assert spec["rounds"] == 2
+        assert spec["fitted"] == trained + sum(
+            r[4] == "training" for r in b1), pid
+    assert len(driver["predictions"]) == len(specs) * sum(
+        r[4] == "forecasting" for r in b0 + b1)
 
 
 def test_short_features_array_takes_the_spark_round(spark, tmp_path,

@@ -163,6 +163,43 @@ def test_kmeans_clusters_separated_data():
     assert ln.loss(X, None, st) < 10.0
 
 
+def _hex(v):
+    """A state as nested plain values, every number as its float's hex, so
+    equal means equal bit for bit (ints and floats compare alike)."""
+    if isinstance(v, dict):
+        return {str(k): _hex(x) for k, x in v.items()}
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return [_hex(x) for x in v]
+    if isinstance(v, (bool, str)) or v is None:
+        return v
+    return float(v).hex()
+
+
+@pytest.mark.parametrize("name,hyper", [
+    ("PA", {"C": 0.1}), ("SVM", {}), ("RegressorPA", {}),
+    ("MultiClassPA", {"numClasses": 3}), ("NN", {}),
+    ("HT", {"grace_period": 5}), ("K-means", {"k": 4})])
+def test_partial_fit_over_consecutive_slices_is_one_call(name, hyper):
+    """The training kernel feeds a pass to ``partial_fit`` one Arrow batch
+    at a time, so two calls over consecutive slices must equal one call
+    over both, bit for bit. K-means cut before its k seeds are placed is
+    the case a restarted seeding got wrong."""
+    X = RNG.normal(size=(60, 3))
+    y = (RNG.integers(0, 3, size=60).astype(float) if name == "MultiClassPA"
+         else np.sign(RNG.normal(size=60)))
+    ln = get_learner(name)
+
+    def start():
+        return ln.begin_pass({**ln.init_state(3, hyper), "n": 0,
+                              "cum_loss": 0.0})
+
+    one = _hex(ln.partial_fit(X, y, start(), hyper))
+    for cut in (1, 3, 5, 41):
+        first = ln.partial_fit(X[:cut], y[:cut], start(), hyper)
+        two = ln.partial_fit(X[cut:], y[cut:], first, hyper)
+        assert _hex(two) == one, cut
+
+
 def test_unknown_learner_raises():
     with pytest.raises(ValueError, match="unknown learner"):
         get_learner("nope")

@@ -19,7 +19,7 @@ PKG = Path(__file__).resolve().parent.parent / "omldm_spark"
 
 # (relative path, distinguishing substring of the line) -> bound
 ALLOWLIST = {
-    ("plans/catalog.py", "requests_df.collect()"):
+    ("plans/catalog.py", "requests_df.toArrow()"):
         "control-plane CRUD requests: human-issued, not data-scale",
     ("streaming/training_loop.py", "limit(cap + 1).toArrow()"):
         "the handler's micro-batch collect (collect_batch): limit(cap + 1) "
@@ -65,7 +65,7 @@ ALLOWLIST = {
         "the executor matmul closure + the position -> id map",
     ("operators/skew.py", 'F.bit_or("mask")'):
         "bloom filter words: fixed 16-BIGINT array",
-    ("learners/trainer.py", "applyInPandas(run_group, schema=STATE_SCHEMA)"):
+    ("learners/trainer.py", "applyInArrow(run_group, from_arrow_schema(STATE_SCHEMA)).toArrow()"):
         "fused keyed pass (fit_groups, which fit runs per epoch): ONE "
         "model-state row per (model, worker key), so rows = live pipelines "
         "x workers (the parameter-server pattern itself)",

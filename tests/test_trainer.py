@@ -2,12 +2,16 @@
 
 from __future__ import annotations
 
+from typing import Iterator, Tuple
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from omldm_spark.learners import get_learner, trainer
 from sparktrace import PYTHON_NODE, runs_python_or_shuffle, traced
+from test_learners import _hex
 
 RNG = np.random.default_rng(25)
 
@@ -207,3 +211,76 @@ def test_single_worker_round_runs_one_task_without_shuffle(spark):
     want = trainer.fit(batch, "PA", dim=3, hyper={"C": "0.1"},
                        order_cols=["id"])
     assert np.array_equal(_deser(pa.model)["w"], want["w"])
+
+
+# every streamed learner, as one fused pass trains them
+STREAMED = [("PA", {"C": 0.1}), ("SVM", {}), ("RegressorPA", {}),
+            ("MultiClassPA", {}), ("NN", {}), ("HT", {"grace_period": 5}),
+            ("K-means", {"k": 4})]
+
+
+def test_fit_groups_streams_each_keys_sorted_rows_in_arrow_batches(spark):
+    """Over a DataFrame, ``fit_groups`` repartitions by the key, lets Spark
+    sort each key's rows by ``order_cols`` (NULLs last) and feeds them to
+    the kernel as Arrow batches of ``maxRecordsPerBatch`` rows: at 7, every
+    key spans several batches. The rows arrive shuffled over three
+    partitions, with NULL and repeated ids. Every learner's per-key state
+    equals the Table form's and a numpy replay of one ``partial_fit`` over
+    the key's rows in ``(id, _tie)`` order, bit for bit; the pass adds one
+    Exchange and one Sort under the grouped Arrow node."""
+    from pyspark.sql import functions as F
+
+    def batches(key: Tuple[pa.Scalar, ...],
+                it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        yield pa.RecordBatch.from_pydict({"n": [sum(1 for _ in it)]})
+
+    rng = np.random.default_rng(8)
+    ids = [int(i) for i in rng.permutation(50)] + [None] * 6 + [4, 9, 9]
+    rows = [(i, [float(v) for v in rng.normal(size=3)],
+             float(rng.choice([-1.0, 1.0]))) for i in ids]
+    rows = [rows[j] for j in rng.permutation(len(rows))]
+    frame = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 3),
+        "id long, features array<double>, label double")
+    tie = F.xxhash64("features", "label")
+    frame = frame.withColumns({
+        "_wk": F.pmod(F.coalesce(F.col("id"), tie), F.lit(2)).cast("int"),
+        "_tie": tie}).persist()
+    tasks = [trainer.Task(lrn, 3, hyper) for lrn, hyper in STREAMED]
+    cap = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(cap)
+    spark.conf.set(cap, "7")
+    try:
+        per_key = frame.groupBy("_wk").applyInArrow(
+            batches, "n long").toArrow().column("n").to_pylist()
+        got, _, plans = traced(spark, lambda: trainer.fit_groups(
+            frame, tasks, key_col="_wk", order_cols=["id", "_tie"]))
+        table = frame.toArrow()
+    finally:
+        spark.conf.set(cap, old)
+        frame.unpersist()
+    assert len(per_key) == 2 and min(per_key) >= 3
+    on_driver = trainer.fit_groups(table, tasks, key_col="_wk",
+                                   order_cols=["id", "_tie"])
+    keyed = {}
+    for r in table.to_pylist():
+        keyed.setdefault(r["_wk"], []).append(r)
+    assert sorted(keyed) == [0, 1]
+    for (lrn, hyper), g, d in zip(STREAMED, got, on_driver):
+        ln = get_learner(lrn)
+        assert sorted(g) == sorted(d) == [0, 1]
+        for key, kr in keyed.items():
+            kr = sorted(kr, key=lambda r: (r["id"] is None, r["id"] or 0,
+                                           r["_tie"]))
+            start = ln.begin_pass({**ln.init_state(3, hyper), "n": 0,
+                                   "cum_loss": 0.0})
+            want = ln.partial_fit(
+                np.array([r["features"] for r in kr]),
+                np.array([r["label"] for r in kr]), start, hyper)
+            assert _hex(g[key]) == _hex(d[key]) == _hex(want), (lrn, key)
+    tree = plans[-1].split("\n\n")[0]
+    final = tree.split("== Initial Plan ==")[0]
+    assert "FlatMapGroupsInArrow" in final
+    under = final.split("FlatMapGroupsInArrow", 1)[1]
+    assert under.count("Exchange (") == 1 and under.count("Sort (") == 1
+    assert "REPARTITION_BY_COL" in plans[-1]
